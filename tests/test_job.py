@@ -1,7 +1,10 @@
 import json
 import os
 
+import pytest
+
 from wbkg.job import build_zip, main
+from wbkg.oracle import oracle_pipeline
 
 
 def test_job_end_to_end_and_resume(spark, tmp_path, capsys):
@@ -10,22 +13,37 @@ def test_job_end_to_end_and_resume(spark, tmp_path, capsys):
     assert rc == 0
     out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out1["edges"] > 0
-    assert out1["recomputed"]["chunks"] == 30
+    assert out1["recomputed"] == {"fused": 30}
 
-    # re-submit: all per-doc stages resumed from checkpoint, zero recompute
+    # re-submit: the fused stage resumes from its checkpoint, zero recompute
     rc = main(["--n-docs", "30", "--work-dir", work], spark=spark)
     assert rc == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2["recomputed"] == {"chunks": 0, "acronyms": 0, "mentions": 0}
+    assert out2["recomputed"] == {"fused": 0}
     assert out2["edges"] == out1["edges"]
 
-    # lineage metrics written per stage
-    m = spark.read.parquet(os.path.join(work, "metrics", "chunks"))
+    # lineage metrics written for the checkpointed stage
+    m = spark.read.parquet(os.path.join(work, "metrics", "fused"))
     assert m.count() > 0
 
     # nodes table materialized
     nodes = spark.read.parquet(os.path.join(work, "nodes"))
     assert nodes.count() > 0
+
+
+@pytest.mark.parametrize("heuristic_ner", [False, True])
+def test_job_edges_match_oracle(spark, tmp_path, capsys, heuristic_ner):
+    """The checkpointed job builds exactly the oracle's triple set."""
+    n = 12
+    work = str(tmp_path / "run_oracle")
+    flags = ["--heuristic-ner"] if heuristic_ner else []
+    assert main(["--n-docs", str(n), "--work-dir", work, *flags], spark=spark) == 0
+    capsys.readouterr()
+    edges = spark.read.parquet(os.path.join(work, "edges")).select("subj", "pred", "obj")
+    want = oracle_pipeline(n, heuristic_ner=heuristic_ner)
+    assert {tuple(r) for r in edges.collect()} == want
+    # the heuristic pass actually adds mentions
+    assert heuristic_ner == any(t[2] == "HEUR_ENT" for t in want)
 
 
 def test_job_with_communities(spark, tmp_path, capsys):
@@ -57,17 +75,13 @@ def test_job_pred_partitioned_edges(spark, tmp_path, capsys):
     import io as _io
     from contextlib import redirect_stdout
 
-    flat = str(tmp_path / "run_flat")
     part = str(tmp_path / "run_part")
-    main(["--n-docs", "20", "--work-dir", flat], spark=spark)
     main(["--n-docs", "20", "--work-dir", part, "--partition-edges-by-pred"], spark=spark)
     capsys.readouterr()
 
-    flat_edges = spark.read.parquet(os.path.join(flat, "edges"))
+    # the flat layout's edge set is the oracle's (test_job_edges_match_oracle)
     part_edges = spark.read.parquet(os.path.join(part, "edges"))
-    a = {(r.subj, r.pred, r.obj) for r in flat_edges.collect()}
-    b = {(r.subj, r.pred, r.obj) for r in part_edges.collect()}
-    assert a == b
+    assert {(r.subj, r.pred, r.obj) for r in part_edges.collect()} == oracle_pipeline(20)
 
     # pruning: the pred filter becomes a partition filter, not a data filter
     q = part_edges.filter(part_edges.pred_bucket == "mentions")

@@ -196,6 +196,36 @@ def chunk_spans_py(
     return out
 
 
+# --- chunk rows (shared by chunk_documents and extract.chunk_and_extract) ----
+
+
+def doc_chunk_rows(
+    doc_id: str,
+    spans,
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    chunk_overlap: int = DEFAULT_CHUNK_OVERLAP,
+) -> List[dict]:
+    """One document's spans (None, dicts or Rows) -> its CHUNKS rows:
+    chunk ids and the prev/next links within the doc."""
+    if spans is None:
+        spans = []
+    span_dicts = [s if isinstance(s, dict) else s.asDict() for s in spans]
+    chunks = chunk_spans_py(span_dicts, chunk_size, chunk_overlap)
+    n = len(chunks)
+    return [
+        {
+            "doc_id": doc_id,
+            "chunk_id": f"{doc_id}_chunk_{i}",
+            "chunk_idx": i,
+            "text": c["text"],
+            "header_path": c["header_path"],
+            "prev_id": f"{doc_id}_chunk_{i - 1}" if i > 0 else None,
+            "next_id": f"{doc_id}_chunk_{i + 1}" if i < n - 1 else None,
+        }
+        for i, c in enumerate(chunks)
+    ]
+
+
 # --- Spark operator ------------------------------------------------------------
 
 
@@ -206,38 +236,21 @@ def chunk_documents(
 ):
     """documents_interleaved (doc_id, spans) -> CHUNKS DataFrame.
 
-    Uses mapInPandas (not groupBy().applyInPandas): each input row is already
-    one whole document, so no shuffle is needed — the fold runs where the
-    data sits, preserving the scan's partitioning. At 100 TB this matters:
-    a grouped-map would shuffle every span of every document once for no
-    semantic gain.
+    The chunk-only operator; the pipeline runs the same rows inside
+    extract.chunk_and_extract. Uses mapInPandas (not
+    groupBy().applyInPandas): each input row is already one whole document,
+    so no shuffle is needed — the fold runs where the data sits, preserving
+    the scan's partitioning. At 100 TB this matters: a grouped-map would
+    shuffle every span of every document once for no semantic gain.
     """
 
     def fold_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                if spans is None:
-                    spans = []
-                span_dicts = [s if isinstance(s, dict) else s.asDict() for s in spans]
-                chunks = chunk_spans_py(span_dicts, chunk_size, chunk_overlap)
-                n = len(chunks)
-                for c in chunks:
-                    i = c["chunk_idx"]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_id": f"{doc_id}_chunk_{i}",
-                            "chunk_idx": i,
-                            "text": c["text"],
-                            "header_path": c["header_path"],
-                            "prev_id": f"{doc_id}_chunk_{i - 1}" if i > 0 else None,
-                            "next_id": f"{doc_id}_chunk_{i + 1}" if i < n - 1 else None,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in CHUNKS.fields],
-            )
+            rows = [
+                row
+                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
+                for row in doc_chunk_rows(doc_id, spans, chunk_size, chunk_overlap)
+            ]
+            yield pd.DataFrame(rows, columns=[f.name for f in CHUNKS.fields])
 
     return docs_df.select("doc_id", "spans").mapInPandas(fold_batches, schema=CHUNKS)

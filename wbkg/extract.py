@@ -546,6 +546,18 @@ def _detect_doc_acronyms(chunks: List[dict]) -> Dict[str, Tuple[str, str]]:
     return {abbr: (exp, src) for abbr, (prio, exp, src) in found.items()}
 
 
+def _doc_matcher(acronyms) -> Optional["TokenIndexMatcher"]:
+    """Per-doc acronym automaton over (abbr, expansion) pairs: ACRONYM +
+    ACRONYM_EXPANDED patterns (ref src/ner.py:57-79); None when the doc
+    has no acronyms."""
+    doc_pats = []
+    for abbr, exp in acronyms:
+        doc_pats.append((abbr, "ACRONYM", abbr))
+        if exp:
+            doc_pats.append((exp, "ACRONYM_EXPANDED", exp))
+    return TokenIndexMatcher(doc_pats) if doc_pats else None
+
+
 def _match_chunk(text: str, static_ac, doc_ac, heur_ac=None) -> List[tuple]:
     """Merged leftmost-longest matches from the static + per-doc automata,
     returning (begin, end, label, rule_id, surface) on the normalized text.
@@ -681,16 +693,19 @@ def chunk_and_extract(
 ) -> DataFrame:
     """Fused stage 1+2: spans -> chunks + per-doc acronyms + per-chunk
     mentions in ONE mapInPandas pass — zero shuffles until the linking join.
+    The extraction pass of every entry point: pipeline.run_pipeline, the
+    checkpointed job.py stage and each streaming micro-batch.
 
     The input row already holds the whole document, so chunking, acronym
     detection (which needs all chunks of a doc) and mention matching are
-    embarrassingly parallel here; the unfused operators (chunk_documents /
-    extract_acronyms / extract_mentions) would shuffle every chunk's text by
-    doc_id just to co-locate acronyms with chunks. Acronyms ride on the
-    chunk_idx==0 row; mentions ride nested per chunk; downstream tables are
-    cheap selects/explodes.
+    embarrassingly parallel here; the single-purpose operators
+    (chunk_documents / extract_acronyms / extract_mentions) would shuffle
+    every chunk's text by doc_id just to co-locate acronyms with chunks.
+    Acronyms ride on the chunk_idx==0 row; mentions ride nested per chunk;
+    chunks_from_fused / acronyms_from_fused / mentions_from_fused are cheap
+    selects/explodes.
     """
-    from wbkg.chunker import DEFAULT_CHUNK_OVERLAP, DEFAULT_CHUNK_SIZE, chunk_spans_py
+    from wbkg.chunker import DEFAULT_CHUNK_OVERLAP, DEFAULT_CHUNK_SIZE, doc_chunk_rows
 
     cs = chunk_size or DEFAULT_CHUNK_SIZE
     co = chunk_overlap or DEFAULT_CHUNK_OVERLAP
@@ -702,17 +717,9 @@ def chunk_and_extract(
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                if spans is None:
-                    spans = []
-                span_dicts = [s if isinstance(s, dict) else s.asDict() for s in spans]
-                chunks = chunk_spans_py(span_dicts, cs, co)
+                chunks = doc_chunk_rows(doc_id, spans, cs, co)
                 acros = _detect_doc_acronyms(chunks)
-                doc_pats = []
-                for abbr, (exp, _src) in acros.items():
-                    doc_pats.append((abbr, "ACRONYM", abbr))
-                    if exp:
-                        doc_pats.append((exp, "ACRONYM_EXPANDED", exp))
-                doc_ac = TokenIndexMatcher(doc_pats) if doc_pats else None
+                doc_ac = _doc_matcher((abbr, exp) for abbr, (exp, _src) in acros.items())
                 heur_ac = None
                 if heuristic_ner:
                     cands = heuristic_ner_candidates_py([c["text"] for c in chunks])
@@ -720,13 +727,12 @@ def chunk_and_extract(
                         heur_ac = TokenIndexMatcher(
                             [(s, HEUR_LABEL, normalize_surface(s)) for s in cands]
                         )
-                n = len(chunks)
                 acro_list = [
                     {"abbr": a, "expansion": e, "source": s} for a, (e, s) in acros.items()
                 ]
                 for c in chunks:
-                    i = c["chunk_idx"]
-                    ments = [
+                    c["acronyms"] = acro_list if c["chunk_idx"] == 0 else []
+                    c["mentions"] = [
                         {
                             "surface": surf,
                             "surface_norm": surf,
@@ -739,19 +745,7 @@ def chunk_and_extract(
                             c["text"], static_ac, doc_ac, heur_ac
                         )
                     ]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_id": f"{doc_id}_chunk_{i}",
-                            "chunk_idx": i,
-                            "text": c["text"],
-                            "header_path": c["header_path"],
-                            "prev_id": f"{doc_id}_chunk_{i - 1}" if i > 0 else None,
-                            "next_id": f"{doc_id}_chunk_{i + 1}" if i < n - 1 else None,
-                            "acronyms": acro_list if i == 0 else [],
-                            "mentions": ments,
-                        }
-                    )
+                    rows.append(c)
             cols = ["doc_id", "chunk_id", "chunk_idx", "text", "header_path",
                     "prev_id", "next_id", "acronyms", "mentions"]
             yield pd.DataFrame(rows, columns=cols)
@@ -781,54 +775,18 @@ def mentions_from_fused(fused: DataFrame) -> DataFrame:
     return m.filter(~F.col("label").isin(EXCLUDED_ENTS))
 
 
-def heuristic_candidates(chunks_df: DataFrame) -> DataFrame:
-    """Doc-scoped heuristic-NER candidate table for the UNFUSED path:
-    (doc_id, cands array<string>). The emitter needs the whole document
-    (frequency gate over all chunks), so chunk texts group by doc_id once —
-    the fused path (chunk_and_extract) computes the same list in-UDF with
-    no shuffle; this operator exists for the checkpointed job pipeline.
-    Chunks sort by chunk_idx inside the UDF so candidate order (and the
-    max_candidates cap) is deterministic under any shuffle order."""
-    per_doc = chunks_df.groupBy("doc_id").agg(
-        F.collect_list(F.struct("chunk_idx", "text")).alias("_chunks")
-    )
-
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, chunks in zip(pdf["doc_id"], pdf["_chunks"]):
-                cd = sorted(
-                    (c if isinstance(c, dict) else c.asDict() for c in chunks),
-                    key=lambda c: c["chunk_idx"],
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "cands": heuristic_ner_candidates_py([c["text"] for c in cd]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "cands"])
-
-    return per_doc.mapInPandas(emit, schema="doc_id string, cands array<string>")
-
-
 def extract_mentions(
     chunks_df: DataFrame,
     acronyms_df: DataFrame,
     pattern_rows: List[Tuple[str, str, str]],
-    heuristic_cands_df: DataFrame | None = None,
 ) -> DataFrame:
-    """chunks + per-doc acronyms -> MENTIONS.
+    """chunks + per-doc acronyms -> MENTIONS, the mention-only operator (the
+    pipeline matches inside chunk_and_extract with the same _match_chunk).
 
     The static dictionary automaton is broadcast once (executor-side build,
-    cached per worker). Per-doc acronym patterns (ACRONYM + ACRONYM_EXPANDED,
-    ref src/ner.py:57-79) are joined onto chunks as a grouped column and
-    matched with small per-doc automatons.
-
-    Scale note: the static automaton is size-bounded (dictionary ~10^5-10^6
-    entries) — the same broadcast pattern a real cluster would use; chunks
-    stream through mapInPandas with no shuffle. The acronym join shuffles by
-    doc_id only (acronym rows are tiny).
+    cached per worker). Per-doc acronym patterns are joined onto chunks as a
+    grouped column and matched with small per-doc automatons; the acronym
+    join shuffles by doc_id only (acronym rows are tiny).
     """
     spark = chunks_df.sparkSession
     sc = spark.sparkContext
@@ -840,60 +798,20 @@ def extract_mentions(
     enriched = chunks_df.select("doc_id", "chunk_id", "text").join(
         acro_by_doc, "doc_id", "left"
     )
-    if heuristic_cands_df is not None:
-        enriched = enriched.join(heuristic_cands_df, "doc_id", "left")
-
-    has_heur = heuristic_cands_df is not None
 
     def match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         static_ac = TokenIndexMatcher(bc_patterns.value)
         for pdf in batches:
             rows = []
-            heur_memo: dict = {}  # per-batch: bounded, and a doc's chunks co-batch
-            cands_col = pdf["cands"] if has_heur else [None] * len(pdf)
-            for doc_id, chunk_id, text, acros, cands in zip(
-                pdf["doc_id"], pdf["chunk_id"], pdf["text"], pdf["_acros"], cands_col
+            for doc_id, chunk_id, text, acros in zip(
+                pdf["doc_id"], pdf["chunk_id"], pdf["text"], pdf["_acros"]
             ):
-                norm_text = normalize_surface(text)
-                tokens = _tokenize(norm_text)
-                matches = list(static_ac.find_normalized(norm_text, tokens))
-                if acros is not None and len(acros):
-                    doc_pats = []
-                    for a in acros:
-                        ad = a if isinstance(a, dict) else a.asDict()
-                        doc_pats.append((ad["abbr"], "ACRONYM", ad["abbr"]))
-                        if ad["expansion"]:
-                            doc_pats.append((ad["expansion"], "ACRONYM_EXPANDED", ad["expansion"]))
-                    doc_ac = TokenIndexMatcher(doc_pats)
-                    matches.extend(doc_ac.find_normalized(norm_text, tokens))
-                # cross-automaton leftmost-longest non-overlap (ruler overwrite)
-                matches.sort(key=lambda m: (m[0], -(m[1] - m[0])))
-                sel, last_end = [], -1
-                for m in matches:
-                    if m[0] >= last_end:
-                        sel.append(m)
-                        last_end = m[1]
-                if cands is not None and len(cands):
-                    # ruler-first: heuristic candidates fill only the gaps
-                    # (same merge as the fused _match_chunk). One matcher
-                    # per DOC, memoized across its chunks in this batch.
-                    heur_ac = heur_memo.get(doc_id)
-                    if heur_ac is None:
-                        heur_ac = heur_memo[doc_id] = TokenIndexMatcher(
-                            [(s, HEUR_LABEL, normalize_surface(s)) for s in cands]
-                        )
-                    ruled = [(m[0], m[1]) for m in sel]
-                    extra = sorted(
-                        heur_ac.find_normalized(norm_text, tokens),
-                        key=lambda m: (m[0], -(m[1] - m[0])),
-                    )
-                    for m in extra:
-                        if all(m[1] <= b or m[0] >= e for b, e in ruled):
-                            sel.append(m)
-                            ruled.append((m[0], m[1]))
-                    sel.sort(key=lambda m: m[0])
-                for b, e, label, rule_id in sel:
-                    surf = norm_text[b:e]
+                pairs = [] if acros is None else (
+                    (a["abbr"], a["expansion"]) for a in acros
+                )
+                for b, e, label, rule_id, surf in _match_chunk(
+                    text, static_ac, _doc_matcher(pairs)
+                ):
                     rows.append(
                         {
                             "doc_id": doc_id,

@@ -1,12 +1,15 @@
 """spark-submit entry point (north_rule: `spark-submit --py-files wbkg.zip
 wbkg/job.py ...` on a multi-executor cluster).
 
-The ops-hardened variant of the pipeline: the heavy per-document stages
-(chunk, acronyms, mentions, link) are checkpointed at doc_id granularity and
-wrapped with per-partition lineage metrics; the cheap relational tail
-(canonicalize + materialize) recomputes from checkpoints. A killed job
-re-submitted with the same --work-dir resumes with zero recomputation of
-checkpointed documents (CheckpointManager anti-join; SURVEY §4.3).
+The ops-hardened variant of the pipeline: the fused extraction pass
+(extract.chunk_and_extract: chunks, acronyms and mentions) is ONE
+checkpoint stage at doc_id granularity, wrapped with per-partition lineage
+metrics; link, canonicalize and materialize (pipeline.build_graph, the same
+graph builder run_pipeline uses) recompute from the checkpoint. A killed
+job re-submitted with the same --work-dir resumes with zero recomputation
+of checkpointed documents (CheckpointManager anti-join; SURVEY §4.3).
+Communities, bucketed tables and the pred-partitioned edges layout are
+job-only tails.
 
 Usage:
   spark-submit --py-files wbkg.zip wbkg/job.py \
@@ -87,20 +90,11 @@ def main(argv=None, spark=None):
 
     from pyspark.sql import functions as F
 
-    from wbkg.canonicalize import apply_canonicalization, canonical_map
     from wbkg.checkpoint import CheckpointManager
-    from wbkg.chunker import chunk_documents
-    from wbkg.extract import build_pattern_rows, extract_acronyms, extract_mentions
-    from wbkg.link import link_mentions
-    from wbkg.materialize import (
-        RDF_TYPE,
-        chunk_triples,
-        entity_triples,
-        metadata_triples,
-        nodes_from_edges,
-        union_distinct,
-    )
+    from wbkg.extract import build_pattern_rows, chunk_and_extract
+    from wbkg.materialize import nodes_from_edges, union_distinct
     from wbkg.metrics import with_lineage
+    from wbkg.pipeline import build_graph
     from wbkg.session import get_spark
     from wbkg.synth import (
         build_entity_dict_rows,
@@ -131,43 +125,20 @@ def main(argv=None, spark=None):
     edict = entity_dict_df(spark, args.n_docs)
     pats = build_pattern_rows(build_entity_dict_rows(args.n_docs), build_unbis_rows())
 
-    recomputed = {}
-
-    chunks = ckpt.run_stage(
-        "chunks",
+    fused = ckpt.run_stage(
+        "fused",
         docs,
-        lambda d: with_lineage(chunk_documents(d), "chunks", metrics_dir),
+        lambda d: with_lineage(
+            chunk_and_extract(d, pats, heuristic_ner=args.heuristic_ner), "fused", metrics_dir
+        ),
         keys=["doc_id"],
+    ).persist()
+    recomputed = {"fused": ckpt.last_recomputed}
+
+    g = build_graph(
+        fused, edict, metadata_df=meta, link_strategy=args.link_strategy, persist_edges=False
     )
-    recomputed["chunks"] = ckpt.last_recomputed
-
-    acronyms = ckpt.run_stage(
-        "acronyms",
-        chunks,
-        lambda c: with_lineage(extract_acronyms(c), "acronyms", metrics_dir),
-        keys=["doc_id"],
-    )
-    recomputed["acronyms"] = ckpt.last_recomputed
-
-    def compute_mentions(pending_chunks):
-        acr = acronyms.join(pending_chunks.select("doc_id").distinct(), "doc_id", "left_semi")
-        heur = None
-        if args.heuristic_ner:
-            from wbkg.extract import heuristic_candidates
-
-            heur = heuristic_candidates(pending_chunks)
-        return with_lineage(
-            extract_mentions(pending_chunks, acr, pats, heuristic_cands_df=heur),
-            "mentions",
-            metrics_dir,
-        )
-
-    mentions = ckpt.run_stage("mentions", chunks, compute_mentions, keys=["doc_id"])
-    recomputed["mentions"] = ckpt.last_recomputed
-
-    linked = link_mentions(mentions, edict, strategy=args.link_strategy).persist()
-    cmap = canonical_map(edict, acronyms, linked)
-    linked_c = apply_canonicalization(linked, cmap).persist()
+    chunks, linked_c, edges = g["chunks"], g["linked"], g["edges"]
 
     bucketed_info = None
     if args.bucket_tables:
@@ -190,11 +161,6 @@ def main(argv=None, spark=None):
             ),
         }
 
-    ent_edges = entity_triples(linked_c).persist()
-    typed = ent_edges.filter(F.col("pred") == RDF_TYPE).select(F.col("subj").alias("uri")).distinct()
-    chk_edges = chunk_triples(chunks, linked_c, typed)
-    frames = [ent_edges, chk_edges, metadata_triples(meta, edict, dedup=False)]
-
     if args.with_communities:
         from wbkg.communities import (
             community_triples,
@@ -210,10 +176,12 @@ def main(argv=None, spark=None):
         # leaf-level assignment
         co = cooccurrence_edges(linked_c)
         comms = final_communities(hierarchical_communities(co, max_cluster_size=50)).persist()
-        frames.append(community_triples(comms))
-        frames.append(summary_triples(summarize_communities(comms, chunks)))
+        edges = union_distinct(
+            edges,
+            community_triples(comms),
+            summary_triples(summarize_communities(comms, chunks)),
+        )
 
-    edges = union_distinct(*frames)
     if args.partition_edges_by_pred:
         # partition key = terminal pred segment (schema.org/mentions ->
         # 'mentions'): ~15 distinct values, so the layout stays wide-file,

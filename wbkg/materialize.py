@@ -163,13 +163,6 @@ def chunk_mention_triples(linked: DataFrame, typed_entities: DataFrame) -> DataF
     return _uri_edges(gated, F.col("chunk_uri"), SCHEMA + "mentions", F.col("ent_uri"))
 
 
-def chunk_triples(chunks: DataFrame, linked: DataFrame, typed_entities: DataFrame) -> DataFrame:
-    """chunk nodes + isPartOf + text + gated chunk->entity mentions."""
-    return chunk_node_triples(chunks).unionByName(
-        chunk_mention_triples(linked, typed_entities)
-    )
-
-
 # --------------------------------------------------------------------------- #
 # Metadata KG (ref src/graph.py:755-768 build(); SURVEY §3.2)                  #
 # --------------------------------------------------------------------------- #

@@ -38,12 +38,6 @@ from pyspark.sql import functions as F
 _MERSENNE = (1 << 61) - 1
 
 
-def _stable_hash64(s: str) -> int:
-    """Deterministic 63-bit string hash (python's builtin hash() is
-    process-seeded and would differ across executors)."""
-    return int.from_bytes(hashlib.blake2b(s.encode("utf-8"), digest_size=8).digest(), "big") >> 1
-
-
 def _stable_hash32(s: str) -> int:
     """32-bit variant for minhash: keeps (a*h + b) inside uint64 so the
     permutation math stays vectorized numpy (no Python-object bigints)."""

@@ -113,14 +113,6 @@ def community_sibling_chunks(edges: DataFrame, entity_name: str) -> DataFrame:
     )
 
 
-def chunks_for_community(edges: DataFrame, community_id: str) -> DataFrame:
-    comm_uri = f"{EX}community/{community_id}"
-    return (
-        edges.filter((F.col("pred") == SCHEMA + "isPartOf") & (F.col("obj") == comm_uri))
-        .select(F.col("subj").alias("chunk_uri"))
-    )
-
-
 def embed_chunks(chunks: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     """chunks -> (chunk_id, text, embedding) — K2 vector-store analogue."""
     return hash_embed(chunks.select("doc_id", "chunk_id", "text"), dim=dim)
@@ -145,16 +137,6 @@ def retrieve_topk(
         .join(chunk_embeddings.select("chunk_id", "doc_id", "text"), "chunk_id")
         .orderBy(F.desc("score"), "chunk_id")
     )
-
-
-def acronym_section_chunks(chunks: DataFrame, embeddings: DataFrame, doc_id: str) -> DataFrame:
-    """The C3 retrieval step (src/acronyms.py:26-56): top-5 chunks of ONE doc
-    for the abbreviation-section query."""
-    query = (
-        "Find sections of the document that define acronyms or abbreviations. "
-        "These sections may be called 'Abbreviations', 'Acronyms', or 'List of Acronyms'."
-    )
-    return retrieve_topk(embeddings, query, k=5, doc_id=doc_id)
 
 
 def synthesize_answer(

@@ -4,9 +4,9 @@ The reference has no streaming — its incrementality is checkpoint-and-skip
 (src/pipeline.py:31-33). Here the same extraction pipeline runs as a
 Structured Streaming flow: a file source over the interleaved-document table
 feeds micro-batches into foreachBatch, which reuses the *batch* operators
-(chunk -> extract -> link -> triples) unchanged and writes each batch to a
-batch_id-keyed edges partition (idempotent overwrite: at-least-once replay
-becomes file-level exactly-once). Alias edges accumulate across batches so
+unchanged (the fused chunk_and_extract pass -> link -> entity triples) and
+writes each batch to a batch_id-keyed edges partition (idempotent
+overwrite: at-least-once replay becomes file-level exactly-once). Alias edges accumulate across batches so
 canonicalization sees the full history — see stream_extract_edges.
 
 Also provides a watermarked windowed aggregation over the driver `events`
@@ -97,8 +97,7 @@ def stream_extract_edges(
 
     Returns the StreamingQuery (availableNow trigger: drains all current
     input then stops — use .awaitTermination())."""
-    from wbkg.chunker import chunk_documents
-    from wbkg.extract import extract_acronyms, extract_mentions
+    from wbkg.extract import acronyms_from_fused, chunk_and_extract, mentions_from_fused
     from wbkg.link import link_mentions
     from wbkg.materialize import entity_triples, union_distinct
     from wbkg.canonicalize import (
@@ -119,10 +118,9 @@ def stream_extract_edges(
     cmap_dir = checkpoint_dir.rstrip("/") + "_cmap_state"
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        chunks = chunk_documents(batch_df).persist()
-        acronyms = extract_acronyms(chunks).persist()
-        mentions = extract_mentions(chunks, acronyms, pattern_rows).persist()
-        linked = link_mentions(mentions, entity_dict_df).persist()
+        fused = chunk_and_extract(batch_df, pattern_rows).persist()
+        acronyms = acronyms_from_fused(fused)
+        linked = link_mentions(mentions_from_fused(fused), entity_dict_df).persist()
         # this batch's alias edges: written once as lineage (idempotent:
         # replay overwrites), used once below — never re-read in later batches
         batch_alias = build_alias_edges(entity_dict_df, acronyms, linked).persist()
@@ -152,7 +150,7 @@ def stream_extract_edges(
         )
         for old in _list_state_paths(spark, cmap_dir, upto=batch_id - 2):
             fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
-        for df in (chunks, acronyms, mentions, linked, batch_alias):
+        for df in (fused, linked, batch_alias):
             df.unpersist()
 
     return (
