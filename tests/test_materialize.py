@@ -107,10 +107,10 @@ def test_large_alias_graph_takes_distributed_cc(spark, monkeypatch):
 
     monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 3)
 
-    def boom(_edges):
+    def boom(*_args):
         raise AssertionError("driver union-find used above threshold")
 
-    monkeypatch.setattr(cz, "connected_components_local", boom)
+    monkeypatch.setattr(cz, "union_find", boom)
     edict = spark.createDataFrame(
         [],
         "entity_id string, surface_norm string, kind string, label string, is_alias boolean, alias_of string",
@@ -149,7 +149,31 @@ def test_sanitize_full_latin_fold(spark):
     assert got[2] == "OEuvre_AEro_senor"
 
 
-def test_incremental_equals_full_canonical_map(spark):
+def _random_alias_batches(rng, n_batches=4):
+    """Seeded alias-edge batches with the shapes incremental canonicalization
+    must get right: two QID components built in different batches and
+    merged in a later one, surface-only components, a replayed batch, and
+    non-ASCII members whose code-point order differs from their UTF-16
+    order (U+FF21 < U+1F600 by code point, > by UTF-16 unit)."""
+    surf = [f"surf::{c}{i}" for c in ("a", "é", "\uff21", "\U0001f600") for i in range(6)]
+    qids = [f"qid::Q{i}" for i in (3, 7, 11)] + ["qid::Qé"]
+    batches = [[] for _ in range(n_batches)]
+    # late merge: each half gets its own qid early, a bridge arrives last
+    batches[0].append((surf[0], qids[1]))
+    batches[1].append((surf[1], qids[0]))
+    batches[-1].append((surf[0], surf[1]))
+    # surface-only component
+    batches[1].append((surf[22], surf[23]))
+    for b in batches:
+        for _ in range(8):
+            x, y = rng.choice(surf + qids), rng.choice(surf)
+            if x != y:
+                b.append((x, y))
+    batches.insert(2, list(batches[1]))  # replay of batch 1
+    return batches
+
+
+def test_incremental_equals_full_canonical_map(spark, monkeypatch):
     """incremental_canonical_map folded over batches == one full
     canonical_map_from_edges over all history — including a LATE MERGE of
     two components built in earlier batches, and qid-preference across the
@@ -192,6 +216,33 @@ def test_incremental_equals_full_canonical_map(spark):
     got = {(r.member, r.canonical_id) for r in state.collect()}
     want = {(r.member, r.canonical_id) for r in canonical_map_from_edges(df(edges)).collect()}
     assert got == want
+
+    # seeded random batches (late QID merges, surface-only components, a
+    # replayed batch, non-ASCII members): the driver-side incremental map
+    # equals the full map on the DISTRIBUTED branch — Spark's binary F.min
+    # must agree with Python's code-point min — and so does the distributed
+    # incremental branch
+    import wbkg.canonicalize as cz
+
+    def as_set(m):
+        return {(r.member, r.canonical_id) for r in m.collect()}
+
+    for seed in (1, 2, 3):
+        batches = _random_alias_batches(random.Random(seed))
+        state = None
+        for b in batches:
+            state = incremental_canonical_map(state, df(b))
+        got = as_set(state)
+        with monkeypatch.context() as mp:
+            mp.setattr(cz, "LOCAL_CC_THRESHOLD", 0)
+            want = as_set(canonical_map_from_edges(df([e for b in batches for e in b])))
+            if seed == 1:
+                state = None
+                for b in batches:
+                    state = incremental_canonical_map(state, df(b))
+                assert as_set(state) == want
+        assert got == want
+        assert len({m for m, _ in got}) == len(got)  # one row per member
 
 
 def test_incremental_canonical_map_idempotent_replay(spark):

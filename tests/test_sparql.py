@@ -50,6 +50,37 @@ def test_rdf_type_shorthand(graph):
     assert [r.x for r in out] == ["e:a"]
 
 
+def test_rdf_type_shorthand_matches_pipeline_edges(spark):
+    """The materializer stores rdf:type as the string "rdf:type"; `a` (the
+    full IRI) must match it, alongside full-IRI edges, while the explicit
+    <rdf:type> spelling keeps matching only the stored string."""
+    from wbkg.materialize import RDF_TYPE, SCHEMA, WD, entity_triples
+    from wbkg.sparql import RDF_TYPE_IRI
+
+    linked = spark.createDataFrame(
+        [("D1", "World Bank", "ORG", "Q7164", "Q7164")],
+        "doc_id string, surface string, label string, qid_c string, rdf_safe_c string",
+    )
+    edges = entity_triples(linked)
+    assert edges.filter(F.col("pred") == RDF_TYPE).count() == 1
+    full = spark.createDataFrame(
+        [("e:x", RDF_TYPE_IRI, "c:Org", False, None)], edges.schema
+    )
+    both = edges.unionByName(full)
+
+    def xc(q):
+        return sorted((r.x, r.c) for r in sparql_select(both, q).collect())
+
+    want = [("e:x", "c:Org"), (WD + "Q7164", SCHEMA + "Thing")]
+    assert xc("SELECT ?x ?c WHERE { ?x a ?c . }") == want
+    assert xc(f"SELECT ?x ?c WHERE {{ ?x <{RDF_TYPE_IRI}> ?c . }}") == want
+    assert xc("SELECT ?x ?c WHERE { ?x <rdf:type> ?c . }") == want[1:]
+    # a property-path step and a negated property set treat `a` the same way
+    assert xc("SELECT ?x ?c WHERE { ?x a/<p:none>? ?c . }") == want
+    # entity_triples' other three edges (name, additionalType, mentions)
+    assert sparql_select(both, "SELECT ?x WHERE { ?x !a ?c . }").count() == 3
+
+
 def test_distinct_and_star(graph):
     out = sparql_select(
         graph, "SELECT DISTINCT * WHERE { ?s <p:knows> ?o . ?s <p:in> ?n . } ORDER BY ?o"

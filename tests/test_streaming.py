@@ -465,3 +465,42 @@ def test_stream_running_totals_resume_from_checkpoint(spark, tmp_path):
         1
     ).write.parquet(src + "/f2")
     assert drain() == [(7, 2, 3.0)]  # resumed, not restarted
+
+
+# Spark jobs one steady-state micro-batch may run (fused extract, link,
+# alias-edge write, canonical-map residue collect and write, edges write)
+STEADY_BATCH_JOB_BUDGET = 16
+
+
+def test_stream_job_budget_and_no_cache_leak(spark, tmp_path):
+    """Two files drained as two availableNow micro-batches: the second
+    (steady-state: it advances an existing canonical map) runs within the
+    job budget, and no cached block outlives the query."""
+    n = 8
+    in_dir = str(tmp_path / "in")
+    docs = gen_documents_df(spark, n, partitions=1)
+    half = F.col("doc_id") < f"D{n // 2:07d}"
+    docs.filter(half).write.parquet(os.path.join(in_dir, "f1"))
+    docs.filter(~half).write.parquet(os.path.join(in_dir, "f2"))
+    edict = entity_dict_df(spark, n)
+    pats = build_pattern_rows(build_entity_dict_rows(n), build_unbis_rows())
+
+    sc = spark.sparkContext
+    cached_before = sc._jsc.getPersistentRDDs().size()
+    q = stream_extract_edges(
+        spark, in_dir + "/f*", str(tmp_path / "out"), str(tmp_path / "ckpt"), edict, pats,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True, True]
+    assert sc._jsc.getPersistentRDDs().size() == cached_before
+
+    # a micro-batch's jobs run in the query's job group, described "batch = N"
+    store = sc._jsc.sc().statusStore()
+    per_batch = {}
+    for job in sc.statusTracker().getJobIdsForGroup(q.runId):
+        desc = store.job(job).description()
+        batch = desc.get().rsplit("batch = ", 1)[1] if desc.isDefined() else None
+        per_batch[batch] = per_batch.get(batch, 0) + 1
+    assert set(per_batch) == {"0", "1"}
+    assert per_batch["1"] <= STEADY_BATCH_JOB_BUDGET, per_batch

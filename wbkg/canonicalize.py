@@ -11,7 +11,9 @@ alias edges:
   - per-doc acronyms: entity-key(abbr) <-> entity-key(expansion)
   - linked mentions: entity-key(surface) <-> qid
 
-Connected components run as an iterative DataFrame hash-to-min ("CC on
+The alias graph is vocabulary-bounded, so it is usually collected once and
+its components found by a driver union-find. Above LOCAL_CC_THRESHOLD edges,
+connected components run as an iterative DataFrame hash-to-min ("CC on
 MapReduce", Rastogi et al.'s large-star/small-star family): every node adopts
 the minimum id in its neighborhood until a fixed point. Each iteration
 localCheckpoints to truncate lineage; alias clusters are tiny (2-5 nodes) so
@@ -154,13 +156,24 @@ def build_alias_edges(
 LOCAL_CC_THRESHOLD = 200_000
 
 
-def connected_components_local(edges: DataFrame) -> DataFrame:
-    """Driver union-find for small edge sets — the adaptive physical
-    strategy for CC, analogous to Spark's broadcast-vs-shuffle join choice.
-    The alias graph is vocabulary-bounded (distinct surfaces + dictionary
-    entries), NOT corpus-bounded, so it usually fits the driver by orders of
-    magnitude; the iterative DataFrame path handles the cases that don't.
-    Identical output contract: (member, component=min member)."""
+def collect_if_small(edges: DataFrame) -> list | None:
+    """The rows of `edges` when there are at most LOCAL_CC_THRESHOLD of them,
+    else None — one limit+collect instead of persist + count + collect.
+
+    This is the size gate of the adaptive physical strategy for CC,
+    analogous to Spark's broadcast-vs-shuffle join choice: the alias graph is
+    vocabulary-bounded (distinct surfaces + dictionary entries), NOT
+    corpus-bounded, so it usually fits the driver by orders of magnitude;
+    the iterative DataFrame path handles the cases that don't."""
+    rows = edges.limit(LOCAL_CC_THRESHOLD + 1).collect()
+    return None if len(rows) > LOCAL_CC_THRESHOLD else rows
+
+
+def union_find(pairs, representative=min) -> dict:
+    """Driver union-find over (a, b) pairs -> {node: representative of its
+    component}, the representative chosen by `representative(members)`.
+    Python's str order is code-point order, which is the UTF-8 byte order
+    Spark's F.min uses, so `min` agrees with the distributed path."""
     parent: dict = {}
 
     def find(x):
@@ -170,34 +183,35 @@ def connected_components_local(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    rows = edges.select("src", "dst").collect()
-    for r in rows:
-        ra, rb = find(r["src"]), find(r["dst"])
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    out = [(m, find(m)) for m in list(parent)]
-    return edges.sparkSession.createDataFrame(out, "member string, component string")
+    groups: dict = {}
+    for x in list(parent):
+        groups.setdefault(find(x), []).append(x)
+    out: dict = {}
+    for group in groups.values():
+        out.update(dict.fromkeys(group, representative(group)))
+    return out
 
 
-def canonical_map_from_edges(edges: DataFrame) -> DataFrame:
-    """alias edges (src, dst) -> (member, canonical_id). QID members win over
-    surface members; ties break on the lexicographic min (deterministic).
+def canonical_rep(members) -> str:
+    """Representative rule: min qid:: member if any, else min member."""
+    return min([m for m in members if m.startswith("qid::")] or members)
 
-    Physical strategy is size-gated: small alias graphs take the driver
-    union-find (one job instead of ~10 iterative jobs); big ones take the
-    iterative DataFrame loop."""
-    edges = edges.persist()
+
+def _distributed_map(edges: DataFrame) -> DataFrame:
+    """canonical_map_from_edges for alias graphs above LOCAL_CC_THRESHOLD:
+    the iterative DataFrame loop, then the representative rule as a
+    groupBy + join."""
+    edges = edges.select("src", "dst").persist()
     n_edges = edges.count()
-    comp = (
-        connected_components_local(edges)
-        if n_edges <= LOCAL_CC_THRESHOLD
-        else connected_components(edges)
-    )
-    # both paths have materialized comp (driver collect / eager
-    # localCheckpoint per iteration) — release the alias-edge cache now so
-    # repeated pipeline runs in one session don't accumulate blocks
+    comp = connected_components(edges)
+    # comp is materialized (eager localCheckpoint per iteration) — release
+    # the alias-edge cache now so repeated pipeline runs in one session
+    # don't accumulate blocks
     edges.unpersist()
-    # representative: min qid:: member if any, else min member
     rep = comp.groupBy("component").agg(
         F.min(F.when(F.col("member").startswith("qid::"), F.col("member"))).alias("q_rep"),
         F.min("member").alias("any_rep"),
@@ -211,21 +225,46 @@ def canonical_map_from_edges(edges: DataFrame) -> DataFrame:
     return out
 
 
+def canonical_map_from_edges(edges: DataFrame) -> DataFrame:
+    """alias edges (src, dst) -> (member, canonical_id). QID members win over
+    surface members; ties break on the lexicographic min (deterministic).
+
+    Physical strategy is size-gated: a small alias graph is collected once
+    and the driver union-find returns the final map (one collect, no
+    shuffle); a big one takes the iterative DataFrame loop."""
+    edges = edges.select("src", "dst")
+    rows = collect_if_small(edges)
+    if rows is None:
+        return _distributed_map(edges)
+    pairs = list(union_find(rows, canonical_rep).items())
+    out = edges.sparkSession.createDataFrame(pairs, "member string, canonical_id string")
+    # exact row count for apply_canonicalization's broadcast gate
+    out._wbkg_rows_upper_bound = len(pairs)
+    return out
+
+
 def incremental_canonical_map(prev: DataFrame | None, new_edges: DataFrame) -> DataFrame:
     """Advance a converged (member, canonical_id) map by one batch of alias
     edges WITHOUT recomputing over history (ADVICE/VERDICT r02).
 
-    1. collapse each endpoint to its representative via `prev`,
+    1. collapse each endpoint to its representative via `prev`, flagging
+       the endpoints that were already `prev` members,
     2. drop self-loops — edges inside an existing component vanish, so CC
        only sees the batch's genuinely new merges,
     3. CC the residue, relabel prev's canonical ids through the result,
        append the new members.
 
+    A small residue is collected once: the driver derives the relabel rows
+    (previous representatives that merged) and the fresh members (unflagged
+    endpoints), and `prev` takes a broadcast join against the relabel rows
+    — no shuffle, no anti-join against `prev`. A residue above
+    LOCAL_CC_THRESHOLD takes the distributed path.
+
     Equal to canonical_map_from_edges over the full history: representatives
     carry the min-qid-else-min-member rule, so merging reps is the same as
     merging their components (proved by test_incremental_equals_full)."""
     if prev is None:
-        return canonical_map_from_edges(new_edges.select("src", "dst"))
+        return canonical_map_from_edges(new_edges)
     src_m = prev.select(F.col("member").alias("src"), F.col("canonical_id").alias("_sc"))
     dst_m = prev.select(F.col("member").alias("dst"), F.col("canonical_id").alias("_dc"))
     residue = (
@@ -235,16 +274,35 @@ def incremental_canonical_map(prev: DataFrame | None, new_edges: DataFrame) -> D
         .select(
             F.coalesce("_sc", "src").alias("src"),
             F.coalesce("_dc", "dst").alias("dst"),
+            F.col("_sc").isNotNull().alias("src_old"),
+            F.col("_dc").isNotNull().alias("dst_old"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    delta = canonical_map_from_edges(residue)
-    relabel = delta.select(F.col("member").alias("_old"), F.col("canonical_id").alias("_new"))
-    updated = prev.join(relabel, prev["canonical_id"] == F.col("_old"), "left").select(
-        "member", F.coalesce("_new", "canonical_id").alias("canonical_id")
-    )
-    fresh = delta.join(prev.select("member"), "member", "left_anti")
+    rows = collect_if_small(residue)
+    if rows is None:
+        delta = _distributed_map(residue)
+        relabel = delta.select(F.col("member").alias("_old"), F.col("canonical_id").alias("_new"))
+        fresh = delta.join(prev.select("member"), "member", "left_anti")
+    else:
+        # an old endpoint is a prev representative; a new one is a fresh member
+        old = {r.src: r.src_old for r in rows}
+        old.update((r.dst, r.dst_old) for r in rows)
+        rep = union_find(((r.src, r.dst) for r in rows), canonical_rep)
+        spark = residue.sparkSession
+        moved = [(m, c) for m, c in rep.items() if old[m] and m != c]
+        relabel = None
+        if moved:
+            relabel = F.broadcast(spark.createDataFrame(moved, "_old string, _new string"))
+        fresh = spark.createDataFrame(
+            [(m, c) for m, c in rep.items() if not old[m]], "member string, canonical_id string"
+        )
+    updated = prev
+    if relabel is not None:
+        updated = prev.join(relabel, prev["canonical_id"] == F.col("_old"), "left").select(
+            "member", F.coalesce("_new", "canonical_id").alias("canonical_id")
+        )
     return updated.unionByName(fresh)
 
 

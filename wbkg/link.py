@@ -6,14 +6,14 @@ entity dictionary table (FIXTURES.md §2) and linking is a join:
 
 - J3 dedup-before-lookup (the reference's seen-set, linker.py:66-90): in
   broadcast mode the deduplication lives on the DICTIONARY side
-  (_dedup_dict + primary-wins merge) and repeated surfaces cost one hash
-  probe each — the broadcast hash join IS the cache replay. The salted mode
+  (dictionary_lookup's primary-wins window) and repeated surfaces cost one
+  hash probe each — the broadcast hash join IS the cache replay. The salted mode
   keeps explicit probe-side handling for the non-broadcastable case.
 - J1 exact match: broadcast hash join against primary labels
   (linker.py:152-181; LIMIT-1 tie-break -> deterministic row_number over
   (is_alias, entity_id)).
 - J2 alias/fuzzy pass: alias rows apply only to surfaces with no primary
-  match (dictionary-sized anti-join) — the dictionary-table analogue of
+  match (the same dictionary-sized window) — the dictionary-table analogue of
   wbsearchentities' alias matching (linker.py:202-271;
   first-candidate-wins -> same deterministic tie-break).
 - P4 rdf_safe: qid when linked, else URL-quoted sanitized surface
@@ -65,23 +65,31 @@ def rdf_safe_surface(surface: pd.Series) -> pd.Series:
     return surface.map(mapped)
 
 
-def _dedup_dict(entity_dict: DataFrame, alias_rows: bool) -> DataFrame:
-    """One row per surface_norm with a deterministic LIMIT-1 tie-break
-    (ref linker.py:174 LIMIT 1 / :251,271 first-candidate-wins)."""
-    side = entity_dict.filter(F.col("is_alias") == alias_rows)
-    w = Window.partitionBy("surface_norm").orderBy("entity_id")
-    resolved = F.coalesce("alias_of", "entity_id").alias("qid")
-    return (
-        side.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("surface_norm", resolved, F.col("kind").alias("qid_kind"))
-    )
-
-
 # dictionaries under this row count broadcast; larger ones take the salted
 # shuffle join (the same decision Spark's planner makes from size stats —
 # made explicit here because the probe-side salting must be chosen WITH it)
 AUTO_BROADCAST_MAX_ROWS = 5_000_000
+
+
+def dictionary_lookup(entity_dict: DataFrame) -> DataFrame:
+    """ENTITY_DICT -> (surface_norm, qid), one row per surface: J1+J2 as ONE
+    dictionary-side window. Ordering each surface's rows by (is_alias,
+    entity_id) puts its primary rows first, so row 1 is the primary match
+    when the surface has one (J1 wins) and its first alias row otherwise
+    (J2 fills the gaps); entity_id is the deterministic LIMIT-1 tie-break
+    (ref linker.py:174 LIMIT 1 / :251,271 first-candidate-wins). Alias rows
+    resolve to the entity they alias.
+
+    A caller that links many mention batches against one dictionary (the
+    streaming micro-batches) builds this once and passes it to
+    link_mentions."""
+    w = Window.partitionBy("surface_norm").orderBy("is_alias", "entity_id")
+    return (
+        entity_dict.filter(F.col("is_alias").isNotNull())
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("surface_norm", F.coalesce("alias_of", "entity_id").alias("qid"))
+    )
 
 
 def link_mentions(
@@ -89,52 +97,44 @@ def link_mentions(
     entity_dict: DataFrame,
     strategy: str = "broadcast",
     n_salt: int = N_SALT,
+    lookup: DataFrame | None = None,
 ) -> DataFrame:
     """MENTIONS -> LINKED (adds qid, rdf_safe). strategy: 'broadcast',
     'salted', or 'auto' (count the dictionary — it is dictionary-bounded,
-    never corpus-bounded — and dispatch)."""
-    primary = _dedup_dict(entity_dict, alias_rows=False)
-    aliases = _dedup_dict(entity_dict, alias_rows=True)
-
+    never corpus-bounded — and dispatch). `lookup` is a prebuilt
+    dictionary_lookup(entity_dict); without one the merge is planned here."""
     if strategy == "auto":
         strategy = (
             "broadcast" if entity_dict.count() <= AUTO_BROADCAST_MAX_ROWS else "salted"
         )
+    if lookup is None:
+        lookup = dictionary_lookup(entity_dict)
 
     if strategy == "broadcast":
-        # J1+J2 as ONE dictionary-side merge: primary rows win, alias rows
-        # apply only to surfaces absent from primary (anti-join is
-        # dictionary-sized, never mention-sized). The mention stream then
-        # takes a single broadcast hash join — ZERO shuffles on the probe
-        # side, and J3's dedup-before-lookup is subsumed by the hash-table
-        # probe (a repeated hub surface costs one hash lookup, exactly like
-        # the reference's cache replay). r01 built a distinct
-        # (surface, label) work list instead, which shuffled the whole
-        # mention stream; measured on the canonical corpus the merged-lookup
-        # join is ~20% faster end-to-end.
-        merged = primary.unionByName(
-            aliases.join(primary.select("surface_norm"), "surface_norm", "left_anti")
-        ).select("surface_norm", "qid")
-        linked = mentions.join(F.broadcast(merged), "surface_norm", "left")
+        # The mention stream takes a single broadcast hash join against the
+        # lookup — ZERO shuffles on the probe side, and J3's
+        # dedup-before-lookup is subsumed by the hash-table probe (a
+        # repeated hub surface costs one hash lookup, exactly like the
+        # reference's cache replay). r01 built a distinct (surface, label)
+        # work list instead, which shuffled the whole mention stream;
+        # measured on the canonical corpus the merged-lookup join is ~20%
+        # faster end-to-end.
+        linked = mentions.join(F.broadcast(lookup), "surface_norm", "left")
     elif strategy == "salted":
         # Non-broadcastable dictionary path: shuffle join with explicit
         # salting so Zipf-hub surfaces spread over n_salt reducers. The
         # mention side gets a per-ROW salt (hash of its physical identity);
         # the dictionary side is exploded xN so every salted probe key finds
-        # its build row. Same J1+J2 dictionary-side merge as the broadcast
-        # branch (primary wins, aliases fill the gaps via a dictionary-sized
-        # anti-join), so the 100x-scale path shuffles the mention stream
-        # exactly ONCE — the earlier primary-join/filter/alias-join/union
-        # formulation probed it twice and recomputed the first join under
-        # both union branches (measured 2x+ slower on the canonical corpus).
-        merged = primary.unionByName(
-            aliases.join(primary.select("surface_norm"), "surface_norm", "left_anti")
-        ).select("surface_norm", "qid")
+        # its build row. The same lookup as the broadcast branch, so
+        # the 100x-scale path shuffles the mention stream exactly ONCE — the
+        # earlier primary-join/filter/alias-join/union formulation probed it
+        # twice and recomputed the first join under both union branches
+        # (measured 2x+ slower on the canonical corpus).
         salt = F.pmod(F.xxhash64("doc_id", "chunk_id", "begin"), F.lit(n_salt))
         salted_mentions = mentions.withColumn("_salt", salt)
         explode_salt = F.explode(F.array(*[F.lit(i) for i in range(n_salt)])).alias("_salt")
-        merged_x = merged.select("*", explode_salt)
-        linked = salted_mentions.join(merged_x, ["surface_norm", "_salt"], "left").drop("_salt")
+        lookup_x = lookup.select("*", explode_salt)
+        linked = salted_mentions.join(lookup_x, ["surface_norm", "_salt"], "left").drop("_salt")
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
     # P4: rdf_safe = qid else sanitized surface (ner.py:46-54); rows whose

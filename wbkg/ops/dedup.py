@@ -499,15 +499,12 @@ def near_dup_keep_list(
     drop set (is_kept = false) straight into an anti-join on the corpus.
 
     The component computation is size-gated exactly like alias
-    canonicalization (wbkg/canonicalize.py): pair sets small enough for the
-    driver take one union-find job, bigger ones take the iterative
-    DataFrame min-label loop. Near-dup pair graphs are pair-bounded, not
-    corpus-bounded — dup clusters are tiny and most docs never appear."""
-    from wbkg.canonicalize import (
-        LOCAL_CC_THRESHOLD,
-        connected_components,
-        connected_components_local,
-    )
+    canonicalization (wbkg/canonicalize.py): a pair set small enough for the
+    driver is collected once and union-found there, a bigger one takes the
+    iterative DataFrame min-label loop. Near-dup pair graphs are
+    pair-bounded, not corpus-bounded — dup clusters are tiny and most docs
+    never appear."""
+    from wbkg.canonicalize import collect_if_small, connected_components, union_find
 
     id_type = dict(docs.dtypes)[id_col]
     numeric = id_type in ("tinyint", "smallint", "int", "bigint")
@@ -519,14 +516,16 @@ def near_dup_keep_list(
         if numeric
         else (lambda c: F.col(c).cast("string"))
     )
-    edges = pairs.select(key(pair_a).alias("src"), key(pair_b).alias("dst")).persist()
-    n = edges.count()
-    comp = (
-        connected_components_local(edges)
-        if n <= LOCAL_CC_THRESHOLD
-        else connected_components(edges)
-    )
-    edges.unpersist()
+    edges = pairs.select(key(pair_a).alias("src"), key(pair_b).alias("dst"))
+    rows = collect_if_small(edges)
+    if rows is None:
+        edges = edges.persist()
+        comp = connected_components(edges)  # materialized by its checkpoints
+        edges.unpersist()
+    else:
+        comp = docs.sparkSession.createDataFrame(
+            list(union_find(rows).items()), "member string, component string"
+        )
     comp_typed = comp.select(
         F.col("member").cast(id_type).alias(id_col),
         F.col("component").cast(id_type).alias("_rep"),

@@ -89,6 +89,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.materialize import RDF_TYPE
+
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _TOKEN = re.compile(
@@ -167,6 +169,21 @@ class _Path:
 
 class SparqlError(ValueError):
     pass
+
+
+def _pred_forms(iri: str) -> list[str]:
+    """The stored predicate spellings a constant predicate IRI matches. The
+    KG materializer stores rdf:type as the string "rdf:type"
+    (wbkg.materialize.RDF_TYPE) while Turtle ingest and CONSTRUCT store the
+    full IRI, so the full IRI (and `a`, which expands to it) matches both;
+    every other IRI matches itself only."""
+    return [RDF_TYPE_IRI, RDF_TYPE] if iri == RDF_TYPE_IRI else [iri]
+
+
+def _pred_in(iris: list[str]):
+    """Filter: the predicate is a stored spelling of one of `iris`."""
+    forms = [f for iri in iris for f in _pred_forms(iri)]
+    return F.col("pred") == forms[0] if len(forms) == 1 else F.col("pred").isin(forms)
 
 
 def _parse_term(tok: str, prefixes: dict[str, str]) -> _Term:
@@ -1248,7 +1265,7 @@ def _compile_path(edges: DataFrame, path: _Path) -> DataFrame:
 
 def _compile_path_node(edges: DataFrame, node) -> DataFrame:
     if isinstance(node, _PathStep):
-        return edges.filter(F.col("pred") == node.iri).select(
+        return edges.filter(_pred_in([node.iri])).select(
             F.col("obj" if node.inverse else "subj").alias("a"),
             F.col("subj" if node.inverse else "obj").alias("b"),
         )
@@ -1282,13 +1299,13 @@ def _compile_path_node(edges: DataFrame, node) -> DataFrame:
         parts = []
         if node.fwd or not node.inv:
             parts.append(
-                edges.filter(~F.col("pred").isin(node.fwd)).select(
+                edges.filter(~_pred_in(node.fwd)).select(
                     F.col("subj").alias("a"), F.col("obj").alias("b")
                 )
             )
         if node.inv:
             parts.append(
-                edges.filter(~F.col("pred").isin(node.inv)).select(
+                edges.filter(~_pred_in(node.inv)).select(
                     F.col("obj").alias("a"), F.col("subj").alias("b")
                 )
             )
@@ -1357,7 +1374,11 @@ def _order_patterns(patterns, pred_stats):
         s, p, o = pat
         if isinstance(p, _Path):
             return total  # closure size unknown; join it late
-        base = pred_stats.get(p.value, 0.0) if p.kind == "const" else total
+        base = (
+            sum(pred_stats.get(f, 0.0) for f in _pred_forms(p.value))
+            if p.kind == "const"
+            else total
+        )
         sel = 1.0
         if s.kind == "const":
             sel *= 1e-4
@@ -1419,7 +1440,9 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
         cols, rename = [], {}
         for col, term in pos_terms:
             if term.kind == "const":
-                scan = scan.filter(F.col(col) == term.value)
+                scan = scan.filter(
+                    _pred_in([term.value]) if col == "pred" else F.col(col) == term.value
+                )
                 if col == "obj" and scan_lang and term.lang is not None:
                     scan = scan.filter(
                         F.coalesce(F.col("lang"), F.lit("")) == term.lang
