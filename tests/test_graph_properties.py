@@ -11,6 +11,10 @@ implementation's join shapes):
   and the output is a FIXPOINT (running k_core on it changes nothing).
 - k-truss: every surviving edge's support, recomputed in plain Python
   over the surviving edge set, >= k-2; reported support matches.
+- bfs_distances / harmonic_centrality (the shared frontier loop): equal
+  to a plain-Python BFS, directed and undirected, under a hop cutoff.
+- connected_components / strongly_connected_components (the shared
+  min-label fixpoint): equal to the driver union-find and to Tarjan.
 - merge_upsert: idempotent (re-applying the same source is a no-op) and
   key-complete (output keys == target keys ∪ source keys).
 """
@@ -31,6 +35,58 @@ EDGES = st.lists(
 def _und(pairs):
     """canonical undirected simple edge set"""
     return {(min(a, b), max(a, b)) for a, b in pairs}
+
+
+def _named(pairs):
+    return [(f"n{a:02d}", f"n{b:02d}") for a, b in pairs]
+
+
+def _edge_df(spark, pairs):
+    return spark.createDataFrame(_named(pairs), "src string, dst string")
+
+
+def _adjacency(pairs, directed):
+    adj = {}
+    for a, b in _named(pairs):
+        adj.setdefault(a, set()).add(b)
+        if not directed:
+            adj.setdefault(b, set()).add(a)
+    return adj
+
+
+def _py_bfs(adj, sources, max_hops):
+    """{node: hops from the nearest source} within max_hops"""
+    dist = dict.fromkeys(sources, 0)
+    frontier = set(sources)
+    for hop in range(1, max_hops + 1):
+        frontier = {w for v in frontier for w in adj.get(v, ()) if w not in dist}
+        dist.update(dict.fromkeys(frontier, hop))
+    return dist
+
+
+def _py_tarjan(adj):
+    """{node: min member of its strongly connected component}"""
+    index, low, stack, out = {}, {}, [], {}
+    nodes = set(adj) | {w for ws in adj.values() for w in ws}
+
+    def visit(v):
+        index[v] = low[v] = len(index)
+        stack.append(v)
+        for w in adj.get(v, ()):
+            if w not in index:
+                visit(w)
+                low[v] = min(low[v], low[w])
+            elif w not in out:  # still on the stack
+                low[v] = min(low[v], index[w])
+        if low[v] == index[v]:
+            comp = stack[stack.index(v):]
+            del stack[stack.index(v):]
+            out.update(dict.fromkeys(comp, min(comp)))
+
+    for v in sorted(nodes):
+        if v not in index:
+            visit(v)
+    return out
 
 
 @settings(max_examples=12, **HC)
@@ -86,6 +142,92 @@ def test_k_truss_definition(spark, pairs, k):
         support = len(adj.get(a, set()) & adj.get(b, set()))
         assert support == s, ((a, b), s, support)
         assert support >= k - 2
+
+
+SOURCES = st.sets(NODE, min_size=1, max_size=3)
+
+
+@settings(max_examples=8, **HC)
+@given(
+    pairs=EDGES,
+    sources=SOURCES,
+    directed=st.booleans(),
+    max_hops=st.integers(min_value=1, max_value=4),
+)
+def test_bfs_distances_matches_python_bfs(spark, pairs, sources, directed, max_hops):
+    from wbkg.graph_analytics import bfs_distances
+
+    names = [f"n{s:02d}" for s in sorted(sources)]
+    src = spark.createDataFrame([(n,) for n in names], "node string")
+    got = {
+        r.node: r.dist
+        for r in bfs_distances(
+            _edge_df(spark, pairs), src, max_hops=max_hops, directed=directed
+        ).collect()
+    }
+    assert got == _py_bfs(_adjacency(pairs, directed), names, max_hops)
+
+
+@settings(max_examples=8, **HC)
+@given(
+    pairs=EDGES,
+    seeds=SOURCES,
+    directed=st.booleans(),
+    max_hops=st.integers(min_value=1, max_value=4),
+)
+def test_harmonic_centrality_matches_python_bfs(spark, pairs, seeds, directed, max_hops):
+    from wbkg.graph_analytics import harmonic_centrality
+
+    names = [f"n{s:02d}" for s in sorted(seeds)]
+    adj = _adjacency(pairs, directed)
+    want = {}
+    for seed in names:
+        for node, d in _py_bfs(adj, [seed], max_hops).items():
+            if d > 0:
+                n, h = want.get(node, (0, 0.0))
+                want[node] = (n + 1, h + 1.0 / d)
+    got = {
+        r.node: (r.n_reaching, r.harmonic)
+        for r in harmonic_centrality(
+            _edge_df(spark, pairs),
+            spark.createDataFrame([(n,) for n in names], "node string"),
+            max_hops=max_hops,
+            directed=directed,
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for node, (n, h) in want.items():
+        assert got[node][0] == n
+        assert abs(got[node][1] - h) < 1e-7, (node, got[node], h)
+
+
+@settings(max_examples=8, **HC)
+@given(pairs=EDGES)
+def test_connected_components_matches_union_find(spark, pairs):
+    from wbkg.canonicalize import connected_components, union_find
+
+    got = {
+        r.member: r.component
+        for r in connected_components(_edge_df(spark, pairs)).collect()
+    }
+    assert got == union_find(_named(pairs))
+
+
+@settings(max_examples=6, **HC)
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 7), st.integers(0, 7)).filter(lambda p: p[0] != p[1]),
+        max_size=16,
+    )
+)
+def test_scc_matches_tarjan(spark, pairs):
+    from wbkg.graph_analytics import strongly_connected_components
+
+    got = {
+        r.member: r.scc_id
+        for r in strongly_connected_components(_edge_df(spark, pairs)).collect()
+    }
+    assert got == _py_tarjan(_adjacency(pairs, directed=True))
 
 
 @settings(max_examples=10, **HC)

@@ -101,6 +101,26 @@ def test_cc_nonconvergence_warns(spark):
         connected_components(edges, max_iter=2)
 
 
+def test_cc_storage_does_not_grow_with_rounds(spark):
+    """The min-label fixpoint releases each superseded round's checkpoint:
+    connected_components leaves as many persisted RDDs behind on a 16-node
+    chain (~8 probes) as on a 4-node one (~2)."""
+    from wbkg.canonicalize import connected_components
+
+    jsc = spark.sparkContext._jsc
+
+    def growth(n):
+        edges = spark.createDataFrame(
+            [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)], "src string, dst string"
+        )
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        comp = connected_components(edges)
+        assert {r.component for r in comp.collect()} == {"v00"}
+        return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+    assert growth(4) == growth(16)
+
+
 def test_large_alias_graph_takes_distributed_cc(spark, monkeypatch):
     """Above LOCAL_CC_THRESHOLD the driver union-find must NOT run."""
     import wbkg.canonicalize as cz

@@ -1,37 +1,39 @@
-"""Graph analytics over the finished KG: PageRank, triangle counting,
-degree statistics.
+"""Graph analytics over the finished KG, as DataFrame plans.
 
 The reference stops at community detection (ref src/pipeline.py builds the
-graph, graspologic partitions it); once a KG exists users immediately ask
-"which entities matter" (PageRank over the edge table) and "how clustered
-is it" (triangles/degrees). These are the standard iterative/join-shaped
-graph algorithms expressed as DataFrame plans:
+graph, graspologic partitions it); once a KG exists users ask "which
+entities matter", "how clustered is it" and "what is near this entity".
+Operators:
 
-- pagerank: power iteration, WEIGHTED multigraph semantics (parallel edges
-  aggregate into integer weights, like GraphX; an explicit weight column is
-  honored). Per round: one equi-join of ranks against the weighted edge
-  list, one partial-aggregated groupBy sum — two shuffles, both on the
-  node key, so a cluster co-partitions them; localCheckpoint every
-  `checkpoint_every` rounds truncates lineage exactly like the CC/LP loops
-  (wbkg/canonicalize.py). Dangling mass is redistributed uniformly (the
-  standard correction) so ranks stay a probability distribution.
-- triangle_count: degree-ordered Schank–Wagner (compact-forward): orient
-  each undirected edge from its lower-(degree, id) endpoint, collect each
-  source's out-neighbor array, and intersect the two endpoint arrays per
-  oriented edge (array_intersect; r07 — previously a wedge self-join +
-  closing semi-join that materialized Σ outdeg² rows). Out-degrees are
-  O(sqrt(m))-bounded, so the shipped intersection volume is Σ outdeg²
-  ELEMENTS — the naive ordered three-way self-join (Σ deg²) never
-  finished on the bench's co-purchase graph and was replaced before
-  shipping (BENCH/PLANS.md round-5 section).
-- degree_stats: one partial-aggregated groupBy per direction.
-- bfs_distances: multi-source shortest hop distance by frontier expansion
-  (the Pregel pattern); per-round work is proportional to the frontier's
-  out-edges, not the graph.
+- ranking: pagerank (weighted multigraph semantics, dangling mass
+  redistributed), personalized_pagerank (restart to a seed set), hits,
+  katz_centrality, harmonic_centrality (seed-sampled closeness);
+- reachability: bfs_distances, sssp (Bellman-Ford frontier relaxation),
+  strongly_connected_components (Orzan coloring), random_walks;
+- cohesion: triangle_count, clustering_coefficient, k_core, k_truss,
+  modularity of a partition;
+- similarity: neighbor_jaccard, link_prediction (common neighbors +
+  Adamic-Adar); degree_stats.
+
+Loops of one shape share one private kernel: _triangle_pairs (degree-
+ordered adjacency intersection: triangle_count, k_truss,
+clustering_coefficient), _frontier_bfs (bfs_distances,
+harmonic_centrality), _power_iteration (pagerank, personalized_pagerank)
+and canonicalize.min_label_fixpoint (strongly_connected_components and
+connected components). The others — sssp, k_core, k_truss's peel, hits,
+katz, random_walks — are one loop each.
+
+Lineage: every loop cuts its plan with localCheckpoint. Static inputs (the
+deduped edge list, out-degrees) are checkpointed once; a loop's growing
+state is lazily checkpointed every RANK_CHECKPOINT_EVERY /
+SETTLED_CHECKPOINT_EVERY / SEED_SETTLED_CHECKPOINT_EVERY rounds. Lazy
+checkpoints launch no job of their own: the round's probe (isEmpty, count,
+a broadcast scalar) or the caller's action materializes them.
 
 At 100 TB: ranks/degrees shuffle (node_id, double) pairs only — never
-payloads; the triangle join's quadratic term is bounded by the max degree,
-so callers cap hub degrees first (same hub-cap primitive as
+payloads; the triangle kernel's adjacency arrays are O(sqrt(m)) under
+degree ordering (see _triangle_pairs), and the wedge-shaped similarity
+operators take a hot-center cap (same hub-cap primitive as
 wbkg/communities.py co-occurrence).
 """
 
@@ -39,56 +41,75 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from wbkg.canonicalize import min_label_fixpoint
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    checkpoint_every: int = 2,
-    weight: str | None = None,
+# Lazy localCheckpoint cadence, in rounds, of each loop's growing state:
+# the rank vectors (pagerank, personalized_pagerank, katz), the settled
+# distance table (bfs_distances, sssp) and harmonic's (seed, node) settled
+# table. These are the values the per-call options they replace defaulted
+# to; no caller set another.
+RANK_CHECKPOINT_EVERY = 2
+SETTLED_CHECKPOINT_EVERY = 4
+SEED_SETTLED_CHECKPOINT_EVERY = 2
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct endpoints of an (src, dst) edge list -> (node)."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _symmetrize(e: DataFrame) -> DataFrame:
+    """(src, dst) edge list -> both directions of every edge, deduped."""
+    return e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def _weighted_edges(
+    edges: DataFrame, src: str, dst: str, weight: str | None
 ) -> DataFrame:
-    """Power-iteration PageRank over a directed edge list -> (node, rank).
-
-    rank_{t+1}(n) = (1-d)/N + d * (dangling_t/N
-                                   + sum_{m->n} rank_t(m) * w(m,n)/out_w(m))
-
-    MULTIGRAPH semantics (ADVICE r05): parallel (src, dst) edges aggregate
-    into an integer weight and each neighbor receives rank scaled by
-    weight/total_out_weight — the convention GraphX and the standard
-    weighted PageRank use, so repeated KG edges (a mention extracted twice)
-    count twice. Pass `weight` to use an explicit weight column instead
-    (rows with the same (src, dst) sum). On a simple graph every weight is
-    1 and the result is float-identical to unweighted rank/outdeg.
-
-    Fixed iteration count (the driver-friendly contract — no per-round
-    convergence job); every `checkpoint_every` rounds the rank table is
-    localCheckpoint-ed so lineage stays flat. Returns ranks summing to 1."""
+    """-> (src, dst, w): MULTIGRAPH semantics (ADVICE r05) — parallel
+    (src, dst) edges aggregate into an integer weight, or sum the `weight`
+    column, the GraphX convention, so repeated KG edges count twice. Static
+    across the power iterations, so checkpointed once: no round's lineage
+    re-aggregates the raw edge table."""
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # the weighted edge list and out-degrees are STATIC across iterations;
-    # checkpoint both once so no iteration's lineage re-aggregates the raw
-    # edge table (previously every checkpoint window re-ran the groupBy
-    # from source — the dominant cost on multi-million-edge graphs)
-    e = (
+    return (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
+
+
+def _power_iteration(
+    e: DataFrame, nodes: DataFrame, n: int, iterations: int, damping: float
+) -> DataFrame:
+    """Random walk with restart by power iteration over the weighted edge
+    list `e` -> (node, rank), shared by pagerank and personalized_pagerank.
+    `nodes` is (node, is_seed), the restart weight of every node, and `n`
+    the total weight:
+
+    rank_{t+1}(v) = is_seed(v) * ((1-d)/n + d * dangling_t/n)
+                    + d * sum_{m->v} rank_t(m) * w(m,v)/out_w(m)
+
+    starting from is_seed/n. Dangling nodes (no out-edges) restart their
+    mass, so ranks always sum to 1; on a simple graph every weight is 1.0
+    and the result is float-identical to rank/outdeg.
+
+    Per round: one join of ranks against out-degrees, one edge-keyed join
+    and a partial-agg groupBy — shuffles all on the node key — plus the
+    dangling scalar as a one-row broadcast cross join. Fixed round count,
+    no convergence job."""
     out_deg = (
         e.groupBy("src").agg(F.sum("w").alias("out_w")).localCheckpoint(eager=False)
     )
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = (1.0 - damping) / n_nodes
+    ranks = nodes.select("node", (F.col("is_seed") / n).alias("rank"))
+    base = (1.0 - damping) / n
     for i in range(iterations):
         # checkpointed (lazily) BEFORE the dangling-mass scalar: the
         # scalar's broadcast sub-job then materializes exactly one join
@@ -100,8 +121,6 @@ def pagerank(
             .select("node", "rank", "out_w")
             .localCheckpoint(eager=False)
         )
-        # dangling nodes (no out-edges) leak their mass; fold the scalar
-        # back in as a one-row broadcast cross join
         dang = with_deg.filter(F.col("out_w").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
         )
@@ -121,16 +140,16 @@ def pagerank(
             .select(
                 "node",
                 (
-                    F.lit(base)
+                    F.lit(base) * F.col("is_seed")
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("in_sum"), F.lit(0.0))
-                        + F.col("dang") / n_nodes
+                        + F.col("dang") / n * F.col("is_seed")
                     )
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+        if (i + 1) % RANK_CHECKPOINT_EVERY == 0 or i == iterations - 1:
             # LAZY checkpoint: the logical plan is truncated immediately
             # (bounded plan size) but no job launches — the caller's first
             # action executes the whole iteration chain as ONE job, and
@@ -139,25 +158,35 @@ def pagerank(
     return ranks
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Total triangle count of the UNDIRECTED simple graph induced by the
-    edge list -> a 1-row (n_triangles) DataFrame.
+def pagerank(
+    edges: DataFrame,
+    iterations: int = 10,
+    damping: float = 0.85,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str | None = None,
+) -> DataFrame:
+    """Power-iteration PageRank over a directed edge list -> (node, rank):
+    _power_iteration with a uniform restart weight of 1.0 on every node,
 
-    DEGREE-ORDERED counting (Schank–Wagner / compact-forward — the
-    formulation that survives dense graphs): orient every undirected edge
-    from its lower-(degree, id) endpoint to the higher one, so every
-    vertex's out-degree is O(sqrt(m))-bounded, then count per oriented
-    edge (u, v) the size of N+(u) ∩ N+(v) — each triangle's three
-    vertices appear in (degree, id) order, so it is counted exactly once,
-    at its (source, middle) edge.
+    rank_{t+1}(n) = (1-d)/N + d * (dangling_t/N
+                                   + sum_{m->n} rank_t(m) * w(m,n)/out_w(m))
 
-    The intersection runs over COLLECTED out-neighbor arrays
-    (array_intersect in whole-stage codegen), not a wedge self-join: the
-    r06 shape materialized Σ outdeg² wedge ROWS and shuffled them again
-    for the closing semi-join; here the only heavy exchange ships each
-    edge's source adjacency array once (Σ outdeg² array ELEMENTS, no
-    per-wedge row overhead, no second wedge-sized shuffle)."""
-    und = (
+    Parallel edges weigh by multiplicity; pass `weight` to use an explicit
+    weight column (rows with the same (src, dst) sum). Returns ranks
+    summing to 1."""
+    e = _weighted_edges(edges, src, dst, weight)
+    nodes = _node_set(e).localCheckpoint()
+    n_nodes = nodes.count()
+    return _power_iteration(
+        e, nodes.withColumn("is_seed", F.lit(1.0)), n_nodes, iterations, damping
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph of an edge list -> canonical (a, b)
+    edges with a < b, deduped, self-loops dropped."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -165,16 +194,44 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    deg = (
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """Canonical (a, b) edges -> (node, deg)."""
+    return (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    ann = (
-        und.join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), "a")
-        .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), "b")
-    )
+
+
+def _triangle_pairs(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Degree-ordered triangle kernel (Schank–Wagner / compact-forward)
+    over canonical (a, b) edges and their _degrees -> (u, v, common): one
+    row per oriented edge, common = N+(u) ∩ N+(v). Shared by
+    triangle_count (sums the sizes), k_truss and clustering_coefficient
+    (explode it into triangles).
+
+    Every undirected edge is oriented from its lower-(degree, id) endpoint
+    to the higher one, so each triangle's vertices appear in (degree, id)
+    order and it lands in exactly one `common` array, at its (source,
+    middle) edge. The intersection runs over COLLECTED out-neighbor arrays
+    (array_intersect in whole-stage codegen), not a wedge self-join: the
+    r06 shape materialized Σ outdeg² wedge ROWS and shuffled them again for
+    the closing semi-join; here the heavy exchange ships each edge's two
+    adjacency arrays once (Σ outdeg² ELEMENTS, no per-wedge row overhead).
+
+    Size cap of the collect_list arrays: a vertex of out-degree d points
+    only at vertices of degree >= its own degree >= d, so d² <= 2m and no
+    array holds more than sqrt(2m) elements, however large the hubs'
+    degrees — the naive ordering (Σ deg²) never finished on the bench's
+    co-purchase graph (BENCH/PLANS.md round-5 section). A collected array
+    is one aggregation value and does not spill, so sqrt(2m) node ids must
+    fit one task's memory."""
+    ann = und.join(
+        deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a"
+    ).join(deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")), "b")
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
@@ -183,16 +240,68 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
     adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-    tri_per_edge = (
+    return (
         oriented.join(adj, "u")
-        .join(
-            adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v"
+        .join(adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v")
+        .select("u", "v", F.array_intersect("nb", "nb_v").alias("common"))
+    )
+
+
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Total triangle count of the UNDIRECTED simple graph induced by the
+    edge list -> a 1-row (n_triangles) DataFrame: the sum of
+    _triangle_pairs' intersection sizes (each triangle counted once)."""
+    und = _undirected(edges, src, dst)
+    return _triangle_pairs(und, _degrees(und)).agg(
+        F.coalesce(F.sum(F.size("common")), F.lit(0)).cast("bigint").alias("n_triangles")
+    )
+
+
+def _frontier_bfs(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    directed: bool,
+    start: DataFrame,
+    max_hops: int,
+    cadence: int,
+) -> DataFrame:
+    """Frontier-expansion BFS (the Pregel pattern as DataFrame ops) from the
+    hop-0 keys `start` -> settled (*start.columns, dist): each key with the
+    hop at which it was first reached, within `max_hops`. The key columns
+    end in `node`, the one that walks the edges; a leading key
+    (harmonic_centrality's `seed`) rides along, so each of its values keeps
+    separate distances. `directed=False` expands along reversed edges too.
+
+    Each round joins only the FRONTIER — keys first settled last round —
+    against the edge list and anti-joins the settled set, so per-round
+    shuffle volume is O(frontier out-edges), never O(V): early rounds touch
+    a sliver of the edge table and Catalyst broadcasts the frontier while
+    it is small. The frontier is lazily checkpointed and its emptiness
+    probe materializes it — one job per hop; the growing settled table is
+    lazily checkpointed every `cadence` hops."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    if not directed:
+        e = _symmetrize(e).localCheckpoint(eager=False)
+    keys = start.columns
+    settled = start.select(*keys, F.lit(0).alias("dist")).localCheckpoint(eager=False)
+    frontier = settled
+    for hop in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(e, frontier["node"] == e["src"])
+            .select(*keys[:-1], F.col("dst").alias("node"))
+            .distinct()
+            .join(settled, keys, "left_anti")
+            .select(*keys, F.lit(hop).alias("dist"))
+            .localCheckpoint(eager=False)
         )
-        .select(F.size(F.array_intersect("nb", "nb_v")).alias("t"))
-    )
-    return tri_per_edge.agg(
-        F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("n_triangles")
-    )
+        if nxt.isEmpty():
+            break
+        settled = settled.unionByName(nxt)
+        if hop % cadence == 0:
+            settled = settled.localCheckpoint(eager=False)
+        frontier = nxt
+    return settled
 
 
 def bfs_distances(
@@ -202,58 +311,17 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     directed: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source BFS hop distance -> (node, dist): for every node
     reachable from the source set within `max_hops`, the hop count to the
     NEAREST source (sources themselves at dist 0). Unreachable nodes are
-    absent — callers outer-join if they want nulls.
-
-    Frontier expansion (the Pregel pattern as DataFrame ops): each round
-    joins only the FRONTIER — nodes first settled last round — against the
-    edge list and anti-joins the settled set, so per-round shuffle volume
-    is O(frontier out-edges), never O(V): on a 100-TB graph the early
-    rounds touch a sliver of the edge table and Catalyst broadcasts the
-    frontier while it is small. The frontier is localCheckpoint-ed every
-    round (its emptiness is the termination test, so it is materialized
-    anyway); the growing settled table is checkpointed every
-    `checkpoint_every` rounds to keep lineage flat. `sources` is a
+    absent — callers outer-join if they want nulls. `sources` is a
     1-column (node) DataFrame; `directed=False` expands along reversed
-    edges too."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if not directed:
-        e = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    settled = (
-        sources.select(F.col(sources.columns[0]).alias("node"))
-        .distinct()
-        .select("node", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=False)
+    edges too. Runs _frontier_bfs keyed on the node alone."""
+    start = sources.select(F.col(sources.columns[0]).alias("node")).distinct()
+    return _frontier_bfs(
+        edges, src, dst, directed, start, max_hops, SETTLED_CHECKPOINT_EVERY
     )
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        # lazy checkpoint + the emptiness probe in ONE job per hop (the
-        # r06 eager checkpoint cost a second job per hop)
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(settled, "node", "left_anti")
-            .select("node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(nxt)
-        if hop % checkpoint_every == 0:
-            settled = settled.localCheckpoint(eager=False)
-        frontier = nxt
-    return settled
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -352,7 +420,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "weight",
     max_iters: int = 30,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source single-source-shortest-path (weighted BFS
     generalization) -> (node, dist): minimum total edge weight from the
@@ -397,7 +464,7 @@ def sssp(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if it % checkpoint_every == checkpoint_every - 1:
+        if (it + 1) % SETTLED_CHECKPOINT_EVERY == 0:
             dist = dist.localCheckpoint(eager=False)
         frontier = improved
     return dist
@@ -409,9 +476,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 100,
-    checkpoint_every: int = 2,  # unused since r07 (every round is one
-    #                             lazily-checkpointed job); kept for API
-    #                             compatibility
 ) -> DataFrame:
     """k-core -> (node, degree): the maximal subgraph in which every node
     has degree >= k, with each surviving node's degree INSIDE the core.
@@ -437,17 +501,10 @@ def k_core(
     materializes the new degree table). Peel depth is the graph's
     degeneracy-ordering depth, not O(V) — tens of rounds on power-law
     graphs regardless of scale."""
-    e0 = (
+    e = _symmetrize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-    )
-    e = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ).localCheckpoint(eager=False)
     deg = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("_deg"))
@@ -504,13 +561,10 @@ def modularity(
     Nodes absent from the community map form singleton communities of
     their own (labelled by the node id) — standard convention, keeps Q
     well-defined on partial partitions."""
-    e = (
+    und = _symmetrize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
     cmap = communities.select(
         F.col(node).alias("_n"), F.col(community).cast("string").alias("_c")
     )
@@ -578,13 +632,10 @@ def link_prediction(
     of 1/ln(integer) terms, rounded to 8 (the shared ulp convention);
     top_k (if set) cuts on the total order (adamic_adar DESC, common
     DESC, u, v) so the LIMIT is engine-independent."""
-    e = (
+    und = _symmetrize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    und = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
     deg = und.groupBy(F.col("src").alias("center")).agg(
         F.count("*").alias("cdeg")
     )
@@ -639,7 +690,6 @@ def k_truss(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 50,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-truss -> (a, b, support): the maximal subgraph in which every
     edge participates in >= k-2 triangles (within the truss), with each
@@ -651,11 +701,9 @@ def k_truss(
     Undirected simple-graph semantics: canonical (a < b) edges, deduped,
     self-loops dropped.
 
-    Iterative support peel. Each round counts per-edge triangle support
-    with the SAME degree-ordered orientation triangle_count uses, via
-    adjacency-array intersection (orient by (degree, id), collect
-    out-neighbor arrays, explode N+(u) ∩ N+(v) per oriented edge — each
-    triangle materializes ONCE, never Σ outdeg² wedge rows), then credit
+    Iterative support peel. Each round explodes _triangle_pairs' per-edge
+    intersections into triangles (each materializes ONCE, never Σ outdeg²
+    wedge rows), then credit
     all three canonical edges of each triangle (one explode of a
     3-element array) and fold support in one partial-agg groupBy. Edges
     under k-2 drop; repeat until the edge count is stable. The fixpoint
@@ -667,31 +715,8 @@ def k_truss(
     edges."""
 
     def _support(cur: DataFrame) -> DataFrame:
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .unionByName(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        ann = cur.join(
-            deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a"
-        ).join(
-            deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b")), "b"
-        )
-        a_first = (F.col("deg_a") < F.col("deg_b")) | (
-            (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-        )
-        oriented = ann.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-        adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-        tris = (
-            oriented.join(adj, "u")
-            .join(adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v")
-            .select(
-                "u", "v", F.explode(F.array_intersect("nb", "nb_v")).alias("w")
-            )
+        tris = _triangle_pairs(cur, _degrees(cur)).select(
+            "u", "v", F.explode("common").alias("w")
         )
         credit = tris.select(
             F.explode(
@@ -712,15 +737,7 @@ def k_truss(
             F.count("*").cast("int").alias("support")
         )
 
-    cur = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    cur = _undirected(edges, src, dst).localCheckpoint(eager=False)
     n_edges = cur.count()
     support = None
     converged = n_edges == 0
@@ -752,7 +769,6 @@ def hits(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) -> (node, authority, hub),
     L2-normalized each half-step, both rounded to 8 — the OTHER classic
@@ -777,12 +793,7 @@ def hits(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _node_set(e).localCheckpoint(eager=False)
     # hub scores start at 1.0 on every node; only rows that stay nonzero
     # matter inside the loop (see docstring)
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
@@ -947,7 +958,6 @@ def harmonic_centrality(
     src: str = "src",
     dst: str = "dst",
     directed: bool = False,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Seed-set harmonic closeness -> (node, n_reaching, harmonic):
     for every node reached from the seed set, harmonic(v) =
@@ -955,45 +965,20 @@ def harmonic_centrality(
     sampled-centrality estimator (exact all-pairs closeness is O(V*E);
     production practice is a seed sample, which this IS).
 
-    Per-seed labeled BFS: the frontier carries (seed, node) pairs so each
+    Per-seed labeled BFS: _frontier_bfs keyed on (seed, node), so each
     seed's distances stay separate (bfs_distances collapses to the
     nearest seed; this op cannot). State is O(|seeds| * V) — the caller
-    controls |seeds|, that is the sampling knob. Each round joins only
-    the live frontier against the edge list on the node key and
-    anti-joins the settled set on (seed, node); shuffle volume is
-    O(frontier out-edges). The 1/d fold is one partial-agg sum per node
-    (round 8 absorbs sum-order ulps, the shared convention)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if not directed:
-        e = (
-            e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    settled = (
+    controls |seeds|, that is the sampling knob. The 1/d fold is one
+    partial-agg sum per node (round 8 absorbs sum-order ulps, the shared
+    convention)."""
+    start = (
         sources.select(F.col(sources.columns[0]).alias("seed"))
         .distinct()
-        .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpoint(eager=False)
+        .select("seed", F.col("seed").alias("node"))
     )
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(settled, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)  # one probe job per hop
-        )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(nxt)
-        if hop % checkpoint_every == 0:
-            settled = settled.localCheckpoint(eager=False)
-        frontier = nxt
+    settled = _frontier_bfs(
+        edges, src, dst, directed, start, max_hops, SEED_SETTLED_CHECKPOINT_EVERY
+    )
     return (
         settled.filter(F.col("dist") > 0)
         .groupBy("node")
@@ -1011,7 +996,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
     weight: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank -> (node, rank): random walk with restart to
@@ -1025,81 +1009,21 @@ def personalized_pagerank(
 
     Initial mass 1/|S| on seeds, 0 elsewhere; dangling mass restarts to
     the seeds (the standard PPR convention — mass conservation holds, so
-    ranks always sum to 1). With S = all nodes this reduces float-exactly
-    to pagerank above (the unit test pins it). Multigraph semantics and
-    the fully-lazy one-row-broadcast dangling fold are identical to
-    pagerank — same per-iteration shuffle shape: one join vs out-degrees +
-    one partial-agg groupBy, both on the node key."""
-    w_col = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # static across iterations — checkpoint once (see pagerank)
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    ranks always sum to 1). _power_iteration with restart weight 1{n in S},
+    so with S = all nodes this reduces float-exactly to pagerank (the unit
+    test pins it)."""
+    e = _weighted_edges(edges, src, dst, weight)
     seed_set = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     n_seeds = seed_set.count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     nodes = (
-        nodes.join(seed_set.withColumn("is_seed", F.lit(1.0)), "node", "left")
+        _node_set(e)
+        .join(seed_set.withColumn("is_seed", F.lit(1.0)), "node", "left")
         .select("node", F.coalesce("is_seed", F.lit(0.0)).alias("is_seed"))
         .localCheckpoint(eager=False)
     )
-    out_deg = (
-        e.groupBy("src").agg(F.sum("w").alias("out_w")).localCheckpoint(eager=False)
-    )
-
-    ranks = nodes.select(
-        "node", "is_seed", (F.col("is_seed") / n_seeds).alias("rank")
-    )
-    base = (1.0 - damping) / n_seeds
-    for i in range(iterations):
-        # lazy checkpoint before the dangling scalar — see pagerank
-        with_deg = (
-            ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
-            .select("node", "rank", "out_w")
-            .localCheckpoint(eager=False)
-        )
-        dang = with_deg.filter(F.col("out_w").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
-        )
-        contribs = (
-            with_deg.filter(F.col("out_w").isNotNull())
-            .join(e, with_deg["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") * F.col("w") / F.col("out_w")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "is_seed",
-                (
-                    F.lit(base) * F.col("is_seed")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("in_sum"), F.lit(0.0))
-                        + F.col("dang") / n_seeds * F.col("is_seed")
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # lazy: one caller-action job for the whole chain (see pagerank)
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank")
+    return _power_iteration(e, nodes, n_seeds, iterations, damping)
 
 
 def clustering_coefficient(
@@ -1111,48 +1035,14 @@ def clustering_coefficient(
     to triangle_count's global number; on a KG it separates hub entities
     whose neighbors interconnect from pure star centers).
 
-    Same degree-ordered orientation as triangle_count, and the same
-    adjacency-array intersection instead of a wedge self-join: each
-    oriented edge (u, v) intersects N+(u) with N+(v); EXPLODING the
-    intersection materializes each triangle once as (u, v, w), a 3-way
-    explode attributes it to each corner, and one partial-agg groupBy
-    counts per node. Triangle volume (not Σ outdeg² wedge volume) is the
-    only row population beyond the edge list."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    ann = und.join(
-        deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), "a"
-    ).join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), "b")
-    a_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ann.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    )
-    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nb"))
-    tri = (
-        oriented.join(adj, "u")
-        .join(adj.select(F.col("u").alias("v"), F.col("nb").alias("nb_v")), "v")
-        .select(
-            "u",
-            "v",
-            F.explode(F.array_intersect("nb", "nb_v")).alias("w"),
-        )
-    )
+    EXPLODING _triangle_pairs' per-edge intersections materializes each
+    triangle once as (u, v, w), a 3-way explode attributes it to each
+    corner, and one partial-agg groupBy counts per node. Triangle volume
+    (not Σ outdeg² wedge volume) is the only row population beyond the
+    edge list."""
+    und = _undirected(edges, src, dst)
+    deg = _degrees(und).localCheckpoint(eager=False)
+    tri = _triangle_pairs(und, deg).select("u", "v", F.explode("common").alias("w"))
     per_node = (
         tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
@@ -1175,55 +1065,8 @@ def clustering_coefficient(
     )
 
 
-def _min_label_fixpoint(
-    nodes: DataFrame, e: DataFrame, from_col: str, to_col: str, label_alias: str
-) -> DataFrame:
-    """Min-label propagation to convergence over directed edges (labels
-    flow from `from_col`'s endpoint to `to_col`'s) -> (node, <label>).
-    Runs TWO propagation steps per convergence probe: the changed-count
-    action is a full job, and a converged step is idempotent, so probing
-    every other step halves the job count for the same fixpoint. The
-    step checkpoints are LAZY, so each probe is exactly ONE job that
-    materializes both steps and folds the changed count."""
-    lbl = nodes.select("node", F.col("node").alias(label_alias)).localCheckpoint(
-        eager=False
-    )
-    while True:
-        cur = lbl
-        for _ in range(2):
-            cand = (
-                e.join(cur, e[from_col] == cur["node"])
-                .groupBy(F.col(to_col).alias("node"))
-                .agg(F.min(label_alias).alias("_c2"))
-            )
-            cur = (
-                cur.join(cand, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col(label_alias), F.coalesce("_c2", F.col(label_alias))
-                    ).alias(label_alias),
-                )
-                .localCheckpoint(eager=False)
-            )
-        changed = (
-            cur.join(
-                lbl.withColumnRenamed(label_alias, "_old"), "node"
-            )
-            .filter(F.col(label_alias) != F.col("_old"))
-            .count()
-        )
-        lbl = cur
-        if changed == 0:
-            break
-    return lbl
-
-
 def strongly_connected_components(
-    edges: DataFrame,
-    max_rounds: int = 20,
-    src: str = "src",
-    dst: str = "dst",
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph -> (member,
     scc_id) with scc_id = the minimum node id of the component — the
@@ -1241,26 +1084,16 @@ def strongly_connected_components(
     at least each minimal color's SCC, so rounds <= #SCC (in practice a
     handful: every singleton whose color is itself peels immediately).
 
-    Plan shape per fixpoint iteration: one edge-keyed join + one
-    partial-agg min groupBy on the node key (the pagerank family);
-    fixpoints run to CONVERGENCE (changed-count action per iteration,
-    localCheckpoint lineage cuts) — iteration count tracks the remaining
+    Both floods are canonicalize.min_label_fixpoint run to CONVERGENCE
+    (one job per probe of two steps) — probe count tracks the remaining
     subgraph's diameter, not V. State is (node, label) pairs only."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _node_set(e).localCheckpoint(eager=False)
     remaining = nodes
     out = None
+    # every round peels at least the minimal color's SCC, so this
+    # terminates with every node labeled
     while not remaining.isEmpty():
-        # every round peels at least the minimal color's SCC, so this
-        # terminates; we run to FIXPOINT rather than silently dropping
-        # still-unlabeled nodes after max_rounds (a >20-singleton-SCC
-        # chain previously returned an incomplete result) — max_rounds
-        # stays in the signature for compatibility but no longer truncates
         re = (
             e.join(remaining.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("node", "dst"), "dst", "left_semi")
@@ -1271,21 +1104,21 @@ def strongly_connected_components(
         # it never fires and costs an extra probe job per round; measured
         # 7.2s -> 8.7s. The coloring rounds already peel singletons.)
         # (1) color(v) = min id reaching v: propagate src's color to dst
-        color = _min_label_fixpoint(
-            remaining, re, "src", "dst", label_alias="color"
-        )
+        color, _ = min_label_fixpoint(remaining, re)
+        color = color.withColumnRenamed("label", "color")
         # (2) within each color class, f(v) = min same-class id reachable
-        # FROM v: propagate dst's label to src on color-matched edges
+        # FROM v: propagate dst's label to src on color-matched edges,
+        # so the fixpoint runs over them reversed
         ec = (
-            re.join(color.withColumnRenamed("node", "src").withColumnRenamed("color", "cs"), "src")
-            .join(color.withColumnRenamed("node", "dst").withColumnRenamed("color", "cd"), "dst")
+            re.join(color.select(F.col("node").alias("src"), F.col("color").alias("cs")), "src")
+            .join(color.select(F.col("node").alias("dst"), F.col("color").alias("cd")), "dst")
             .filter(F.col("cs") == F.col("cd"))
-            .select("src", "dst")
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             .localCheckpoint(eager=False)
         )
-        f = _min_label_fixpoint(remaining, ec, "dst", "src", label_alias="f")
+        f, _ = min_label_fixpoint(remaining, ec)
         labeled = (
-            color.join(f, "node")
+            color.join(f.withColumnRenamed("label", "f"), "node")
             .filter(F.col("color") == F.col("f"))
             .select(F.col("node").alias("member"), F.col("color").alias("scc_id"))
             .localCheckpoint(eager=False)
@@ -1313,7 +1146,6 @@ def katz_centrality(
     alpha: float = 0.1,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Katz centrality -> (node, katz): k_{t+1}(v) = 1 + alpha * sum over
     in-edges u->v of k_t(u), truncated at `iterations` — counts walks of
@@ -1333,12 +1165,7 @@ def katz_centrality(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _node_set(e).localCheckpoint(eager=False)
     a = F.lit(float(alpha))
     katz = nodes.select("node", F.lit(1.0).alias("katz"))
     for i in range(iterations):
@@ -1351,7 +1178,7 @@ def katz_centrality(
             "node",
             (F.lit(1.0) + a * F.coalesce("s", F.lit(0.0))).alias("katz"),
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            # lazy: one caller-action job for the whole chain (see pagerank)
+        if (i + 1) % RANK_CHECKPOINT_EVERY == 0 or i == iterations - 1:
+            # lazy: one caller-action job for the whole chain
             katz = katz.localCheckpoint(eager=False)
     return katz

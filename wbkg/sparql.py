@@ -1187,10 +1187,11 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     path DOUBLING: each round joins the new pairs against the accumulated
     closure, so reachable path length grows as 2^round — max_iters=16
     covers diameters past 65k, and a graph that still hasn't converged
-    warns instead of silently truncating (same contract as
-    connected_components). localCheckpoint per round truncates lineage;
-    property-path graphs are vocabulary-bounded here (edges over a filtered
-    predicate), not corpus-bounded."""
+    warns instead of silently truncating (the contract of
+    canonicalize.connected_components). localCheckpoint per round
+    truncates lineage; unlike canonicalize.min_label_fixpoint, superseded
+    rounds are not released. Property-path graphs are vocabulary-bounded
+    here (edges over a filtered predicate), not corpus-bounded."""
     base = step.distinct().localCheckpoint()
     total, frontier = base, base
     converged = False
