@@ -46,9 +46,8 @@ def test_any_valid_bgp_parses(vars_, pred_iri, use_prefix, pfx, local):
 
 
 # literal content: anything without raw '"' or '\' (those must be escaped)
-# and without braces (the grammar's WHERE-block delimiters — documented limit)
 LIT_BODY = st.text(
-    alphabet=st.characters(blacklist_characters='"\\{}', blacklist_categories=("Cs",)),
+    alphabet=st.characters(blacklist_characters='"\\', blacklist_categories=("Cs",)),
     max_size=20,
 )
 
@@ -94,3 +93,84 @@ def test_arbitrary_where_text_never_crashes(junk):
         parse_sparql("SELECT ?x WHERE { " + junk + " }")
     except SparqlError:
         pass
+
+
+# literal content made of what the structural scan must read as data:
+# brackets, separators, keywords, quotes and backslashes (escaped by _lit)
+LIT_TEXT = st.lists(
+    st.sampled_from(
+        ["{", "}", "(", ")", ";", ".", " UNION ", "FILTER(", "OPTIONAL {",
+         "BIND(", "HAVING(", '"', "\\", " ", "x"]
+    ),
+    max_size=8,
+).map("".join)
+
+
+def _lit(value: str) -> str:
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
+@st.composite
+def where_group(draw, depth=2):
+    """-> (text, shape): one group whose triple patterns, FILTERs, BINDs,
+    OPTIONALs and nested UNIONs come in random order, and the _shape its
+    parse must have."""
+    items = [("triple", v) for v in draw(st.lists(LIT_TEXT, min_size=1, max_size=2))]
+    items += [("filter", v) for v in draw(st.lists(LIT_TEXT, max_size=2))]
+    items += [("bind", v) for v in draw(st.lists(LIT_TEXT, max_size=2))]
+    if depth:
+        sub = where_group(depth - 1)
+        items += [("optional", g) for g in draw(st.lists(sub, max_size=2))]
+        items += [
+            ("union", b)
+            for b in draw(st.lists(st.lists(sub, min_size=2, max_size=3), max_size=1))
+        ]
+    shape = {k: [] for k in ("patterns", "filters", "binds", "optionals", "subgroups")}
+    text = []
+    for i, (kind, x) in enumerate(draw(st.permutations(items))):
+        if kind == "triple":
+            text.append(f"?s <p:x> {_lit(x)} .")
+            shape["patterns"].append(("s", "p:x", x))
+        elif kind == "filter":
+            text.append(f"FILTER(?s != {_lit(x)})")
+            shape["filters"].append(f"?s != {_lit(x)}")
+        elif kind == "bind":
+            text.append(f"BIND(CONCAT({_lit(x)}) AS ?b{i})")
+            shape["binds"].append((f"CONCAT({_lit(x)})", f"b{i}"))
+        elif kind == "optional":
+            text.append(f"OPTIONAL {{ {x[0]} }}")
+            shape["optionals"].append([x[1]])
+        else:
+            text.append("{ " + " UNION ".join("{ " + t + " }" for t, _s in x) + " }")
+            shape["subgroups"].append([s for _t, s in x])
+    return " ".join(text), shape
+
+
+def where_query(groups):
+    """A SELECT over one generated group, or a top-level UNION of several."""
+    if len(groups) == 1:
+        return f"SELECT * WHERE {{ {groups[0][0]} }}"
+    return "SELECT * WHERE { " + " UNION ".join("{ " + t + " }" for t, _s in groups) + " }"
+
+
+def _shape(group) -> dict:
+    """A parsed _Group in where_group's shape form; kinds the generator
+    never writes must come back empty."""
+    assert not (group.values or group.exists_groups or group.subselects or group.values_multi)
+    return {
+        "patterns": [(s.value, p.value, o.value) for s, p, o in group.patterns],
+        "filters": group.filters,
+        "binds": group.binds,
+        "optionals": [[_shape(g) for g in body] for body in group.optionals],
+        "subgroups": [[_shape(g) for g in body] for body in group.subgroups],
+    }
+
+
+@settings(max_examples=150, deadline=None)
+@given(groups=st.lists(where_group(), min_size=1, max_size=3))
+def test_scanner_lifts_exactly_the_generated_blocks(groups):
+    """Nested OPTIONAL / UNION / FILTER / BIND blocks whose literals hold
+    brackets, ';', '.', keywords and escaped quotes: the parse lifts exactly
+    the written blocks, and every literal value comes back unchanged."""
+    parsed = parse_sparql(where_query(groups))[2]
+    assert [_shape(g) for g in parsed] == [s for _t, s in groups]

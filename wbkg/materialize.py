@@ -20,6 +20,7 @@ SCHEMA = "http://schema.org/"
 WD = "http://www.wikidata.org/entity/"
 EX = "http://worldbank.example.org/"
 RDF_TYPE = "rdf:type"
+RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
 RDFS_LABEL = "rdfs:label"
 

@@ -64,6 +64,10 @@ value-expression subset: CONCAT, STR, UCASE, LCASE, STRLEN, REPLACE
 COALESCE(v, ...), LANG(?v).
 sparql_construct gives the CONSTRUCT verb (template-projected triple set).
 
+Text front end: one literal-aware scan (`_scan`: per position, inside a
+"..." literal or not, and brace depth) underlies every block lift
+(`_lift`) and top-level split (`_split_top`), in time linear in the text.
+
 Language tags: when the edges table carries a `lang` column (the Turtle
 ingest and KG materializer schemas), object-position variable bindings
 carry a hidden lang companion — LANG(?v) reads it, `"x"@en` constants
@@ -89,9 +93,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wbkg.materialize import RDF_TYPE
-
-RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+from wbkg.materialize import RDF_TYPE, RDF_TYPE_IRI
 
 _TOKEN = re.compile(
     r"""\?[A-Za-z_][\w]*   # variable
@@ -109,6 +111,7 @@ class _Term:
     kind: str  # "var" | "const"
     value: str
     lang: str | None = None  # language tag of a `"x"@en` literal term
+    literal: bool = False  # a "..." literal constant (else an IRI)
 
 
 @dataclass
@@ -198,7 +201,7 @@ def _parse_term(tok: str, prefixes: dict[str, str]) -> _Term:
             lang = lm.group(1)
             tok = tok[: lm.start() + 1]
         body = tok[1:-1]
-        return _Term("const", re.sub(r'\\(["\\])', r"\1", body), lang=lang)
+        return _Term("const", re.sub(r'\\(["\\])', r"\1", body), lang=lang, literal=True)
     if tok == "a":
         return _Term("const", RDF_TYPE_IRI)
     if ":" in tok:
@@ -719,142 +722,85 @@ def _invert(node):
     raise SparqlError(f"cannot invert path node {node!r}")
 
 
-def _string_spans(text: str):
-    """[start, end) spans of double-quoted string literals (escape-aware)."""
-    spans, in_str, esc, start = [], False, False, 0
-    for i, c in enumerate(text):
-        if in_str:
-            if esc:
-                esc = False
-            elif c == "\\":
-                esc = True
-            elif c == '"':
-                in_str = False
-                spans.append((start, i + 1))
-        elif c == '"':
-            in_str = True
-            start = i
-    if in_str:
-        spans.append((start, len(text)))
-    return spans
+# the only lexemes the structural scan looks at: a double-quoted literal
+# (escape-aware; an unterminated one runs to the end of the text, as does
+# one whose last character is a lone backslash) and the four brackets
+_LEXEME = re.compile(r'"(?:[^"\\]|\\.)*(?:"|\\?\Z)|[{}()]', re.S)
 
 
-def _search_outside_strings(pat, text: str):
-    """re.search that refuses matches STARTING inside a string literal —
-    a literal like "use FILTER(x) here" must never trigger a keyword lift."""
-    spans = _string_spans(text)
-    pos = 0
-    while True:
-        m = pat.search(text, pos)
-        if not m:
-            return None
-        if any(a <= m.start() < b for a, b in spans):
+def _scan(text: str):
+    """The one literal-aware pass over query text (SPARQL 1.1 §19: brackets,
+    keywords and separators inside a "..." literal are data, and \\" does
+    not end it). -> (lit, depth, closer): lit[i] is 1 where text[i] lies in
+    a literal; depth[i] is the { } depth before text[i] (depth[len(text)]
+    the final one; a stray '}' drives it negative); closer maps each '{'
+    and '(' outside literals to its matching bracket, when there is one."""
+    lit = bytearray(len(text))
+    depth: list[int] = []
+    closer: dict[int, int] = {}
+    open_at: dict[str, list[int]] = {"{": [], "(": []}
+    d = 0
+    for m in _LEXEME.finditer(text):
+        i, c = m.start(), m.group()[0]
+        if c == '"':
+            lit[i:m.end()] = b"\x01" * (m.end() - i)
+        elif c in "{(":
+            open_at[c].append(i)
+        else:
+            stack = open_at["{" if c == "}" else "("]
+            if stack:
+                closer[stack.pop()] = i
+        if c in "{}":
+            depth.extend([d] * (i + 1 - len(depth)))
+            d += 1 if c == "{" else -1
+    depth.extend([d] * (len(text) + 1 - len(depth)))
+    return lit, depth, closer
+
+
+def _lift(text: str, keyword_re: str, opener: str = "{"):
+    """Lift every top-level `<keyword><opener> ... <closer>` block out of
+    `text`, in document order. Top level means outside literals at brace
+    depth 0: a keyword block nested in braces belongs to that inner group
+    (bare subgroup, { SELECT } subquery, EXISTS/MINUS body) and is lifted
+    when the recursion parses it — hoisting it would change the query.
+    -> (residual with each block replaced by a space,
+    [(match groups, body), ...])."""
+    lit, depth, closer = _scan(text)
+    pat = re.compile(keyword_re + r"\s*" + re.escape(opener), re.I | re.S)
+    kept, found, start, pos = [], [], 0, 0
+    while m := pat.search(text, pos):
+        if lit[m.start()] or depth[m.start()]:
             pos = m.start() + 1
             continue
-        return m
+        end = closer.get(m.end() - 1)
+        if end is None:
+            kind = "braces" if opener == "{" else "parentheses"
+            raise SparqlError(f"unbalanced {kind} after {m.group(0)!r}")
+        found.append((m.groups(), text[m.end():end]))
+        kept.append(text[start:m.start()])
+        start = pos = end + 1
+    kept.append(text[start:])
+    return " ".join(kept), found
 
 
-def _search_top_level(pat, text: str):
-    """re.search that refuses matches starting inside a string literal OR
-    inside a nested { } block. Keyword lifts (OPTIONAL / EXISTS / MINUS /
-    VALUES / HAVING) must fire only at the current group's own brace depth:
-    one nested inside a bare subgroup, a { SELECT } subquery, or an
-    EXISTS/MINUS body belongs to THAT group and is handled when the
-    recursion parses it — hoisting it to the outer group silently changes
-    query semantics."""
-    spans = _string_spans(text)
-    depths, depth, si, ns = [0] * len(text), 0, 0, len(spans)
-    for i, c in enumerate(text):
-        while si < ns and i >= spans[si][1]:
-            si += 1
-        in_str = si < ns and spans[si][0] <= i < spans[si][1]
-        depths[i] = depth
-        if not in_str:
-            if c == "{":
-                depth += 1
-            elif c == "}":
-                depth -= 1
-    pos = 0
-    while True:
-        m = pat.search(text, pos)
-        if not m:
-            return None
-        i = m.start()
-        if any(a <= i < b for a, b in spans) or depths[i] != 0:
-            pos = i + 1
-            continue
-        return m
+def _split_top(text: str, sep_re: str) -> list[str]:
+    """Split `text` at each `sep_re` match outside literals at brace depth 0."""
+    lit, depth, _closer = _scan(text)
+    pieces, start = [], 0
+    for m in re.finditer(sep_re, text):
+        if not lit[m.start()] and not depth[m.start()]:
+            pieces.append(text[start:m.start()])
+            start = m.end()
+    pieces.append(text[start:])
+    return pieces
 
 
-def _extract_filters(where: str):
-    """Lift FILTER(...) blocks (balanced parens, string-literal aware) out
-    of a pattern block. -> (residual_text, [filter_expr_text, ...])."""
-    filters = []
-    pat = re.compile(r"(?i)\bFILTER\s*\(")
-    while True:
-        m = _search_outside_strings(pat, where)
-        if not m:
-            return where, filters
-        depth, j, in_str, esc = 1, m.end(), False, False
-        while j < len(where) and depth:
-            c = where[j]
-            if in_str:
-                if esc:
-                    esc = False
-                elif c == "\\":
-                    esc = True
-                elif c == '"':
-                    in_str = False
-            else:
-                if c == '"':
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-            j += 1
-        if depth:
-            raise SparqlError("unbalanced parentheses in FILTER")
-        filters.append(where[m.end():j - 1])
-        where = where[:m.start()] + " " + where[j:]
+_PREFIX_DECL = re.compile(r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>")
 
 
-def _extract_binds(where: str):
-    """Lift BIND(expr AS ?v) blocks (balanced parens, string-literal aware)
-    out of a pattern block, in document order. -> (residual_text,
-    [(expr_text, var), ...])."""
-    binds = []
-    pat = re.compile(r"(?i)\bBIND\s*\(")
-    while True:
-        m = _search_outside_strings(pat, where)
-        if not m:
-            return where, binds
-        depth, j, in_str, esc = 1, m.end(), False, False
-        while j < len(where) and depth:
-            c = where[j]
-            if in_str:
-                if esc:
-                    esc = False
-                elif c == "\\":
-                    esc = True
-                elif c == '"':
-                    in_str = False
-            else:
-                if c == '"':
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-            j += 1
-        if depth:
-            raise SparqlError("unbalanced parentheses in BIND")
-        inner = where[m.end():j - 1]
-        am = re.search(r"(?is)^(.*)\sAS\s+\?([A-Za-z_][\w]*)\s*$", inner)
-        if not am:
-            raise SparqlError(f"expected BIND(expr AS ?var), got BIND({inner})")
-        binds.append((am.group(1).strip(), am.group(2)))
-        where = where[:m.start()] + " " + where[j:]
+def _prefixes(text: str) -> dict[str, str]:
+    """PREFIX declarations in `text` -> {prefix: namespace IRI}."""
+    return dict(_PREFIX_DECL.findall(text))
 
 
 @dataclass
@@ -874,52 +820,19 @@ class _Group:
     values_multi: list   # [(vars, rows)] — VALUES (?a ?b) { (..) } blocks
 
 
-def _lift_blocks(text: str, keyword_re: str):
-    """Lift every TOP-LEVEL `<keyword> { ... }` block (balanced braces,
-    string-literal aware) out of `text`. Keyword blocks nested inside other
-    braces are left in place — the recursion that parses the enclosing
-    block lifts them at its own depth. -> (residual,
-    [(match_groups, body), ...])."""
-    pat = re.compile(keyword_re + r"\s*\{", re.I | re.S)
-    found = []
-    while True:
-        m = _search_top_level(pat, text)
-        if not m:
-            return text, found
-        depth, j, in_str, esc = 1, m.end(), False, False
-        while j < len(text) and depth:
-            c = text[j]
-            if in_str:
-                if esc:
-                    esc = False
-                elif c == "\\":
-                    esc = True
-                elif c == '"':
-                    in_str = False
-            else:
-                if c == '"':
-                    in_str = True
-                elif c == "{":
-                    depth += 1
-                elif c == "}":
-                    depth -= 1
-            j += 1
-        if depth:
-            raise SparqlError(f"unbalanced braces after {m.group(0)!r}")
-        found.append((m.groups(), text[m.end():j - 1]))
-        text = text[:m.start()] + " " + text[j:]
-
-
 def _parse_body(text: str, prefixes: dict[str, str]) -> list:
     """A WHERE body -> list of _Group UNION branches (bag semantics;
-    nested unions flatten — union is associative)."""
-    branches = _split_union(text)
-    if branches is None:
-        return [_parse_group(text, prefixes)]
-    out = []
-    for b in branches:
-        out.extend(_parse_body(b, prefixes))
-    return out
+    nested unions flatten — union is associative). The body is a union
+    only when it is `{ ... } UNION { ... } [UNION { ... }]*` and nothing
+    else; anything other than that parses as one group."""
+    if text.strip().startswith("{"):
+        depth = _scan(text)[1]
+        if min(depth) < 0 or depth[-1]:
+            raise SparqlError("unbalanced braces in WHERE")
+        parts = [_lift(part, "") for part in _split_top(text, r"(?i)\bUNION\b")]
+        if len(parts) > 1 and all(len(b) == 1 and not r.strip() for r, b in parts):
+            return [g for _r, ((_g, body),) in parts for g in _parse_body(body, prefixes)]
+    return [_parse_group(text, prefixes)]
 
 
 def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
@@ -929,30 +842,30 @@ def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
     triple patterns. Group-scoped FILTERs inside a lifted body stay inside
     that body's _Group — SPARQL's scoping falls out of the recursion
     (e.g. a FILTER inside OPTIONAL applies before the left join)."""
-    text, opt_blocks = _lift_blocks(text, r"\bOPTIONAL")
+    text, opt_blocks = _lift(text, r"\bOPTIONAL")
     optionals = [_parse_body(body, prefixes) for _g, body in opt_blocks]
 
-    text, ex_blocks = _lift_blocks(text, r"\bFILTER\s+(NOT\s+)?EXISTS")
+    text, ex_blocks = _lift(text, r"\bFILTER\s+(NOT\s+)?EXISTS")
     exists_groups = [
         ("not_exists" if g[0] else "exists", _parse_body(body, prefixes))
         for g, body in ex_blocks
     ]
-    text, minus_blocks = _lift_blocks(text, r"\bMINUS")
+    text, minus_blocks = _lift(text, r"\bMINUS")
     exists_groups += [("minus", _parse_body(body, prefixes)) for _g, body in minus_blocks]
 
     values_multi = []
-    text, mval_blocks = _lift_blocks(text, r"\bVALUES\s*\(((?:\s*\?[\w]+)+)\s*\)")
+    text, mval_blocks = _lift(text, r"\bVALUES\s*\(((?:\s*\?[\w]+)+)\s*\)")
     for (vars_raw,), body in mval_blocks:
         vars_ = [v[1:] for v in re.findall(r"\?[\w]+", vars_raw)]
         rows = []
-        for row_m in re.finditer(r"\(([^()]*)\)", body):
+        for _g, row in _lift(body, "", "(")[1]:
             toks = re.findall(
                 r'<[^>\s]*>|"(?:[^"\\]|\\.)*"|\bUNDEF\b|[A-Za-z_][\w-]*:[A-Za-z_][\w.-]*',
-                row_m.group(1),
+                row,
             )
             if len(toks) != len(vars_):
                 raise SparqlError(
-                    f"VALUES row {row_m.group(0)} has {len(toks)} terms for "
+                    f"VALUES row ({row}) has {len(toks)} terms for "
                     f"{len(vars_)} variables"
                 )
             rows.append(tuple(
@@ -963,7 +876,7 @@ def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
         values_multi.append((vars_, rows))
 
     values = []
-    text, val_blocks = _lift_blocks(text, r"\bVALUES\s+\?([\w]+)")
+    text, val_blocks = _lift(text, r"\bVALUES\s+\?([\w]+)")
     for (var,), body in val_blocks:
         consts = []
         for tok in _TOKEN.findall(body):
@@ -979,7 +892,7 @@ def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
     # nested UNION body) — or SPARQL 1.1 §12 subqueries when the body
     # starts with SELECT (compiled through sparql_select and joined on the
     # projected variables)
-    text, bare_blocks = _lift_blocks(text, r"(?<![\w?])")
+    text, bare_blocks = _lift(text, r"(?<![\w?])")
     subgroups, subselects = [], []
     for _g, body in bare_blocks:
         if re.match(r"(?is)^\s*(?:PREFIX\b|SELECT\b)", body):
@@ -987,14 +900,17 @@ def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
         else:
             subgroups.append(_parse_body(body, prefixes))
 
-    lit_spans = _string_spans(text)
-    if any(
-        c in "{}" and not any(a <= i < b for a, b in lit_spans)
-        for i, c in enumerate(text)
-    ):
+    if any(_scan(text)[1]):
         raise SparqlError(f"unbalanced braces in group: {text!r}")
-    text, binds = _extract_binds(text)
-    text, filters = _extract_filters(text)
+    text, bind_blocks = _lift(text, r"\bBIND", "(")
+    binds = []
+    for _g, inner in bind_blocks:
+        am = re.search(r"(?is)^(.*)\sAS\s+\?([A-Za-z_][\w]*)\s*$", inner)
+        if not am:
+            raise SparqlError(f"expected BIND(expr AS ?var), got BIND({inner})")
+        binds.append((am.group(1).strip(), am.group(2)))
+    text, filter_blocks = _lift(text, r"\bFILTER", "(")
+    filters = [body for _g, body in filter_blocks]
     # anything the pattern lexer cannot consume is an error, not silently
     # dropped (e.g. junk text between nested groups)
     residue = _TOKEN.sub(" ", text)
@@ -1009,57 +925,6 @@ def _parse_group(text: str, prefixes: dict[str, str]) -> _Group:
     )
 
 
-def _split_union(where: str):
-    """`{ ... } UNION { ... } [UNION { ... }]*` covering the WHOLE text ->
-    list of branch texts. Returns None for anything else (plain group,
-    single nested group, adjacent join groups, trailing patterns — the
-    recursive group parser handles those). String-literal aware. Raises
-    only on unbalanced braces."""
-    s = where.strip()
-    if not s.startswith("{"):
-        return None
-    branches, depth, start = [], 0, None
-    between = []  # text seen at depth 0 between/after branches
-    in_str = esc = False
-    pos, n = 0, len(s)
-    while pos < n:
-        c = s[pos]
-        if in_str:
-            if esc:
-                esc = False
-            elif c == "\\":
-                esc = True
-            elif c == '"':
-                in_str = False
-        elif c == '"':
-            in_str = True
-        elif c == "{":
-            if depth == 0:
-                start = pos + 1
-            depth += 1
-        elif c == "}":
-            depth -= 1
-            if depth < 0:
-                raise SparqlError("unbalanced braces in WHERE")
-            if depth == 0:
-                branches.append(s[start:pos])
-                between.append("")
-                start = None
-        elif depth == 0 and not c.isspace():
-            if between:
-                between[-1] += c
-        pos += 1
-    if depth:
-        raise SparqlError("unbalanced braces in WHERE")
-    if len(branches) < 2:
-        return None
-    # every gap between consecutive branches must be exactly UNION and
-    # nothing may trail the last branch
-    if any(t.upper() != "UNION" for t in between[:-1]) or between[-1]:
-        return None
-    return branches
-
-
 def parse_sparql(query: str):
     """-> (select_vars | None for *, distinct, groups, prefixes,
     aggregates, group_vars, order_vars, limit). groups: one
@@ -1068,36 +933,12 @@ def parse_sparql(query: str):
     _Term triples; filters: raw FILTER expression strings (compiled against
     the bound variables in sparql_select); exists_groups: (negated,
     patterns) for FILTER [NOT] EXISTS; order_vars: (var, ascending)."""
-    prefixes: dict[str, str] = {}
-    for pfx, iri in re.findall(r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>", query):
-        prefixes[pfx] = iri
-    body = re.sub(r"(?i)PREFIX\s+[A-Za-z_][\w-]*:\s*<[^>]*>", " ", query)
-
-    # lift HAVING(...) (balanced parens) before the main shape regex
-    having = []
-
-    def _lift_having(text: str) -> str:
-        # top-level only: a HAVING inside a { SELECT ... } subquery (which
-        # sits inside the WHERE braces) belongs to the subquery — its own
-        # recursive parse_sparql lifts it at its own depth 0
-        pat = re.compile(r"(?i)\bHAVING\s*\(")
-        while True:
-            hm = _search_top_level(pat, text)
-            if not hm:
-                return text
-            depth, j = 1, hm.end()
-            while j < len(text) and depth:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise SparqlError("unbalanced parentheses in HAVING")
-            having.append(text[hm.end():j - 1])
-            text = text[:hm.start()] + " " + text[j:]
-
-    body = _lift_having(body)
+    prefixes = _prefixes(query)
+    body = _PREFIX_DECL.sub(" ", query)
+    # HAVING(...) is lifted before the shape regex — top level only: one
+    # inside a { SELECT } subquery belongs to that subquery's own parse
+    body, having_blocks = _lift(body, r"\bHAVING", "(")
+    having = [h for _g, h in having_blocks]
 
     m = re.search(
         r"(?is)SELECT\s+(DISTINCT\s+)?(.*?)\s*WHERE\s*\{(.*)\}\s*"
@@ -1932,10 +1773,7 @@ def sparql_construct(edges: DataFrame, query: str) -> DataFrame:
     m = re.search(r"(?is)^(\s*(?:PREFIX[^\n]*\n?\s*)*)CONSTRUCT\s*\{(.*?)\}\s*(WHERE\s*\{.*)$", query.strip())
     if not m:
         raise SparqlError("expected CONSTRUCT { template } WHERE { ... }")
-    prefixes = {
-        pfx: iri
-        for pfx, iri in re.findall(r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>", m.group(1))
-    }
+    prefixes = _prefixes(m.group(1))
     template = _parse_patterns(m.group(2), prefixes)
     if not template:
         raise SparqlError("empty CONSTRUCT template")
@@ -1946,18 +1784,11 @@ def sparql_construct(edges: DataFrame, query: str) -> DataFrame:
     )
     inner = f"{m.group(1)} SELECT {' '.join('?' + v for v in tmpl_vars)} {m.group(3)}"
     bindings = sparql_select(edges, inner)
-
-    frames = []
-    for s, p, o in template:
-        cols = [
-            (F.col(t.value) if t.kind == "var" else F.lit(t.value)).alias(name)
-            for name, t in (("subj", s), ("pred", p), ("obj", o))
-        ]
-        frames.append(bindings.select(*cols))
-    out = frames[0]
-    for nxt in frames[1:]:
-        out = out.unionByName(nxt)
-    return out.dropDuplicates(["subj", "pred", "obj"])
+    return (
+        _instantiate_template(bindings, template)
+        .select("subj", "pred", "obj")
+        .dropDuplicates(["subj", "pred", "obj"])
+    )
 
 
 def sparql_ask(edges: DataFrame, query: str) -> bool:
@@ -1992,10 +1823,7 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
     )
     if not m:
         raise SparqlError("expected DESCRIBE <iri>... or DESCRIBE ?v ... WHERE { ... }")
-    prefixes = {
-        pfx: iri
-        for pfx, iri in re.findall(r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>", m.group(1))
-    }
+    prefixes = _prefixes(m.group(1))
     terms = [_parse_term(t, prefixes) for t in _TOKEN.findall(m.group(2))]
     if not terms:
         raise SparqlError("DESCRIBE needs at least one resource or variable")
@@ -2042,30 +1870,12 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
     return out.dropDuplicates(["subj", "pred", "obj"])
 
 
-def _split_update_ops(body: str) -> list[str]:
-    """Split a SPARQL Update request on top-level ';' (outside string
-    literals and outside braces) -> individual operations."""
-    lit_spans = _string_spans(body)
-    ops, depth, start = [], 0, 0
-    for i, c in enumerate(body):
-        if any(a <= i < b for a, b in lit_spans):
-            continue
-        if c == "{":
-            depth += 1
-        elif c == "}":
-            depth -= 1
-        elif c == ";" and depth == 0:
-            ops.append(body[start:i])
-            start = i + 1
-    ops.append(body[start:])
-    return [op for op in ops if op.strip()]
-
-
 def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
-    """Project one (subj, pred, obj[, lang]) frame per template triple from
-    a solution set and union them — shared by CONSTRUCT-style materialization
-    and the update verbs. Constant lang-tagged object literals carry their
-    tag; everything else gets lang null."""
+    """Project one (subj, pred, obj, lang, obj_is_literal) frame per
+    template triple from a solution set and union them — shared by
+    CONSTRUCT and the update verbs. A constant object carries its term's
+    tag and kind; a variable object is untagged, and is a literal when its
+    term-type companion in `bindings` says so, else an IRI."""
     frames = []
     for s, p, o in template:
         cols = [
@@ -2075,11 +1885,18 @@ def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
         cols.append(
             (F.lit(o.lang) if (o.kind == "const" and o.lang) else F.lit(None).cast("string")).alias("lang")
         )
+        if o.kind == "const":
+            is_lit = F.lit(o.literal)
+        elif _LIT_PFX + o.value in bindings.columns:
+            is_lit = F.coalesce(F.col(_LIT_PFX + o.value) == "true", F.lit(False))
+        else:
+            is_lit = F.lit(False)
+        cols.append(is_lit.alias("obj_is_literal"))
         frames.append(bindings.select(*cols))
     out = frames[0]
     for nxt in frames[1:]:
         out = out.unionByName(nxt)
-    return out.dropDuplicates(["subj", "pred", "obj", "lang"])
+    return out
 
 
 def sparql_update(edges: DataFrame, query: str) -> DataFrame:
@@ -2105,8 +1922,9 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
     (subj, pred, obj). A "lit"@tag object in DATA matches/creates the
     `lang` companion null-safely when the input carries that column;
     WHERE-driven templates instantiate lang only for constant tagged
-    literals (variables project the plain obj binding — term-exact
-    companion plumbing stays in SELECT-land, see sparql_strlang).
+    literals (variables project the plain obj binding). When the input
+    carries `obj_is_literal`, inserts write it: a constant object's term
+    kind, a variable's term type from its WHERE binding (_update_bindings).
 
     Plan shape per op: deletes are ONE left-anti join of the snapshot
     against the (small) delete set; inserts are one anti-join + union.
@@ -2117,18 +1935,11 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
     q = query.strip()
     pm = re.match(r"(?is)^\s*((?:PREFIX[^\n]*\n?\s*)*)", q)
     prefix_block = pm.group(1)
-    prefixes = {
-        pfx: iri
-        for pfx, iri in re.findall(
-            r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>", prefix_block
-        )
-    }
+    prefixes = _prefixes(prefix_block)
     body = q[pm.end():]
-    has_lang = "lang" in edges.columns
     cur = edges
 
-    for op in _split_update_ops(body):
-        op = op.strip()
+    for op in [op.strip() for op in _split_top(body, ";") if op.strip()]:
         m_data = re.match(r"(?is)^(INSERT|DELETE)\s+DATA\s*\{(.*)\}\s*$", op)
         m_delwhere = re.match(r"(?is)^DELETE\s+WHERE\s*\{(.*)\}\s*$", op)
         m_modify = re.match(
@@ -2141,15 +1952,13 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
             if any(t.kind == "var" for pat in triples for t in pat):
                 raise SparqlError(f"{verb} DATA requires ground triples")
             rows = [
-                (s.value, p.value, o.value, o.lang) for s, p, o in triples
+                (s.value, p.value, o.value, o.lang, o.literal) for s, p, o in triples
             ]
             delta = cur.sparkSession.createDataFrame(
-                rows, "subj string, pred string, obj string, lang string"
-            ).dropDuplicates()
-            cur = _apply_delta(
-                cur, delta, insert=(verb == "INSERT"), has_lang=has_lang,
-                lang_exact=True,
+                rows,
+                "subj string, pred string, obj string, lang string, obj_is_literal boolean",
             )
+            cur = _apply_delta(cur, delta, insert=(verb == "INSERT"), lang_exact=True)
             continue
         if m_delwhere:
             pattern_block = "{" + m_delwhere.group(1) + "}"
@@ -2159,9 +1968,7 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
             delta = _instantiate_template(
                 _update_bindings(cur, prefix_block, template, pattern_block), template
             )
-            cur = _apply_delta(
-                cur, delta, insert=False, has_lang=has_lang, lang_exact=False
-            )
+            cur = _apply_delta(cur, delta, insert=False, lang_exact=False)
             continue
         if m_modify and (m_modify.group(1) or m_modify.group(2)):
             where_block = m_modify.group(3)
@@ -2187,10 +1994,7 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
                     )
                 )
             for delta, insert in deltas:
-                cur = _apply_delta(
-                    cur, delta, insert=insert, has_lang=has_lang,
-                    lang_exact=insert,
-                )
+                cur = _apply_delta(cur, delta, insert=insert, lang_exact=insert)
             continue
         raise SparqlError(f"unsupported update operation: {op[:80]}")
     return cur
@@ -2198,36 +2002,62 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
 
 def _update_bindings(cur: DataFrame, prefix_block: str, template, where_block: str) -> DataFrame:
     """Solutions for an update WHERE block, projected to the template's
-    variables (SELECT * when the template is ground — one dummy row set)."""
+    variables (SELECT * when the template is ground — one dummy row set).
+    Over a snapshot with obj_is_literal, each template object variable also
+    brings its term type: the solutions' own term-type companion when a
+    triple pattern binds it at object position, "true" when a BIND does
+    (BIND yields literals); a variable bound only at subject or predicate
+    position gets none and is instantiated as an IRI."""
     tmpl_vars = sorted({t.value for pat in template for t in pat if t.kind == "var"})
-    proj = " ".join("?" + v for v in tmpl_vars) if tmpl_vars else "*"
-    return sparql_select(cur, f"{prefix_block} SELECT {proj} WHERE {where_block}")
+    proj, from_bind = ["?" + v for v in tmpl_vars], []
+    if "obj_is_literal" in cur.columns:
+        at_obj, by_bind = set(), set()
+        _binding_sources(
+            parse_sparql(f"{prefix_block} SELECT * WHERE {where_block}")[2], at_obj, by_bind
+        )
+        for v in sorted({o.value for _s, _p, o in template if o.kind == "var"}):
+            if v in at_obj:
+                proj.append("?" + _LIT_PFX + v)
+            elif v in by_bind:
+                from_bind.append(v)
+    out = sparql_select(cur, f"{prefix_block} SELECT {' '.join(proj) or '*'} WHERE {where_block}")
+    for v in from_bind:
+        out = out.withColumn(_LIT_PFX + v, F.lit("true"))
+    return out
 
 
-def _apply_delta(
-    cur: DataFrame,
-    delta: DataFrame,
-    insert: bool,
-    has_lang: bool,
-    lang_exact: bool = True,
-) -> DataFrame:
-    """Insert: anti-join the delta against the snapshot (set semantics),
-    null-fill any snapshot columns the delta lacks, union. Delete: one
-    left-anti join on (subj, pred, obj) — plus the lang companion
-    null-safely when the snapshot carries it AND the delta is lang-exact.
-    Inserts are always lang-exact (a template's constant tagged literal
-    carries its tag; variables insert untagged); WHERE-driven DELETEs are
-    not (a variable object binds the plain obj value, so it must match a
-    tagged literal regardless of its tag)."""
-    keys = ["subj", "pred", "obj"]
-    if has_lang and (lang_exact or insert):
-        cond = [cur[k] == delta[k] for k in keys] + [
-            cur["lang"].eqNullSafe(delta["lang"])
-        ]
-    else:
-        delta = delta.drop("lang")
-        cond = [cur[k] == delta[k] for k in keys]
+def _binding_sources(body, at_obj: set, by_bind: set) -> None:
+    """Collect the variables a parsed WHERE body binds in scope at the
+    object position of a plain triple pattern — the ones _compile_bgp gives
+    a term-type companion (a variable repeated within one pattern binds at
+    its first position) — into at_obj, and BIND targets into by_bind."""
+    for g in body:
+        for s, p, o in g.patterns:
+            if o.kind == "var" and not isinstance(p, _Path) and o.value not in {
+                t.value for t in (s, p) if t.kind == "var"
+            }:
+                at_obj.add(o.value)
+        by_bind.update(v for _e, v in g.binds)
+        for sub in g.optionals + g.subgroups:
+            _binding_sources(sub, at_obj, by_bind)
+
+
+def _apply_delta(cur: DataFrame, delta: DataFrame, insert: bool, lang_exact: bool) -> DataFrame:
+    """The delta's lang / obj_is_literal columns are kept only where the
+    snapshot has them. Insert: drop duplicate delta rows and those already
+    in the snapshot (set semantics), null-fill any snapshot columns the
+    delta lacks, union. Delete: one left-anti join on (subj, pred, obj) —
+    plus the lang companion null-safely when the snapshot carries it AND
+    the delta is lang-exact. Inserts are always lang-exact (a template's
+    constant tagged literal carries its tag; variables insert untagged);
+    WHERE-driven DELETEs are not (a variable object binds the plain obj
+    value, so it must match a tagged literal regardless of its tag)."""
+    delta = delta.drop(*[c for c in ("lang", "obj_is_literal") if c not in cur.columns])
     if insert:
-        new_rows = delta.join(cur, cond, "left_anti")
-        return cur.unionByName(new_rows, allowMissingColumns=True)
+        delta = delta.dropDuplicates()
+    cond = [cur[k] == delta[k] for k in ("subj", "pred", "obj")]
+    if "lang" in cur.columns and (lang_exact or insert):
+        cond.append(cur["lang"].eqNullSafe(delta["lang"]))
+    if insert:
+        return cur.unionByName(delta.join(cur, cond, "left_anti"), allowMissingColumns=True)
     return cur.join(delta, cond, "left_anti")

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wbkg.materialize import RDF_TYPE_IRI
+
 # one line = subj uri, pred term (uri or bare rdf:* curie), obj term, dot
 _LINE_RE = r"^<([^>]*)> (\S+) (.*) \.$"
 # a well-formed escaped string: content chars are non-quote/non-backslash or
@@ -150,7 +152,6 @@ _TTL_DIRECTIVE = _re.compile(r"@(prefix|base)\b|\b(PREFIX|BASE)(?=\s)", _re.IGNO
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-_RDF_TYPE_IRI = _RDF_NS + "type"
 _RDF_FIRST = _RDF_NS + "first"
 _RDF_REST = _RDF_NS + "rest"
 _RDF_NIL = _RDF_NS + "nil"
@@ -452,7 +453,7 @@ class _TurtleParser:
                 self.i + 1 >= self.n or self.t[self.i + 1] in " \t\n\r<["
             ):
                 self.i += 1
-                pred = _RDF_TYPE_IRI
+                pred = RDF_TYPE_IRI
             else:
                 pred = self._iri_or_pname()
                 if pred is None:
@@ -639,9 +640,6 @@ def to_turtle_pretty(edges: DataFrame, prefixes: dict | None = None) -> DataFram
             "line"
         )
     )
-
-
-RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 def save_turtle_pretty(edges: DataFrame, path: str, prefixes: dict | None = None) -> None:
