@@ -54,6 +54,28 @@ def test_label_propagation_two_clusters(spark):
     assert comm == comm2
 
 
+def test_label_propagation_storage_does_not_grow_with_rounds(spark):
+    """Label propagation releases every round it supersedes and its
+    symmetrized edges: it (and hierarchical_communities over it) leaves as
+    many persisted RDDs behind on a 32-node chain (every step changes a
+    label) as on a 4-node one (converged after three steps)."""
+    from wbkg.communities import hierarchical_communities
+
+    jsc = spark.sparkContext._jsc
+
+    def growth(run, n):
+        edges = spark.createDataFrame(
+            [(f"v{i:02d}", f"v{i + 1:02d}", 1) for i in range(n - 1)],
+            "src string, dst string, weight long",
+        )
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert run(edges).count() == n
+        return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+    assert growth(label_propagation, 4) == growth(label_propagation, 32)
+    assert growth(hierarchical_communities, 4) == growth(hierarchical_communities, 32)
+
+
 def test_community_triples_and_topk(spark):
     comms = spark.createDataFrame(
         [("c1", 7), ("c2", 7), ("c3", 9)], schema="chunk_id string, community_id long"

@@ -15,6 +15,8 @@ implementation's join shapes):
   to a plain-Python BFS, directed and undirected, under a hop cutoff.
 - connected_components / strongly_connected_components (the shared
   min-label fixpoint): equal to the driver union-find and to Tarjan.
+- label_propagation (the same fixpoint with a weighted-vote candidate):
+  equal to a plain-Python monotone weighted label propagation.
 - merge_upsert: idempotent (re-applying the same source is a no-op) and
   key-complete (output keys == target keys ∪ source keys).
 """
@@ -228,6 +230,52 @@ def test_scc_matches_tarjan(spark, pairs):
         for r in strongly_connected_components(_edge_df(spark, pairs)).collect()
     }
     assert got == _py_tarjan(_adjacency(pairs, directed=True))
+
+
+def _py_label_propagation(rows, steps=6):
+    """Monotone synchronous weighted LP: each step every node takes the
+    neighbour label with the largest summed weight (tie: smallest label)
+    when it is smaller than its own; stop once a step changes nothing."""
+    adj = {}
+    for a, b, w in rows:
+        adj.setdefault(a, []).append((b, w))
+        adj.setdefault(b, []).append((a, w))
+    label = {v: v for v in adj}
+    for _ in range(steps):
+        new = {}
+        for v, nbrs in adj.items():
+            votes = {}
+            for u, w in nbrs:
+                votes[label[u]] = votes.get(label[u], 0) + w
+            new[v] = min(label[v], min(votes, key=lambda lb: (-votes[lb], lb)))
+        if new == label:
+            break
+        label = new
+    return label
+
+
+@settings(max_examples=8, **HC)
+@given(
+    rows=st.lists(
+        st.tuples(NODE, NODE, st.integers(1, 4)).filter(lambda r: r[0] != r[1]),
+        max_size=30,
+    ),
+    n_dup=st.integers(0, 5),
+)
+def test_label_propagation_matches_python_lp(spark, rows, n_dup):
+    """Duplicate rows (here the first n_dup rows again, reversed) add their
+    weights; the node range leaves disconnected parts."""
+    from wbkg.communities import label_propagation
+
+    rows = rows + [(b, a, w) for a, b, w in rows[:n_dup]]
+    named = [(f"n{a:02d}", f"n{b:02d}", w) for a, b, w in rows]
+    got = {
+        r.chunk_id: r.community_id
+        for r in label_propagation(
+            spark.createDataFrame(named, "src string, dst string, weight long")
+        ).collect()
+    }
+    assert got == _py_label_propagation(named)
 
 
 @settings(max_examples=10, **HC)

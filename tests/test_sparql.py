@@ -1443,6 +1443,89 @@ def test_update_split_is_linear():
     assert [op.split("{")[0].strip() for op in ops] == ["INSERT DATA", "DELETE DATA"]
 
 
+def test_update_skips_triples_with_unbound_variable(spark):
+    """SPARQL 1.1 §16.2: a template triple with an unbound variable
+    produces nothing — for both update verbs and for CONSTRUCT."""
+    from wbkg.sparql import sparql_construct, sparql_update
+
+    edges = spark.createDataFrame(
+        [("a", "p:x", "b"), ("c", "p:x", "d"), ("a", "p:y", "z")],
+        "subj string, pred string, obj string",
+    )
+    where = "WHERE { ?s <p:x> ?b OPTIONAL { ?s <p:y> ?o } }"
+    out = sparql_update(edges, "INSERT { ?s <p:copy> ?o } " + where)
+    assert sorted(tuple(r) for r in out.filter("pred = 'p:copy'").collect()) == [
+        ("a", "p:copy", "z")
+    ]
+    built = sparql_construct(edges, "CONSTRUCT { ?s <p:copy> ?o } " + where)
+    assert [tuple(r) for r in built.collect()] == [("a", "p:copy", "z")]
+    # an unbound variable in a DELETE template deletes nothing; the bound
+    # solution still deletes its triple
+    out = sparql_update(edges, "DELETE { ?s <p:y> ?o } " + where)
+    assert sorted(tuple(r) for r in out.collect()) == [("a", "p:x", "b"), ("c", "p:x", "d")]
+
+
+def test_update_matches_term_kind(spark):
+    """With obj_is_literal, update set semantics compare the term kind:
+    IRI <o> and literal "o" are different triples."""
+    from wbkg.sparql import sparql_update
+
+    edges = spark.createDataFrame(
+        [("s:1", "p:x", "o", True), ("s:2", "p:x", "o", False)],
+        "subj string, pred string, obj string, obj_is_literal boolean",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    out = sparql_update(edges, "INSERT DATA { <s:1> <p:x> <o> }")
+    assert rows(out) == [
+        ("s:1", "p:x", "o", False), ("s:1", "p:x", "o", True), ("s:2", "p:x", "o", False),
+    ]
+    out = sparql_update(edges, 'DELETE DATA { <s:1> <p:x> "o" . <s:2> <p:x> "o" }')
+    assert rows(out) == [("s:2", "p:x", "o", False)]
+
+
+def test_prefix_text_inside_literal_is_data():
+    """Only PREFIX declarations outside literals are declarations."""
+    q = 'PREFIX p: <urn:p:> SELECT ?s WHERE { ?s p:n "see PREFIX x: <urn:y>" }'
+    _vars, _d, groups, prefixes, *_ = parse_sparql(q)
+    assert prefixes == {"p": "urn:p:"}
+    (_s, pred, obj), = groups[0].patterns
+    assert (pred.value, obj.value) == ("urn:p:n", "see PREFIX x: <urn:y>")
+
+
+def test_one_line_prefixed_update(spark):
+    """A PREFIX declaration on the update's own line still leaves the
+    operation to apply."""
+    from wbkg.sparql import sparql_update
+
+    edges = spark.createDataFrame([("s:1", "urn:p:x", "a")], "subj string, pred string, obj string")
+    out = sparql_update(edges, 'PREFIX p: <urn:p:> INSERT DATA { <s:2> p:x "b" }')
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("s:1", "urn:p:x", "a"), ("s:2", "urn:p:x", "b"),
+    ]
+
+
+def test_path_closure_storage_does_not_grow_with_rounds(spark):
+    """`+` closure releases every round it supersedes: a 32-node chain
+    (~5 doubling rounds) leaves as many persisted RDDs behind as a 4-node
+    one (~2)."""
+    jsc = spark.sparkContext._jsc
+
+    def growth(n):
+        chain = spark.createDataFrame(
+            [(f"x{i:02d}", "p:next", f"x{i + 1:02d}") for i in range(n - 1)],
+            "subj string, pred string, obj string",
+        )
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        out = sparql_select(chain, "SELECT ?a ?b WHERE { ?a <p:next>+ ?b . }")
+        assert out.count() == n * (n - 1) // 2
+        return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+    assert growth(4) == growth(32)
+
+
 def test_numeric_value_fns(spark):
     from wbkg.sparql import sparql_select
 

@@ -19,7 +19,8 @@ the minimum id in its neighborhood until a fixed point. Each probe
 localCheckpoints to truncate lineage and releases the round it superseded;
 alias clusters are tiny (2-5 nodes) so convergence is fast, and the loop is
 bounded. The same fixpoint (min_label_fixpoint) drives
-graph_analytics.strongly_connected_components.
+graph_analytics.strongly_connected_components and, with a weighted-vote
+candidate, communities.label_propagation.
 
 canonical_map: (member, canonical_id) where canonical_id = lexicographic min
 of the component — deterministic, cluster-stable, and QIDs sort before
@@ -47,33 +48,40 @@ def _release(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def min_label_fixpoint(
-    nodes: DataFrame, edges: DataFrame, max_probes: int | None = None
-) -> tuple[DataFrame, bool]:
-    """Min-label propagation over directed edges -> ((node, label),
-    converged): every node ends labeled with the minimum node id that
-    reaches it along (src, dst) edges, itself included. Over symmetrized
-    edges that is connected components (the hash-to-min family, Rastogi et
-    al., ICDE 2013); strongly_connected_components runs it over directed
-    edges both ways.
+def _min_in_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """The default candidate: each node's least in-neighbour label."""
+    return (
+        edges.join(labels, edges["src"] == labels["node"])
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.min("label").alias("_cand"))
+    )
 
-    Each probe runs TWO propagation steps (a converged step is idempotent,
-    so probing every other step halves the jobs) and materializes the new
-    labels as an eager localCheckpoint; the changed count is an Observation
-    collected during that materialization, so a probe is exactly one job.
-    Once a round has materialized, the round it superseded is released:
-    executor storage holds one label table however many rounds run.
-    `max_probes=None` runs to convergence."""
+
+def min_label_fixpoint(
+    nodes: DataFrame, edges: DataFrame, max_probes: int | None = None, candidate=_min_in_label
+) -> tuple[DataFrame, bool]:
+    """Label descent -> ((node, label), converged): each node starts at its
+    own id, and a step lowers its label to candidate(edges, labels)'s
+    (node, _cand) when that is smaller. The default candidate leaves every
+    node labeled with the minimum node id that reaches it along (src, dst)
+    edges, itself included: over symmetrized edges that is connected
+    components (the hash-to-min family, Rastogi et al., ICDE 2013);
+    strongly_connected_components runs it over directed edges both ways;
+    communities.label_propagation passes a weighted vote.
+
+    Each probe runs TWO steps (labels only descend, so a step after
+    convergence changes nothing; probing every other step halves the jobs)
+    and materializes the new labels as an eager localCheckpoint; the
+    changed count is an Observation collected during that materialization,
+    so a probe is exactly one job. Once a round has materialized, the round
+    it superseded is released: executor storage holds one label table
+    however many rounds run. `max_probes=None` runs to convergence."""
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
         eager=False
     )
 
     def step(lbl):
-        cand = (
-            edges.join(lbl, edges["src"] == lbl["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("_cand"))
-        )
+        cand = candidate(edges, lbl)
         return lbl.join(cand, "node", "left").select(
             "node", F.least("label", F.coalesce("_cand", "label")).alias("label")
         )

@@ -4,12 +4,15 @@
 Reference: src/summarize.py. The co-occurrence build is the reference's
 nested loop (entity -> all chunk pairs, weight += 1, :134-143) re-expressed
 as a self-join + hash aggregation. Hierarchical Leiden (:148-172, a
-randomized native library) is replaced by deterministic weighted label
-propagation — documented surrogate; community structure is checked at the
-structural level (determinism, sizes, connectivity), not id-for-id.
+randomized native library) is replaced by deterministic monotone weighted
+label propagation — documented surrogate; community structure is checked at
+the structural level (determinism, sizes, connectivity), not id-for-id.
+label_propagation is canonicalize.min_label_fixpoint (the loop CC and SCC
+run) with a weighted-vote candidate, LP_MAX_ITER steps at most.
 hierarchical_communities() adds the reference's max_cluster_size=50 bound
 (src/summarize.py:160-166): oversized communities are recursively split
-(weak-tie refinement, even-split fallback) and every level is kept.
+(weak-tie refinement, even-split fallback, at most MAX_LEVELS levels) and
+every level is kept.
 
 Skew (SURVEY §4.4): hub entities ("World Bank") touch a large share of all
 chunks, making the self-join quadratic in the hub's chunk count. A
@@ -22,10 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wbkg.canonicalize import _release, min_label_fixpoint
 from wbkg.materialize import EX, SCHEMA, RDF_TYPE, _lit_edges, _uri, _uri_edges
 
 DEFAULT_ENTITY_CHUNK_CAP = 200
-LP_MAX_ITER = 6
+LP_MAX_ITER = 6  # propagation steps (min_label_fixpoint probes two per job)
+LP_PARTITIONS = 32
+MAX_LEVELS = 4  # refinement levels below the label-propagation level
 
 
 def cooccurrence_edges(
@@ -57,64 +63,41 @@ def cooccurrence_edges(
     )
 
 
-def label_propagation(
-    edges: DataFrame, max_iter: int = LP_MAX_ITER, num_partitions: int = 32
-) -> DataFrame:
-    """Deterministic synchronous weighted label propagation.
+def _weighted_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """Each node's candidate: the in-neighbour label with the highest
+    incident weight sum (tie: smallest label) -> (node, _cand). Joining on
+    src keeps the src-partitioned edges in place."""
+    neigh = (
+        edges.join(labels.withColumnRenamed("node", "src"), "src")
+        .groupBy(F.col("dst").alias("node"), "label")
+        .agg(F.sum("weight").alias("w"))
+    )
+    pick = Window.partitionBy("node").orderBy(F.desc("w"), F.asc("label"))
+    return (
+        neigh.withColumn("_rn", F.row_number().over(pick))
+        .filter("_rn = 1")
+        .select("node", F.col("label").alias("_cand"))
+    )
 
-    Each node adopts the label with the highest incident weight sum
-    (tie-break: smallest label). -> (chunk_id, community_id: long)."""
+
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """Deterministic synchronous weighted label propagation, at most
+    LP_MAX_ITER steps -> (chunk_id, community_id). MONOTONE: a node adopts
+    its weighted-vote candidate only if it is smaller than its label, so
+    the iteration provably converges (no synchronous-LP oscillation) while
+    weight-dominance still decides membership: a weak bridge edge cannot
+    pull a node out of its strongly-connected cluster. The loop is
+    min_label_fixpoint over the symmetrized edges (union-all: duplicate
+    rows add their weights), released once the labels are materialized."""
     sym = (
         edges.select("src", "dst", "weight")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"))
-        .repartition(num_partitions, "src")
-        .localCheckpoint()
+        .repartition(LP_PARTITIONS, "src")
+        .localCheckpoint(eager=False)
     )
-    labels = (
-        sym.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint()
-
-    # MONOTONE weighted label propagation: each node finds the label with the
-    # highest incident-weight sum among its neighbors (tie: smallest label)
-    # and adopts it ONLY if it is smaller than its current label. Labels only
-    # decrease, so the iteration provably converges (no synchronous-LP
-    # oscillation); weight-dominance still decides membership, so a weak
-    # bridge edge cannot pull a node out of its strongly-connected cluster.
-    for it in range(max_iter):
-        neigh = (
-            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"), "label")
-            .agg(F.sum("weight").alias("w"))
-        )
-        pick = Window.partitionBy("node").orderBy(F.desc("w"), F.asc("label"))
-        candidate = (
-            neigh.withColumn("_rn", F.row_number().over(pick))
-            .filter("_rn = 1")
-            .select("node", F.col("label").alias("new_label"))
-        )
-        # labels only decrease, so changed == "new label strictly smaller";
-        # the count rides the checkpoint materialization as an OBSERVED
-        # metric (accumulator) — no separate per-iteration count job
-        # (VERDICT r03 #7)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"lp_changed_{it}")
-        new_col = F.least(F.col("label"), F.coalesce("new_label", "label"))
-        flagged = labels.join(candidate, "node", "left").select(
-            "node",
-            new_col.alias("_new"),
-            (new_col < F.col("label")).cast("long").alias("_chg"),
-        )
-        new_labels = (
-            flagged.observe(obs, F.sum("_chg").alias("changed"))
-            .select("node", F.col("_new").alias("label"))
-            .localCheckpoint()
-        )
-        changed = int(obs.get["changed"] or 0)
-        labels = new_labels
-        if changed == 0:
-            break
-
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    labels, _ = min_label_fixpoint(nodes, sym, LP_MAX_ITER // 2, _weighted_vote)
+    _release(sym)
     # structural id: the converged min-label (a member chunk_id) IS the
     # community id — injective by construction, no hash-collision risk
     # (ADVICE r02: a cross-parent xxhash64 collision could silently merge
@@ -143,12 +126,7 @@ def _ntile_split(mem: DataFrame, max_cluster_size: int) -> DataFrame:
     )
 
 
-def hierarchical_communities(
-    edges: DataFrame,
-    max_cluster_size: int = 50,
-    max_levels: int = 4,
-    num_partitions: int = 32,
-) -> DataFrame:
+def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> DataFrame:
     """Hierarchical community detection with a hard cluster-size bound —
     the deterministic surrogate for the reference's
     `hierarchical_leiden(..., max_cluster_size=50)` (ref
@@ -162,17 +140,16 @@ def hierarchical_communities(
         without edges become singletons.
       - weights are uniform (or refinement returned a single label): even
         deterministic split by chunk_id order into ceil(n/max) buckets.
-    The final level is always forced through the even split, so the bound
-    holds unconditionally.
+    The final level (MAX_LEVELS) is always forced through the even split,
+    so the bound holds unconditionally.
 
     -> (chunk_id, level, community_id); a chunk appears once per level at
     which its community was (re)assigned. Use final_communities() for the
     leaf assignment."""
-    labels = label_propagation(edges, num_partitions=num_partitions)
-    out = labels.withColumn("level", F.lit(0))
-    cur = labels.localCheckpoint()
+    cur = label_propagation(edges)
+    out = cur.withColumn("level", F.lit(0))
 
-    for level in range(1, max_levels + 1):
+    for level in range(1, MAX_LEVELS + 1):
         sizes = cur.groupBy("community_id").agg(F.count("*").alias("sz"))
         over = sizes.filter(F.col("sz") > max_cluster_size).select("community_id")
         if over.isEmpty():
@@ -180,7 +157,7 @@ def hierarchical_communities(
         mem = cur.join(over, "community_id", "left_semi").select(
             "chunk_id", F.col("community_id").alias("parent")
         )
-        if level == max_levels:
+        if level == MAX_LEVELS:
             refined = _ntile_split(mem, max_cluster_size)
         else:
             src_m = mem.select(F.col("chunk_id").alias("src"), F.col("parent"))
@@ -203,9 +180,7 @@ def hierarchical_communities(
             refine_mem = mem.join(varying.select("parent"), "parent", "left_semi")
             ntile_mem = mem.join(varying.select("parent"), "parent", "left_anti")
 
-            sub = label_propagation(kept, num_partitions=num_partitions).withColumnRenamed(
-                "community_id", "sub_label"
-            )
+            sub = label_propagation(kept).withColumnRenamed("community_id", "sub_label")
             singleton = F.concat_ws("#", "parent", "chunk_id")
             refined0 = refine_mem.join(sub, "chunk_id", "left").select(
                 "chunk_id", "parent", F.coalesce("sub_label", singleton).alias("sub_label")

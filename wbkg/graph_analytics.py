@@ -19,8 +19,9 @@ Loops of one shape share one private kernel: _triangle_pairs (degree-
 ordered adjacency intersection: triangle_count, k_truss,
 clustering_coefficient), _frontier_bfs (bfs_distances,
 harmonic_centrality), _power_iteration (pagerank, personalized_pagerank)
-and canonicalize.min_label_fixpoint (strongly_connected_components and
-connected components). The others — sssp, k_core, k_truss's peel, hits,
+and canonicalize.min_label_fixpoint (strongly_connected_components,
+connected components and, with a weighted-vote candidate,
+communities.label_propagation). The others — sssp, k_core, k_truss's peel, hits,
 katz, random_walks — are one loop each.
 
 Lineage: every loop cuts its plan with localCheckpoint. Static inputs (the

@@ -93,6 +93,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.canonicalize import _release
 from wbkg.materialize import RDF_TYPE, RDF_TYPE_IRI
 
 _TOKEN = re.compile(
@@ -795,12 +796,24 @@ def _split_top(text: str, sep_re: str) -> list[str]:
     return pieces
 
 
-_PREFIX_DECL = re.compile(r"(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>]*)>")
+# an IRIREF holds no '"', so a declaration lies wholly inside or outside a literal
+_PREFIX_DECL = re.compile(r'(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>"]*)>')
+# the declarations a CONSTRUCT / ASK / DESCRIBE / update text opens with
+_PREFIX_BLOCK = r'(\s*(?:PREFIX\s+[A-Za-z_][\w-]*:\s*<[^>"]*>\s*)*)'
 
 
-def _prefixes(text: str) -> dict[str, str]:
-    """PREFIX declarations in `text` -> {prefix: namespace IRI}."""
-    return dict(_PREFIX_DECL.findall(text))
+def _prefixes(text: str) -> tuple[dict[str, str], str]:
+    """PREFIX declarations outside literals in `text` -> ({prefix: namespace
+    IRI}, `text` with each of them blanked); a literal's text is data."""
+    lit, decls = _scan(text)[0], {}
+
+    def blank(m):
+        if lit[m.start()]:
+            return m.group(0)
+        decls[m.group(1)] = m.group(2)
+        return " "
+
+    return decls, _PREFIX_DECL.sub(blank, text)
 
 
 @dataclass
@@ -933,8 +946,7 @@ def parse_sparql(query: str):
     _Term triples; filters: raw FILTER expression strings (compiled against
     the bound variables in sparql_select); exists_groups: (negated,
     patterns) for FILTER [NOT] EXISTS; order_vars: (var, ascending)."""
-    prefixes = _prefixes(query)
-    body = _PREFIX_DECL.sub(" ", query)
+    prefixes, body = _prefixes(query)
     # HAVING(...) is lifted before the shape regex — top level only: one
     # inside a { SELECT } subquery belongs to that subquery's own parse
     body, having_blocks = _lift(body, r"\bHAVING", "(")
@@ -1029,13 +1041,14 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     closure, so reachable path length grows as 2^round — max_iters=16
     covers diameters past 65k, and a graph that still hasn't converged
     warns instead of silently truncating (the contract of
-    canonicalize.connected_components). localCheckpoint per round
-    truncates lineage; unlike canonicalize.min_label_fixpoint, superseded
-    rounds are not released. Property-path graphs are vocabulary-bounded
+    canonicalize.connected_components). An eager localCheckpoint per round
+    truncates lineage, and once a round's closure has materialized the
+    closure and frontier it superseded are released (as
+    canonicalize.min_label_fixpoint does), so storage holds one closure
+    however many rounds run. Property-path graphs are vocabulary-bounded
     here (edges over a filtered predicate), not corpus-bounded."""
     base = step.distinct().localCheckpoint()
-    total, frontier = base, base
-    converged = False
+    total = frontier = base
     for _ in range(max_iters):
         # nonlinear seminaive: path(a,b) :- path(a,m), path(m,b) needs BOTH
         # delta-first and delta-second compositions for completeness
@@ -1052,11 +1065,13 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
         )
         new = nxt.join(total, ["a", "b"], "left_anti").localCheckpoint()
         if not new.take(1):
-            converged = True
+            _release(new)
             break
-        total = total.unionByName(new).localCheckpoint()
-        frontier = new
-    if not converged:
+        grown = total.unionByName(new).localCheckpoint()
+        _release(frontier)  # round one releases base twice: a no-op
+        _release(total)
+        total, frontier = grown, new
+    else:
         import warnings
 
         warnings.warn(
@@ -1066,6 +1081,8 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
             RuntimeWarning,
             stacklevel=2,
         )
+    if frontier is not total:
+        _release(frontier)
     return total
 
 
@@ -1770,10 +1787,10 @@ def sparql_construct(edges: DataFrame, query: str) -> DataFrame:
     Compiles to: WHERE block via the SELECT machinery, one projection per
     template triple, unionByName, dropDuplicates — the same
     partial-aggregated dedup shuffle union_distinct uses at scale."""
-    m = re.search(r"(?is)^(\s*(?:PREFIX[^\n]*\n?\s*)*)CONSTRUCT\s*\{(.*?)\}\s*(WHERE\s*\{.*)$", query.strip())
+    m = re.search(r"(?is)^" + _PREFIX_BLOCK + r"CONSTRUCT\s*\{(.*?)\}\s*(WHERE\s*\{.*)$", query.strip())
     if not m:
         raise SparqlError("expected CONSTRUCT { template } WHERE { ... }")
-    prefixes = _prefixes(m.group(1))
+    prefixes = _prefixes(m.group(1))[0]
     template = _parse_patterns(m.group(2), prefixes)
     if not template:
         raise SparqlError("empty CONSTRUCT template")
@@ -1795,7 +1812,7 @@ def sparql_ask(edges: DataFrame, query: str) -> bool:
     """ASK { patterns } / ASK WHERE { patterns } -> does any binding exist?
     Compiles to the SELECT machinery with LIMIT 1 — the scan stops at the
     first match (Spark's limit is pushed into the job as a take(1))."""
-    m = re.search(r"(?is)^(\s*(?:PREFIX[^\n]*\n?\s*)*)ASK\s*(?:WHERE\s*)?(\{.*\})\s*$", query.strip())
+    m = re.search(r"(?is)^" + _PREFIX_BLOCK + r"ASK\s*(?:WHERE\s*)?(\{.*\})\s*$", query.strip())
     if not m:
         raise SparqlError("expected ASK [WHERE] { ... }")
     inner = f"{m.group(1)} SELECT * WHERE {m.group(2)} LIMIT 1"
@@ -1818,12 +1835,12 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
     evaluation contract as `+`/`*` paths; graphs here hold bnodes only from
     Turtle-ingested property lists, so rounds are shallow)."""
     m = re.search(
-        r"(?is)^(\s*(?:PREFIX[^\n]*\n?\s*)*)DESCRIBE\s+((?:[^\s{]+\s*)+?)(WHERE\s*\{.*)?$",
+        r"(?is)^" + _PREFIX_BLOCK + r"DESCRIBE\s+((?:[^\s{]+\s*)+?)(WHERE\s*\{.*)?$",
         query.strip(),
     )
     if not m:
         raise SparqlError("expected DESCRIBE <iri>... or DESCRIBE ?v ... WHERE { ... }")
-    prefixes = _prefixes(m.group(1))
+    prefixes = _prefixes(m.group(1))[0]
     terms = [_parse_term(t, prefixes) for t in _TOKEN.findall(m.group(2))]
     if not terms:
         raise SparqlError("DESCRIBE needs at least one resource or variable")
@@ -1873,9 +1890,11 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
 def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
     """Project one (subj, pred, obj, lang, obj_is_literal) frame per
     template triple from a solution set and union them — shared by
-    CONSTRUCT and the update verbs. A constant object carries its term's
-    tag and kind; a variable object is untagged, and is a literal when its
-    term-type companion in `bindings` says so, else an IRI."""
+    CONSTRUCT and the update verbs. A solution that leaves one of a
+    triple's variables unbound produces no triple (SPARQL 1.1 §16.2). A
+    constant object carries its term's tag and kind; a variable object is
+    untagged, and is a literal when its term-type companion in `bindings`
+    says so, else an IRI."""
     frames = []
     for s, p, o in template:
         cols = [
@@ -1892,7 +1911,8 @@ def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
         else:
             is_lit = F.lit(False)
         cols.append(is_lit.alias("obj_is_literal"))
-        frames.append(bindings.select(*cols))
+        bound = bindings.dropna(subset=[t.value for t in (s, p, o) if t.kind == "var"])
+        frames.append(bound.select(*cols))
     out = frames[0]
     for nxt in frames[1:]:
         out = out.unionByName(nxt)
@@ -1933,9 +1953,9 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
     not the apply — at 100 TB the snapshot streams through exactly once
     per op."""
     q = query.strip()
-    pm = re.match(r"(?is)^\s*((?:PREFIX[^\n]*\n?\s*)*)", q)
+    pm = re.match(r"(?is)^" + _PREFIX_BLOCK, q)
     prefix_block = pm.group(1)
-    prefixes = _prefixes(prefix_block)
+    prefixes = _prefixes(prefix_block)[0]
     body = q[pm.end():]
     cur = edges
 
@@ -2051,13 +2071,18 @@ def _apply_delta(cur: DataFrame, delta: DataFrame, insert: bool, lang_exact: boo
     the delta is lang-exact. Inserts are always lang-exact (a template's
     constant tagged literal carries its tag; variables insert untagged);
     WHERE-driven DELETEs are not (a variable object binds the plain obj
-    value, so it must match a tagged literal regardless of its tag)."""
+    value, so it must match a tagged literal regardless of its tag). When
+    the snapshot carries obj_is_literal, rows match on the term kind too
+    (IRI <o> is not literal "o"); a null flag reads as a literal, as the
+    query compiler reads it."""
     delta = delta.drop(*[c for c in ("lang", "obj_is_literal") if c not in cur.columns])
     if insert:
         delta = delta.dropDuplicates()
     cond = [cur[k] == delta[k] for k in ("subj", "pred", "obj")]
     if "lang" in cur.columns and (lang_exact or insert):
         cond.append(cur["lang"].eqNullSafe(delta["lang"]))
+    if "obj_is_literal" in cur.columns:  # the delta's flag is never null
+        cond.append(F.coalesce(cur["obj_is_literal"], F.lit(True)) == delta["obj_is_literal"])
     if insert:
         return cur.unionByName(delta.join(cur, cond, "left_anti"), allowMissingColumns=True)
     return cur.join(delta, cond, "left_anti")
