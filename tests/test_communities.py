@@ -76,6 +76,34 @@ def test_label_propagation_storage_does_not_grow_with_rounds(spark):
     assert growth(hierarchical_communities, 4) == growth(hierarchical_communities, 32)
 
 
+def test_hierarchical_split_levels_release_their_label_propagation(spark):
+    """Each refinement level's label propagation is released once its
+    level is materialized: one split level or two, the persisted RDDs left
+    behind are exactly the ones the output reads (the level-0 labels and
+    one checkpoint per split level)."""
+    from wbkg.communities import hierarchical_communities
+
+    # duplicate weight-1 rows to a top hub and weight-2 rows to a hub per
+    # group outvote the weight-3 pair edges, so level 0 is one community;
+    # each split level drops the lightest class and re-runs propagation
+    rows = []
+    for g in range(2):
+        pairs = [(f"g{g}c{c}n0", f"g{g}c{c}n1") for c in range(2)]
+        rows += [(a, b, 3) for a, b in pairs]
+        rows += [(f"g{g}a", v, 2) for p in pairs for v in p for _ in range(2)]
+        rows += [("a", v, 1) for v in [f"g{g}a", *(v for p in pairs for v in p)] for _ in range(5)]
+    edges = spark.createDataFrame(rows, "src string, dst string, weight long")
+    jsc = spark.sparkContext._jsc
+
+    def run(max_cluster_size):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        levels = {r.level for r in hierarchical_communities(edges, max_cluster_size).collect()}
+        return levels, len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+    assert run(5) == ({0, 1}, 2)  # groups of five
+    assert run(2) == ({0, 1, 2}, 3)  # then pairs and singleton hubs
+
+
 def test_community_triples_and_topk(spark):
     comms = spark.createDataFrame(
         [("c1", 7), ("c2", 7), ("c3", 9)], schema="chunk_id string, community_id long"

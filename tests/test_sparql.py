@@ -1486,6 +1486,26 @@ def test_update_matches_term_kind(spark):
     assert rows(out) == [("s:2", "p:x", "o", False)]
 
 
+def test_update_where_delete_without_term_kind(spark):
+    """An object bound through a property path (alone or restricted by
+    VALUES) carries no term kind: a WHERE-driven DELETE of it matches
+    either kind, so a literal object is still deleted."""
+    from wbkg.sparql import sparql_update
+
+    edges = spark.createDataFrame(
+        [("s:1", "p:name", "a", True), ("s:2", "p:label", "b", True), ("s:3", "p:x", "o", True)],
+        "subj string, pred string, obj string, obj_is_literal boolean",
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    out = sparql_update(edges, "DELETE { ?s <p:name> ?n } WHERE { ?s <p:name>|<p:label> ?n }")
+    assert rows(out) == [("s:2", "p:label", "b", True), ("s:3", "p:x", "o", True)]
+    out = sparql_update(edges, 'DELETE { ?s <p:x> ?o } WHERE { ?s <p:x>|<p:y> ?o VALUES ?o { "o" } }')
+    assert rows(out) == [("s:1", "p:name", "a", True), ("s:2", "p:label", "b", True)]
+
+
 def test_prefix_text_inside_literal_is_data():
     """Only PREFIX declarations outside literals are declarations."""
     q = 'PREFIX p: <urn:p:> SELECT ?s WHERE { ?s p:n "see PREFIX x: <urn:y>" }'

@@ -43,9 +43,9 @@ CC_PARTITIONS = 8
 
 
 def _release(df: DataFrame) -> None:
-    """Free the executor blocks behind a materialized localCheckpoint. Only
-    for a checkpoint nothing still reads: its rows cannot be recomputed."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    """Free the executor blocks behind a materialized localCheckpoint (or a
+    projection of one) that nothing still reads: its rows cannot be recomputed."""
+    df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().unpersist(False)
 
 
 def _min_in_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -62,27 +62,23 @@ def min_label_fixpoint(
 ) -> tuple[DataFrame, bool]:
     """Label descent -> ((node, label), converged): each node starts at its
     own id, and a step lowers its label to candidate(edges, labels)'s
-    (node, _cand) when that is smaller. The default candidate leaves every
-    node labeled with the minimum node id that reaches it along (src, dst)
-    edges, itself included: over symmetrized edges that is connected
-    components (the hash-to-min family, Rastogi et al., ICDE 2013);
-    strongly_connected_components runs it over directed edges both ways;
-    communities.label_propagation passes a weighted vote.
+    (node, _cand) when that is smaller. The default candidate, the least
+    in-neighbour label, ends with the minimum node id reaching each node
+    along (src, dst) edges: over symmetrized edges that is connected
+    components (hash-to-min, Rastogi et al., ICDE 2013); SCC runs it over
+    directed edges both ways; label_propagation passes a weighted vote.
 
     Each probe runs TWO steps (labels only descend, so a step after
-    convergence changes nothing; probing every other step halves the jobs)
-    and materializes the new labels as an eager localCheckpoint; the
-    changed count is an Observation collected during that materialization,
-    so a probe is exactly one job. Once a round has materialized, the round
-    it superseded is released: executor storage holds one label table
-    however many rounds run. `max_probes=None` runs to convergence."""
+    convergence changes nothing) and materializes them as an eager
+    localCheckpoint whose changed count is an Observation: one job per
+    probe. Each materialized round releases the one it superseded, so
+    storage holds one label table. `max_probes=None` runs to convergence."""
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
         eager=False
     )
 
     def step(lbl):
-        cand = candidate(edges, lbl)
-        return lbl.join(cand, "node", "left").select(
+        return lbl.join(candidate(edges, lbl), "node", "left").select(
             "node", F.least("label", F.coalesce("_cand", "label")).alias("label")
         )
 

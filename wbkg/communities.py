@@ -66,9 +66,11 @@ def cooccurrence_edges(
 def _weighted_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Each node's candidate: the in-neighbour label with the highest
     incident weight sum (tie: smallest label) -> (node, _cand). Joining on
-    src keeps the src-partitioned edges in place."""
+    src keeps the src-partitioned edges in place; one shuffle by dst then
+    serves both the group-by and the window."""
     neigh = (
         edges.join(labels.withColumnRenamed("node", "src"), "src")
+        .repartition("dst")
         .groupBy(F.col("dst").alias("node"), "label")
         .agg(F.sum("weight").alias("w"))
     )
@@ -158,7 +160,7 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
             "chunk_id", F.col("community_id").alias("parent")
         )
         if level == MAX_LEVELS:
-            refined = _ntile_split(mem, max_cluster_size)
+            refined = _ntile_split(mem, max_cluster_size).localCheckpoint()
         else:
             src_m = mem.select(F.col("chunk_id").alias("src"), F.col("parent"))
             dst_m = mem.select(F.col("chunk_id").alias("dst"), F.col("parent").alias("p2"))
@@ -177,17 +179,15 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
                 .filter(F.col("weight") > F.col("wmin"))
                 .select("src", "dst", "weight")
             )
-            refine_mem = mem.join(varying.select("parent"), "parent", "left_semi")
-            ntile_mem = mem.join(varying.select("parent"), "parent", "left_anti")
-
             sub = label_propagation(kept).withColumnRenamed("community_id", "sub_label")
             singleton = F.concat_ws("#", "parent", "chunk_id")
-            refined0 = refine_mem.join(sub, "chunk_id", "left").select(
-                "chunk_id", "parent", F.coalesce("sub_label", singleton).alias("sub_label")
+            # a member of a uniform-weight parent gets no sub-label (null)
+            sub_label = F.when(F.col("wmin").isNotNull(), F.coalesce("sub_label", singleton))
+            refined0 = mem.join(varying, "parent", "left").join(sub, "chunk_id", "left").select(
+                "chunk_id", "parent", sub_label.alias("sub_label")
             )
-            # refinement that failed to split (single label == parent size)
-            # stalls forever on re-entry -> route those parents to the even
-            # split now
+            # uniform weights, or a refinement that failed to split (one
+            # label: it would stall forever on re-entry) -> the even split
             nsub = refined0.groupBy("parent").agg(
                 F.countDistinct("sub_label").alias("nsub")
             )
@@ -199,12 +199,11 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
                 F.concat_ws("/", F.col("parent").cast("string"),
                             F.col("sub_label").cast("string")).alias("community_id"),
             )
-            ntile_all = ntile_mem.unionByName(
-                refine_mem.join(stuck, "parent", "left_semi")
-            )
-            refined = split_ok.unionByName(_ntile_split(ntile_all, max_cluster_size))
+            refined = split_ok.unionByName(
+                _ntile_split(mem.join(stuck, "parent", "left_semi"), max_cluster_size)
+            ).localCheckpoint()
+            _release(sub)  # only refined read it
 
-        refined = refined.localCheckpoint()
         out = out.unionByName(refined.withColumn("level", F.lit(level)))
         cur = refined
 

@@ -24,6 +24,17 @@ RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_SUBCLASS = "rdfs:subClassOf"
 RDFS_LABEL = "rdfs:label"
 
+# ref src/graph.py:24-33
+COLUMN_TO_SCHEMA = {
+    "id": "identifier",
+    "display_title": "name",
+    "last_modified_date": "dateModified",
+    "pdfurl": "url",
+    "year": "datePublished",
+    "docty": "genre",
+    "owner": "creator",
+}
+
 
 def _uri(ns: str, *parts) -> "F.Column":
     return F.concat(F.lit(ns), *parts)

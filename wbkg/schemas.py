@@ -140,6 +140,16 @@ DOC_METADATA = StructType(
     ]
 )
 
+# --- stage 6: communities ------------------------------------------------------
+COMMUNITIES = StructType(
+    [
+        StructField("chunk_id", StringType()),
+        # structural string id (parent/sub-label path), injective by
+        # construction — no hashed-long collision risk (ADVICE r02)
+        StructField("community_id", StringType()),
+    ]
+)
+
 # --- lineage / metrics ----------------------------------------------------------
 STAGE_METRICS = StructType(
     [

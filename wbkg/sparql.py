@@ -797,23 +797,19 @@ def _split_top(text: str, sep_re: str) -> list[str]:
 
 
 # an IRIREF holds no '"', so a declaration lies wholly inside or outside a literal
-_PREFIX_DECL = re.compile(r'(?i)PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>"]*)>')
-# the declarations a CONSTRUCT / ASK / DESCRIBE / update text opens with
-_PREFIX_BLOCK = r'(\s*(?:PREFIX\s+[A-Za-z_][\w-]*:\s*<[^>"]*>\s*)*)'
+_PREFIX = r'PREFIX\s+([A-Za-z_][\w-]*):\s*<([^>"]*)>'
+_PREFIX_DECL = re.compile("(?i)" + _PREFIX)
+_PREFIX_BLOCK = r"(\s*(?:" + _PREFIX.replace("(", "(?:") + r"\s*)*)"
 
 
 def _prefixes(text: str) -> tuple[dict[str, str], str]:
     """PREFIX declarations outside literals in `text` -> ({prefix: namespace
     IRI}, `text` with each of them blanked); a literal's text is data."""
-    lit, decls = _scan(text)[0], {}
-
-    def blank(m):
-        if lit[m.start()]:
-            return m.group(0)
-        decls[m.group(1)] = m.group(2)
-        return " "
-
-    return decls, _PREFIX_DECL.sub(blank, text)
+    lit = _scan(text)[0]
+    decls = [m for m in _PREFIX_DECL.finditer(text) if not lit[m.start()]]
+    for m in reversed(decls):
+        text = text[: m.start()] + " " + text[m.end():]
+    return {m.group(1): m.group(2) for m in decls}, text
 
 
 @dataclass
@@ -1042,10 +1038,9 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     covers diameters past 65k, and a graph that still hasn't converged
     warns instead of silently truncating (the contract of
     canonicalize.connected_components). An eager localCheckpoint per round
-    truncates lineage, and once a round's closure has materialized the
-    closure and frontier it superseded are released (as
-    canonicalize.min_label_fixpoint does), so storage holds one closure
-    however many rounds run. Property-path graphs are vocabulary-bounded
+    truncates lineage; each materialized round releases the closure and
+    frontier it superseded, so storage holds one closure however many
+    rounds run. Property-path graphs are vocabulary-bounded
     here (edges over a filtered predicate), not corpus-bounded."""
     base = step.distinct().localCheckpoint()
     total = frontier = base
@@ -1893,8 +1888,7 @@ def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
     CONSTRUCT and the update verbs. A solution that leaves one of a
     triple's variables unbound produces no triple (SPARQL 1.1 §16.2). A
     constant object carries its term's tag and kind; a variable object is
-    untagged, and is a literal when its term-type companion in `bindings`
-    says so, else an IRI."""
+    untagged, of the kind its term-type companion says (null: unknown)."""
     frames = []
     for s, p, o in template:
         cols = [
@@ -1907,9 +1901,9 @@ def _instantiate_template(bindings: DataFrame, template) -> DataFrame:
         if o.kind == "const":
             is_lit = F.lit(o.literal)
         elif _LIT_PFX + o.value in bindings.columns:
-            is_lit = F.coalesce(F.col(_LIT_PFX + o.value) == "true", F.lit(False))
+            is_lit = F.col(_LIT_PFX + o.value) == "true"
         else:
-            is_lit = F.lit(False)
+            is_lit = F.lit(None).cast("boolean")
         cols.append(is_lit.alias("obj_is_literal"))
         bound = bindings.dropna(subset=[t.value for t in (s, p, o) if t.kind == "var"])
         frames.append(bound.select(*cols))
@@ -1943,8 +1937,8 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
     `lang` companion null-safely when the input carries that column;
     WHERE-driven templates instantiate lang only for constant tagged
     literals (variables project the plain obj binding). When the input
-    carries `obj_is_literal`, inserts write it: a constant object's term
-    kind, a variable's term type from its WHERE binding (_update_bindings).
+    carries `obj_is_literal`, deltas carry it too: a constant object's term
+    kind, a variable's term type from its WHERE binding, if any.
 
     Plan shape per op: deletes are ONE left-anti join of the snapshot
     against the (small) delete set; inserts are one anti-join + union.
@@ -1953,10 +1947,8 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
     not the apply — at 100 TB the snapshot streams through exactly once
     per op."""
     q = query.strip()
-    pm = re.match(r"(?is)^" + _PREFIX_BLOCK, q)
-    prefix_block = pm.group(1)
-    prefixes = _prefixes(prefix_block)[0]
-    body = q[pm.end():]
+    prefix_block = re.match(r"(?is)^" + _PREFIX_BLOCK, q).group(1)
+    prefixes, body = _prefixes(prefix_block)[0], q[len(prefix_block):]
     cur = edges
 
     for op in [op.strip() for op in _split_top(body, ";") if op.strip()]:
@@ -2027,7 +2019,7 @@ def _update_bindings(cur: DataFrame, prefix_block: str, template, where_block: s
     brings its term type: the solutions' own term-type companion when a
     triple pattern binds it at object position, "true" when a BIND does
     (BIND yields literals); a variable bound only at subject or predicate
-    position gets none and is instantiated as an IRI."""
+    position, or through a path, gets none: its kind is unknown."""
     tmpl_vars = sorted({t.value for pat in template for t in pat if t.kind == "var"})
     proj, from_bind = ["?" + v for v in tmpl_vars], []
     if "obj_is_literal" in cur.columns:
@@ -2071,18 +2063,21 @@ def _apply_delta(cur: DataFrame, delta: DataFrame, insert: bool, lang_exact: boo
     the delta is lang-exact. Inserts are always lang-exact (a template's
     constant tagged literal carries its tag; variables insert untagged);
     WHERE-driven DELETEs are not (a variable object binds the plain obj
-    value, so it must match a tagged literal regardless of its tag). When
-    the snapshot carries obj_is_literal, rows match on the term kind too
-    (IRI <o> is not literal "o"); a null flag reads as a literal, as the
-    query compiler reads it."""
+    value, so it must match a tagged literal regardless of its tag). With
+    obj_is_literal, a delta row of known term kind matches only that kind
+    (a null snapshot flag reads as a literal, as the compiler reads it);
+    one of unknown kind matches either, and is inserted as an IRI."""
+    kind = "obj_is_literal" in cur.columns
     delta = delta.drop(*[c for c in ("lang", "obj_is_literal") if c not in cur.columns])
-    if insert:
-        delta = delta.dropDuplicates()
     cond = [cur[k] == delta[k] for k in ("subj", "pred", "obj")]
     if "lang" in cur.columns and (lang_exact or insert):
         cond.append(cur["lang"].eqNullSafe(delta["lang"]))
-    if "obj_is_literal" in cur.columns:  # the delta's flag is never null
-        cond.append(F.coalesce(cur["obj_is_literal"], F.lit(True)) == delta["obj_is_literal"])
+    if kind:
+        flag = delta["obj_is_literal"]
+        cond.append(flag.isNull() | (F.coalesce(cur["obj_is_literal"], F.lit(True)) == flag))
     if insert:
-        return cur.unionByName(delta.join(cur, cond, "left_anti"), allowMissingColumns=True)
+        new = delta.join(cur, cond, "left_anti")
+        if kind:
+            new = new.fillna(False, subset=["obj_is_literal"])
+        return cur.unionByName(new.dropDuplicates(), allowMissingColumns=True)
     return cur.join(delta, cond, "left_anti")
