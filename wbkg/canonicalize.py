@@ -77,17 +77,16 @@ def min_label_fixpoint(
         eager=False
     )
 
-    def step(lbl):
-        return lbl.join(candidate(edges, lbl), "node", "left").select(
-            "node", F.least("label", F.coalesce("_cand", "label")).alias("label")
+    def step(lbl):  # carries the probe's starting label as _old
+        return lbl.join(candidate(edges, lbl.drop("_old")), "node", "left").select(
+            "node", F.least("label", F.coalesce("_cand", "label")).alias("label"), "_old"
         )
 
     changed, probes = 1, 0
     while changed and (max_probes is None or probes < max_probes):
         obs = Observation()
         new = (
-            step(step(labels))
-            .join(labels.withColumnRenamed("label", "_old"), "node")
+            step(step(labels.withColumn("_old", F.col("label"))))
             .observe(obs, F.sum((F.col("label") != F.col("_old")).cast("long")).alias("n"))
             .select("node", "label")
             .localCheckpoint()

@@ -7,12 +7,10 @@ as a self-join + hash aggregation. Hierarchical Leiden (:148-172, a
 randomized native library) is replaced by deterministic monotone weighted
 label propagation — documented surrogate; community structure is checked at
 the structural level (determinism, sizes, connectivity), not id-for-id.
-label_propagation is canonicalize.min_label_fixpoint (the loop CC and SCC
-run) with a weighted-vote candidate, LP_MAX_ITER steps at most.
+label_propagation is canonicalize.min_label_fixpoint with a weighted vote.
 hierarchical_communities() adds the reference's max_cluster_size=50 bound
 (src/summarize.py:160-166): oversized communities are recursively split
-(weak-tie refinement, even-split fallback, at most MAX_LEVELS levels) and
-every level is kept.
+(weak-tie refinement, even-split fallback) and every level is kept.
 
 Skew (SURVEY §4.4): hub entities ("World Bank") touch a large share of all
 chunks, making the self-join quadratic in the hub's chunk count. A
@@ -179,15 +177,17 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
                 .filter(F.col("weight") > F.col("wmin"))
                 .select("src", "dst", "weight")
             )
+            refine_mem = mem.join(varying.select("parent"), "parent", "left_semi")
+            ntile_mem = mem.join(varying.select("parent"), "parent", "left_anti")
+
             sub = label_propagation(kept).withColumnRenamed("community_id", "sub_label")
             singleton = F.concat_ws("#", "parent", "chunk_id")
-            # a member of a uniform-weight parent gets no sub-label (null)
-            sub_label = F.when(F.col("wmin").isNotNull(), F.coalesce("sub_label", singleton))
-            refined0 = mem.join(varying, "parent", "left").join(sub, "chunk_id", "left").select(
-                "chunk_id", "parent", sub_label.alias("sub_label")
+            refined0 = refine_mem.join(sub, "chunk_id", "left").select(
+                "chunk_id", "parent", F.coalesce("sub_label", singleton).alias("sub_label")
             )
-            # uniform weights, or a refinement that failed to split (one
-            # label: it would stall forever on re-entry) -> the even split
+            # refinement that failed to split (single label == parent size)
+            # stalls forever on re-entry -> route those parents to the even
+            # split now
             nsub = refined0.groupBy("parent").agg(
                 F.countDistinct("sub_label").alias("nsub")
             )
@@ -199,9 +199,10 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
                 F.concat_ws("/", F.col("parent").cast("string"),
                             F.col("sub_label").cast("string")).alias("community_id"),
             )
-            refined = split_ok.unionByName(
-                _ntile_split(mem.join(stuck, "parent", "left_semi"), max_cluster_size)
-            ).localCheckpoint()
+            ntile_all = ntile_mem.unionByName(
+                refine_mem.join(stuck, "parent", "left_semi")
+            )
+            refined = split_ok.unionByName(_ntile_split(ntile_all, max_cluster_size)).localCheckpoint()
             _release(sub)  # only refined read it
 
         out = out.unionByName(refined.withColumn("level", F.lit(level)))
