@@ -13,6 +13,9 @@ implementation's join shapes):
   over the surviving edge set, >= k-2; reported support matches.
 - bfs_distances / harmonic_centrality (the shared frontier loop): equal
   to a plain-Python BFS, directed and undirected, under a hop cutoff.
+- query.entity_neighborhood (one lazy plan, no frontier loop): equal to
+  the minimum hop of a plain-Python undirected BFS, over multigraphs with
+  self-loops and from a start node that may be absent.
 - connected_components / strongly_connected_components (the shared
   min-label fixpoint): equal to the driver union-find and to Tarjan.
 - label_propagation (the same fixpoint with a weighted-vote candidate):
@@ -21,7 +24,7 @@ implementation's join shapes):
   key-complete (output keys == target keys ∪ source keys).
 """
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 HC = dict(deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -201,6 +204,30 @@ def test_harmonic_centrality_matches_python_bfs(spark, pairs, seeds, directed, m
     for node, (n, h) in want.items():
         assert got[node][0] == n
         assert abs(got[node][1] - h) < 1e-7, (node, got[node], h)
+
+
+# self-loops and repeated rows allowed; a start of 12 or 13 is absent
+MULTI_EDGES = st.lists(st.tuples(NODE, NODE), min_size=0, max_size=30)
+
+
+@settings(max_examples=10, **HC)
+@given(
+    pairs=MULTI_EDGES,
+    start=st.integers(min_value=0, max_value=13),
+    hops=st.integers(min_value=1, max_value=4),
+)
+# a self-loop, a repeated row and two parallel paths; then an absent start
+@example(pairs=[(0, 0), (0, 1), (0, 1), (1, 3), (0, 2), (2, 3), (3, 4)], start=0, hops=4)
+@example(pairs=[(0, 1), (1, 2)], start=12, hops=2)
+def test_entity_neighborhood_matches_python_bfs(spark, pairs, start, hops):
+    """query.entity_neighborhood (walk-set hops reduced by min) == the
+    minimum hop of a plain-Python undirected BFS from one start node."""
+    from wbkg.query import entity_neighborhood
+
+    edges = spark.createDataFrame(_named(pairs), "subj string, obj string")
+    name = f"n{start:02d}"
+    got = {r.node: r.hop for r in entity_neighborhood(edges, name, hops=hops).collect()}
+    assert got == _py_bfs(_adjacency(pairs, directed=False), [name], hops)
 
 
 @settings(max_examples=8, **HC)

@@ -74,6 +74,23 @@ def test_entity_neighborhood_min_hop(spark):
     assert out == {"a": 0, "b": 1, "c": 1, "d": 2}
 
 
+def test_entity_neighborhood_plan_starts_no_job(spark, job_count):
+    """Building the neighborhood is one lazy plan: no hop runs a Spark job
+    before the caller's action."""
+    from wbkg.query import entity_neighborhood
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")], "subj string, obj string"
+    )
+    for hops in (2, 3):
+        df, jobs = job_count(lambda: entity_neighborhood(edges, "a", hops=hops))
+        assert jobs == 0
+        want = {"a": 0, "b": 1, "c": 2, "d": 3}
+        assert {r.node: r.hop for r in df.collect()} == {
+            n: h for n, h in want.items() if h <= hops
+        }
+
+
 def test_community_sibling_chunks(spark):
     from wbkg.materialize import EX, SCHEMA
     from wbkg.query import community_sibling_chunks

@@ -1583,3 +1583,82 @@ def test_numeric_fns_in_filter(spark):
         'SELECT ?s WHERE { ?s <urn:p:v> ?v . FILTER(FLOOR(?v) > 5) }',
     ).collect()
     assert [r.s for r in got] == ["b"]
+
+
+STAR = "SELECT ?e ?n ?nm WHERE { ?e <p:in> ?n . ?n <p:name> ?nm . ?e <p:knows> ?k }"
+
+
+def _star_edges(spark):
+    return spark.createDataFrame(
+        [
+            ("e:a", "p:in", "n:1"),
+            ("e:b", "p:in", "n:2"),
+            ("n:1", "p:name", "alpha"),
+            ("n:2", "p:name", "beta"),
+            ("e:a", "p:knows", "e:b"),
+            ("e:b", "p:knows", "e:a"),
+        ],
+        "subj string, pred string, obj string",
+    )
+
+
+def test_pred_stats_paid_once_per_dataframe(spark, job_count):
+    """The join-ordering stats job runs on the first >= 3-pattern query over
+    an edges DataFrame; a second query on the same object plans without
+    starting a job and answers the same."""
+    edges = _star_edges(spark)
+    first, jobs = job_count(lambda: sparql_select(edges, STAR))
+    assert jobs > 0
+    want = sorted(map(tuple, first.collect()))
+    assert want == [("e:a", "n:1", "alpha"), ("e:b", "n:2", "beta")]
+    again, jobs = job_count(lambda: sparql_select(edges, STAR))
+    assert jobs == 0
+    assert sorted(map(tuple, again.collect())) == want
+
+
+def test_pred_stats_shared_with_subselect(spark, job_count):
+    """A { SELECT } sub-select over the same edges reuses the outer query's
+    stats: planning starts the jobs of one stats computation, not two."""
+    _df, one = job_count(lambda: sparql_select(_star_edges(spark), STAR))
+    nested = (
+        "SELECT ?e ?nm WHERE { ?e <p:in> ?n . ?n <p:name> ?nm . ?e <p:knows> ?k . "
+        "{ SELECT ?e WHERE { ?e <p:in> ?m . ?m <p:name> ?x . ?k2 <p:knows> ?e } } }"
+    )
+    df, jobs = job_count(lambda: sparql_select(_star_edges(spark), nested))
+    assert jobs == one
+    assert sorted(map(tuple, df.collect())) == [("e:a", "alpha"), ("e:b", "beta")]
+
+
+def test_pred_stats_recomputed_for_updated_snapshot(spark, job_count):
+    """The DataFrame sparql_update returns is a new snapshot: it computes
+    its own stats, which see the inserted triple; the input's stay as
+    they were."""
+    from wbkg.sparql import _collect_pred_stats, sparql_update
+
+    edges = _star_edges(spark)
+    sparql_select(edges, STAR)
+    upd = sparql_update(edges, "INSERT DATA { <e:c> <p:in> <n:1> }")
+    _df, jobs = job_count(lambda: sparql_select(upd, STAR))
+    assert jobs > 0
+    _df, jobs = job_count(lambda: sparql_select(upd, STAR))
+    assert jobs == 0
+    assert _collect_pred_stats(upd)["p:in"] == 3
+    assert _collect_pred_stats(edges)["p:in"] == 2
+
+
+def test_many_to_many_bgp_is_not_force_broadcast(spark):
+    """The force-broadcast guard reads a join-output estimate, not a sum of
+    pattern sizes: p:a and p:b each hold 800 rows of ONE subject, so their
+    join has ~640k rows although the summed estimate is 1,600. No
+    broadcast hint may be placed on it (checked on the analyzed plan,
+    without collecting the result)."""
+    rows = (
+        [("k", "p:a", f"x{i}") for i in range(800)]
+        + [("k", "p:b", f"y{i}") for i in range(800)]
+        + [(f"y{i}", "p:c", f"z{i}") for i in range(1000)]
+    )
+    edges = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    df = sparql_select(
+        edges, "SELECT ?x ?y ?z WHERE { ?k <p:a> ?x . ?k <p:b> ?y . ?y <p:c> ?z }"
+    )
+    assert "strategy=broadcast" not in df._jdf.queryExecution().analyzed().toString()

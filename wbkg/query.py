@@ -29,54 +29,57 @@ def register_views(spark: SparkSession, tables: dict) -> None:
 
 def docs_mentioning(edges: DataFrame, entity_name: str) -> DataFrame:
     """'Which documents mention entity X?' — name -> entity uri (via
-    schema:name triples) -> doc mentions. Two equi-joins on edges."""
+    schema:name triples) -> doc mentions. One semi join on edges: its output
+    does not depend on duplicates in `names`, so only the result needs a
+    distinct."""
     names = edges.filter(
         (F.col("pred") == SCHEMA + "name") & (F.lower("obj") == entity_name.lower())
     ).select(F.col("subj").alias("ent_uri"))
     mentions = edges.filter(
         (F.col("pred") == SCHEMA + "mentions") & F.col("subj").startswith(EX + "document/")
     ).select(F.col("subj").alias("doc_uri"), F.col("obj").alias("ent_uri"))
-    return mentions.join(F.broadcast(names.distinct()), "ent_uri").select("doc_uri").distinct()
+    return (
+        mentions.join(F.broadcast(names), "ent_uri", "left_semi")
+        .select("doc_uri")
+        .distinct()
+    )
 
 
-def entity_neighborhood(
-    edges: DataFrame, start: str, hops: int = 2, undirected: bool = True
-) -> DataFrame:
-    """n-hop BFS over (subj, obj) edges from one node -> (node, hop) with the
-    MINIMUM hop per node. This is the relational half of the reference's
-    graph-aware retrieval (source nodes -> neighborhood -> synthesis, ref
-    src/query.py:26-76) — the LLM synthesis step is out of scope, the hops
-    are not.
+def entity_neighborhood(edges: DataFrame, start: str, hops: int = 2) -> DataFrame:
+    """n-hop BFS over undirected (subj, obj) edges from one node -> (node,
+    hop) with the MINIMUM hop per node. This is the relational half of the
+    reference's graph-aware retrieval (source nodes -> neighborhood ->
+    synthesis, ref src/query.py:26-76) — the LLM synthesis step is out of
+    scope, the hops are not.
 
-    Each hop is one equi-join on the frontier (broadcast when small); hops is
-    expected tiny (2-3), so the loop is bounded and lineage stays shallow."""
-    sym = edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    if undirected:
-        sym = sym.unionByName(
-            edges.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
-        )
-    spark = edges.sparkSession
-    visited = spark.createDataFrame([(start, 0)], "node string, hop int")
-    frontier = visited
+    One lazy plan, no eager step: hop h holds the nodes at the end of some
+    walk of h steps from `start` (hop 1 a filter, each later hop a semi join
+    against the broadcast previous hop), and the minimum h over those walk
+    sets is the BFS distance, since a shortest path is a walk and no walk is
+    shorter. A semi join never multiplies rows, so for hops=2 no hop needs a
+    distinct; past that each frontier is made distinct before it is
+    broadcast (a walk set is at most the ball of its radius). hops is
+    expected tiny (2-3), so the plan stays small."""
+    sym = edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).unionByName(
+        edges.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
+    )
+    out = edges.sparkSession.createDataFrame([(start, 0)], "node string, hop int")
+    frontier = sym.filter(F.col("src") == start).select(F.col("dst").alias("node"))
     for h in range(1, hops + 1):
-        nxt = (
-            sym.join(F.broadcast(frontier.select(F.col("node").alias("src"))), "src")
-            .select(F.col("dst").alias("node"), F.lit(h).alias("hop"))
-            .distinct()
-        )
-        new_nodes = nxt.join(visited.select("node"), "node", "left_anti")
-        visited = visited.unionByName(new_nodes).localCheckpoint()
-        frontier = new_nodes
-    return visited
+        if h > 1:
+            prev = frontier.distinct() if hops >= 3 else frontier
+            frontier = sym.join(
+                F.broadcast(prev.select(F.col("node").alias("src"))), "src", "left_semi"
+            ).select(F.col("dst").alias("node"))
+        out = out.unionByName(frontier.select("node", F.lit(h).alias("hop")))
+    return out.groupBy("node").agg(F.min("hop").alias("hop"))
 
 
 def sibling_chunks_via_entities(mention_edges: DataFrame, chunk_uri: str) -> DataFrame:
     """chunks sharing at least one mentioned entity with `chunk_uri` — the
     2-hop (chunk -> entity -> chunk) self-join behind 'related passages'
     retrieval (ref src/query.py:49-66 source-node expansion)."""
-    ents = (
-        mention_edges.filter(F.col("subj") == chunk_uri).select(F.col("obj").alias("ent")).distinct()
-    )
+    ents = mention_edges.filter(F.col("subj") == chunk_uri).select(F.col("obj").alias("ent"))
     return (
         mention_edges.join(F.broadcast(ents), mention_edges.obj == ents.ent, "left_semi")
         .filter(F.col("subj") != chunk_uri)
@@ -88,22 +91,21 @@ def sibling_chunks_via_entities(mention_edges: DataFrame, chunk_uri: str) -> Dat
 def community_sibling_chunks(edges: DataFrame, entity_name: str) -> DataFrame:
     """entity name -> its communities -> ALL member chunks: the
     entity -> community -> sibling-chunks composition the reference's chat
-    path walks before synthesis (ref src/query.py:26-76). Pure equi-joins
-    over the edges table."""
+    path walks before synthesis (ref src/query.py:26-76). Three semi joins
+    over the edges table; a semi join's output does not depend on
+    duplicates in its build side, so only the result needs a distinct."""
     names = edges.filter(
         (F.col("pred") == SCHEMA + "name") & (F.lower("obj") == entity_name.lower())
-    ).select(F.col("subj").alias("ent_uri")).distinct()
+    ).select(F.col("subj").alias("ent_uri"))
     chunks = (
         edges.filter(F.col("pred") == SCHEMA + "mentions")
         .join(F.broadcast(names), F.col("obj") == F.col("ent_uri"), "left_semi")
         .select(F.col("subj").alias("chunk_uri"))
-        .distinct()
     )
     comms = (
         edges.filter(F.col("pred") == SCHEMA + "isPartOf")
         .join(chunks, F.col("subj") == F.col("chunk_uri"), "left_semi")
         .select(F.col("obj").alias("comm_uri"))
-        .distinct()
     )
     return (
         edges.filter(F.col("pred") == SCHEMA + "isPartOf")

@@ -88,6 +88,7 @@ single pattern compile to an intra-scan equality filter, not a join.
 from __future__ import annotations
 
 import re
+import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -1175,7 +1176,7 @@ _REPART_MIN_ROWS = 100_000  # repartition pattern scans in this size band:
 _REPART_MAX_ROWS = 10_000_000  # big enough to need parallelism, small
 #                                enough that the shuffle is trivially cheap
 _BCAST_FORCE_MAX = 500_000  # don't force-broadcast an accumulated side
-#                             whose summed pattern estimate exceeds this
+#                             whose estimated join output exceeds this
 
 
 def _pattern_vars(pat) -> set[str]:
@@ -1184,22 +1185,64 @@ def _pattern_vars(pat) -> set[str]:
     return {t.value for t in (s, p, o) if t.kind == "var"}
 
 
-def _collect_pred_stats(edges: DataFrame) -> dict | None:
-    """pred -> row count over the edges table, or None when the predicate
-    vocabulary is implausibly large (no RDF dataset has 10k+ predicates;
-    past the cap the one-row-per-pred collect would stop being driver-safe).
-    One partial-aggregated map-side job — the only eager work join
-    reordering costs, paid once per sparql_select call and only when some
-    group joins >= 3 plain patterns (below that, order cannot matter)."""
+class _PredStats(dict):
+    """pred -> row count, plus `distinct`: pred -> (approx distinct subj,
+    approx distinct obj), the per-position counts a join-output estimate
+    divides by."""
+
+    def __init__(self, rows):
+        super().__init__((r["pred"], r["_c"]) for r in rows)
+        self.distinct = {r["pred"]: (r["_vs"], r["_vo"]) for r in rows}
+
+
+# edges DataFrame -> its _PredStats (or None); an entry lives as long as
+# the DataFrame object does. Two threads planning on a new DataFrame at once
+# may both compute its stats; the results are equal.
+_PRED_STATS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _collect_pred_stats(edges: DataFrame) -> _PredStats | None:
+    """Per-predicate row counts and approx distinct subject/object counts
+    over the edges table, or None when the predicate vocabulary is
+    implausibly large (no RDF dataset has 10k+ predicates; past the cap the
+    one-row-per-pred collect would stop being driver-safe). One
+    partial-aggregated map-side job — the only eager work join reordering
+    costs, paid once per edges DataFrame object: sub-selects and every
+    later query on the same DataFrame reuse it, and a new DataFrame (each
+    snapshot sparql_update returns, say) computes its own. This is Spark's
+    own cache contract: a DataFrame's contents do not change under it."""
+    if edges in _PRED_STATS:
+        return _PRED_STATS[edges]
     rows = (
         edges.groupBy("pred")
-        .agg(F.count(F.lit(1)).alias("_c"))
+        .agg(
+            F.count(F.lit(1)).alias("_c"),
+            F.approx_count_distinct("subj").alias("_vs"),
+            F.approx_count_distinct("obj").alias("_vo"),
+        )
         .limit(_PRED_STATS_MAX + 1)
         .collect()
     )
-    if len(rows) > _PRED_STATS_MAX:
-        return None
-    return {r["pred"]: r["_c"] for r in rows}
+    stats = None if len(rows) > _PRED_STATS_MAX else _PredStats(rows)
+    _PRED_STATS[edges] = stats
+    return stats
+
+
+def _key_distinct(pred_stats: _PredStats, pat, rename: dict, keys) -> float:
+    """The new pattern's approx distinct count at the position of its most
+    selective join key, over every stored spelling of its predicate; 1
+    when unknown (a variable or path predicate), so the join estimate then
+    multiplies."""
+    p = pat[1]
+    if isinstance(p, _Path) or p.kind != "const":
+        return 1.0
+    best = 1.0
+    for k in keys:
+        pos = {"subj": 0, "obj": 1}.get(rename[k])
+        if pos is not None:
+            forms = _pred_forms(p.value)
+            best = max(best, *(pred_stats.distinct.get(f, (1, 1))[pos] for f in forms))
+    return float(best)
 
 
 def _order_patterns(patterns, pred_stats):
@@ -1275,7 +1318,7 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
     bound: set[str] = set()
     plan: DataFrame | None = None
     est_max: float | None = None
-    est_sum: float | None = None
+    est_acc: float | None = None
     gate_cols: list[str] = []
     for i, ((s, p, o), est_i) in enumerate(ordered):
         if isinstance(p, _Path):
@@ -1347,21 +1390,21 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
             )
         if plan is None:
             plan, bound = scan, set(rename)
-            est_max = est_sum = est_i
+            est_max = est_acc = est_i
         else:
             keys = sorted(bound & set(rename))
             if (
                 est_i is not None
                 and est_max is not None
                 and est_i > est_max
-                and est_sum <= _BCAST_FORCE_MAX
+                and est_acc <= _BCAST_FORCE_MAX
             ):
                 # the new pattern is the biggest seen: stream it and PIN
                 # the accumulated side as the broadcast build (Catalyst's
                 # size estimate otherwise broadcasts the big scan and
                 # serializes a many-to-many expansion through the small
                 # side's partitions — measured 12.3s vs 1.5s on the bench
-                # star BGP). est_sum bounds what we force: past
+                # star BGP). est_acc bounds what we force: past
                 # _BCAST_FORCE_MAX rows the accumulated side may not be
                 # broadcast-safe and Catalyst keeps the choice.
                 plan = (
@@ -1374,8 +1417,13 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
                 plan = plan.join(scan, keys) if keys else plan.crossJoin(scan)
                 if est_i is not None and est_max is not None:
                     est_max = max(est_max, est_i)
-            if est_sum is not None and est_i is not None:
-                est_sum += est_i
+            if est_acc is not None and est_i is not None:
+                # the accumulated side's join-output estimate: dividing by
+                # the new pattern's key distinct count alone (not the
+                # textbook max of both sides') overestimates, so the guard
+                # errs toward leaving the broadcast choice to AQE; a cross
+                # join multiplies
+                est_acc *= est_i / _key_distinct(pred_stats, (s, p, o), rename, keys)
             bound |= set(rename)
     # drop ONLY the gate markers we generated — '?_m0' is a legal SPARQL
     # variable a prefix-based drop would silently destroy
@@ -1392,11 +1440,14 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
     untouched) EXCEPT for (1) `+`/`*` property paths — the transitive
     closure is an inherently iterative fixpoint, so _path_closure runs its
     doubling rounds (distinct/localCheckpoint/take per round, bounded by
-    PATH_MAX_ITERS) while this function builds the plan — and (2) queries
-    where some group joins >= 3 triple patterns, which pay ONE
-    partial-aggregated pred-count job to drive selectivity-based join
-    ordering (_order_patterns; identical solution multiset, orders of
-    magnitude smaller intermediates on star+chain BGPs). Every other
+    PATH_MAX_ITERS) while this function builds the plan — and (2) the
+    first query on an `edges` DataFrame object where some group joins >= 3
+    triple patterns, which pays ONE partial-aggregated pred-stats job to
+    drive selectivity-based join ordering (_order_patterns; identical
+    solution multiset, orders of magnitude smaller intermediates on
+    star+chain BGPs). The stats are memoized per DataFrame object, so
+    sub-selects and later queries on it plan lazily; as with Spark's own
+    cache, a DataFrame's contents must not change under it. Every other
     construct defers."""
     (
         select_vars,
@@ -1424,9 +1475,9 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
                 return True
         return False
 
-    # one cheap pred-count job buys selectivity-ordered joins (see
-    # _order_patterns); skipped entirely for the common <=2-pattern case,
-    # so those queries keep the fully-lazy contract
+    # one cheap pred-stats job per edges DataFrame buys selectivity-ordered
+    # joins (see _order_patterns); skipped entirely for the common
+    # <=2-pattern case, so those queries keep the fully-lazy contract
     pred_stats = _collect_pred_stats(edges) if _any_big_group(groups) else None
 
     def compile_body(body, tag):
