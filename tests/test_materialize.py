@@ -194,16 +194,30 @@ def _random_alias_batches(rng, n_batches=4):
 
 
 def test_incremental_equals_full_canonical_map(spark, monkeypatch):
-    """incremental_canonical_map folded over batches == one full
-    canonical_map_from_edges over all history — including a LATE MERGE of
-    two components built in earlier batches, and qid-preference across the
-    merge (the streaming state-advance correctness contract)."""
+    """incremental_canonical_map, and its driver twin advance_map, folded
+    over batches == one full canonical_map_from_edges over all history —
+    including a LATE MERGE of two components built in earlier batches, and
+    qid-preference across the merge (the streaming state-advance
+    correctness contract)."""
     import random
 
-    from wbkg.canonicalize import canonical_map_from_edges, incremental_canonical_map
+    from wbkg.canonicalize import (
+        advance_map,
+        canonical_map_from_edges,
+        incremental_canonical_map,
+    )
 
     def df(rows):
         return spark.createDataFrame(rows, "src string, dst string")
+
+    def advanced(batches):
+        cmap = {}
+        for b in batches:
+            before = dict(cmap)
+            nxt = advance_map(cmap, b)
+            assert cmap == before  # a new dict; the held one is untouched
+            cmap = nxt
+        return set(cmap.items())
 
     batches = [
         # batch 1: component A (has a qid) + separate pair
@@ -220,6 +234,7 @@ def test_incremental_equals_full_canonical_map(spark, monkeypatch):
     full = canonical_map_from_edges(df([e for b in batches for e in b]))
     want = {(r.member, r.canonical_id) for r in full.collect()}
     assert got == want
+    assert advanced(batches) == want
     # qid preference survived the late merge
     as_map = dict(got)
     assert as_map["surf::x"] == "qid::Q1" and as_map["surf::m"] == "qid::Q0"
@@ -236,6 +251,7 @@ def test_incremental_equals_full_canonical_map(spark, monkeypatch):
     got = {(r.member, r.canonical_id) for r in state.collect()}
     want = {(r.member, r.canonical_id) for r in canonical_map_from_edges(df(edges)).collect()}
     assert got == want
+    assert advanced([edges[:cut1], edges[cut1:cut2], edges[cut2:]]) == want
 
     # seeded random batches (late QID merges, surface-only components, a
     # replayed batch, non-ASCII members): the driver-side incremental map
@@ -262,14 +278,16 @@ def test_incremental_equals_full_canonical_map(spark, monkeypatch):
                     state = incremental_canonical_map(state, df(b))
                 assert as_set(state) == want
         assert got == want
+        assert advanced(batches) == want
         assert len({m for m, _ in got}) == len(got)  # one row per member
 
 
 def test_incremental_canonical_map_idempotent_replay(spark):
     """Replay semantics: re-advancing the map with the SAME batch (the
     at-least-once foreachBatch case) or with no new edges leaves it
-    bit-identical — no drift, no spurious relabels."""
-    from wbkg.canonicalize import incremental_canonical_map
+    bit-identical — no drift, no spurious relabels — on the DataFrame path
+    and on the driver (advance_map)."""
+    from wbkg.canonicalize import advance_map, incremental_canonical_map
 
     def df(rows):
         return spark.createDataFrame(rows, "src string, dst string")
@@ -281,3 +299,69 @@ def test_incremental_canonical_map_idempotent_replay(spark):
     assert {(r.member, r.canonical_id) for r in replay.collect()} == snap
     empty = incremental_canonical_map(state, df([]).limit(0))
     assert {(r.member, r.canonical_id) for r in empty.collect()} == snap
+    held = advance_map({}, b1)
+    assert set(held.items()) == snap
+    assert advance_map(held, b1) == held and advance_map(held, []) == held
+
+
+def _plan_leaves(df) -> list:
+    it = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next().nodeName())
+    return out
+
+
+def test_driver_built_tables_are_local_relations(spark):
+    """Every table built from driver rows is a LocalRelation, empty or not:
+    its scans run in the JVM. createDataFrame(<python list>, ddl) would plan
+    a Python-RDD LogicalRDD, whose every scan runs Python tasks. All inputs
+    here are LocalRelations too, so any LogicalRDD leaf is a driver table
+    built the other way."""
+    from wbkg.canonicalize import canonical_map_from_edges, incremental_canonical_map
+    from wbkg.materialize import metadata_triples
+    from wbkg.ops.decontam import bloom_bitmap
+    from wbkg.ops.dedup import near_dup_keep_list
+    from wbkg.ops.textops import phrase_search
+    from wbkg.query import entity_neighborhood
+    from wbkg.session import local_frame
+    from wbkg.sparql import sparql_describe, sparql_select, sparql_update
+    from wbkg.synth import entity_dict_df, gen_metadata_df
+
+    empty = local_frame(spark, [], "member string, canonical_id string")
+    assert _plan_leaves(empty) == ["LocalRelation"] and empty.collect() == []
+
+    def alias(rows):
+        return local_frame(spark, rows, "src string, dst string")
+
+    edges = local_frame(
+        spark,
+        [("s:1", "p:x", "o:1", None, False), ("s:2", "p:x", "_:b", None, False),
+         ("_:b", "p:y", "v", "en", True)],
+        "subj string, pred string, obj string, lang string, obj_is_literal boolean",
+    )
+    state = canonical_map_from_edges(alias([("surf::a", "qid::Q1"), ("surf::x", "surf::y")]))
+    docs = local_frame(spark, [(3, "a b c"), (4, "a b c"), (5, "b c d")], "doc_id long, text string")
+    cases = {
+        "canonical map": state,
+        "incremental map": incremental_canonical_map(state, alias([("surf::y", "surf::a"), ("surf::m", "qid::Q2")])),
+        "incremental map, nothing new": incremental_canonical_map(state, alias([])),
+        "neighborhood": entity_neighborhood(edges, "s:1"),
+        "VALUES rows": sparql_select(
+            edges, "SELECT ?s ?o WHERE { ?s <p:x> ?o VALUES (?s ?o) { (<s:1> <o:1>) (<s:2> UNDEF) } }"
+        ),
+        "DESCRIBE constants": sparql_describe(edges, "DESCRIBE ?s <s:1> WHERE { ?s <p:y> ?o }"),
+        "INSERT DATA": sparql_update(edges, "INSERT DATA { <s:9> <p:x> <o:9> }"),
+        "class triples": metadata_triples(
+            spark.createDataFrame(gen_metadata_df(spark, 3).toArrow()),
+            spark.createDataFrame(entity_dict_df(spark, 3).toArrow()),
+        ),
+        "phrase slots": phrase_search(docs, "b c"),
+        "near-dup components": near_dup_keep_list(
+            docs, local_frame(spark, [(3, 4)], "doc_a long, doc_b long")
+        ),
+        "bloom bitmap": bloom_bitmap(docs.select(F.col("text").alias("k")), "k", 64, 2),
+    }
+    for name, df in cases.items():
+        leaves = _plan_leaves(df)
+        assert "LocalRelation" in leaves and "LogicalRDD" not in leaves, (name, leaves)

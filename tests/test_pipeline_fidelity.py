@@ -159,6 +159,27 @@ def test_broadcast_link_plan_has_no_probe_shuffle(spark):
     assert "HashAggregate(keys=[surface_norm" not in plan
 
 
+def test_link_crosses_into_python_once(spark):
+    """rdf_safe's filter stays above the projection that computes it: the
+    executed plan has ONE ArrowEvalPython, so each mention makes one Python
+    round trip. Pushed below the projection, the filter would carry a copy
+    of the UDF as a second ArrowEvalPython node."""
+    from wbkg.link import link_mentions
+
+    mentions = spark.createDataFrame(
+        [("d1", "c1", 0, "World Bank", "world bank", "DICT_ORG", "Q1"),
+         ("d1", "c1", 9, "unknown thing", "unknown thing", "DICT_ORG", "X"),
+         ("d1", "c1", 20, "???", "???", "DICT_ORG", "X")],
+        "doc_id string, chunk_id string, begin int, surface string, surface_norm string, label string, rule_id string",
+    )
+    linked = link_mentions(mentions, entity_dict_df(spark, 5))
+    assert linked._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython") == 1
+    got = {r.surface: (r.qid, r.rdf_safe) for r in linked.collect()}
+    assert set(got) == {"World Bank", "unknown thing"}  # '???' sanitizes away, unlinked
+    assert got["World Bank"][0] is not None and got["World Bank"][1] == got["World Bank"][0]
+    assert got["unknown thing"] == (None, "unknown_thing")
+
+
 def test_aqe_skew_join_splits_hub_key(spark):
     """Second line of skew defense after salting (north-star: 'skewed
     entities handled via salting and AQE skew-join splitting'): with AQE

@@ -101,7 +101,22 @@ def test_windowed_event_counts_batch_shape(spark):
 def test_cross_batch_canonicalization(spark, tmp_path):
     """ADVICE r01: a surface in a LATER batch whose acronym expansion was
     defined in an EARLIER batch must inherit the expansion's QID via the
-    persisted alias-edge state (two availableNow drains = two batches)."""
+    persisted canonical-map state (two availableNow drains = two batches;
+    the second query reads the map back from parquet)."""
+    _cross_batch_case(spark, tmp_path)
+
+
+def test_cross_batch_canonicalization_dataframe_path(spark, tmp_path, monkeypatch):
+    """The same two drains when no map or batch fits the driver bound: every
+    batch takes the DataFrame path (incremental_canonical_map over the
+    parquet state, distributed connected components)."""
+    import wbkg.canonicalize as cz
+
+    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 0)
+    _cross_batch_case(spark, tmp_path)
+
+
+def _cross_batch_case(spark, tmp_path):
     from wbkg.materialize import WD
 
     in_dir = str(tmp_path / "in2")
@@ -151,24 +166,97 @@ def test_cross_batch_canonicalization(spark, tmp_path):
 
 
 def test_streaming_sink_idempotent_on_replay(spark, tmp_path):
-    """Simulated at-least-once replay: re-running the same batch_id must not
+    """Simulated at-least-once replay: re-running the same batch_ids must not
     duplicate rows (overwrite into batch_id-keyed partition)."""
     in_dir = str(tmp_path / "in3")
     out_dir = str(tmp_path / "out3")
     ckpt = str(tmp_path / "ckpt3")
-    gen_documents_df(spark, 6, partitions=1).write.parquet(in_dir)
+    gen_documents_df(spark, 6, partitions=2).write.parquet(in_dir)
     edict = entity_dict_df(spark, 6)
     pats = build_pattern_rows(build_entity_dict_rows(6), build_unbis_rows())
 
-    q = stream_extract_edges(spark, in_dir, out_dir, ckpt, edict, pats)
+    q = stream_extract_edges(spark, in_dir, out_dir, ckpt, edict, pats, max_files_per_trigger=1)
     q.awaitTermination(120)
-    n1 = spark.read.parquet(out_dir).count()
+    first = _sink_rows(spark, out_dir)
+    assert {r[0] for r in first} == {0, 1}
 
-    # replay: fresh checkpoint (as if the commit was lost) over the same
-    # input writes the same batch_id=0 partition again
-    q2 = stream_extract_edges(spark, in_dir, out_dir, str(tmp_path / "ckpt3b"), edict, pats)
+    # replay: fresh checkpoint (as if the commits were lost) over the same
+    # input rewrites the same batch_id partitions, row for row
+    q2 = stream_extract_edges(
+        spark, in_dir, out_dir, str(tmp_path / "ckpt3b"), edict, pats, max_files_per_trigger=1
+    )
     q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == n1
+    assert _sink_rows(spark, out_dir) == first
+
+
+def _sink_rows(spark, out_dir):
+    """Every row of a stream's edges sink with its batch_id, sorted."""
+    rows = spark.read.parquet(out_dir).select("batch_id", "subj", "pred", "obj").collect()
+    return sorted(map(tuple, rows))
+
+
+def test_stream_kill_and_resume(spark, tmp_path):
+    """A stream stopped after batch 1 and restarted on the same checkpoint
+    (the canonical map read back from parquet), then restarted once more
+    with batch 2's commit lost (batch 2 replays over batch 1's map), writes
+    the same edges as one uninterrupted drain. Batch 2 needs the map: its
+    acronym was defined against a dictionary surface in batch 0."""
+    from wbkg.materialize import WD
+
+    n = 9
+    schema = "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>"
+    texts = [
+        "The World Trade Organization (WTO) met today.",
+        "Nothing to link here.",
+        "World Trade Org (WTO) officials met again.",
+    ]
+    docs = gen_documents_df(spark, n, partitions=1)
+    edict = entity_dict_df(spark, n).unionByName(
+        spark.createDataFrame(
+            [("Q9900", "world trade organization", "org", "World Trade Organization", False, None)],
+            "entity_id string, surface_norm string, kind string, label string, is_alias boolean, alias_of string",
+        )
+    )
+    pats = build_pattern_rows(build_entity_dict_rows(n), build_unbis_rows())
+    pats.append(("world trade organization", "DICT_ORG", "Q9900"))
+
+    def write_file(in_dir, i):
+        # three files, one micro-batch each, in modification-time order
+        lo, hi = f"D{3 * i:07d}", f"D{3 * i + 3:07d}"
+        extra = [(f"X{i}", [{"kind": "text", "text": texts[i], "media_ref": "", "offset": 0}])]
+        path = os.path.join(in_dir, f"f{i}")
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).unionByName(
+            spark.createDataFrame(extra, schema)
+        ).coalesce(1).write.parquet(path)
+        for name in os.listdir(path):
+            os.utime(os.path.join(path, name), (1_000_000 + i, 1_000_000 + i))
+
+    def drain(in_dir, out_dir, ckpt):
+        q = stream_extract_edges(
+            spark, in_dir + "/f*", out_dir, ckpt, edict, pats, max_files_per_trigger=1
+        )
+        q.awaitTermination(300)
+        return [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+    whole, part = str(tmp_path / "whole"), str(tmp_path / "part")
+    for i in range(3):
+        write_file(whole, i)
+    assert drain(whole, str(tmp_path / "out_w"), str(tmp_path / "ckpt_w")) == [0, 1, 2]
+    want = _sink_rows(spark, str(tmp_path / "out_w"))
+    assert any(r[0] == 2 and r[1].endswith("document/X2") and r[3] == f"{WD}Q9900" for r in want)
+
+    out, ckpt = str(tmp_path / "out_p"), str(tmp_path / "ckpt_p")
+    for i in range(2):
+        write_file(part, i)
+    assert drain(part, out, ckpt) == [0, 1]
+    write_file(part, 2)
+    assert drain(part, out, ckpt) == [2]  # resumed: batch 2 over the parquet map
+    assert _sink_rows(spark, out) == want
+
+    for name in ("2", ".2.crc"):  # the commit of batch 2 is lost
+        os.remove(os.path.join(ckpt, "commits", name))
+    assert drain(part, out, ckpt) == [2]  # replayed
+    assert _sink_rows(spark, out) == want
 
 
 def test_stream_dedup_first_seen(spark, tmp_path):
@@ -467,9 +555,10 @@ def test_stream_running_totals_resume_from_checkpoint(spark, tmp_path):
     assert drain() == [(7, 2, 3.0)]  # resumed, not restarted
 
 
-# Spark jobs one steady-state micro-batch may run (fused extract, link,
-# alias-edge write, canonical-map residue collect and write, edges write)
-STEADY_BATCH_JOB_BUDGET = 16
+# Spark jobs one steady-state micro-batch may run: the one collect of the
+# batch's alias rows (fused extract and link materialize their caches, one
+# shuffle), the canonical-map write, the edges write (two shuffles)
+STEADY_BATCH_JOB_BUDGET = 11
 
 
 def test_stream_job_budget_and_no_cache_leak(spark, tmp_path):

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from wbkg.session import local_frame
+
 MAX_ITER = 20
 # the alias graph is vocabulary-bounded, not corpus-bounded, so the
 # distributed CC path runs on a narrow shuffle
@@ -141,6 +143,19 @@ def _normalize_surface_udf():
     return norm
 
 
+def surface_key():
+    """The canonicalization key of a linked mention's surface_norm."""
+    return F.concat(F.lit("surf::"), F.lower(F.col("surface_norm")))
+
+
+def dictionary_alias_edges(entity_dict: DataFrame) -> DataFrame:
+    """The dictionary's alias rows as alias edges: alias entity_id <-> alias_of."""
+    qid = lambda c: F.concat(F.lit("qid::"), F.col(c))
+    return entity_dict.filter("is_alias").select(
+        qid("entity_id").alias("src"), qid("alias_of").alias("dst")
+    )
+
+
 def build_alias_edges(
     entity_dict: DataFrame, acronyms: DataFrame, linked: DataFrame
 ) -> DataFrame:
@@ -150,24 +165,18 @@ def build_alias_edges(
     transform as mention surfaces (accent-fold + whitespace collapse, not
     just lower) so an accented expansion still joins its mentions'
     component."""
-    qid = lambda c: F.concat(F.lit("qid::"), F.col(c))
-    surf = lambda c: F.concat(F.lit("surf::"), F.lower(F.col(c)))
     norm = _normalize_surface_udf()
     surf_n = lambda c: F.concat(F.lit("surf::"), norm(F.col(c)))
 
-    dict_edges = (
-        entity_dict.filter("is_alias")
-        .select(qid("entity_id").alias("src"), qid("alias_of").alias("dst"))
-    )
     acro_edges = acronyms.select(
         surf_n("abbr").alias("src"), surf_n("expansion").alias("dst")
     )
     link_edges = (
         linked.filter(F.col("qid").isNotNull())
-        .select(surf("surface_norm").alias("src"), qid("qid").alias("dst"))
+        .select(surface_key().alias("src"), F.concat(F.lit("qid::"), "qid").alias("dst"))
         .distinct()
     )
-    return dict_edges.unionByName(acro_edges).unionByName(link_edges)
+    return dictionary_alias_edges(entity_dict).unionByName(acro_edges).unionByName(link_edges)
 
 
 # driver-collect hardening (VERDICT r01 #9): 200k edges x ~30-byte keys is a
@@ -256,9 +265,43 @@ def canonical_map_from_edges(edges: DataFrame) -> DataFrame:
     if rows is None:
         return _distributed_map(edges)
     pairs = list(union_find(rows, canonical_rep).items())
-    out = edges.sparkSession.createDataFrame(pairs, "member string, canonical_id string")
+    out = local_frame(edges.sparkSession, pairs, "member string, canonical_id string")
     # exact row count for apply_canonicalization's broadcast gate
     out._wbkg_rows_upper_bound = len(pairs)
+    return out
+
+
+def _residue_delta(residue) -> tuple[list, list]:
+    """Residue rows (src, dst, src_old, dst_old) -> (moved, fresh): the
+    residue's endpoints are representatives of the previous map (flagged
+    old) or members new to it. moved holds (old rep, new rep) for the old
+    representatives that merged into another component, fresh holds
+    (member, canonical_id) for the new members."""
+    old = {}
+    for src, dst, src_old, dst_old in residue:
+        old[src], old[dst] = src_old, dst_old
+    rep = union_find(((r[0], r[1]) for r in residue), canonical_rep)
+    moved = [(m, c) for m, c in rep.items() if old[m] and m != c]
+    fresh = [(m, c) for m, c in rep.items() if not old[m]]
+    return moved, fresh
+
+
+def advance_map(cmap: dict, pairs) -> dict:
+    """incremental_canonical_map on the driver: a converged
+    {member: canonical_id} map advanced by alias-edge pairs, as a new dict.
+    Each endpoint collapses to its representative through `cmap`, edges
+    that land inside one component (and edges with a null endpoint) drop,
+    and the residue's union-find relabels the merged representatives and
+    adds the fresh members."""
+    residue = set()
+    for a, b in pairs:
+        a, b = cmap.get(a, a), cmap.get(b, b)
+        if a is not None and b is not None and a != b:
+            residue.add((a, b, a in cmap, b in cmap))
+    moved, fresh = _residue_delta(residue)
+    relabel = dict(moved)
+    out = {m: relabel.get(c, c) for m, c in cmap.items()} if relabel else dict(cmap)
+    out.update(fresh)
     return out
 
 
@@ -275,9 +318,9 @@ def incremental_canonical_map(prev: DataFrame | None, new_edges: DataFrame) -> D
 
     A small residue is collected once: the driver derives the relabel rows
     (previous representatives that merged) and the fresh members (unflagged
-    endpoints), and `prev` takes a broadcast join against the relabel rows
-    — no shuffle, no anti-join against `prev`. A residue above
-    LOCAL_CC_THRESHOLD takes the distributed path.
+    endpoints) as advance_map does, and `prev` takes a broadcast join
+    against the relabel rows — no shuffle, no anti-join against `prev`. A
+    residue above LOCAL_CC_THRESHOLD takes the distributed path.
 
     Equal to canonical_map_from_edges over the full history: representatives
     carry the min-qid-else-min-member rule, so merging reps is the same as
@@ -305,18 +348,12 @@ def incremental_canonical_map(prev: DataFrame | None, new_edges: DataFrame) -> D
         relabel = delta.select(F.col("member").alias("_old"), F.col("canonical_id").alias("_new"))
         fresh = delta.join(prev.select("member"), "member", "left_anti")
     else:
-        # an old endpoint is a prev representative; a new one is a fresh member
-        old = {r.src: r.src_old for r in rows}
-        old.update((r.dst, r.dst_old) for r in rows)
-        rep = union_find(((r.src, r.dst) for r in rows), canonical_rep)
         spark = residue.sparkSession
-        moved = [(m, c) for m, c in rep.items() if old[m] and m != c]
+        moved, fresh_rows = _residue_delta(rows)
         relabel = None
         if moved:
-            relabel = F.broadcast(spark.createDataFrame(moved, "_old string, _new string"))
-        fresh = spark.createDataFrame(
-            [(m, c) for m, c in rep.items() if not old[m]], "member string, canonical_id string"
-        )
+            relabel = F.broadcast(local_frame(spark, moved, "_old string, _new string"))
+        fresh = local_frame(spark, fresh_rows, "member string, canonical_id string")
     updated = prev
     if relabel is not None:
         updated = prev.join(relabel, prev["canonical_id"] == F.col("_old"), "left").select(
@@ -351,9 +388,8 @@ def apply_canonicalization(
         rows = getattr(cmap, "_wbkg_rows_upper_bound", None)
         broadcast = (rows if rows is not None else cmap.count()) <= AUTO_BROADCAST_MAX_ROWS
     build = F.broadcast(cmap) if broadcast else cmap
-    surf_key = F.concat(F.lit("surf::"), F.lower(F.col("surface_norm")))
     out = (
-        linked.withColumn("_key", surf_key)
+        linked.withColumn("_key", surface_key())
         .join(build.withColumnRenamed("member", "_key"), "_key", "left")
     )
     canon_qid = F.when(

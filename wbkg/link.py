@@ -65,6 +65,12 @@ def rdf_safe_surface(surface: pd.Series) -> pd.Series:
     return surface.map(mapped)
 
 
+# Marked nondeterministic only so that the optimizer keeps link_mentions'
+# rdf_safe filter above the projection: pushed below it, the filter carries a
+# copy of the UDF, and every mention crosses into Python twice.
+rdf_safe_surface = rdf_safe_surface.asNondeterministic()
+
+
 # dictionaries under this row count broadcast; larger ones take the salted
 # shuffle join (the same decision Spark's planner makes from size stats —
 # made explicit here because the probe-side salting must be chosen WITH it)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wbkg.session import local_frame
+
 SCHEMA = "http://schema.org/"
 WD = "http://www.wikidata.org/entity/"
 EX = "http://worldbank.example.org/"
@@ -290,7 +292,8 @@ def metadata_triples(
     frames = [doc_frame]
     # class triples (graph.py:422-426, 229-231)
     spark = metadata.sparkSession
-    cls = spark.createDataFrame(
+    cls = local_frame(
+        spark,
         [
             (EX + "document", RDF_TYPE, "rdfs:Class", False, None),
             (EX + "document", RDFS_SUBCLASS, SCHEMA + "CreativeWork", False, None),
@@ -302,7 +305,7 @@ def metadata_triples(
             (EX + "trustfund", RDFS_SUBCLASS, SCHEMA + "Thing", False, None),
             (EX + "trustfund", RDFS_LABEL, "World Bank Trustfund", True, "en"),
         ],
-        schema="subj string, pred string, obj string, obj_is_literal boolean, lang string",
+        "subj string, pred string, obj string, obj_is_literal boolean, lang string",
     )
     frames.append(cls)
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wbkg.ops.dedup import shingles_df
+from wbkg.session import local_frame
 
 
 def contamination_report(
@@ -111,7 +112,7 @@ def bloom_bitmap(keys: DataFrame, key_col: str, m_bits: int, k: int) -> DataFram
     for r in words.collect():
         arr[r.word] = r.mask
     spark = keys.sparkSession
-    return spark.createDataFrame([(arr,)], "_bf array<bigint>")
+    return local_frame(spark, [(arr,)], "_bf array<bigint>")
 
 
 def _bloom_test_expr(col: str, m_bits: int, k: int) -> str:

@@ -505,6 +505,7 @@ def near_dup_keep_list(
     pair-bounded, not corpus-bounded — dup clusters are tiny and most docs
     never appear."""
     from wbkg.canonicalize import collect_if_small, connected_components, union_find
+    from wbkg.session import local_frame
 
     id_type = dict(docs.dtypes)[id_col]
     numeric = id_type in ("tinyint", "smallint", "int", "bigint")
@@ -523,8 +524,8 @@ def near_dup_keep_list(
         comp = connected_components(edges)  # materialized by its checkpoints
         edges.unpersist()
     else:
-        comp = docs.sparkSession.createDataFrame(
-            list(union_find(rows).items()), "member string, component string"
+        comp = local_frame(
+            docs.sparkSession, list(union_find(rows).items()), "member string, component string"
         )
     comp_typed = comp.select(
         F.col("member").cast(id_type).alias(id_col),

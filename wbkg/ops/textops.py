@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from wbkg.session import local_frame
+
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "for"]
 ES_MARKERS = ["el", "la", "de", "que", "los", "una"]
 FR_MARKERS = ["le", "les", "des", "une", "est", "dans"]
@@ -370,9 +372,7 @@ def phrase_search(
         raise ValueError("empty phrase")
     idx = inverted_index(df, id_col, text_col)
     spark = df.sparkSession
-    slots = spark.createDataFrame(
-        list(enumerate(terms)), "slot int, term string"
-    )
+    slots = local_frame(spark, list(enumerate(terms)), "slot int, term string")
     occ = (
         idx.filter(F.col("term").isin(*set(terms)))
         .select(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from wbkg.materialize import EX, SCHEMA
 from wbkg.ops.similarity import brute_force_topk
 from wbkg.ops.textops import hash_embed, hash_embed_py
+from wbkg.session import local_frame
 
 EMBED_DIM = 32
 
@@ -63,7 +64,7 @@ def entity_neighborhood(edges: DataFrame, start: str, hops: int = 2) -> DataFram
     sym = edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).unionByName(
         edges.select(F.col("obj").alias("src"), F.col("subj").alias("dst"))
     )
-    out = edges.sparkSession.createDataFrame([(start, 0)], "node string, hop int")
+    out = local_frame(edges.sparkSession, [(start, 0)], "node string, hop int")
     frontier = sym.filter(F.col("src") == start).select(F.col("dst").alias("node"))
     for h in range(1, hops + 1):
         if h > 1:

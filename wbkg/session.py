@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -70,3 +70,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """Python rows + a DDL schema -> a DataFrame whose plan leaf is a
+    LocalRelation: the rows cross to the JVM once, as Arrow, and every scan
+    of the frame runs in the JVM. createDataFrame(<python list>, ddl) plans
+    a Python-RDD LogicalRDD instead, whose every scan runs Python tasks.
+    The one rule for a table built on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)

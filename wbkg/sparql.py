@@ -96,6 +96,7 @@ from pyspark.sql import functions as F
 
 from wbkg.canonicalize import _release
 from wbkg.materialize import RDF_TYPE, RDF_TYPE_IRI
+from wbkg.session import local_frame
 
 _TOKEN = re.compile(
     r"""\?[A-Za-z_][\w]*   # variable
@@ -1665,8 +1666,8 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             missing = [v for v in vars_ if v not in bound]
             if missing:
                 raise SparqlError(f"VALUES variable(s) {missing} not bound by the patterns")
-            vdf = edges.sparkSession.createDataFrame(
-                rows, ", ".join(f"__val_{v} string" for v in vars_)
+            vdf = local_frame(
+                edges.sparkSession, rows, ", ".join(f"__val_{v} string" for v in vars_)
             )
             cond = None
             for v in vars_:
@@ -1907,7 +1908,7 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
             tgt = part if tgt is None else tgt.unionByName(part)
         if consts:
             tgt = tgt.unionByName(
-                edges.sparkSession.createDataFrame([(c,) for c in consts], "subj string")
+                local_frame(edges.sparkSession, [(c,) for c in consts], "subj string")
             )
         tgt = tgt.distinct()
         base = edges.join(tgt, "subj", "left_semi")
@@ -2017,7 +2018,8 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
             rows = [
                 (s.value, p.value, o.value, o.lang, o.literal) for s, p, o in triples
             ]
-            delta = cur.sparkSession.createDataFrame(
+            delta = local_frame(
+                cur.sparkSession,
                 rows,
                 "subj string, pred string, obj string, lang string, obj_is_literal boolean",
             )

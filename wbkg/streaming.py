@@ -6,8 +6,9 @@ Structured Streaming flow: a file source over the interleaved-document table
 feeds micro-batches into foreachBatch, which reuses the *batch* operators
 unchanged (the fused chunk_and_extract pass -> link -> entity triples) and
 writes each batch to a batch_id-keyed edges partition (idempotent
-overwrite: at-least-once replay becomes file-level exactly-once). Alias edges accumulate across batches so
-canonicalization sees the full history — see stream_extract_edges.
+overwrite: at-least-once replay becomes file-level exactly-once). The
+converged canonical map carries across batches, so canonicalization sees
+the full history — see stream_extract_edges.
 
 Also provides a watermarked windowed aggregation over the driver `events`
 table shape (the standard late-data pattern) to cover the Structured
@@ -24,6 +25,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wbkg.schemas import DOCUMENTS_INTERLEAVED
+
+MAP_DDL = "member string, canonical_id string"
 
 
 def _list_state_paths(spark: SparkSession, state_dir: str, upto: int) -> List[str]:
@@ -56,39 +59,53 @@ def stream_extract_edges(
     entity_dict_df: DataFrame,
     pattern_rows: List[Tuple[str, str, str]],
     max_files_per_trigger: int = 8,
-    state_dir: str | None = None,
 ):
     """readStream(files) -> foreachBatch(batch pipeline) -> parquet edges.
 
     Cross-batch canonicalization is INCREMENTAL (VERDICT/ADVICE r02: the old
     shape re-read every alias partition and re-ran connected components from
     scratch each batch — O(batches x vocab) total work over a long stream).
-    The converged (member, canonical_id) map is itself the persisted state:
+    The converged {member: canonical_id} map is the stream's state, and the
+    query holds it in driver memory, keyed by the batch that produced it.
+    Each micro-batch advances it with canonicalize.advance_map:
 
-      1. map the new batch's alias-edge endpoints through the previous map
+      1. map the batch's alias-edge endpoints (the dictionary's alias pairs,
+         the batch's acronyms and linked surfaces) through the held map
          (components collapse to their representative),
       2. drop self-loops — edges whose endpoints already share a component
-         vanish, so the CC input is only the batch's GENUINELY NEW merges,
-      3. run CC on that residue (tiny), relabel the old map's canonical ids
-         through the result, append the new members, persist as the next
-         map state.
+         vanish, so the union-find input is only the batch's GENUINELY NEW
+         merges,
+      3. union-find that residue, relabel the merged representatives,
+         add the new members.
 
-    Per-batch cost is O(batch edges) for the CC plus one vocabulary-bounded
-    relabel join; it does not grow with stream age. The result is equal to a
-    full recompute over all history: representatives carry the min-qid-else-
-    min-member rule, so merging reps is the same as merging components.
-    A surface in batch N whose acronym expansion appeared in batch N-1 still
-    inherits the QID. Already-committed batches are NOT retroactively
-    re-keyed (append-only streaming semantics; the batch pipeline remains
-    the authority for a globally-converged graph — documented deviation).
+    The batch's alias rows reach the driver in ONE collect (the acronym
+    pairs and the distinct (surface key, qid) rows of the linked mentions);
+    acronyms are normalized there with extract.normalize_surface. The
+    dictionary's alias pairs and its lookup table are collected once when
+    the query starts, so the dictionary is fixed for the life of the query.
+    The table apply_canonicalization broadcasts holds only this batch's
+    keys that are in the map and is built through Arrow (a LocalRelation).
+    No alias edges are written: the map is the whole state.
 
-    Fixed per-batch cost is paid once per stream where it can be: the
-    dictionary lookup (link.dictionary_lookup, a window over the whole
-    dictionary) is collected once when the stream starts and every batch
-    broadcast-joins the driver-local copy, so the dictionary is fixed for the
-    life of the query. No cached block outlives a batch: the batch's persists are
-    released at its end. The previous map is a file scan, so each batch's
-    lineage is bounded without re-reading the map it writes.
+    Per-batch cost is O(batch edges) for the union-find plus a pass over the
+    map to relabel and write it; it does not grow with stream age. The result
+    is equal to a full recompute over all history: representatives carry the
+    min-qid-else-min-member rule, so merging reps is the same as merging
+    components. A surface in batch N whose acronym expansion appeared in
+    batch N-1 still inherits the QID. Already-committed batches are NOT
+    retroactively re-keyed (append-only streaming semantics; the batch
+    pipeline remains the authority for a globally-converged graph —
+    documented deviation).
+
+    Durable state: every batch writes the whole map as one parquet file
+    under `<checkpoint_dir>_cmap_state/batch_id=N`, and the held map moves
+    to batch N only once the batch's edges are written. Parquet is read only
+    when the held map is not batch N-1's: on restart, on replay, or in a new
+    query. A map above canonicalize.LOCAL_CC_THRESHOLD members (or a batch
+    with more alias rows than that) is not collected: the batch reads the
+    previous map from parquet and takes the DataFrame path,
+    incremental_canonical_map. No cached block outlives a batch: the
+    batch's persists are released at its end.
 
     Idempotent sink: each batch writes to `output_dir/batch_id=N` with
     overwrite. Spark's foreachBatch is at-least-once — a crash between the
@@ -99,23 +116,19 @@ def stream_extract_edges(
     with id <= N-1, so a replay reproduces the same map. Map states older
     than N-1 are garbage (Spark never replays batch N-1 after N committed)
     and are deleted, bounding state storage to two vocabulary-sized maps.
-    Raw per-batch alias edges are still written under the alias state dir as
-    per-partition lineage (audit trail), but are never re-read by the hot
-    path.
 
     Returns the StreamingQuery (availableNow trigger: drains all current
     input then stops — use .awaitTermination())."""
-    from wbkg.extract import acronyms_from_fused, chunk_and_extract, mentions_from_fused
+    from wbkg.extract import (
+        acronyms_from_fused,
+        chunk_and_extract,
+        mentions_from_fused,
+        normalize_surface,
+    )
     from wbkg.link import AUTO_BROADCAST_MAX_ROWS, dictionary_lookup, link_mentions
     from wbkg.materialize import entity_triples, union_distinct
-    from wbkg.canonicalize import (
-        apply_canonicalization,
-        build_alias_edges,
-        incremental_canonical_map,
-    )
-
-    if state_dir is None:
-        state_dir = checkpoint_dir.rstrip("/") + "_alias_state"
+    import wbkg.canonicalize as cz
+    from wbkg.session import local_frame
 
     stream = (
         spark.readStream.schema(DOCUMENTS_INTERLEAVED)
@@ -129,39 +142,85 @@ def stream_extract_edges(
     # needs anyway); it holds no cached block
     lookup = dictionary_lookup(entity_dict_df)
     lookup = spark.createDataFrame(lookup.toArrow(), lookup.schema)
+    dict_pairs = [tuple(r) for r in cz.dictionary_alias_edges(entity_dict_df).collect()]
+    # (batch_id, {member: canonical_id}) of the last batch whose edges are
+    # written; None until a batch has run, or while the map is too big
+    held = None
+
+    def previous_map(batch_id: int):
+        """The converged map after batch_id - 1: the held dict, else the
+        newest state with id <= batch_id - 1 (freshly listed: re-listing the
+        parent dir can serve a stale FileStatusCache entry inside
+        foreachBatch; upto N-1 so a replay ignores a crashed attempt's own
+        output), collected when it is small. {} before the first batch."""
+        if held is not None and held[0] == batch_id - 1:
+            return held[1]
+        paths = _list_state_paths(spark, cmap_dir, upto=batch_id - 1)
+        if not paths:
+            return {}
+        prev = spark.read.parquet(paths[-1])
+        rows = cz.collect_if_small(prev)
+        return prev if rows is None else dict(rows)
 
     def process_batch(batch_df: DataFrame, batch_id: int):
+        nonlocal held
         fused = chunk_and_extract(batch_df, pattern_rows).persist()
         acronyms = acronyms_from_fused(fused)
         linked = link_mentions(
             mentions_from_fused(fused), entity_dict_df, lookup=lookup
         ).persist()
-        # this batch's alias edges: written once as lineage (idempotent:
-        # replay overwrites), used once below — never re-read in later batches
-        batch_alias = build_alias_edges(entity_dict_df, acronyms, linked).persist()
-        batch_alias.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={batch_id}")
-        )
-        # previous converged map: freshly-listed explicit paths (re-listing
-        # the parent dir can serve a stale FileStatusCache entry inside
-        # foreachBatch and silently miss the newest partitions); upto N-1 so
-        # a replayed batch ignores a crashed attempt's own output
-        prev_paths = _list_state_paths(spark, cmap_dir, upto=batch_id - 1)
-        prev = spark.read.parquet(prev_paths[-1]) if prev_paths else None
-        # the write fills the cache apply_canonicalization reads and counts
-        # the map's rows for its broadcast gate in the same pass
-        cmap = incremental_canonical_map(prev, batch_alias).persist()
-        size = Observation()
-        cmap.observe(size, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
-            os.path.join(cmap_dir, f"batch_id={batch_id}")
-        )
-        broadcast = size.get["rows"] <= AUTO_BROADCAST_MAX_ROWS
-
-        linked_c = apply_canonicalization(linked, cmap, broadcast=broadcast)
+        cached = [fused, linked]
+        state_path = os.path.join(cmap_dir, f"batch_id={batch_id}")
+        prev = previous_map(batch_id)
+        rows = None
+        if isinstance(prev, dict):
+            # one collect: the distinct raw acronym pairs and every linked
+            # surface key with its qid (null for an unlinked surface); both
+            # sides share the one shuffle, so the collect reads its output
+            rows = cz.collect_if_small(
+                acronyms.select(
+                    F.lit(True).alias("acro"), F.col("abbr").alias("a"), F.col("expansion").alias("b")
+                )
+                .unionByName(
+                    linked.select(
+                        F.lit(False).alias("acro"), cz.surface_key().alias("a"), F.col("qid").alias("b")
+                    )
+                )
+                .distinct()
+            )
+        if rows is not None:
+            surf = lambda s: None if s is None else "surf::" + normalize_surface(s)
+            pairs = dict_pairs + [(surf(a), surf(b)) for acro, a, b in rows if acro]
+            pairs += [(a, "qid::" + b) for acro, a, b in rows if not acro and b is not None]
+            cmap = cz.advance_map(prev, pairs)
+            local_frame(spark, list(cmap.items()), MAP_DDL).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(state_path)
+            keys = {a for acro, a, _ in rows if not acro}
+            build = local_frame(spark, [(k, cmap[k]) for k in keys if k in cmap], MAP_DDL)
+            linked_c = cz.apply_canonicalization(linked, build, broadcast=True)
+        else:
+            # the DataFrame path, over the previous map's parquet state
+            if isinstance(prev, dict):
+                paths = _list_state_paths(spark, cmap_dir, upto=batch_id - 1)
+                prev = spark.read.parquet(paths[-1]) if paths else None
+            alias = cz.build_alias_edges(entity_dict_df, acronyms, linked)
+            cmap = cz.incremental_canonical_map(prev, alias).persist()
+            cached.append(cmap)
+            # the write fills the cache apply_canonicalization reads and
+            # counts the map's rows for its broadcast gate in the same pass
+            size = Observation()
+            cmap.observe(size, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
+                state_path
+            )
+            broadcast = size.get["rows"] <= AUTO_BROADCAST_MAX_ROWS
+            linked_c = cz.apply_canonicalization(linked, cmap, broadcast=broadcast)
         edges = union_distinct(entity_triples(linked_c))
         edges.write.mode("overwrite").parquet(
             os.path.join(output_dir, f"batch_id={batch_id}")
         )
+        small = isinstance(cmap, dict) and len(cmap) <= cz.LOCAL_CC_THRESHOLD
+        held = (batch_id, cmap) if small else None
         # GC map states older than N-1: batch N+1 replays read only state N
         jvm = spark._jvm
         fs = jvm.org.apache.hadoop.fs.Path(cmap_dir).getFileSystem(
@@ -169,7 +228,7 @@ def stream_extract_edges(
         )
         for old in _list_state_paths(spark, cmap_dir, upto=batch_id - 2):
             fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
-        for df in (fused, linked, batch_alias, cmap):
+        for df in cached:
             df.unpersist()
 
     return (
