@@ -1,3 +1,5 @@
+import random
+
 from pyspark.sql import functions as F
 
 from wbkg.communities import (
@@ -208,3 +210,35 @@ def test_hierarchical_small_communities_untouched(spark):
     )
     hier = hierarchical_communities(edges, max_cluster_size=10)
     assert hier.filter("level > 0").count() == 0  # nothing oversized -> flat
+
+
+def _seeded_weighted_graph(spark, seed=6):
+    rng = random.Random(seed)
+    rows = []
+    for _ in range(30):
+        a, b = rng.sample(range(12), 2)
+        rows.append((f"c{a:02d}", f"c{b:02d}", rng.randint(1, 3)))
+    return spark.createDataFrame(rows, "src string, dst string, weight long")
+
+
+def test_hierarchical_split_levels_plan_in_bounded_time(spark):
+    """A 12-node weighted graph that splits at several levels: every
+    checkpoint restarts the optimizer's size estimate, so planning stays
+    bounded. When a checkpoint kept its origin's estimate, the join
+    products compounded through the probes and levels and this call spent
+    many minutes in BigInteger.multiply."""
+    from wbkg.communities import final_communities, hierarchical_communities
+
+    hier = hierarchical_communities(_seeded_weighted_graph(spark), 3)
+    leaves = final_communities(hier).groupBy("community_id").count().collect()
+    assert sum(r["count"] for r in leaves) == 12
+    assert max(r["count"] for r in leaves) <= 3
+    assert {r.level for r in hier.select("level").distinct().collect()} >= {0, 1, 2}
+
+
+def test_label_propagation_size_estimate_stays_small(spark):
+    """The optimizer's size estimate of a label-propagation output stays a
+    plain long-sized figure, not a product compounded per probe."""
+    labels = label_propagation(_seeded_weighted_graph(spark))
+    size = labels._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 40

@@ -19,7 +19,6 @@ from wbkg.extract import (
     extract_inline_acronyms_py,
     extract_mentions,
     flip_acronyms_py,
-    merge_acronym_dicts_py,
     sanitize_for_sparql,
 )
 
@@ -83,8 +82,6 @@ def test_merge_first_wins_and_flip():
     # ref tests/test_acronyms.py:66-77
     primary = {"WB": "World Bank"}
     detected = {"WB": "Whole Bean", "UN": "United Nations"}
-    merged = merge_acronym_dicts_py(primary, detected)
-    assert merged == {"WB": "World Bank", "UN": "United Nations"}
     flipped = flip_acronyms_py(primary, detected)
     assert flipped["World Bank"] == "WB"
     assert flipped["United Nations"] == "UN"

@@ -559,3 +559,28 @@ def test_katz_more_inlinks_scores_higher(spark):
     e = _edges(spark, [("a", "x"), ("b", "x"), ("c", "x"), ("a", "y")])
     got = {r.node: r.katz for r in katz_centrality(e, 5, alpha=0.2).collect()}
     assert got["x"] > got["y"] > got["a"]
+
+
+@pytest.mark.parametrize("loop", ["k_core", "bfs_distances"])
+def test_probe_loop_storage_does_not_grow_with_rounds(spark, loop):
+    """k_core and the frontier BFS release each round's superseded state
+    once the round's emptiness probe has materialized its successor: they
+    leave as many persisted RDDs behind on a 32-node chain (16 peel rounds,
+    31 hops) as on a 4-node one (2 rounds, 3 hops)."""
+    from wbkg.graph_analytics import bfs_distances, k_core
+
+    jsc = spark.sparkContext._jsc
+    run = {
+        "k_core": lambda e, n: k_core(e, k=2).count() == 0,
+        "bfs_distances": lambda e, n: bfs_distances(
+            e, spark.createDataFrame([("v00",)], "node string"), max_hops=40
+        ).count() == n,
+    }[loop]
+
+    def growth(n):
+        e = _edges(spark, [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)])
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        assert run(e, n)
+        return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
+
+    assert growth(4) == growth(32)

@@ -365,3 +365,49 @@ def test_driver_built_tables_are_local_relations(spark):
     for name, df in cases.items():
         leaves = _plan_leaves(df)
         assert "LocalRelation" in leaves and "LogicalRDD" not in leaves, (name, leaves)
+
+
+def test_cut_keeps_a_small_estimate_and_drops_an_overflowing_one(spark):
+    """session.cut keeps its origin's size estimate while it fits a long,
+    so a 3-row cut still plans a static broadcast against a large table
+    with AQE off; an estimate compounded past Long.MaxValue by joins
+    restarts at the default size, on the same rows."""
+    from wbkg.session import cut, local_frame, release
+
+    small = cut(local_frame(spark, [(1,), (2,), (3,)], "id long"), eager=True)
+    big = spark.range(10**9)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = big.join(small, "id")._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert "BroadcastHashJoin" in plan
+
+    wide = small
+    for _ in range(12):
+        wide = wide.join(small, "id")
+    assert len(str(wide._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())) > 19
+    reset = cut(wide)
+    assert reset._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() == (1 << 63) - 1
+    assert sorted(r.id for r in reset.collect()) == [1, 2, 3]
+    release(reset, small)
+
+
+def test_lineage_cuts_go_through_session_cut():
+    """`.localCheckpoint(` appears in wbkg/ only inside session.cut, so every
+    cut restarts the size estimate; session.release is the one way to free
+    a cut (no module imports or defines a private `_release`)."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "wbkg"
+    session = ast.parse((root / "session.py").read_text())
+    cut = [range(n.lineno, n.end_lineno + 1) for n in session.body
+           if isinstance(n, ast.FunctionDef) and n.name == "cut"]
+    for path in sorted(root.rglob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            where = f"{path.relative_to(root)}:{no}"
+            if ".localCheckpoint(" in line:
+                assert path == root / "session.py" and any(no in r for r in cut), where
+            assert not re.search(r"\b_release\b", line), where

@@ -177,7 +177,7 @@ def test_hash_embed(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from wbkg.ops.multimodal import extract_features, frame_sample, gen_media_df, resize_meta
+    from wbkg.ops.multimodal import extract_features, frame_sample, gen_media_df
 
     media = gen_media_df(spark, docs=5)
     feats = extract_features(media).collect()
@@ -188,10 +188,6 @@ def test_multimodal_plumbing(spark):
 
     frames = frame_sample(media).collect()
     assert all(r.frame_ms % 500 == 0 for r in frames)
-
-    rs = resize_meta(media, max_side=32).collect()
-    for r in rs:
-        assert max(r.target_w, r.target_h) <= 32
 
 
 def test_codec_boundary_is_honest():
@@ -1177,42 +1173,6 @@ def test_fuzzy_pairs_edit1_hot_bucket_cap(spark):
         return int(d[-1])
 
     assert all(lev(a, b) <= 1 for a, b in got)
-
-
-def test_kmeans_fit_matches_numpy_lloyd(spark):
-    """kmeans_fit == a plain-numpy Lloyd with the identical contract:
-    init = k lowest-id vectors, argmin ties to lowest cluster index,
-    empty clusters keep their centroid."""
-    import numpy as np
-
-    from wbkg.ops.similarity import kmeans_fit
-
-    rng = np.random.RandomState(7)
-    blobs = [rng.normal(c, 0.3, size=(20, 4)) for c in (0.0, 5.0, 10.0)]
-    # interleave so the k lowest-id init seeds span all three blobs
-    pts = np.vstack([b[i] for i in range(20) for b in blobs])
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(len(pts))]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # float32 round-trip: the reference must see the same values Spark does
-    pts32 = pts.astype("float32").astype("float64")
-
-    k, iters = 3, 4
-    cents = pts32[:k].copy()
-    for _ in range(iters):
-        d = ((pts32[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)  # argmin takes first (lowest) index
-        for j in range(k):
-            if (assign == j).any():
-                cents[j] = pts32[assign == j].mean(axis=0)
-
-    got_cents, got_assign = kmeans_fit(emb, k=k, iterations=iters)
-    assert np.allclose(got_cents, cents, atol=1e-9)
-    got = {r.vec_id: r.cluster for r in got_assign.collect()}
-    want_d = ((pts32[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    want = want_d.argmin(axis=1)
-    assert got == {i: int(want[i]) for i in range(len(pts))}
-    # the three planted blobs land in three distinct clusters
-    assert len({got[0], got[1], got[2]}) == 3
 
 
 def test_inverted_index_and_phrase_search(spark):

@@ -15,10 +15,10 @@ The alias graph is vocabulary-bounded, so it is usually collected once and
 its components found by a driver union-find. Above LOCAL_CC_THRESHOLD edges,
 connected components run as an iterative DataFrame hash-to-min ("CC on
 MapReduce", Rastogi et al.'s large-star/small-star family): every node adopts
-the minimum id in its neighborhood until a fixed point. Each probe
-localCheckpoints to truncate lineage and releases the round it superseded;
-alias clusters are tiny (2-5 nodes) so convergence is fast, and the loop is
-bounded. The same fixpoint (min_label_fixpoint) drives
+the minimum id in its neighborhood until a fixed point. Each probe cuts
+its lineage with session.cut and releases the round it superseded with
+session.release; alias clusters are tiny (2-5 nodes) so convergence is
+fast, and the loop is bounded. The same fixpoint (min_label_fixpoint) drives
 graph_analytics.strongly_connected_components and, with a weighted-vote
 candidate, communities.label_propagation.
 
@@ -36,18 +36,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from wbkg.session import local_frame
+from wbkg.session import cut, local_frame, release
 
 MAX_ITER = 20
 # the alias graph is vocabulary-bounded, not corpus-bounded, so the
 # distributed CC path runs on a narrow shuffle
 CC_PARTITIONS = 8
-
-
-def _release(df: DataFrame) -> None:
-    """Free the executor blocks behind a materialized localCheckpoint (or a
-    projection of one) that nothing still reads: its rows cannot be recomputed."""
-    df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().unpersist(False)
 
 
 def _min_in_label(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -72,12 +66,10 @@ def min_label_fixpoint(
 
     Each probe runs TWO steps (labels only descend, so a step after
     convergence changes nothing) and materializes them as an eager
-    localCheckpoint whose changed count is an Observation: one job per
+    session.cut whose changed count is an Observation: one job per
     probe. Each materialized round releases the one it superseded, so
     storage holds one label table. `max_probes=None` runs to convergence."""
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=False
-    )
+    labels = cut(nodes.select("node", F.col("node").alias("label")))
 
     def step(lbl):  # carries the probe's starting label as _old
         return lbl.join(candidate(edges, lbl.drop("_old")), "node", "left").select(
@@ -91,10 +83,10 @@ def min_label_fixpoint(
             step(step(labels.withColumn("_old", F.col("label"))))
             .observe(obs, F.sum((F.col("label") != F.col("_old")).cast("long")).alias("n"))
             .select("node", "label")
-            .localCheckpoint()
+            .transform(cut, eager=True)
         )
         changed = obs.get["n"] or 0
-        _release(labels)
+        release(labels)
         labels, probes = new, probes + 1
     return labels, changed == 0
 
@@ -109,11 +101,11 @@ def connected_components(edges: DataFrame, max_iter: int = MAX_ITER) -> DataFram
         .union(edges.select("dst", "src"))
         .distinct()
         .repartition(CC_PARTITIONS, "src")
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels, converged = min_label_fixpoint(nodes, sym, max(1, max_iter // 2))
-    _release(sym)  # the labels are materialized; nothing reads sym again
+    release(sym)  # the labels are materialized; nothing reads sym again
     if not converged:
         # silently-wrong labels otherwise (ADVICE r01)
         warnings.warn(
@@ -236,7 +228,7 @@ def _distributed_map(edges: DataFrame) -> DataFrame:
     edges = edges.select("src", "dst").persist()
     n_edges = edges.count()
     comp = connected_components(edges)
-    # comp is materialized (eager localCheckpoint per iteration) — release
+    # comp is materialized (an eager cut per probe) — release
     # the alias-edge cache now so repeated pipeline runs in one session
     # don't accumulate blocks
     edges.unpersist()

@@ -11,6 +11,9 @@ label_propagation is canonicalize.min_label_fixpoint with a weighted vote.
 hierarchical_communities() adds the reference's max_cluster_size=50 bound
 (src/summarize.py:160-166): oversized communities are recursively split
 (weak-tie refinement, even-split fallback) and every level is kept.
+Every checkpoint is a session.cut, whose size estimate restarts, so the
+probes and split levels plan in time bounded by the data; each level frees
+the label propagation it superseded with session.release.
 
 Skew (SURVEY §4.4): hub entities ("World Bank") touch a large share of all
 chunks, making the self-join quadratic in the hub's chunk count. A
@@ -23,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wbkg.canonicalize import _release, min_label_fixpoint
+from wbkg.canonicalize import min_label_fixpoint
 from wbkg.materialize import EX, SCHEMA, RDF_TYPE, _lit_edges, _uri, _uri_edges
+from wbkg.session import cut, release
 
 DEFAULT_ENTITY_CHUNK_CAP = 200
 LP_MAX_ITER = 6  # propagation steps (min_label_fixpoint probes two per job)
@@ -93,11 +97,11 @@ def label_propagation(edges: DataFrame) -> DataFrame:
         edges.select("src", "dst", "weight")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"))
         .repartition(LP_PARTITIONS, "src")
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels, _ = min_label_fixpoint(nodes, sym, LP_MAX_ITER // 2, _weighted_vote)
-    _release(sym)
+    release(sym)
     # structural id: the converged min-label (a member chunk_id) IS the
     # community id — injective by construction, no hash-collision risk
     # (ADVICE r02: a cross-parent xxhash64 collision could silently merge
@@ -158,7 +162,7 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
             "chunk_id", F.col("community_id").alias("parent")
         )
         if level == MAX_LEVELS:
-            refined = _ntile_split(mem, max_cluster_size).localCheckpoint()
+            refined = cut(_ntile_split(mem, max_cluster_size), eager=True)
         else:
             src_m = mem.select(F.col("chunk_id").alias("src"), F.col("parent"))
             dst_m = mem.select(F.col("chunk_id").alias("dst"), F.col("parent").alias("p2"))
@@ -202,8 +206,8 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
             ntile_all = ntile_mem.unionByName(
                 refine_mem.join(stuck, "parent", "left_semi")
             )
-            refined = split_ok.unionByName(_ntile_split(ntile_all, max_cluster_size)).localCheckpoint()
-            _release(sub)  # only refined read it
+            refined = cut(split_ok.unionByName(_ntile_split(ntile_all, max_cluster_size)), eager=True)
+            release(sub)  # only refined read it
 
         out = out.unionByName(refined.withColumn("level", F.lit(level)))
         cur = refined

@@ -451,14 +451,6 @@ def clean_acronyms_py(acros: Dict[str, str], min_upper_ratio: float = 0.5) -> Di
     return cleaned
 
 
-def merge_acronym_dicts_py(primary: Dict[str, str], detected: Dict[str, str]) -> Dict[str, str]:
-    """First-wins merge, primary priority (ref src/acronyms.py:125-147)."""
-    merged = dict(primary)
-    for abbr, definition in detected.items():
-        merged.setdefault(abbr, definition)
-    return merged
-
-
 def flip_acronyms_py(primary: Dict[str, str], detected: Dict[str, str]) -> Dict[str, str]:
     """expansion -> abbr map (ref src/acronyms.py:150-158)."""
     entities = {v: k for k, v in primary.items()}

@@ -24,12 +24,19 @@ connected components and, with a weighted-vote candidate,
 communities.label_propagation). The others — sssp, k_core, k_truss's peel, hits,
 katz, random_walks — are one loop each.
 
-Lineage: every loop cuts its plan with localCheckpoint. Static inputs (the
-deduped edge list, out-degrees) are checkpointed once; a loop's growing
-state is lazily checkpointed every RANK_CHECKPOINT_EVERY /
-SETTLED_CHECKPOINT_EVERY / SEED_SETTLED_CHECKPOINT_EVERY rounds. Lazy
-checkpoints launch no job of their own: the round's probe (isEmpty, count,
-a broadcast scalar) or the caller's action materializes them.
+Lineage: every loop cuts its plan with session.cut, a localCheckpoint
+whose size estimate restarts, so planning a round never multiplies the
+estimates of the rounds before it. Static inputs (the deduped edge list,
+out-degrees) are cut once; a loop's growing state is lazily cut every
+RANK_CHECKPOINT_EVERY / SETTLED_CHECKPOINT_EVERY /
+SEED_SETTLED_CHECKPOINT_EVERY rounds. Under AQE a lazy cut runs its
+plan's shuffle stages as it is made; its last stage and persisted blocks
+wait for the round's probe (isEmpty, count, a broadcast scalar) or the
+caller's action. The loops with a per-round probe (k_core,
+_frontier_bfs, sssp) release the state a probe has shown superseded, so
+storage holds a bounded number of rounds, and never the returned table.
+pagerank, personalized_pagerank, katz and hits have no per-round action,
+so they release nothing.
 
 At 100 TB: ranks/degrees shuffle (node_id, double) pairs only — never
 payloads; the triangle kernel's adjacency arrays are O(sqrt(m)) under
@@ -43,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from wbkg.canonicalize import min_label_fixpoint
+from wbkg.session import cut, release
 
 # Lazy localCheckpoint cadence, in rounds, of each loop's growing state:
 # the rank vectors (pagerank, personalized_pagerank, katz), the settled
@@ -83,7 +91,7 @@ def _weighted_edges(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w_col.alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
 
 
@@ -107,7 +115,7 @@ def _power_iteration(
     dangling scalar as a one-row broadcast cross join. Fixed round count,
     no convergence job."""
     out_deg = (
-        e.groupBy("src").agg(F.sum("w").alias("out_w")).localCheckpoint(eager=False)
+        e.groupBy("src").agg(F.sum("w").alias("out_w")).transform(cut)
     )
     ranks = nodes.select("node", (F.col("is_seed") / n).alias("rank"))
     base = (1.0 - damping) / n
@@ -120,7 +128,7 @@ def _power_iteration(
         with_deg = (
             ranks.join(out_deg, ranks["node"] == out_deg["src"], "left")
             .select("node", "rank", "out_w")
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         dang = with_deg.filter(F.col("out_w").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
@@ -155,7 +163,7 @@ def _power_iteration(
             # (bounded plan size) but no job launches — the caller's first
             # action executes the whole iteration chain as ONE job, and
             # the persisted blocks serve every later action
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = cut(ranks)
     return ranks
 
 
@@ -177,7 +185,7 @@ def pagerank(
     weight column (rows with the same (src, dst) sum). Returns ranks
     summing to 1."""
     e = _weighted_edges(edges, src, dst, weight)
-    nodes = _node_set(e).localCheckpoint()
+    nodes = cut(_node_set(e), eager=True)
     n_nodes = nodes.count()
     return _power_iteration(
         e, nodes.withColumn("is_seed", F.lit(1.0)), n_nodes, iterations, damping
@@ -283,10 +291,10 @@ def _frontier_bfs(
     lazily checkpointed every `cadence` hops."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     if not directed:
-        e = _symmetrize(e).localCheckpoint(eager=False)
+        e = cut(_symmetrize(e))
     keys = start.columns
-    settled = start.select(*keys, F.lit(0).alias("dist")).localCheckpoint(eager=False)
-    frontier = settled
+    settled = cut(start.select(*keys, F.lit(0).alias("dist")))
+    frontier, parts, stale = settled, [settled], []
     for hop in range(1, max_hops + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["src"])
@@ -294,13 +302,19 @@ def _frontier_bfs(
             .distinct()
             .join(settled, keys, "left_anti")
             .select(*keys, F.lit(hop).alias("dist"))
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         if nxt.isEmpty():
+            release(nxt)
             break
+        # a frontier only comes out of the anti join that read all of
+        # settled, so its last cut is materialized: what it covers is stale
+        release(*stale)
         settled = settled.unionByName(nxt)
+        parts.append(nxt)
         if hop % cadence == 0:
-            settled = settled.localCheckpoint(eager=False)
+            settled = cut(settled)
+            stale, parts = parts, [settled]
         frontier = nxt
     return settled
 
@@ -443,8 +457,8 @@ def sssp(
     )
     dist = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0.0).alias("dist")
-    ).localCheckpoint(eager=False)
-    frontier = dist
+    ).transform(cut)
+    frontier, parts, stale = dist, [dist], []
     for it in range(max_iters):
         offers = (
             frontier.join(e, frontier["node"] == e["src"])
@@ -456,17 +470,21 @@ def sssp(
             offers.join(dist, "node", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("node", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=False)  # one probe job per round
+            .transform(cut)  # one probe job per round
         )
         if improved.isEmpty():
+            release(improved)
             break
+        release(*stale)  # as in _frontier_bfs: the join read all of dist
         dist = (
             dist.unionByName(improved)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
+        parts.append(improved)
         if (it + 1) % SETTLED_CHECKPOINT_EVERY == 0:
-            dist = dist.localCheckpoint(eager=False)
+            dist = cut(dist)
+            stale, parts = parts, [dist]
         frontier = improved
     return dist
 
@@ -505,23 +523,26 @@ def k_core(
     e = _symmetrize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     deg = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("_deg"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
-    for it in range(max_iters):
-        drop = deg.filter(F.col("_deg") < k).select("node").localCheckpoint(
-            eager=False
-        )
-        if drop.isEmpty():
+    stale = ()
+    for _ in range(max_iters):
+        drop = cut(deg.filter(F.col("_deg") < k).select("node"))
+        empty = drop.isEmpty()  # reads all of deg: the state deg read is stale
+        release(*stale)
+        if empty:
+            release(drop)
             break
         dec = (
             e.join(drop.withColumnRenamed("node", "src"), "src", "left_semi")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.count("*").alias("_dec"))
         )
+        stale = (deg, drop)
         deg = (
             deg.join(drop, "node", "left_anti")
             .join(dec, "node", "left")
@@ -529,7 +550,7 @@ def k_core(
                 "node",
                 (F.col("_deg") - F.coalesce("_dec", F.lit(0))).alias("_deg"),
             )
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
     return deg.select("node", F.col("_deg").cast("int").alias("degree"))
 
@@ -738,7 +759,7 @@ def k_truss(
             F.count("*").cast("int").alias("support")
         )
 
-    cur = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    cur = cut(_undirected(edges, src, dst))
     n_edges = cur.count()
     support = None
     converged = n_edges == 0
@@ -748,7 +769,7 @@ def k_truss(
             support.filter(F.col("support") >= k - 2).select("a", "b"),
             ["a", "b"],
             "left_semi",
-        ).localCheckpoint(eager=False)
+        ).transform(cut)
         n_next = nxt.count()
         if n_next == n_edges:
             cur = nxt
@@ -792,9 +813,9 @@ def hits(
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
-    nodes = _node_set(e).localCheckpoint(eager=False)
+    nodes = cut(_node_set(e))
     # hub scores start at 1.0 on every node; only rows that stay nonzero
     # matter inside the loop (see docstring)
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
@@ -817,7 +838,7 @@ def hits(
             hub.join(e, hub["node"] == e["src"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("hub").alias("ra"))
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         norm_a = raw_a.agg(F.sqrt(F.sum(F.col("ra") * F.col("ra"))).alias("_n"))
         auth = raw_a.crossJoin(F.broadcast(norm_a)).select(
@@ -830,7 +851,7 @@ def hits(
             auth.join(e, auth["node"] == e["dst"])
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("authority").alias("rh"))
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         norm_h = raw_h.agg(F.sqrt(F.sum(F.col("rh") * F.col("rh"))).alias("_n"))
         hub = raw_h.crossJoin(F.broadcast(norm_h)).select(
@@ -889,7 +910,7 @@ def random_walks(
     nbr = (
         e.withColumn("rn", (F.row_number().over(w) - 1).cast("long"))
         .withColumn("outdeg", F.count("*").over(Window.partitionBy("src")))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     starts = (
         nbr.select("src")
@@ -909,13 +930,13 @@ def random_walks(
     deg = (
         nbr.select(F.col("src").alias("node"), "outdeg")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     slots = nbr.select(
         F.col("src").alias("_s"), F.col("rn").alias("_rn"), F.col("dst").alias("_d")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     out = starts
-    frontier = starts.localCheckpoint(eager=False)
+    frontier = cut(starts)
     for t in range(1, walk_len + 1):
         stepped = frontier.join(deg, "node").select(
             "walk_id",
@@ -943,7 +964,7 @@ def random_walks(
                 F.lit(t).alias("step"),
                 F.col("_d").alias("node"),
             )
-            .localCheckpoint(eager=False)  # one probe job per step
+            .transform(cut)  # one probe job per step
         )
         if nxt.isEmpty():
             break
@@ -1022,7 +1043,7 @@ def personalized_pagerank(
         _node_set(e)
         .join(seed_set.withColumn("is_seed", F.lit(1.0)), "node", "left")
         .select("node", F.coalesce("is_seed", F.lit(0.0)).alias("is_seed"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     return _power_iteration(e, nodes, n_seeds, iterations, damping)
 
@@ -1042,7 +1063,7 @@ def clustering_coefficient(
     (not Σ outdeg² wedge volume) is the only row population beyond the
     edge list."""
     und = _undirected(edges, src, dst)
-    deg = _degrees(und).localCheckpoint(eager=False)
+    deg = cut(_degrees(und))
     tri = _triangle_pairs(und, deg).select("u", "v", F.explode("common").alias("w"))
     per_node = (
         tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
@@ -1089,7 +1110,7 @@ def strongly_connected_components(
     (one job per probe of two steps) — probe count tracks the remaining
     subgraph's diameter, not V. State is (node, label) pairs only."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = _node_set(e).localCheckpoint(eager=False)
+    nodes = cut(_node_set(e))
     remaining = nodes
     out = None
     # every round peels at least the minimal color's SCC, so this
@@ -1098,7 +1119,7 @@ def strongly_connected_components(
         re = (
             e.join(remaining.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         # (Considered and rejected: an FW-BW-style TRIM prefilter for
         # trivial SCCs — on cycle-dominated graphs like the bench fixture
@@ -1115,24 +1136,24 @@ def strongly_connected_components(
             .join(color.select(F.col("node").alias("dst"), F.col("color").alias("cd")), "dst")
             .filter(F.col("cs") == F.col("cd"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         f, _ = min_label_fixpoint(remaining, ec)
         labeled = (
             color.join(f.withColumnRenamed("label", "f"), "node")
             .filter(F.col("color") == F.col("f"))
             .select(F.col("node").alias("member"), F.col("color").alias("scc_id"))
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         out = (
             labeled
             if out is None
-            else out.unionByName(labeled).localCheckpoint(eager=False)
+            else out.unionByName(labeled).transform(cut)
         )
         remaining = (
             remaining.join(
                 labeled.select(F.col("member").alias("node")), "node", "left_anti"
-            ).localCheckpoint(eager=False)
+            ).transform(cut)
         )
     if out is None:
         return nodes.select(
@@ -1164,9 +1185,9 @@ def katz_centrality(
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
-    nodes = _node_set(e).localCheckpoint(eager=False)
+    nodes = cut(_node_set(e))
     a = F.lit(float(alpha))
     katz = nodes.select("node", F.lit(1.0).alias("katz"))
     for i in range(iterations):
@@ -1181,5 +1202,5 @@ def katz_centrality(
         )
         if (i + 1) % RANK_CHECKPOINT_EVERY == 0 or i == iterations - 1:
             # lazy: one caller-action job for the whole chain
-            katz = katz.localCheckpoint(eager=False)
+            katz = cut(katz)
     return katz

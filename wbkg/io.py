@@ -20,10 +20,6 @@ def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None)
     w.parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.session import cut
+
 _MERSENNE = (1 << 61) - 1
 
 
@@ -177,7 +179,7 @@ def ngram_jaccard_pairs_prefiltered(
     operator's definition bit-for-bit on every candidate pair."""
     # lazily checkpointed: the df-cap statistic AND the kept-set anti-join
     # both read the shingle table — without it the regex shingling ran twice
-    sh = shingles_df(df, text_col, id_col, n).localCheckpoint(eager=False)
+    sh = cut(shingles_df(df, text_col, id_col, n))
     over_df = (
         sh.groupBy("shingle").agg(F.count("*").alias("df_cnt"))
         .filter(F.col("df_cnt") > max_df)
@@ -590,7 +592,7 @@ def repeated_passages(
     # explode ran twice over the corpus
     occ = base.select("doc_id", F.explode(win).alias("p")).select(
         "doc_id", "p.start_word", "p.phash"
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     counts = occ.groupBy("phash").agg(
         F.count_distinct("doc_id").alias("n_docs")
     ).filter(F.col("n_docs") >= min_docs)

@@ -843,20 +843,3 @@ def wav_resample_stats(media: DataFrame, factor: int = 2) -> DataFrame:
             schema="media_id string, out_samples int, out_rate int, mean_abs double",
         )
     )
-
-
-def resize_meta(media: DataFrame, max_side: int = 32) -> DataFrame:
-    """resize planning as pure column math (aspect-preserving target dims);
-    the pixel resample itself would live in extract_features' decode step."""
-    scale = F.least(
-        F.lit(max_side) / F.greatest(F.col("width"), F.lit(1)),
-        F.lit(max_side) / F.greatest(F.col("height"), F.lit(1)),
-        F.lit(1.0),
-    )
-    return media.filter(F.col("width").isNotNull()).select(
-        "media_id",
-        "width",
-        "height",
-        F.ceil(F.col("width") * scale).cast("int").alias("target_w"),
-        F.ceil(F.col("height") * scale).cast("int").alias("target_h"),
-    )

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wbkg.session import cut
+
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RE = r"https?://[^\s]+"
 
@@ -465,7 +467,7 @@ def event_rate_anomaly(
         )
         .groupBy("user", "hour")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     moments = hours.groupBy("user").agg(
         F.count("*").alias("k"),
@@ -556,7 +558,7 @@ def ntile_buckets(
     ranged = (
         df.repartitionByRange(num_partitions, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     sizes = {
         r._pid: r.cnt
@@ -1061,7 +1063,7 @@ def vocab_oov_rate(
         F.filter(
             F.split(F.lower(F.col(text_col)), r"\W+"), lambda x: x != ""
         ).alias("_toks"),
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     toks = tok_arr.select(id_col, F.explode("_toks").alias("term"))
     tf = toks.groupBy("term").agg(F.count("*").alias("tf"))
     vocab = (

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wbkg.session import cut
+
 
 def _dot_expr(vec_col: str, query: Sequence[float]):
     q = F.array(*[F.lit(float(x)) for x in query])
@@ -272,44 +274,6 @@ def kmeans_assign(
     )
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple:
-    """Lloyd's k-means -> (centroids ndarray [k x dim], assignment DF).
-
-    Init is deterministic: the k lowest-id vectors. Each iteration is one
-    map-side assignment (kmeans_assign — no shuffle) plus ONE
-    partial-aggregated shuffle for the update: posexplode the vector and
-    average per (cluster, dim) — sums combine map-side, the exchange
-    carries k x dim running sums per partition, never vectors. The k x dim
-    centroid matrix is collected per round (gated: k*dim doubles, ~4 KB at
-    k=8 dim=64) because the next round inlines it as literals — the same
-    driver-held-centers contract as MLlib's KMeans. Empty clusters keep
-    their previous centroid."""
-    import numpy as np
-
-    init = emb.orderBy(id_col).select(vec_col).limit(k).collect()
-    cents = np.array([[float(x) for x in r[0]] for r in init])
-    for _ in range(iterations):
-        assigned = kmeans_assign(emb, cents.tolist(), id_col, vec_col)
-        upd = (
-            emb.join(assigned.select(id_col, "cluster"), id_col)
-            .select("cluster", F.posexplode(F.col(vec_col)).alias("dim", "x"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .collect()
-        )
-        nxt = cents.copy()
-        for r in upd:
-            nxt[r.cluster][r.dim] = r.m
-        cents = nxt
-    return cents, kmeans_assign(emb, cents.tolist(), id_col, vec_col)
-
-
 def quantized_topk(
     emb: DataFrame,
     query: Sequence[float],
@@ -399,14 +363,14 @@ def mmr_rerank(
         )
         .orderBy(F.desc("rel"), F.col(id_col))
         .limit(shortlist)
-        .localCheckpoint()
+        .transform(cut, eager=True)
     )
     lam_l, one_minus = F.lit(float(lam)), F.lit(round(1.0 - lam, 10))
     selected = (
         cand.orderBy(F.desc("rel"), F.col(id_col))
         .limit(1)
         .select(F.lit(1).alias("rank"), id_col, vec_col, "rel")
-        .localCheckpoint()
+        .transform(cut, eager=True)
     )
     for r in range(2, k + 1):
         remaining = cand.join(selected.select(id_col), id_col, "left_anti")
@@ -444,5 +408,5 @@ def mmr_rerank(
             .limit(1)
             .select(F.lit(r).alias("rank"), id_col, vec_col, "rel")
         )
-        selected = selected.unionByName(pick).localCheckpoint()
+        selected = cut(selected.unionByName(pick), eager=True)
     return selected.select("rank", id_col, "rel")

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from wbkg.session import local_frame
+from wbkg.session import cut, local_frame
 
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "for"]
 ES_MARKERS = ["el", "la", "de", "que", "los", "una"]
@@ -557,9 +557,7 @@ def bigram_lm_score(
     arr = F.filter(
         F.split(F.lower(F.col(text_col)), r"\W+"), lambda x: x != ""
     )
-    tok_arr = df.select(F.col(id_col), arr.alias("_toks")).localCheckpoint(
-        eager=False
-    )
+    tok_arr = cut(df.select(F.col(id_col), arr.alias("_toks")))
     n = F.size(F.col("_toks"))
     # CASE WHEN guards the n<2 rows (slice with a negative length throws);
     # explode drops the null branch, so short docs simply emit no bigrams
@@ -771,7 +769,7 @@ def pmi_collocations(
     # tokenize ONCE (lazy checkpoint of the per-doc arrays); bigrams and
     # unigrams derive with cheap array ops, and the total token count
     # folds from the unigram table instead of a third corpus pass
-    tok_arr = df.select(arr.alias("_toks")).localCheckpoint(eager=False)
+    tok_arr = cut(df.select(arr.alias("_toks")))
     n = F.size(F.col("_toks"))
     bg = tok_arr.select(
         F.explode(
@@ -1004,9 +1002,7 @@ def rake_keyphrases(
     # the scoring join) read this table — without the checkpoint each one
     # re-ran the explode + both windows from the raw text
     wl = Window.partitionBy(id_col, "grp")
-    words = words.withColumn("plen", F.count("*").over(wl)).localCheckpoint(
-        eager=False
-    )
+    words = cut(words.withColumn("plen", F.count("*").over(wl)))
     wstats = words.groupBy(id_col, "word").agg(
         (F.sum("plen") / F.count("*")).alias("wscore")
     )

@@ -89,3 +89,40 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
     )
     return spark.createDataFrame(table, struct)
+
+
+_LONG_MAX = (1 << 63) - 1
+
+
+def cut(df: DataFrame, eager: bool = False) -> DataFrame:
+    """df.localCheckpoint(eager) whose size estimate restarts: the one rule
+    for cutting a plan's lineage. A checkpoint keeps its origin plan's
+    Statistics, and the size-only estimator multiplies the children's sizes
+    at every inner or outer join, so through a loop of checkpointed joins
+    the estimate compounds into a BigInt of thousands of digits and
+    planning stalls in BigInteger.multiply. An origin estimate above
+    Long.MaxValue is dropped (the leaf falls back to the default size);
+    one that fits is kept, so a small checkpoint still plans a static
+    broadcast. The new leaf is the same LogicalRDD over the same
+    checkpointed RDD, with the same output partitioning and ordering."""
+    cp = df.localCheckpoint(eager)
+    leaf = cp._jdf.logicalPlan()
+    args = leaf.otherCopyArgs()  # (session, originStats, originConstraints)
+    stats = args.apply(1)
+    if stats.isEmpty() or stats.get().sizeInBytes() <= _LONG_MAX:
+        return cp
+    jvm = cp.sparkSession._jvm
+    leaf = leaf.copy(
+        leaf.output(), leaf.rdd(), leaf.outputPartitioning(), leaf.outputOrdering(),
+        leaf.isStreaming(), leaf.stream(), args.apply(0), jvm.scala.Option.apply(None),
+        args.apply(2),
+    )
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(args.apply(0), leaf),
+                     cp.sparkSession)
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the executor blocks behind materialized cuts (or projections of
+    one) that nothing still reads: their rows cannot be recomputed."""
+    for df in dfs:
+        df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().unpersist(False)

@@ -94,9 +94,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wbkg.canonicalize import _release
 from wbkg.materialize import RDF_TYPE, RDF_TYPE_IRI
-from wbkg.session import local_frame
+from wbkg.session import cut, local_frame, release
 
 _TOKEN = re.compile(
     r"""\?[A-Za-z_][\w]*   # variable
@@ -1044,7 +1043,7 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     frontier it superseded, so storage holds one closure however many
     rounds run. Property-path graphs are vocabulary-bounded
     here (edges over a filtered predicate), not corpus-bounded."""
-    base = step.distinct().localCheckpoint()
+    base = cut(step.distinct(), eager=True)
     total = frontier = base
     for _ in range(max_iters):
         # nonlinear seminaive: path(a,b) :- path(a,m), path(m,b) needs BOTH
@@ -1060,13 +1059,13 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
             )
             .distinct()
         )
-        new = nxt.join(total, ["a", "b"], "left_anti").localCheckpoint()
+        new = cut(nxt.join(total, ["a", "b"], "left_anti"), eager=True)
         if not new.take(1):
-            _release(new)
+            release(new)
             break
-        grown = total.unionByName(new).localCheckpoint()
-        _release(frontier)  # round one releases base twice: a no-op
-        _release(total)
+        grown = cut(total.unionByName(new), eager=True)
+        release(frontier)  # round one releases base twice: a no-op
+        release(total)
         total, frontier = grown, new
     else:
         import warnings
@@ -1079,7 +1078,7 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
             stacklevel=2,
         )
     if frontier is not total:
-        _release(frontier)
+        release(frontier)
     return total
 
 
@@ -2054,7 +2053,7 @@ def sparql_update(edges: DataFrame, query: str) -> DataFrame:
                         _instantiate_template(
                             _update_bindings(cur, prefix_block, template, where_block),
                             template,
-                        ).localCheckpoint(),
+                        ).transform(cut, eager=True),
                         insert,
                     )
                 )
