@@ -1,5 +1,6 @@
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from wbkg.communities import (
@@ -10,6 +11,16 @@ from wbkg.communities import (
     summarize_communities,
     summary_triples,
 )
+
+
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Pins hierarchical_communities to its distributed loop: these tests
+    measure that loop's storage and planning, and their graphs are far
+    below the collect threshold that sends a graph to the driver."""
+    import wbkg.canonicalize as cz
+
+    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 0)
 
 
 def _linked(spark, rows):
@@ -56,7 +67,7 @@ def test_label_propagation_two_clusters(spark):
     assert comm == comm2
 
 
-def test_label_propagation_storage_does_not_grow_with_rounds(spark):
+def test_label_propagation_storage_does_not_grow_with_rounds(spark, distributed):
     """Label propagation releases every round it supersedes and its
     symmetrized edges: it (and hierarchical_communities over it) leaves as
     many persisted RDDs behind on a 32-node chain (every step changes a
@@ -78,7 +89,7 @@ def test_label_propagation_storage_does_not_grow_with_rounds(spark):
     assert growth(hierarchical_communities, 4) == growth(hierarchical_communities, 32)
 
 
-def test_hierarchical_split_levels_release_their_label_propagation(spark):
+def test_hierarchical_split_levels_release_their_label_propagation(spark, distributed):
     """Each refinement level's label propagation is released once its
     level is materialized: one split level or two, the persisted RDDs left
     behind are exactly the ones the output reads (the level-0 labels and
@@ -221,7 +232,7 @@ def _seeded_weighted_graph(spark, seed=6):
     return spark.createDataFrame(rows, "src string, dst string, weight long")
 
 
-def test_hierarchical_split_levels_plan_in_bounded_time(spark):
+def test_hierarchical_split_levels_plan_in_bounded_time(spark, distributed):
     """A 12-node weighted graph that splits at several levels: every
     checkpoint restarts the optimizer's size estimate, so planning stays
     bounded. When a checkpoint kept its origin's estimate, the join
@@ -233,6 +244,22 @@ def test_hierarchical_split_levels_plan_in_bounded_time(spark):
     leaves = final_communities(hier).groupBy("community_id").count().collect()
     assert sum(r["count"] for r in leaves) == 12
     assert max(r["count"] for r in leaves) <= 3
+    assert {r.level for r in hier.select("level").distinct().collect()} >= {0, 1, 2}
+
+
+def test_hierarchical_small_graph_is_one_collect(spark, job_count):
+    """Below the collect threshold the whole hierarchy (here split at
+    several levels) costs the edges' collect (a limit's one or two jobs) and the
+    result is a LocalRelation that persists nothing; the distributed loop
+    runs dozens of jobs for the same rows."""
+    from wbkg.communities import hierarchical_communities
+
+    jsc = spark.sparkContext._jsc
+    edges = _seeded_weighted_graph(spark)
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    hier, jobs = job_count(lambda: hierarchical_communities(edges, 3))
+    assert jobs <= 2
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
     assert {r.level for r in hier.select("level").distinct().collect()} >= {0, 1, 2}
 
 

@@ -19,11 +19,15 @@ implementation's join shapes):
 - connected_components / strongly_connected_components (the shared
   min-label fixpoint): equal to the driver union-find and to Tarjan.
 - label_propagation (the same fixpoint with a weighted-vote candidate):
-  equal to a plain-Python monotone weighted label propagation.
+  equal to the driver's monotone weighted label propagation.
+- hierarchical_communities: the driver path equal to the distributed
+  loop, rows and schema; the driver leaves partition the nodes within the
+  size bound.
 - merge_upsert: idempotent (re-applying the same source is a no-op) and
   key-complete (output keys == target keys ∪ source keys).
 """
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -259,28 +263,6 @@ def test_scc_matches_tarjan(spark, pairs):
     assert got == _py_tarjan(_adjacency(pairs, directed=True))
 
 
-def _py_label_propagation(rows, steps=6):
-    """Monotone synchronous weighted LP: each step every node takes the
-    neighbour label with the largest summed weight (tie: smallest label)
-    when it is smaller than its own; stop once a step changes nothing."""
-    adj = {}
-    for a, b, w in rows:
-        adj.setdefault(a, []).append((b, w))
-        adj.setdefault(b, []).append((a, w))
-    label = {v: v for v in adj}
-    for _ in range(steps):
-        new = {}
-        for v, nbrs in adj.items():
-            votes = {}
-            for u, w in nbrs:
-                votes[label[u]] = votes.get(label[u], 0) + w
-            new[v] = min(label[v], min(votes, key=lambda lb: (-votes[lb], lb)))
-        if new == label:
-            break
-        label = new
-    return label
-
-
 @settings(max_examples=8, **HC)
 @given(
     rows=st.lists(
@@ -292,7 +274,7 @@ def _py_label_propagation(rows, steps=6):
 def test_label_propagation_matches_python_lp(spark, rows, n_dup):
     """Duplicate rows (here the first n_dup rows again, reversed) add their
     weights; the node range leaves disconnected parts."""
-    from wbkg.communities import label_propagation
+    from wbkg.communities import label_propagation, local_label_propagation
 
     rows = rows + [(b, a, w) for a, b, w in rows[:n_dup]]
     named = [(f"n{a:02d}", f"n{b:02d}", w) for a, b, w in rows]
@@ -302,7 +284,60 @@ def test_label_propagation_matches_python_lp(spark, rows, n_dup):
             spark.createDataFrame(named, "src string, dst string, weight long")
         ).collect()
     }
-    assert got == _py_label_propagation(named)
+    assert got == local_label_propagation(named)
+
+
+WEIGHTED = st.lists(st.tuples(NODE, NODE, st.integers(1, 4)), max_size=30)
+# a graph that splits at every level down to MAX_LEVELS' even split
+# (bound 1)
+_FOUR_LEVELS = [
+    (4, 2, 2), (7, 1, 2), (8, 4, 1), (1, 9, 2), (2, 4, 4), (8, 0, 1), (4, 2, 1),
+    (7, 6, 2), (9, 4, 1), (6, 4, 1), (4, 5, 2), (5, 3, 3), (1, 4, 3), (1, 5, 4),
+]
+
+
+@settings(max_examples=5, **HC)
+@given(rows=WEIGHTED, max_cluster_size=st.integers(1, 5))
+@example(rows=_FOUR_LEVELS, max_cluster_size=1)
+def test_hierarchical_driver_path_matches_spark_path(spark, rows, max_cluster_size):
+    """Below the collect threshold hierarchical_communities runs on the
+    driver; its rows (community-id strings included) and schema are the
+    distributed loop's, over random weighted multigraphs with self-loops,
+    split at one level or several."""
+    import wbkg.canonicalize as cz
+    from wbkg.communities import hierarchical_communities
+
+    named = [(f"c{a:02d}", f"c{b:02d}", w) for a, b, w in rows]
+    edges = spark.createDataFrame(named, "src string, dst string, weight long")
+    local = hierarchical_communities(edges, max_cluster_size)
+    leaf = local._jdf.queryExecution().optimizedPlan().collectLeaves().head()
+    assert leaf.nodeName() == "LocalRelation"  # the driver path ran
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cz, "LOCAL_CC_THRESHOLD", 0)
+        dist = hierarchical_communities(edges, max_cluster_size)
+        want = sorted(dist.collect())
+    assert sorted(local.collect()) == want
+    assert local.schema == dist.schema
+
+
+@settings(max_examples=200, deadline=None)
+@given(rows=WEIGHTED, max_cluster_size=st.integers(1, 5))
+def test_local_hierarchy_leaves_partition_within_bound(rows, max_cluster_size):
+    """Every node of the graph has exactly one leaf (its community at its
+    deepest level), and no leaf holds more than max_cluster_size nodes."""
+    from wbkg.communities import local_hierarchy
+
+    named = [(f"c{a:02d}", f"c{b:02d}", w) for a, b, w in rows]
+    hier = local_hierarchy(named, max_cluster_size)
+    assert len({(chunk, level) for chunk, level, _ in hier}) == len(hier)
+    leaf = {}
+    for chunk, level, comm in sorted(hier):
+        leaf[chunk] = comm  # sorted by level within a chunk: the deepest wins
+    assert set(leaf) == {v for a, b, _ in named for v in (a, b)}
+    sizes = {}
+    for comm in leaf.values():
+        sizes[comm] = sizes.get(comm, 0) + 1
+    assert all(n <= max_cluster_size for n in sizes.values())
 
 
 @settings(max_examples=10, **HC)

@@ -557,8 +557,8 @@ def test_stream_running_totals_resume_from_checkpoint(spark, tmp_path):
 
 # Spark jobs one steady-state micro-batch may run: the one collect of the
 # batch's alias rows (fused extract and link materialize their caches, one
-# shuffle), the canonical-map write, the edges write (two shuffles)
-STEADY_BATCH_JOB_BUDGET = 11
+# shuffle), the canonical-map write, the edges write (one dedup shuffle)
+STEADY_BATCH_JOB_BUDGET = 10
 
 
 def test_stream_job_budget_and_no_cache_leak(spark, tmp_path):

@@ -66,8 +66,9 @@ def min_label_fixpoint(
 
     Each probe runs TWO steps (labels only descend, so a step after
     convergence changes nothing) and materializes them as an eager
-    session.cut whose changed count is an Observation: one job per
-    probe. Each materialized round releases the one it superseded, so
+    session.cut whose changed count is an Observation, so no separate
+    count job runs (under AQE each shuffle of the probe is its own
+    job). Each materialized round releases the one it superseded, so
     storage holds one label table. `max_probes=None` runs to convergence."""
     labels = cut(nodes.select("node", F.col("node").alias("label")))
 

@@ -7,13 +7,20 @@ as a self-join + hash aggregation. Hierarchical Leiden (:148-172, a
 randomized native library) is replaced by deterministic monotone weighted
 label propagation — documented surrogate; community structure is checked at
 the structural level (determinism, sizes, connectivity), not id-for-id.
-label_propagation is canonicalize.min_label_fixpoint with a weighted vote.
 hierarchical_communities() adds the reference's max_cluster_size=50 bound
 (src/summarize.py:160-166): oversized communities are recursively split
 (weak-tie refinement, even-split fallback) and every level is kept.
-Every checkpoint is a session.cut, whose size estimate restarts, so the
-probes and split levels plan in time bounded by the data; each level frees
-the label propagation it superseded with session.release.
+
+Physical strategy is size-gated, as canonicalize's CC is: a graph of at
+most LOCAL_CC_THRESHOLD edge rows (the usual chunk co-occurrence graph)
+is collected once and the whole hierarchy runs in driver Python
+(local_label_propagation, local_hierarchy; the reference's one-process
+shape), returning the same rows as a LocalRelation. Above it the
+distributed loop runs: label_propagation is min_label_fixpoint with a
+weighted vote, every checkpoint is a session.cut, whose size estimate
+restarts, so the probes and split levels plan in time bounded by the
+data; each level frees the label propagation it superseded with
+session.release.
 
 Skew (SURVEY §4.4): hub entities ("World Bank") touch a large share of all
 chunks, making the self-join quadratic in the hub's chunk count. A
@@ -23,15 +30,18 @@ blow-up, mirroring the reference's max_cluster_size bound downstream.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from wbkg.canonicalize import min_label_fixpoint
+from wbkg.canonicalize import collect_if_small, min_label_fixpoint
 from wbkg.materialize import EX, SCHEMA, RDF_TYPE, _lit_edges, _uri, _uri_edges
-from wbkg.session import cut, release
+from wbkg.session import cut, local_frame, release
 
 DEFAULT_ENTITY_CHUNK_CAP = 200
-LP_MAX_ITER = 6  # propagation steps (min_label_fixpoint probes two per job)
+LP_MAX_ITER = 6  # propagation steps (min_label_fixpoint runs two per probe)
 LP_PARTITIONS = 32
 MAX_LEVELS = 4  # refinement levels below the label-propagation level
 
@@ -112,6 +122,32 @@ def label_propagation(edges: DataFrame) -> DataFrame:
     )
 
 
+def local_label_propagation(rows) -> dict:
+    """label_propagation on the driver: (src, dst, weight) rows ->
+    {node: label}. Each of at most LP_MAX_ITER synchronous steps gives every
+    node the neighbour label with the largest summed weight (a duplicate
+    row adds its weight again; tie: the smallest label) when that is
+    smaller than its own; a step that changes nothing ends the loop.
+    Python's str order is Spark's binary string order, so the labels are
+    label_propagation's."""
+    adj: dict = {}
+    for a, b, w in rows:
+        adj.setdefault(a, []).append((b, w))
+        adj.setdefault(b, []).append((a, w))
+    label = {v: v for v in adj}
+    for _ in range(LP_MAX_ITER):
+        new = {}
+        for v, nbrs in adj.items():
+            votes: dict = {}
+            for u, w in nbrs:
+                votes[label[u]] = votes.get(label[u], 0) + w
+            new[v] = min(label[v], min(votes, key=lambda lb: (-votes[lb], lb)))
+        if new == label:
+            break
+        label = new
+    return label
+
+
 def _ntile_split(mem: DataFrame, max_cluster_size: int) -> DataFrame:
     """Deterministic even split of (chunk_id, parent) members into
     ceil(n/max) buckets by chunk_id order — the guaranteed-bound fallback
@@ -128,6 +164,60 @@ def _ntile_split(mem: DataFrame, max_cluster_size: int) -> DataFrame:
             "community_id"
         ),
     )
+
+
+def _even_split(groups: dict, max_cluster_size: int) -> dict:
+    """_ntile_split on the driver: {parent: members} -> {chunk_id:
+    community_id}, the buckets computed in the same double arithmetic."""
+    out = {}
+    for parent, members in groups.items():
+        n = len(members)
+        nb = math.ceil(n / max_cluster_size)
+        for i, c in enumerate(sorted(members)):
+            out[c] = f"{parent}:{math.floor(i * nb / n)}"
+    return out
+
+
+def local_hierarchy(rows, max_cluster_size: int) -> list:
+    """hierarchical_communities on the driver: (src, dst, weight) rows ->
+    [(chunk_id, level, community_id)], the rows the distributed loop
+    returns, ids included: the same label propagation, weak-tie refinement
+    ('/' sub-labels, '#' singletons), stuck-parent route and ':' even
+    split, level by level."""
+    cur = local_label_propagation(rows)
+    out = [(c, 0, comm) for c, comm in cur.items()]
+    for level in range(1, MAX_LEVELS + 1):
+        groups: dict = {}
+        for c, comm in cur.items():
+            groups.setdefault(comm, []).append(c)
+        over = {p: m for p, m in groups.items() if len(m) > max_cluster_size}
+        if not over:
+            break
+        cur, even = {}, over
+        if level < MAX_LEVELS:
+            parent = {c: p for p, m in over.items() for c in m}
+            intra: dict = {}
+            for a, b, w in rows:
+                if a in parent and parent[a] == parent.get(b):
+                    intra.setdefault(parent[a], []).append((a, b, w))
+            wmin = {}
+            for p, es in intra.items():
+                ws = [w for _, _, w in es]
+                if max(ws) > min(ws):
+                    wmin[p] = min(ws)
+            sub = local_label_propagation(
+                e for p, es in intra.items() if p in wmin for e in es if e[2] > wmin[p]
+            )
+            even = {p: m for p, m in over.items() if p not in wmin}
+            for p in wmin:
+                labels = {c: sub.get(c, f"{p}#{c}") for c in over[p]}
+                if len(set(labels.values())) > 1:
+                    cur.update((c, f"{p}/{lb}") for c, lb in labels.items())
+                else:  # a refinement that did not split stalls: even split
+                    even[p] = over[p]
+        cur.update(_even_split(even, max_cluster_size))
+        out += [(c, level, comm) for c, comm in cur.items()]
+    return out
 
 
 def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> DataFrame:
@@ -149,7 +239,29 @@ def hierarchical_communities(edges: DataFrame, max_cluster_size: int = 50) -> Da
 
     -> (chunk_id, level, community_id); a chunk appears once per level at
     which its community was (re)assigned. Use final_communities() for the
-    leaf assignment."""
+    leaf assignment.
+
+    Physical strategy is size-gated, as for CC: a graph of at most
+    LOCAL_CC_THRESHOLD rows with non-null string ids is collected once and
+    local_hierarchy returns the same rows on the driver (a LocalRelation,
+    no further job); a bigger one runs the distributed loop."""
+    src, dst = edges.schema["src"], edges.schema["dst"]
+    strings = src.dataType == dst.dataType == StringType()
+    rows = collect_if_small(edges.select("src", "dst", "weight")) if strings else None
+    if rows is None or any(None in r for r in rows):
+        return _distributed_hierarchy(edges, max_cluster_size)
+    nn = "" if src.nullable or dst.nullable else " not null"
+    return local_frame(
+        edges.sparkSession,
+        local_hierarchy(rows, max_cluster_size),
+        f"chunk_id string{nn}, level int not null, community_id string{nn}",
+    )
+
+
+def _distributed_hierarchy(edges: DataFrame, max_cluster_size: int) -> DataFrame:
+    """hierarchical_communities above the collect threshold: label
+    propagation, then per level one refinement pass over DataFrames, each
+    level an eager session.cut."""
     cur = label_propagation(edges)
     out = cur.withColumn("level", F.lit(0))
 

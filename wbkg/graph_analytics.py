@@ -160,9 +160,10 @@ def _power_iteration(
         )
         if (i + 1) % RANK_CHECKPOINT_EVERY == 0 or i == iterations - 1:
             # LAZY checkpoint: the logical plan is truncated immediately
-            # (bounded plan size) but no job launches — the caller's first
-            # action executes the whole iteration chain as ONE job, and
-            # the persisted blocks serve every later action
+            # (bounded plan size). Under AQE making it already runs the
+            # chain's shuffle-map stages, one job each; the caller's first
+            # action runs the final stage, and the persisted blocks serve
+            # every later action
             ranks = cut(ranks)
     return ranks
 
@@ -286,9 +287,10 @@ def _frontier_bfs(
     against the edge list and anti-joins the settled set, so per-round
     shuffle volume is O(frontier out-edges), never O(V): early rounds touch
     a sliver of the edge table and Catalyst broadcasts the frontier while
-    it is small. The frontier is lazily checkpointed and its emptiness
-    probe materializes it — one job per hop; the growing settled table is
-    lazily checkpointed every `cadence` hops."""
+    it is small. The frontier is lazily checkpointed (under AQE the cut
+    runs its shuffle-map stages as it is made, one job each) and its
+    emptiness probe materializes it; the growing settled table is lazily
+    checkpointed every `cadence` hops."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     if not directed:
         e = cut(_symmetrize(e))
@@ -729,9 +731,10 @@ def k_truss(
     all three canonical edges of each triangle (one explode of a
     3-element array) and fold support in one partial-agg groupBy. Edges
     under k-2 drop; repeat until the edge count is stable. The fixpoint
-    count rides a LAZY localCheckpoint every round (one job per round,
-    nothing recomputed). Peel depth is bounded by the triangle-density
-    profile, not V — same argument as k_core. If the loop exhausts
+    count rides a LAZY session.cut every round (nothing recomputed; under
+    AQE the cut runs the round's shuffle-map stages as it is made, one job
+    each, and the count runs the last). Peel depth is bounded by the
+    triangle-density profile, not V — same argument as k_core. If the loop exhausts
     max_iters without converging, support is recomputed on the FINAL
     edge set so reported supports never count triangles through removed
     edges."""
@@ -1107,7 +1110,7 @@ def strongly_connected_components(
     handful: every singleton whose color is itself peels immediately).
 
     Both floods are canonicalize.min_label_fixpoint run to CONVERGENCE
-    (one job per probe of two steps) — probe count tracks the remaining
+    (one eager cut per probe of two steps) — probe count tracks the remaining
     subgraph's diameter, not V. State is (node, label) pairs only."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     nodes = cut(_node_set(e))

@@ -106,11 +106,11 @@ def entity_uri_col(qid_col: str, rdf_safe_col: str):
 
 
 def entity_triples(linked: DataFrame) -> DataFrame:
-    """linked mentions (canonicalized) -> C6 triples.
+    """linked mentions (canonicalized) -> C6 triples, deduplicated.
 
-    One distinct (shrinks the Zipfian mention stream to unique
-    (doc, entity, surface, label) combos — the expensive dedup happens ONCE
-    here) then a single explode emitting all four triple kinds."""
+    A single explode emits all four triple kinds, then ONE dedup on (subj,
+    pred, obj): its partial aggregation folds the Zipfian mention stream
+    map-side, before the one shuffle."""
     base = (
         linked.filter(F.col("surface").isNotNull() & F.col("rdf_safe_c").isNotNull())
         .select(
@@ -119,7 +119,6 @@ def entity_triples(linked: DataFrame) -> DataFrame:
             "label",
             _uri(EX, F.lit("document/"), F.col("doc_id")).alias("doc_uri"),
         )
-        .distinct()
     )
     ent = F.col("ent_uri")
     arr = F.array(
@@ -128,7 +127,7 @@ def entity_triples(linked: DataFrame) -> DataFrame:
         _triple(ent, SCHEMA + "additionalType", F.col("label"), True),
         _triple(F.col("doc_uri"), SCHEMA + "mentions", ent, False),
     )
-    return _explode_triples(base, arr)
+    return _explode_triples(base, arr).dropDuplicates(["subj", "pred", "obj"])
 
 
 # --------------------------------------------------------------------------- #

@@ -90,6 +90,7 @@ from __future__ import annotations
 import re
 import weakref
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1326,27 +1327,22 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
             pos_terms = (("a", s), ("b", o))
             scan_lang = scan_lit = False
         else:
-            base_cols = (
-                ["subj", "pred", "obj"]
-                + (["lang"] if has_lang else [])
-                + (["obj_is_literal"] if has_lit else [])
-            )
-            scan = edges.select(*base_cols)
+            scan = edges
             pos_terms = (("subj", s), ("pred", p), ("obj", o))
             scan_lang, scan_lit = has_lang, has_lit
-        cols, rename = [], {}
+        # one filter (the conditions ANDed) and one select per scan: each
+        # DataFrame call is a JVM round trip with eager analysis
+        cols, rename, conds = [], {}, []
         for col, term in pos_terms:
             if term.kind == "const":
-                scan = scan.filter(
+                conds.append(
                     _pred_in([term.value]) if col == "pred" else F.col(col) == term.value
                 )
                 if col == "obj" and scan_lang and term.lang is not None:
-                    scan = scan.filter(
-                        F.coalesce(F.col("lang"), F.lit("")) == term.lang
-                    )
+                    conds.append(F.coalesce(F.col("lang"), F.lit("")) == term.lang)
             else:
                 if term.value in rename:  # repeated var inside one pattern
-                    scan = scan.filter(F.col(col) == F.col(rename[term.value]))
+                    conds.append(F.col(col) == F.col(rename[term.value]))
                 else:
                     rename[term.value] = col
                     cols.append(F.col(col).alias(term.value))
@@ -1368,6 +1364,8 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
                                 F.lit("true"),
                             ).alias(_LIT_PFX + term.value)
                         )
+        if conds:
+            scan = scan.filter(reduce(lambda a, b: a & b, conds))
         # a fully-constant pattern is an existence gate, not a multiplier
         if not cols:
             gate = f"__wbkg_gate_{tag}{i}"

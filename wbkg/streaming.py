@@ -126,7 +126,7 @@ def stream_extract_edges(
         normalize_surface,
     )
     from wbkg.link import AUTO_BROADCAST_MAX_ROWS, dictionary_lookup, link_mentions
-    from wbkg.materialize import entity_triples, union_distinct
+    from wbkg.materialize import entity_triples
     import wbkg.canonicalize as cz
     from wbkg.session import local_frame
 
@@ -215,7 +215,7 @@ def stream_extract_edges(
             )
             broadcast = size.get["rows"] <= AUTO_BROADCAST_MAX_ROWS
             linked_c = cz.apply_canonicalization(linked, cmap, broadcast=broadcast)
-        edges = union_distinct(entity_triples(linked_c))
+        edges = entity_triples(linked_c)
         edges.write.mode("overwrite").parquet(
             os.path.join(output_dir, f"batch_id={batch_id}")
         )
