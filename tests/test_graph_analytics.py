@@ -561,26 +561,76 @@ def test_katz_more_inlinks_scores_higher(spark):
     assert got["x"] > got["y"] > got["a"]
 
 
-@pytest.mark.parametrize("loop", ["k_core", "bfs_distances"])
+def _chain(n):
+    return [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)]
+
+
+def _truss_strip(n):
+    """Edges (i, i+d) for d in {1, 3, 4}: its 4-truss peels from both ends
+    inward, 2 rounds at n=4 and 9 at n=32, and ends empty."""
+    return [(f"v{i:02d}", f"v{i + d:02d}") for i in range(n) for d in (1, 3, 4) if i + d < n]
+
+
+def _tournament(n):
+    """Every edge v_i -> v_j, i < j: n singleton SCCs, each coloring round
+    floods in one step and peels only the least remaining node."""
+    return [(f"v{i:02d}", f"v{j:02d}") for i in range(n) for j in range(i + 1, n)]
+
+
+@pytest.mark.parametrize(
+    "loop",
+    ["k_core", "bfs_distances", "sssp", "harmonic_centrality", "k_truss", "random_walks",
+     "strongly_connected_components"],
+)
 def test_probe_loop_storage_does_not_grow_with_rounds(spark, loop):
-    """k_core and the frontier BFS release each round's superseded state
-    once the round's emptiness probe has materialized its successor: they
-    leave as many persisted RDDs behind on a 32-node chain (16 peel rounds,
-    31 hops) as on a 4-node one (2 rounds, 3 hops)."""
-    from wbkg.graph_analytics import bfs_distances, k_core
+    """Every session.seminaive loop releases the cuts a re-cut superseded
+    once a later probe has stored that re-cut: it leaves as many persisted
+    RDDs behind on a large input that runs many rounds as on a small one
+    that runs few — a 32-node chain against a 4-node one (k_core 16 peel
+    rounds against 2, BFS, harmonic, sssp and random walks 31 against 3),
+    k_truss's strip 9 rounds against 2, SCC's tournament 8 against 4."""
+    from wbkg import graph_analytics as ga
 
     jsc = spark.sparkContext._jsc
-    run = {
-        "k_core": lambda e, n: k_core(e, k=2).count() == 0,
-        "bfs_distances": lambda e, n: bfs_distances(
-            e, spark.createDataFrame([("v00",)], "node string"), max_hops=40
-        ).count() == n,
+    one = lambda: spark.createDataFrame([("v00",)], "node string")
+    graph, sizes, run = {
+        "k_core": (_chain, (4, 32), lambda e, n: ga.k_core(e, k=2).count() == 0),
+        "bfs_distances": (_chain, (4, 32), lambda e, n: ga.bfs_distances(
+            e, one(), max_hops=40).count() == n),
+        "sssp": (_chain, (4, 32), lambda e, n: ga.sssp(
+            e.withColumn("weight", F.lit(1.0)), one(), max_iters=40).count() == n),
+        "harmonic_centrality": (_chain, (4, 32), lambda e, n: ga.harmonic_centrality(
+            e, one(), max_hops=40).count() == n - 1),
+        "k_truss": (_truss_strip, (4, 32), lambda e, n: ga.k_truss(e, k=4).count() == 0),
+        "random_walks": (_chain, (4, 32), lambda e, n: ga.random_walks(
+            e, walk_len=40, walks_per_node=1).count() == n * (n + 1) // 2 - 1),
+        "strongly_connected_components": (_tournament, (4, 8), lambda e, n: (
+            ga.strongly_connected_components(e).count() == n)),
     }[loop]
 
     def growth(n):
-        e = _edges(spark, [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n - 1)])
+        e = _edges(spark, graph(n))
         before = set(jsc.getPersistentRDDs().keySet().toArray())
         assert run(e, n)
         return len(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
 
-    assert growth(4) == growth(32)
+    assert growth(sizes[0]) == growth(sizes[1])
+
+
+def test_round_bookkeeping_lives_in_the_loop_driver():
+    """No for/while body in graph_analytics or sparql releases a cut or
+    probes with isEmpty/take(1): every frontier loop's cut, probe and
+    release run in session.seminaive."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "wbkg"
+    for name in ("graph_analytics.py", "sparql.py"):
+        tree = ast.parse((root / name).read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.For, ast.While)):
+                body = "\n".join(ast.unparse(b) for b in node.body + node.orelse)
+                assert not re.search(r"\brelease\(|\.isEmpty\(\)|\.take\(1\)", body), (
+                    f"{name}:{node.lineno}"
+                )

@@ -146,6 +146,26 @@ def test_large_alias_graph_takes_distributed_cc(spark, monkeypatch):
     assert cmap.count() == 10  # 5 abbr<->expansion components, 2 members each
 
 
+def test_collect_if_small_runs_one_job(spark, job_count, monkeypatch):
+    """The size gate collects a multi-partition frame that fits in ONE
+    job (limit().collect() scanned one partition, then the rest in a
+    second), as tuples, and still returns None above the threshold."""
+    import wbkg.canonicalize as cz
+    from wbkg.session import cut, release
+
+    pairs = [(f"a{i:02d}", f"b{i:02d}") for i in range(30)]
+    frame = cut(spark.createDataFrame(pairs, "src string, dst string").repartition(4), eager=True)
+    assert frame.rdd.getNumPartitions() == 4
+    rows, jobs = job_count(lambda: cz.collect_if_small(frame))
+    assert jobs == 1
+    assert sorted(rows) == pairs
+    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 29)
+    assert cz.collect_if_small(frame) is None
+    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 30)
+    assert len(cz.collect_if_small(frame)) == 30
+    release(frame)
+
+
 def test_sanitize_full_latin_fold(spark):
     """NFKD-generated fold table + ligature folds: parity between the
     Catalyst expression and the Python twin on exotic Latin."""
@@ -304,20 +324,26 @@ def test_incremental_canonical_map_idempotent_replay(spark):
     assert advance_map(held, b1) == held and advance_map(held, []) == held
 
 
-def _plan_leaves(df) -> list:
+def _plan_leaves(df, origins=None) -> list:
+    """The optimized plan's leaf names; a cut listed in `origins` (its RDD
+    id -> the plan it cut) is looked through to that plan's leaves."""
     it = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
     out = []
     while it.hasNext():
-        out.append(it.next().nodeName())
+        leaf = it.next()
+        origin = (origins or {}).get(leaf.rdd().id()) if leaf.nodeName() == "LogicalRDD" else None
+        out += [leaf.nodeName()] if origin is None else _plan_leaves(origin, origins)
     return out
 
 
-def test_driver_built_tables_are_local_relations(spark):
+def test_driver_built_tables_are_local_relations(spark, monkeypatch):
     """Every table built from driver rows is a LocalRelation, empty or not:
     its scans run in the JVM. createDataFrame(<python list>, ddl) would plan
     a Python-RDD LogicalRDD, whose every scan runs Python tasks. All inputs
     here are LocalRelations too, so any LogicalRDD leaf is a driver table
-    built the other way."""
+    built the other way — once the cuts a loop driver makes (DESCRIBE's
+    closure) are looked through to the plans they cut."""
+    import wbkg.session as session
     from wbkg.canonicalize import canonical_map_from_edges, incremental_canonical_map
     from wbkg.materialize import metadata_triples
     from wbkg.ops.decontam import bloom_bitmap
@@ -328,6 +354,15 @@ def test_driver_built_tables_are_local_relations(spark):
     from wbkg.sparql import sparql_describe, sparql_select, sparql_update
     from wbkg.synth import entity_dict_df, gen_metadata_df
 
+    origins = {}
+    real_cut = session.cut
+
+    def recording_cut(df, eager=False):
+        out = real_cut(df, eager)
+        origins[session._cut_rdd(out).id()] = df
+        return out
+
+    monkeypatch.setattr(session, "cut", recording_cut)
     empty = local_frame(spark, [], "member string, canonical_id string")
     assert _plan_leaves(empty) == ["LocalRelation"] and empty.collect() == []
 
@@ -363,7 +398,7 @@ def test_driver_built_tables_are_local_relations(spark):
         "bloom bitmap": bloom_bitmap(docs.select(F.col("text").alias("k")), "k", 64, 2),
     }
     for name, df in cases.items():
-        leaves = _plan_leaves(df)
+        leaves = _plan_leaves(df, origins)
         assert "LocalRelation" in leaves and "LogicalRDD" not in leaves, (name, leaves)
 
 

@@ -15,28 +15,31 @@ Operators:
 - similarity: neighbor_jaccard, link_prediction (common neighbors +
   Adamic-Adar); degree_stats.
 
-Loops of one shape share one private kernel: _triangle_pairs (degree-
-ordered adjacency intersection: triangle_count, k_truss,
-clustering_coefficient), _frontier_bfs (bfs_distances,
-harmonic_centrality), _power_iteration (pagerank, personalized_pagerank)
-and canonicalize.min_label_fixpoint (strongly_connected_components,
-connected components and, with a weighted-vote candidate,
-communities.label_propagation). The others — sssp, k_core, k_truss's peel, hits,
-katz, random_walks — are one loop each.
+Loops of one shape share one kernel: _triangle_pairs (degree-ordered
+adjacency intersection: triangle_count, k_truss, clustering_coefficient),
+_power_iteration (pagerank, personalized_pagerank),
+canonicalize.min_label_fixpoint (the floods of
+strongly_connected_components, connected components and, with a
+weighted-vote candidate, communities.label_propagation) and
+session.seminaive, the frontier loop: _frontier_bfs (bfs_distances,
+harmonic_centrality), sssp, k_core, k_truss, random_walks and the rounds of
+strongly_connected_components, as well as sparql's `+` path closure and
+DESCRIBE's blank-node closure. hits and katz are one loop each.
 
 Lineage: every loop cuts its plan with session.cut, a localCheckpoint
 whose size estimate restarts, so planning a round never multiplies the
 estimates of the rounds before it. Static inputs (the deduped edge list,
 out-degrees) are cut once; a loop's growing state is lazily cut every
 RANK_CHECKPOINT_EVERY / SETTLED_CHECKPOINT_EVERY /
-SEED_SETTLED_CHECKPOINT_EVERY rounds. Under AQE a lazy cut runs its
-plan's shuffle stages as it is made; its last stage and persisted blocks
-wait for the round's probe (isEmpty, count, a broadcast scalar) or the
-caller's action. The loops with a per-round probe (k_core,
-_frontier_bfs, sssp) release the state a probe has shown superseded, so
-storage holds a bounded number of rounds, and never the returned table.
-pagerank, personalized_pagerank, katz and hits have no per-round action,
-so they release nothing.
+SEED_SETTLED_CHECKPOINT_EVERY rounds (every round for k_core, k_truss
+and SCC, whose state is replaced). Under AQE a lazy cut runs its plan's
+shuffle stages as it is made; its last stage and persisted blocks wait
+for the round's probe (isEmpty, a broadcast scalar) or the caller's
+action. The seminaive loops probe every round and release by the
+driver's one rule (see session.seminaive), so storage holds a bounded
+number of rounds, and never the returned table. pagerank,
+personalized_pagerank, katz and hits have no per-round action, so they
+release nothing.
 
 At 100 TB: ranks/degrees shuffle (node_id, double) pairs only — never
 payloads; the triangle kernel's adjacency arrays are O(sqrt(m)) under
@@ -50,13 +53,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from wbkg.canonicalize import min_label_fixpoint
-from wbkg.session import cut, release
+from wbkg.session import cut, seminaive
 
 # Lazy localCheckpoint cadence, in rounds, of each loop's growing state:
 # the rank vectors (pagerank, personalized_pagerank, katz), the settled
-# distance table (bfs_distances, sssp) and harmonic's (seed, node) settled
-# table. These are the values the per-call options they replace defaulted
-# to; no caller set another.
+# distance table (bfs_distances, sssp) and the walk table (random_walks),
+# and harmonic's (seed, node) settled table. These are the values the
+# per-call options they replace defaulted to; no caller set another.
 RANK_CHECKPOINT_EVERY = 2
 SETTLED_CHECKPOINT_EVERY = 4
 SEED_SETTLED_CHECKPOINT_EVERY = 2
@@ -283,41 +286,29 @@ def _frontier_bfs(
     (harmonic_centrality's `seed`) rides along, so each of its values keeps
     separate distances. `directed=False` expands along reversed edges too.
 
-    Each round joins only the FRONTIER — keys first settled last round —
-    against the edge list and anti-joins the settled set, so per-round
-    shuffle volume is O(frontier out-edges), never O(V): early rounds touch
-    a sliver of the edge table and Catalyst broadcasts the frontier while
-    it is small. The frontier is lazily checkpointed (under AQE the cut
-    runs its shuffle-map stages as it is made, one job each) and its
-    emptiness probe materializes it; the growing settled table is lazily
-    checkpointed every `cadence` hops."""
+    A session.seminaive loop: each round joins only the FRONTIER — keys
+    first settled last round — against the edge list and anti-joins the
+    settled set, so per-round shuffle volume is O(frontier out-edges),
+    never O(V): early rounds touch a sliver of the edge table and Catalyst
+    broadcasts the frontier while it is small. The settled table is re-cut
+    every `cadence` hops."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     if not directed:
         e = cut(_symmetrize(e))
     keys = start.columns
-    settled = cut(start.select(*keys, F.lit(0).alias("dist")))
-    frontier, parts, stale = settled, [settled], []
-    for hop in range(1, max_hops + 1):
-        nxt = (
+
+    def expand(frontier, settled, hop):
+        return (
             frontier.join(e, frontier["node"] == e["src"])
             .select(*keys[:-1], F.col("dst").alias("node"))
             .distinct()
             .join(settled, keys, "left_anti")
             .select(*keys, F.lit(hop).alias("dist"))
-            .transform(cut)
         )
-        if nxt.isEmpty():
-            release(nxt)
-            break
-        # a frontier only comes out of the anti join that read all of
-        # settled, so its last cut is materialized: what it covers is stale
-        release(*stale)
-        settled = settled.unionByName(nxt)
-        parts.append(nxt)
-        if hop % cadence == 0:
-            settled = cut(settled)
-            stale, parts = parts, [settled]
-        frontier = nxt
+
+    settled, _ = seminaive(
+        start.select(*keys, F.lit(0).alias("dist")), expand, max_rounds=max_hops, cadence=cadence
+    )
     return settled
 
 
@@ -449,45 +440,35 @@ def sssp(
     last round against the edge list, offers dist+w to their neighbors,
     and keeps offers strictly below the incumbent. Per-round shuffle
     volume is O(frontier out-edges) + one partial-agg min per touched
-    node — never O(V). Terminates when no node improves (checked on the
-    localCheckpoint-ed frontier, which is materialized anyway) or at
-    max_iters, whichever first."""
+    node — never O(V). A session.seminaive loop whose new rows are the
+    improvements: it ends when no node improves or at max_iters,
+    whichever first."""
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("w"),
     )
-    dist = sources.select(
-        F.col(sources.columns[0]).alias("node"), F.lit(0.0).alias("dist")
-    ).transform(cut)
-    frontier, parts, stale = dist, [dist], []
-    for it in range(max_iters):
+
+    def expand(frontier, dist, _):
         offers = (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand"))
             .groupBy("node")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
+        return (
             offers.join(dist, "node", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select("node", F.col("cand").alias("dist"))
-            .transform(cut)  # one probe job per round
         )
-        if improved.isEmpty():
-            release(improved)
-            break
-        release(*stale)  # as in _frontier_bfs: the join read all of dist
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        parts.append(improved)
-        if (it + 1) % SETTLED_CHECKPOINT_EVERY == 0:
-            dist = cut(dist)
-            stale, parts = parts, [dist]
-        frontier = improved
+
+    def merge(dist, improved):
+        return dist.unionByName(improved).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist, _ = seminaive(
+        sources.select(F.col(sources.columns[0]).alias("node"), F.lit(0.0).alias("dist")),
+        expand, merge, max_iters, SETTLED_CHECKPOINT_EVERY,
+    )
     return dist
 
 
@@ -508,52 +489,41 @@ def k_core(
     Undirected simple-graph semantics: the edge list is symmetrized and
     deduped, self-loops dropped, so degree = distinct-neighbor count.
 
-    Plan: INCREMENTAL peel (the textbook delta formulation). The
-    symmetrized edge list is checkpointed ONCE and never rewritten; the
-    loop maintains only the node-sized degree table. Per round: nodes
-    under k drop; each dropped node decrements its still-alive neighbors
-    by one partial-agg count over the static edge list semi-joined
-    against the (small, AQE-broadcast) drop set. deg_{t+1}(v) =
-    deg_t(v) - |N(v) ∩ drop_t| is exactly the degree of v in the peeled
-    subgraph, so the round-by-round state — and the fixpoint — is
-    identical to the r06 re-materialize-the-edges peel, which rebuilt
-    and re-persisted the full edge list every round. Each round is ONE
-    job (lazy checkpoints; the emptiness probe on the drop set
-    materializes the new degree table). Peel depth is the graph's
-    degeneracy-ordering depth, not O(V) — tens of rounds on power-law
-    graphs regardless of scale."""
+    Plan: INCREMENTAL peel (the textbook delta formulation), a
+    session.seminaive loop whose state is replaced each round and whose
+    new rows are the drop set. The symmetrized edge list is checkpointed
+    ONCE and never rewritten; the loop maintains only the node-sized
+    degree table. Per round: nodes under k drop; each dropped node
+    decrements its still-alive neighbors by one partial-agg count over the
+    static edge list semi-joined against the (small, AQE-broadcast) drop
+    set. deg_{t+1}(v) = deg_t(v) - |N(v) ∩ drop_t| is exactly the degree
+    of v in the peeled subgraph, so the round-by-round state — and the
+    fixpoint — is identical to re-materializing the peeled edge list every
+    round. Peel depth is the graph's degeneracy-ordering depth, not O(V) —
+    tens of rounds on power-law graphs regardless of scale."""
     e = _symmetrize(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     ).transform(cut)
-    deg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("_deg"))
-        .transform(cut)
-    )
-    stale = ()
-    for _ in range(max_iters):
-        drop = cut(deg.filter(F.col("_deg") < k).select("node"))
-        empty = drop.isEmpty()  # reads all of deg: the state deg read is stale
-        release(*stale)
-        if empty:
-            release(drop)
-            break
+
+    def merge(deg, drop):
         dec = (
             e.join(drop.withColumnRenamed("node", "src"), "src", "left_semi")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.count("*").alias("_dec"))
         )
-        stale = (deg, drop)
-        deg = (
+        return (
             deg.join(drop, "node", "left_anti")
             .join(dec, "node", "left")
-            .select(
-                "node",
-                (F.col("_deg") - F.coalesce("_dec", F.lit(0))).alias("_deg"),
-            )
-            .transform(cut)
+            .select("node", (F.col("_deg") - F.coalesce("_dec", F.lit(0))).alias("_deg"))
         )
+
+    deg, _ = seminaive(
+        e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("_deg")),
+        lambda _, deg, __: deg.filter(F.col("_deg") < k).select("node"),
+        merge,
+        max_iters,
+    )
     return deg.select("node", F.col("_deg").cast("int").alias("degree"))
 
 
@@ -725,68 +695,38 @@ def k_truss(
     Undirected simple-graph semantics: canonical (a < b) edges, deduped,
     self-loops dropped.
 
-    Iterative support peel. Each round explodes _triangle_pairs' per-edge
-    intersections into triangles (each materializes ONCE, never Σ outdeg²
-    wedge rows), then credit
-    all three canonical edges of each triangle (one explode of a
-    3-element array) and fold support in one partial-agg groupBy. Edges
-    under k-2 drop; repeat until the edge count is stable. The fixpoint
-    count rides a LAZY session.cut every round (nothing recomputed; under
-    AQE the cut runs the round's shuffle-map stages as it is made, one job
-    each, and the count runs the last). Peel depth is bounded by the
-    triangle-density profile, not V — same argument as k_core. If the loop exhausts
-    max_iters without converging, support is recomputed on the FINAL
-    edge set so reported supports never count triangles through removed
-    edges."""
+    Iterative support peel, a session.seminaive loop whose state — each
+    edge with its support — is replaced each round and whose new rows are
+    the edges under support k-2. Support explodes _triangle_pairs'
+    per-edge intersections into triangles (each materializes ONCE, never
+    Σ outdeg² wedge rows), credits all three canonical edges of each
+    triangle (one explode of a 3-element array) and folds in one
+    partial-agg groupBy. A round drops the edges under k-2 and recomputes
+    support on the survivors, so the state's supports always count the
+    triangles of its own edge set, whether or not the peel converged
+    within max_iters. Peel depth is bounded by the triangle-density
+    profile, not V — same argument as k_core."""
 
-    def _support(cur: DataFrame) -> DataFrame:
+    def with_support(cur: DataFrame) -> DataFrame:
         tris = _triangle_pairs(cur, _degrees(cur)).select(
             "u", "v", F.explode("common").alias("w")
         )
+        edge = lambda x, y: F.struct(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
         credit = tris.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-                    ),
-                    F.struct(
-                        F.least("u", "w").alias("a"), F.greatest("u", "w").alias("b")
-                    ),
-                    F.struct(
-                        F.least("v", "w").alias("a"), F.greatest("v", "w").alias("b")
-                    ),
-                )
-            ).alias("e")
+            F.explode(F.array(edge("u", "v"), edge("u", "w"), edge("v", "w"))).alias("e")
         ).select("e.a", "e.b")
-        return credit.groupBy("a", "b").agg(
-            F.count("*").cast("int").alias("support")
+        support = credit.groupBy("a", "b").agg(F.count("*").alias("support"))
+        return cur.join(support, ["a", "b"], "left").select(
+            "a", "b", F.coalesce("support", F.lit(0)).cast("int").alias("support")
         )
 
-    cur = cut(_undirected(edges, src, dst))
-    n_edges = cur.count()
-    support = None
-    converged = n_edges == 0
-    for it in range(max_iters):
-        support = _support(cur)
-        nxt = cur.join(
-            support.filter(F.col("support") >= k - 2).select("a", "b"),
-            ["a", "b"],
-            "left_semi",
-        ).transform(cut)
-        n_next = nxt.count()
-        if n_next == n_edges:
-            cur = nxt
-            converged = True
-            break
-        cur, n_edges = nxt, n_next
-    if support is None or not converged:
-        # max_iters exhausted (or empty input): supports from the last
-        # in-loop computation could count triangles through edges no
-        # longer present — recompute on the final edge set
-        support = _support(cur)
-    return cur.join(support, ["a", "b"], "left").select(
-        "a", "b", F.coalesce("support", F.lit(0)).cast("int").alias("support")
+    truss, _ = seminaive(
+        with_support(_undirected(edges, src, dst)),
+        lambda _, cur, __: cur.filter(F.col("support") < k - 2).select("a", "b"),
+        lambda cur, _: with_support(cur.filter(F.col("support") >= k - 2).select("a", "b")),
+        max_iters,
     )
+    return truss
 
 
 def hits(
@@ -895,13 +835,15 @@ def random_walks(
     dst) — a deterministic total order.
 
     Plan: the slotted neighbor table and out-degrees build once (one
-    window + one partial agg on src, co-partitioned) and localCheckpoint;
-    each step is an equi-join of the live frontier on (node, slot) —
-    the slot is computed BEFORE the join so there is no outdeg fan-out —
-    shuffle volume O(live walks), never O(E). Skew bound: walks are keyed
-    by (start, idx) so hot nodes spread across walk ids; the neighbor
-    join key is the current node — AQE skew-split is the second line on
-    power-law graphs."""
+    window + one partial agg on src, co-partitioned) and are cut; the walk
+    table is a session.seminaive loop whose round t equi-joins the walks
+    at step t-1 on (node, slot) — the slot is computed BEFORE the join so
+    there is no outdeg fan-out — so shuffle volume is O(live walks), never
+    O(E). The round reads its walks from the accumulated table (a filter
+    on the cached scan), so each re-cut of that table is stored by the
+    round after it. Skew bound: walks are keyed by (start, idx) so hot
+    nodes spread across walk ids; the neighbor join key is the current
+    node — AQE skew-split is the second line on power-law graphs."""
     from pyspark.sql import Window
 
     if walk_len < 1 or walks_per_node < 1:
@@ -938,10 +880,9 @@ def random_walks(
     slots = nbr.select(
         F.col("src").alias("_s"), F.col("rn").alias("_rn"), F.col("dst").alias("_d")
     ).transform(cut)
-    out = starts
-    frontier = cut(starts)
-    for t in range(1, walk_len + 1):
-        stepped = frontier.join(deg, "node").select(
+
+    def expand(_, walks, t):
+        stepped = walks.filter(F.col("step") == t - 1).join(deg, "node").select(
             "walk_id",
             "node",
             (
@@ -957,23 +898,15 @@ def random_walks(
                 % F.col("outdeg")
             ).alias("slot"),
         )
-        nxt = (
-            stepped.join(
-                slots,
-                (stepped["node"] == slots["_s"]) & (stepped["slot"] == slots["_rn"]),
-            )
-            .select(
-                "walk_id",
-                F.lit(t).alias("step"),
-                F.col("_d").alias("node"),
-            )
-            .transform(cut)  # one probe job per step
-        )
-        if nxt.isEmpty():
-            break
-        out = out.unionByName(nxt)
-        frontier = nxt
-    return out
+        return stepped.join(
+            slots,
+            (stepped["node"] == slots["_s"]) & (stepped["slot"] == slots["_rn"]),
+        ).select("walk_id", F.lit(t).alias("step"), F.col("_d").alias("node"))
+
+    walks, _ = seminaive(
+        starts, expand, max_rounds=walk_len, cadence=SETTLED_CHECKPOINT_EVERY
+    )
+    return walks
 
 
 def harmonic_centrality(
@@ -1111,14 +1044,16 @@ def strongly_connected_components(
 
     Both floods are canonicalize.min_label_fixpoint run to CONVERGENCE
     (one eager cut per probe of two steps) — probe count tracks the remaining
-    subgraph's diameter, not V. State is (node, label) pairs only."""
+    subgraph's diameter, not V. State is (node, label) pairs only. The
+    rounds are a session.seminaive loop over every node with its scc_id
+    (null until labeled), replaced each round; the new rows are the nodes
+    still unlabeled, and the merge runs the round on them. A round's edge
+    and label tables are released once the next round's probe has stored
+    the state they feed."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = cut(_node_set(e))
-    remaining = nodes
-    out = None
-    # every round peels at least the minimal color's SCC, so this
-    # terminates with every node labeled
-    while not remaining.isEmpty():
+    nodes = _node_set(e)
+
+    def peel(state: DataFrame, remaining: DataFrame) -> DataFrame:
         re = (
             e.join(remaining.withColumnRenamed("node", "src"), "src", "left_semi")
             .join(remaining.withColumnRenamed("node", "dst"), "dst", "left_semi")
@@ -1145,24 +1080,20 @@ def strongly_connected_components(
         labeled = (
             color.join(f.withColumnRenamed("label", "f"), "node")
             .filter(F.col("color") == F.col("f"))
-            .select(F.col("node").alias("member"), F.col("color").alias("scc_id"))
-            .transform(cut)
+            .select("node", F.col("color").alias("_scc"))
         )
-        out = (
-            labeled
-            if out is None
-            else out.unionByName(labeled).transform(cut)
+        return state.join(labeled, "node", "left").select(
+            "node", F.coalesce("scc_id", "_scc").alias("scc_id")
         )
-        remaining = (
-            remaining.join(
-                labeled.select(F.col("member").alias("node")), "node", "left_anti"
-            ).transform(cut)
-        )
-    if out is None:
-        return nodes.select(
-            F.col("node").alias("member"), F.col("node").alias("scc_id")
-        ).limit(0)
-    return out
+
+    # every round peels at least the minimal color's SCC, so this
+    # terminates with every node labeled
+    state, _ = seminaive(
+        nodes.select("node", F.lit(None).cast(nodes.schema["node"].dataType).alias("scc_id")),
+        lambda _, state, __: state.filter(F.col("scc_id").isNull()).select("node"),
+        peel,
+    )
+    return state.select(F.col("node").alias("member"), "scc_id")
 
 
 def katz_centrality(

@@ -11,7 +11,9 @@ Configs chosen for the 100 TB target (and harmless at test scale):
 
 from __future__ import annotations
 
+import itertools
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -92,6 +94,8 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 
 _LONG_MAX = (1 << 63) - 1
+# the cuts made so far in the seminaive round running on this thread
+_ROUND = threading.local()
 
 
 def cut(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -109,20 +113,79 @@ def cut(df: DataFrame, eager: bool = False) -> DataFrame:
     leaf = cp._jdf.logicalPlan()
     args = leaf.otherCopyArgs()  # (session, originStats, originConstraints)
     stats = args.apply(1)
-    if stats.isEmpty() or stats.get().sizeInBytes() <= _LONG_MAX:
-        return cp
-    jvm = cp.sparkSession._jvm
-    leaf = leaf.copy(
-        leaf.output(), leaf.rdd(), leaf.outputPartitioning(), leaf.outputOrdering(),
-        leaf.isStreaming(), leaf.stream(), args.apply(0), jvm.scala.Option.apply(None),
-        args.apply(2),
-    )
-    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(args.apply(0), leaf),
-                     cp.sparkSession)
+    if not (stats.isEmpty() or stats.get().sizeInBytes() <= _LONG_MAX):
+        jvm = cp.sparkSession._jvm
+        leaf = leaf.copy(
+            leaf.output(), leaf.rdd(), leaf.outputPartitioning(), leaf.outputOrdering(),
+            leaf.isStreaming(), leaf.stream(), args.apply(0), jvm.scala.Option.apply(None),
+            args.apply(2),
+        )
+        cp = DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(args.apply(0), leaf),
+                       cp.sparkSession)
+    made = getattr(_ROUND, "cuts", None)
+    if made is not None:
+        made.append(cp)
+    return cp
+
+
+def _cut_rdd(df: DataFrame):
+    """The checkpointed RDD behind a cut (or a projection of one)."""
+    return df._jdf.queryExecution().analyzed().collectLeaves().head().rdd()
 
 
 def release(*dfs: DataFrame) -> None:
     """Free the executor blocks behind materialized cuts (or projections of
     one) that nothing still reads: their rows cannot be recomputed."""
     for df in dfs:
-        df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().unpersist(False)
+        _cut_rdd(df).unpersist(False)
+
+
+def _stored(df: DataFrame) -> bool:
+    """Whether every partition of the cut behind df is in the block store,
+    so reading it no longer reads what its plan read."""
+    rdd = _cut_rdd(df)
+    master = rdd.context().env().blockManager().master()
+    block = df.sparkSession._jvm.org.apache.spark.storage.RDDBlockId
+    return all(master.contains(block(rdd.id(), i)) for i in range(rdd.getNumPartitions()))
+
+
+def seminaive(seed: DataFrame, expand, merge=DataFrame.unionByName,
+              max_rounds: int | None = None, cadence: int = 1) -> tuple[DataFrame, bool]:
+    """The one frontier loop -> (total, converged). `seed` is cut and is
+    the first total and frontier. Round r (from 1) cuts new =
+    expand(frontier, total, r) and probes it once with its RDD's isEmpty
+    (no job on a cut without partitions, where Dataset.isEmpty runs one);
+    an empty probe ends the loop, converged. Otherwise total becomes
+    merge(total, new), new the frontier, and total is re-cut every
+    `cadence` rounds; the loop ends unconverged after max_rounds (None:
+    no bound).
+
+    Release: the cuts made during rounds (by the driver, expand, merge or
+    what they call) are superseded by the next re-cut of total and are
+    released after a probe once that re-cut is stored in full, so no lazy
+    cut still reads them — even when, on an empty probe, AQE planned away
+    a join whose stage was still computing the re-cut. The returned total
+    and what it reads are never released. Storage stays bounded when
+    expand reads all of total and no cut made in a round outlives it
+    other than through total."""
+    total = frontier = cut(seed)
+    held, stale = [total], []
+    outer = getattr(_ROUND, "cuts", None)
+    for rnd in itertools.count(1) if max_rounds is None else range(1, max_rounds + 1):
+        _ROUND.cuts = held
+        try:
+            new = cut(expand(frontier, total, rnd))
+            empty = _cut_rdd(new).isEmpty()
+            if stale and _stored(held[0]):
+                release(*stale)
+                stale = []
+            if empty:
+                release(new)
+                return total, True
+            total, frontier = merge(total, new), new
+            if rnd % cadence == 0:
+                total = cut(total)
+                stale, held = stale + held[:-1], [total]
+        finally:
+            _ROUND.cuts = outer
+    return total, False

@@ -96,7 +96,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wbkg.materialize import RDF_TYPE, RDF_TYPE_IRI
-from wbkg.session import cut, local_frame, release
+from wbkg.session import cut, local_frame, seminaive
 
 _TOKEN = re.compile(
     r"""\?[A-Za-z_][\w]*   # variable
@@ -1039,17 +1039,15 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     closure, so reachable path length grows as 2^round — max_iters=16
     covers diameters past 65k, and a graph that still hasn't converged
     warns instead of silently truncating (the contract of
-    canonicalize.connected_components). An eager localCheckpoint per round
-    truncates lineage; each materialized round releases the closure and
-    frontier it superseded, so storage holds one closure however many
-    rounds run. Property-path graphs are vocabulary-bounded
-    here (edges over a filtered predicate), not corpus-bounded."""
-    base = cut(step.distinct(), eager=True)
-    total = frontier = base
-    for _ in range(max_iters):
+    canonicalize.connected_components). The rounds are session.seminaive's,
+    which re-cuts the closure every round and releases what it supersedes.
+    Property-path graphs are vocabulary-bounded here (edges over a
+    filtered predicate), not corpus-bounded."""
+
+    def expand(frontier, total, _):
         # nonlinear seminaive: path(a,b) :- path(a,m), path(m,b) needs BOTH
         # delta-first and delta-second compositions for completeness
-        nxt = (
+        return (
             frontier.withColumnRenamed("b", "_m")
             .join(total.withColumnRenamed("a", "_m"), "_m")
             .select("a", "b")
@@ -1059,16 +1057,11 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
                 .select("a", "b")
             )
             .distinct()
+            .join(total, ["a", "b"], "left_anti")
         )
-        new = cut(nxt.join(total, ["a", "b"], "left_anti"), eager=True)
-        if not new.take(1):
-            release(new)
-            break
-        grown = cut(total.unionByName(new), eager=True)
-        release(frontier)  # round one releases base twice: a no-op
-        release(total)
-        total, frontier = grown, new
-    else:
+
+    total, converged = seminaive(step.distinct(), expand, max_rounds=max_iters)
+    if not converged:
         import warnings
 
         warnings.warn(
@@ -1078,8 +1071,6 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
             RuntimeWarning,
             stacklevel=2,
         )
-    if frontier is not total:
-        release(frontier)
     return total
 
 
@@ -1437,7 +1428,7 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
     Evaluation contract: compilation is lazy (a DataFrame plan comes back
     untouched) EXCEPT for (1) `+`/`*` property paths — the transitive
     closure is an inherently iterative fixpoint, so _path_closure runs its
-    doubling rounds (distinct/localCheckpoint/take per round, bounded by
+    doubling rounds (a cut and an isEmpty probe per round, bounded by
     PATH_MAX_ITERS) while this function builds the plan — and (2) the
     first query on an `edges` DataFrame object where some group joins >= 3
     triple patterns, which pays ONE partial-aggregated pred-stats job to
@@ -1874,10 +1865,13 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
     Plan shape: constants become an isin filter on the subject scan;
     variables run the WHERE block through the SELECT machinery and
     left-semi-join the edges table against the distinct binding set — no
-    collect, targets stay distributed. The blank-node closure iterates like
-    the property-path fixpoint (bounded, eager take(1) per round — same
-    evaluation contract as `+`/`*` paths; graphs here hold bnodes only from
-    Turtle-ingested property lists, so rounds are shallow)."""
+    collect, targets stay distributed. The blank-node closure is a
+    session.seminaive loop over the described triples, depth-bounded like
+    rdflib's at 8 rounds; each round adds the triples of the blank-node
+    objects the last round added that are not yet subjects. Its rounds run
+    while the plan is built — the evaluation contract of `+`/`*` paths;
+    graphs here hold bnodes only from Turtle-ingested property lists, so
+    rounds are shallow."""
     m = re.search(
         r"(?is)^" + _PREFIX_BLOCK + r"DESCRIBE\s+((?:[^\s{]+\s*)+?)(WHERE\s*\{.*)?$",
         query.strip(),
@@ -1907,27 +1901,25 @@ def sparql_describe(edges: DataFrame, query: str) -> DataFrame:
             tgt = tgt.unionByName(
                 local_frame(edges.sparkSession, [(c,) for c in consts], "subj string")
             )
-        tgt = tgt.distinct()
         base = edges.join(tgt, "subj", "left_semi")
-        described = tgt
     else:
         base = edges.filter(F.col("subj").isin(consts))
-        described = base.select("subj").distinct()
 
-    out, frontier = base, base
-    for _ in range(8):  # CBD blank-node closure, depth-bounded like rdflib's
-        bn = (
-            frontier.filter(F.col("obj").startswith("_:"))
+    def expand(frontier, out, rnd):
+        # round 1's frontier is the seed's triples, later ones the blank
+        # nodes the round before added
+        rows = frontier if rnd == 1 else edges.join(frontier, "subj", "left_semi")
+        return (
+            rows.filter(F.col("obj").startswith("_:"))
             .select(F.col("obj").alias("subj"))
             .distinct()
-            .join(described, "subj", "left_anti")
+            .join(out.select("subj"), "subj", "left_anti")
         )
-        if not bn.take(1):
-            break
-        add = edges.join(bn, "subj", "left_semi")
-        out = out.unionByName(add)
-        described = described.unionByName(bn)
-        frontier = add
+
+    out, _ = seminaive(
+        base, expand, lambda out, bn: out.unionByName(edges.join(bn, "subj", "left_semi")),
+        max_rounds=8,
+    )
     return out.dropDuplicates(["subj", "pred", "obj"])
 
 
