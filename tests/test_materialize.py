@@ -146,26 +146,6 @@ def test_large_alias_graph_takes_distributed_cc(spark, monkeypatch):
     assert cmap.count() == 10  # 5 abbr<->expansion components, 2 members each
 
 
-def test_collect_if_small_runs_one_job(spark, job_count, monkeypatch):
-    """The size gate collects a multi-partition frame that fits in ONE
-    job (limit().collect() scanned one partition, then the rest in a
-    second), as tuples, and still returns None above the threshold."""
-    import wbkg.canonicalize as cz
-    from wbkg.session import cut, release
-
-    pairs = [(f"a{i:02d}", f"b{i:02d}") for i in range(30)]
-    frame = cut(spark.createDataFrame(pairs, "src string, dst string").repartition(4), eager=True)
-    assert frame.rdd.getNumPartitions() == 4
-    rows, jobs = job_count(lambda: cz.collect_if_small(frame))
-    assert jobs == 1
-    assert sorted(rows) == pairs
-    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 29)
-    assert cz.collect_if_small(frame) is None
-    monkeypatch.setattr(cz, "LOCAL_CC_THRESHOLD", 30)
-    assert len(cz.collect_if_small(frame)) == 30
-    release(frame)
-
-
 def test_sanitize_full_latin_fold(spark):
     """NFKD-generated fold table + ligature folds: parity between the
     Catalyst expression and the Python twin on exotic Latin."""

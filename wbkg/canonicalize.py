@@ -178,20 +178,16 @@ LOCAL_CC_THRESHOLD = 200_000
 
 
 def collect_if_small(edges: DataFrame) -> list | None:
-    """The rows of `edges`, as tuples, when there are at most
-    LOCAL_CC_THRESHOLD of them, else None — one limit collected as Arrow,
-    which runs as ONE job (limit().collect() scans one partition first,
-    then the rest in a second job).
+    """The rows of `edges` when there are at most LOCAL_CC_THRESHOLD of them,
+    else None — one limit+collect instead of persist + count + collect.
 
     This is the size gate of the adaptive physical strategy for CC,
     analogous to Spark's broadcast-vs-shuffle join choice: the alias graph is
     vocabulary-bounded (distinct surfaces + dictionary entries), NOT
     corpus-bounded, so it usually fits the driver by orders of magnitude;
     the iterative DataFrame path handles the cases that don't."""
-    table = edges.limit(LOCAL_CC_THRESHOLD + 1).toArrow()
-    if table.num_rows > LOCAL_CC_THRESHOLD:
-        return None
-    return list(zip(*(c.to_pylist() for c in table.columns)))
+    rows = edges.limit(LOCAL_CC_THRESHOLD + 1).collect()
+    return None if len(rows) > LOCAL_CC_THRESHOLD else rows
 
 
 def union_find(pairs, representative=min) -> dict:
