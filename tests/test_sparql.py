@@ -1487,9 +1487,10 @@ def test_update_matches_term_kind(spark):
 
 
 def test_update_where_delete_without_term_kind(spark):
-    """An object bound through a property path (alone or restricted by
-    VALUES) carries no term kind: a WHERE-driven DELETE of it matches
-    either kind, so a literal object is still deleted."""
+    """A WHERE-driven DELETE of an object bound through a property path
+    (alone or restricted by VALUES) deletes the literal: an alternation
+    carries the term kind, and a `+` closure carries none, so its delete
+    matches either kind."""
     from wbkg.sparql import sparql_update
 
     edges = spark.createDataFrame(
@@ -1504,6 +1505,67 @@ def test_update_where_delete_without_term_kind(spark):
     assert rows(out) == [("s:2", "p:label", "b", True), ("s:3", "p:x", "o", True)]
     out = sparql_update(edges, 'DELETE { ?s <p:x> ?o } WHERE { ?s <p:x>|<p:y> ?o VALUES ?o { "o" } }')
     assert rows(out) == [("s:1", "p:name", "a", True), ("s:2", "p:label", "b", True)]
+    out = sparql_update(edges, "DELETE { ?s <p:x> ?o } WHERE { ?s <p:x>+ ?o }")
+    assert rows(out) == [("s:1", "p:name", "a", True), ("s:2", "p:label", "b", True)]
+
+
+def test_update_through_path_keeps_term_kind(spark):
+    """A variable bound at the object end of a path that carries the term
+    kind (step, '^', '/', '|', '!') brings it into an update: the copy of
+    a literal stays a literal, and a DELETE through the path removes the
+    literal but not an IRI with the same text."""
+    from wbkg.sparql import sparql_update
+
+    one = spark.createDataFrame(
+        [("s:1", "p:name", "a", True)],
+        "subj string, pred string, obj string, obj_is_literal boolean",
+    )
+
+    def copies(where):
+        out = sparql_update(one, f"INSERT {{ ?s <p:copy> ?n }} WHERE {{ {where} }}")
+        return [tuple(r) for r in out.filter(F.col("pred") == "p:copy").collect()]
+
+    for where in (
+        "?s <p:name> ?n", "?s <p:name>|<p:label> ?n", "?s !<p:label> ?n",
+        "?s (<p:name>/^<p:name>)/<p:name> ?n",
+    ):
+        assert copies(where) == [("s:1", "p:copy", "a", True)], where
+    # an inverse step's object end is a subject: an IRI
+    assert copies("?s ^<p:name> ?n") == [("a", "p:copy", "s:1", False)]
+
+    edges = spark.createDataFrame(
+        [("s:1", "p:name", "a", True), ("s:1", "p:ref", "a", True), ("s:1", "p:ref", "a", False)],
+        "subj string, pred string, obj string, obj_is_literal boolean",
+    )
+    out = sparql_update(edges, "DELETE { ?s <p:ref> ?n } WHERE { ?s <p:name>|<p:label> ?n }")
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("s:1", "p:name", "a", True), ("s:1", "p:ref", "a", False),
+    ]
+
+
+def test_sequence_with_kindless_middle_unit(spark):
+    """A '/' sequence whose middle unit carries no term kind ('+', '?')
+    still compiles over edges with obj_is_literal and takes the last
+    unit's kind: the rows are the plain chain's, and an INSERT through it
+    copies a literal as a literal."""
+    from wbkg.sparql import sparql_update
+
+    edges = spark.createDataFrame(
+        [("s:1", "p:a", "m:1", False), ("m:1", "p:b", "m:2", False),
+         ("m:2", "p:c", "lit", True), ("m:1", "p:c", "x", True)],
+        "subj string, pred string, obj string, obj_is_literal boolean",
+    )
+
+    def rows(path):
+        q = f"SELECT ?s ?o WHERE {{ ?s {path} ?o }}"
+        return sorted(tuple(r) for r in sparql_select(edges, q).collect())
+
+    assert rows("<p:a>/<p:b>+/<p:c>") == [("s:1", "lit")]
+    assert rows("<p:a>/<p:b>?/<p:c>") == [("s:1", "lit"), ("s:1", "x")]
+    out = sparql_update(edges, "INSERT { ?s <p:copy> ?o } WHERE { ?s <p:a>/<p:b>+/<p:c> ?o }")
+    assert [tuple(r) for r in out.filter(F.col("pred") == "p:copy").collect()] == [
+        ("s:1", "p:copy", "lit", True),
+    ]
 
 
 def test_prefix_text_inside_literal_is_data():
@@ -1662,3 +1724,123 @@ def test_many_to_many_bgp_is_not_force_broadcast(spark):
         edges, "SELECT ?x ?y ?z WHERE { ?k <p:a> ?x . ?k <p:b> ?y . ?y <p:c> ?z }"
     )
     assert "strategy=broadcast" not in df._jdf.queryExecution().analyzed().toString()
+
+
+COMENTION = (
+    "PREFIX s: <http://schema.org/> "
+    'SELECT ?other (COUNT(DISTINCT ?c) AS ?n) WHERE { ?e s:name "alpha" . '
+    "?c s:mentions ?e . ?c s:mentions ?other . ?c <rdf:type> s:TextObject . "
+    "FILTER(?other != ?e) } GROUP BY ?other ORDER BY DESC(?n) ?other LIMIT 10"
+)
+
+
+def _comention_edges(spark):
+    s = "http://schema.org/"
+    rows = [(f"x:e{i}", s + "name", name) for i, name in enumerate(["alpha", "beta", "gamma"])]
+    for c, ents in enumerate([(0, 1), (0, 1, 2), (0, 2), (1, 2)]):
+        rows.append((f"x:c{c}", "rdf:type", s + "TextObject"))
+        rows += [(f"x:c{c}", s + "mentions", f"x:e{i}") for i in ents]
+    return spark.createDataFrame(rows, "subj string, pred string, obj string").persist()
+
+
+# Spark jobs building and collecting COMENTION over _comention_edges with a
+# warm stats memo, as the DataFrame-built plan ran them
+COMENTION_JOB_BUDGET = 6
+
+
+def test_select_plans_in_few_jvm_round_trips(spark, job_count, monkeypatch):
+    """A comention-shaped SELECT (4 patterns, FILTER, GROUP BY, ORDER BY,
+    LIMIT) over a persisted frame with a warm stats memo is built in at
+    most 60 py4j commands (the DataFrame-built plan took ~500), its plan
+    reads the cached table, the table stays cached, and the query starts
+    no more jobs than the DataFrame-built plan did."""
+    from py4j.clientserver import ClientServerConnection
+
+    edges = _comention_edges(spark)
+    want = [("x:e1", 2), ("x:e2", 2)]
+    assert [tuple(r) for r in sparql_select(edges, COMENTION).collect()] == want
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        sent.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    df = sparql_select(edges, COMENTION)
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 60
+    assert "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    rows, jobs = job_count(lambda: sparql_select(edges, COMENTION).collect())
+    assert [tuple(r) for r in rows] == want
+    assert jobs <= COMENTION_JOB_BUDGET
+    later = edges.filter(F.col("pred") == "rdf:type")._jdf.queryExecution()
+    assert "InMemoryTableScan" in later.executedPlan().toString()
+
+
+def test_select_compiler_builds_no_dataframe_operators():
+    """The SELECT compiler emits SQL text: outside the exempt functions no
+    function in wbkg/sparql.py calls a DataFrame operator. Exempt: the `+`
+    closure loop (_path_closure), the pred-stats job (_collect_pred_stats)
+    and the verbs built on sparql_select's result (CONSTRUCT, ASK,
+    DESCRIBE, UPDATE and their helpers). str.join calls (on a literal
+    separator) are not DataFrame joins."""
+    import ast
+    import pathlib
+
+    exempt = {
+        "_path_closure", "_collect_pred_stats", "sparql_construct", "sparql_ask",
+        "sparql_describe", "sparql_update", "_instantiate_template",
+        "_update_bindings", "_apply_delta",
+    }
+    ops = {"filter", "select", "join", "withColumn", "groupBy", "orderBy"}
+    path = pathlib.Path(__file__).resolve().parents[1] / "wbkg" / "sparql.py"
+    tree = ast.parse(path.read_text())
+    # top-level functions and class methods; a nested function is scanned
+    # as part of the one it is defined in
+    funcs = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
+        m for c in tree.body if isinstance(c, ast.ClassDef)
+        for m in c.body if isinstance(m, ast.FunctionDef)
+    ]
+    assert exempt <= {fn.name for fn in funcs}
+    for fn in funcs:
+        if fn.name in exempt:
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ops
+                and not isinstance(node.func.value, ast.Constant)
+            ):
+                raise AssertionError(f"{fn.name}:{node.lineno} calls .{node.func.attr}(")
+
+
+def test_count_distinct_exchanges_follow_solution_estimate(spark, monkeypatch):
+    """Over few estimated solutions a grouped COUNT(DISTINCT) hash-partitions
+    them on the group once; past _ONE_EXCHANGE_MAX_ROWS, or with no estimate
+    (no pattern group of 3+ patterns, or a join after the BGP that may
+    multiply it), it keeps Spark's two exchanges, on (group, value) then on
+    the group. The estimate leaves out the constant terms' selectivity
+    guess, so a bound just below COMENTION's 7 solutions keeps two
+    exchanges. Both plans give the same rows."""
+    import wbkg.sparql as sparql
+
+    edges = _comention_edges(spark)
+
+    def exchanges(query):
+        df = sparql_select(edges, query)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Exchange hashpartitioning"), [tuple(r) for r in df.collect()]
+
+    want = [("x:e1", 2), ("x:e2", 2)]
+    assert exchanges(COMENTION) == (1, want)
+    two_patterns = (
+        "PREFIX s: <http://schema.org/> SELECT ?e (COUNT(DISTINCT ?c) AS ?n) "
+        "WHERE { ?c s:mentions ?e . ?c <rdf:type> s:TextObject } GROUP BY ?e ORDER BY ?e"
+    )
+    assert exchanges(two_patterns)[0] == 2
+    optional = COMENTION.replace("FILTER", "OPTIONAL { ?other s:name ?nm } FILTER")
+    assert exchanges(optional) == (2, want)
+    monkeypatch.setattr(sparql, "_ONE_EXCHANGE_MAX_ROWS", 6)
+    assert exchanges(COMENTION) == (2, want)

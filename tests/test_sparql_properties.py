@@ -174,3 +174,43 @@ def test_scanner_lifts_exactly_the_generated_blocks(groups):
     the written blocks, and every literal value comes back unchanged."""
     parsed = parse_sparql(where_query(groups))[2]
     assert [_shape(g) for g in parsed] == [s for _t, s in groups]
+
+
+# constant text the SQL quoting must carry through: quotes, backslashes,
+# braces (a str.format template trap), parameter-marker look-alikes,
+# comment openers, newlines and non-ASCII
+CONST_TEXT = st.lists(
+    st.sampled_from(
+        ["'", '"', "\\", "\\n", "{", "}", "{e}", "{0}", ":name", "?", "$1", "--",
+         "/*", "*/", "\n", "\t", "é", "漢字", "x", " "]
+    ),
+    max_size=8,
+).map("".join)
+
+
+@pytest.fixture(scope="module")
+def const_edges(spark):
+    return spark.createDataFrame(
+        [("s:1", "p:v", "seed"), ("s:2", "p:v", "other")],
+        "subj string, pred string, obj string",
+    )
+
+
+@settings(max_examples=25, deadline=None)
+@given(value=CONST_TEXT)
+def test_constants_round_trip_through_sql(const_edges, value):
+    """A constant reaches the compiled statement unchanged, through a
+    FILTER equality and through a BIND: the row holding it matches and no
+    other, and the BIND gives it back, as the DataFrame-built plan's
+    lit() did."""
+    from pyspark.sql import functions as F
+
+    edges = const_edges.withColumn(
+        "obj", F.when(F.col("subj") == "s:1", F.lit(value)).otherwise(F.col("obj"))
+    )
+    q = (
+        f"SELECT ?s ?b WHERE {{ ?s <p:v> ?o . FILTER(?o = {_lit(value)}) "
+        f"BIND({_lit(value)} AS ?b) }}"
+    )
+    rows = [tuple(r) for r in sparql_select(edges, q).collect()]
+    assert rows == [("s:1", value)]

@@ -1,4 +1,4 @@
-"""SPARQL basic-graph-pattern queries compiled to DataFrame plans.
+"""SPARQL queries compiled to one Spark SQL statement over the edges table.
 
 The reference talks SPARQL in two places: outbound lookups against the
 public Wikidata endpoint (ref src/linker.py:184-199 — a network boundary
@@ -7,9 +7,10 @@ entity text so it is SPARQL/Turtle-safe (ref src/utils.py:4-40, ported as
 P3). The graph it *builds* is an rdflib Graph, and rdflib's own query
 surface is SPARQL — so a user coming from the reference expects to ask the
 finished KG SPARQL questions. This module gives the edges table that
-surface, Spark-first: a SELECT over a basic graph pattern is parsed into
-triple patterns and compiled to scans + equi-joins that Catalyst/AQE then
-reorder and broadcast like any other relational plan.
+surface, Spark-first: a SELECT is parsed into triple patterns and groups
+and compiled to the text of one Spark SQL statement (aliased scans +
+equi-joins) that Catalyst/AQE then plan and broadcast like any other
+relational query; only a `+`/`*` path closure runs as DataFrame code.
 
 Supported grammar (the BGP core that covers rdflib-demo-style queries):
 
@@ -30,7 +31,7 @@ Supported grammar (the BGP core that covers rdflib-demo-style queries):
     ASK [WHERE] { ... }                      # sparql_ask -> bool
     WHERE { ... FILTER [NOT] EXISTS { ... } }  # semi/anti join gate
     WHERE { ... MINUS { ... } }             # anti join; disjoint = identity
-    WHERE { ... BIND(expr AS ?v) }          # derived binding (withColumn)
+    WHERE { ... BIND(expr AS ?v) }          # derived binding (a column)
     GROUP BY ?a [?b ...]
     ORDER BY ?a [ASC(?b)|DESC(?b) ...]
     LIMIT n [OFFSET k] | OFFSET k [LIMIT n]
@@ -40,22 +41,22 @@ Property paths in the predicate position (SPARQL 1.1 §9 subset, IRI-only):
 sequence `p/q`, inverse `^p`, alternation `p|q`, one-or-more `p+`,
 zero-or-more `p*`, zero-or-one `p?`, negated property sets `!iri` /
 `!(iri|^iri|...)`, and parenthesized groups like `(p|q)+`. `/` compiles to
-an equi-join chain, `|` to a bag union, `^` pushes column-swap to the
+an equi-join chain, `|` to a bag UNION ALL, `^` pushes column-swap to the
 leaves, `!(...)` to a NOT-IN predicate scan (forward/inverse clauses per
 the spec's NPS translation), and `+` to a doubling semi-naive transitive
 closure; `*`/`?` union the graph-node identity relation per §9.1
-ZeroOrMorePath. The closure runs EAGERLY at compile time — see
-sparql_select's docstring.
+ZeroOrMorePath. The closure runs EAGERLY at compile time and enters the
+statement as a temp view — see sparql_select's docstring.
 
 Terms: ?var, <iri>, pfx:local, "literal", "literal"@lang. OPTIONAL groups
-compile to left joins on the shared variables; top-level UNION branches
-compile independently and unionByName on the variable union (unbound ->
-null, bag semantics). FILTER(...) supports comparisons (= != < <= > >=;
+compile to LEFT JOINs on the shared variables; UNION branches compile
+independently and UNION ALL on the variable union (unbound -> null, bag
+semantics). FILTER(...) supports comparisons (= != < <= > >=;
 string-vs-string compares in lexical order, while a bare NUMERIC literal
 on either side casts both to double — rdflib compares typed numerics
 numerically, and HAVING always did the same here), REGEX(?v, "pat"),
 BOUND(?v), CONTAINS/STRSTARTS/STRENDS(?v, "s"), expr [NOT] IN (v, ...)
-and && || ! ( ), compiled to Column predicates applied over the joined
+and && || ! ( ), compiled to SQL predicates applied over the joined
 pattern block — Catalyst then pushes the sargable ones down into the
 scans on its own. Comparison operands and BIND expressions share a
 value-expression subset: CONCAT, STR, UCASE, LCASE, STRLEN, REPLACE
@@ -88,9 +89,9 @@ single pattern compile to an intra-scan equality filter, not a join.
 from __future__ import annotations
 
 import re
+import uuid
 import weakref
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -186,10 +187,22 @@ def _pred_forms(iri: str) -> list[str]:
     return [RDF_TYPE_IRI, RDF_TYPE] if iri == RDF_TYPE_IRI else [iri]
 
 
-def _pred_in(iris: list[str]):
-    """Filter: the predicate is a stored spelling of one of `iris`."""
-    forms = [f for iri in iris for f in _pred_forms(iri)]
-    return F.col("pred") == forms[0] if len(forms) == 1 else F.col("pred").isin(forms)
+def _pred_in(iris: list[str]) -> str:
+    """SQL condition: the predicate is a stored spelling of one of `iris`."""
+    forms = [_q(f) for iri in iris for f in _pred_forms(iri)]
+    return f"pred = {forms[0]}" if len(forms) == 1 else f"pred IN ({', '.join(forms)})"
+
+
+def _q(value: str) -> str:
+    """A constant as a Spark SQL string literal, the one quoting rule for
+    constants: backslash and quote escaped for the SQL lexer. Constants are
+    inlined: an args= marker would cost a lit() round trip each."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _id(name: str) -> str:
+    """A variable (or hidden companion) as a quoted SQL column name."""
+    return f"`{name}`"
 
 
 def _parse_term(tok: str, prefixes: dict[str, str]) -> _Term:
@@ -269,7 +282,8 @@ _RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
 
 class _FilterParser:
-    """Recursive-descent parser for FILTER expressions -> pyspark Column.
+    """Recursive-descent parser for FILTER expressions -> Spark SQL
+    expression text over the group's variable columns.
     Grammar: or := and (|| and)* ; and := not (&& not)* ;
     not := '!' not | prim ; prim := '(' or ')' | REGEX(?v,"p") | BOUND(?v)
     | term cmp term."""
@@ -316,20 +330,20 @@ class _FilterParser:
         col = self._and()
         while self._peek() == "||":
             self._next()
-            col = col | self._and()
+            col = f"({col} OR {self._and()})"
         return col
 
     def _and(self):
         col = self._not()
         while self._peek() == "&&":
             self._next()
-            col = col & self._not()
+            col = f"({col} AND {self._not()})"
         return col
 
     def _not(self):
         if self._peek() == "!":
             self._next()
-            return ~self._not()
+            return f"(NOT {self._not()})"
         return self._prim()
 
     def _term_col(self, tok: str):
@@ -337,26 +351,45 @@ class _FilterParser:
         if t.kind == "var":
             if t.value not in self.bound:
                 raise SparqlError(f"unbound variable ?{t.value} in FILTER")
-            return F.col(t.value)
+            return _id(t.value)
         if t.lang is not None:
             raise SparqlError(
                 f'language-tagged literal "{t.value}"@{t.lang} in a FILTER '
                 "expression — compare the value and LANG(?v) separately"
             )
-        return F.lit(t.value)
+        return _q(t.value)
 
     def parse_value(self):
-        """Entry point for BIND: a single value expression -> Column."""
+        """Entry point for BIND: a single value expression -> SQL text."""
         col = self._value(self._next())
         if self._peek() is not None:
             raise SparqlError(f"trailing tokens in expression: {self.toks[self.i:]}")
         return col
 
+    def _var_arg(self, fn: str) -> str:
+        """`( ?var )` of LANG / DATATYPE -> the bound variable's name."""
+        self._expect("(")
+        var = self._next()
+        if not var.startswith("?"):
+            raise SparqlError(f"{fn} takes a variable")
+        if var[1:] not in self.bound:
+            raise SparqlError(f"unbound variable {var} in {fn}")
+        self._expect(")")
+        return var[1:]
+
+    def _lang(self, name: str) -> str:
+        # the companion column exists only for object-position bindings
+        # over a lang-carrying edges table; everything else (URIs, plain
+        # literals, BIND output) has LANG "" per SPARQL
+        if _LANG_PFX + name in self.bound:
+            return f"coalesce({_id(_LANG_PFX + name)}, '')"
+        return "''"
+
     def _value(self, tok: str):
         """Value expression: term | numeric literal | CONCAT(v,...) |
         STR(v) | UCASE(v) | LCASE(v) | STRLEN(v) | REPLACE(v, "pat",
         "rep") | IF(cond, then, else) | COALESCE(v,...) | LANG(?v).
-        Everything stays a string column (the graph stores strings; STRLEN
+        Everything stays a string (the graph stores strings; STRLEN
         stringifies), so BIND output unions/compares like any other graph
         value; a bare numeric literal flags the surrounding comparison to
         compare numerically (see _prim)."""
@@ -371,7 +404,7 @@ class _FilterParser:
             els = self._value(self._next())
             self._expect(")")
             self._last_numeric = False
-            return F.when(cond, then).otherwise(els)
+            return f"CASE WHEN {cond} THEN {then} ELSE {els} END"
         if fn == "COALESCE":
             self._expect("(")
             args = [self._value(self._next())]
@@ -379,44 +412,18 @@ class _FilterParser:
                 args.append(self._value(self._next()))
             self._expect(")")
             self._last_numeric = False
-            if len(args) == 1:
-                return args[0]
-            return F.coalesce(*args)
+            return args[0] if len(args) == 1 else f"coalesce({', '.join(args)})"
         if fn == "LANG":
-            self._expect("(")
-            var = self._next()
-            if not var.startswith("?"):
-                raise SparqlError("LANG takes a variable")
-            name = var[1:]
-            if name not in self.bound:
-                raise SparqlError(f"unbound variable ?{name} in LANG")
-            self._expect(")")
-            # the companion column exists only for object-position
-            # bindings over a lang-carrying edges table; everything else
-            # (URIs, plain literals, BIND output) has LANG "" per SPARQL
-            if _LANG_PFX + name in self.bound:
-                return F.coalesce(F.col(_LANG_PFX + name), F.lit(""))
-            return F.lit("")
+            return self._lang(self._var_arg("LANG"))
         if fn == "DATATYPE":
-            self._expect("(")
-            var = self._next()
-            if not var.startswith("?"):
-                raise SparqlError("DATATYPE takes a variable")
-            name = var[1:]
-            if name not in self.bound:
-                raise SparqlError(f"unbound variable ?{name} in DATATYPE")
-            self._expect(")")
-            lang_c = (
-                F.coalesce(F.col(_LANG_PFX + name), F.lit(""))
-                if _LANG_PFX + name in self.bound
-                else F.lit("")
-            )
-            base = F.when(lang_c != "", F.lit(_RDF_LANGSTRING)).otherwise(
-                F.lit(_XSD_STRING)
+            name = self._var_arg("DATATYPE")
+            base = (
+                f"CASE WHEN {self._lang(name)} != '' THEN {_q(_RDF_LANGSTRING)} "
+                f"ELSE {_q(_XSD_STRING)} END"
             )
             if _LIT_PFX + name in self.bound:
                 # IRI binding -> null (type error per SPARQL §17.4.2.7)
-                return F.when(F.col(_LIT_PFX + name) == "true", base)
+                return f"CASE WHEN {_id(_LIT_PFX + name)} = 'true' THEN {base} END"
             # no term-type companion (plain spo table / subject position):
             # documented lenient — everything reads as a literal
             return base
@@ -431,57 +438,42 @@ class _FilterParser:
             self._last_numeric = False  # cleared: args may have set it
             if not lo <= len(args) <= hi:
                 raise SparqlError(f"{fn} takes {lo}..{hi} arguments, got {len(args)}")
+            a = args[0]
             if fn == "CONCAT":
-                return F.concat(*args)
+                return f"concat({', '.join(args)})"
             if fn == "STR":
-                return args[0].cast("string")
-            if fn == "UCASE":
-                return F.upper(args[0])
-            if fn == "LCASE":
-                return F.lower(args[0])
+                return f"CAST({a} AS STRING)"
+            if fn in ("UCASE", "LCASE"):
+                return f"{'upper' if fn == 'UCASE' else 'lower'}({a})"
             if fn == "STRLEN":
-                return F.length(args[0]).cast("string")
-            if fn == "ABS":
-                return F.abs(args[0].cast("double")).cast("string")
-            if fn == "ROUND":
-                return F.round(args[0].cast("double"), 0).cast("string")
-            if fn == "CEIL":
-                # integral long, not "x.0": CEIL/FLOOR are integer-valued
-                return F.ceil(args[0].cast("double")).cast("string")
-            if fn == "FLOOR":
-                return F.floor(args[0].cast("double")).cast("string")
+                return f"CAST(length({a}) AS STRING)"
+            if fn in ("ABS", "ROUND", "CEIL", "FLOOR"):
+                # CEIL/FLOOR give an integral long, not "x.0"
+                extra = ", 0" if fn == "ROUND" else ""
+                return f"CAST({fn.lower()}(CAST({a} AS DOUBLE){extra}) AS STRING)"
             if fn == "SUBSTR":
                 # SPARQL SUBSTR is 1-based (xpath fn:substring); omitted
                 # length = to end of string
-                start = args[1].cast("int")
-                length = args[2].cast("int") if len(args) == 3 else F.length(args[0])
-                return F.substring(args[0], start, length)
-            if fn == "STRBEFORE":
-                # empty/absent separator -> "" per SPARQL 1.1 §17.4.3.10
-                pos = F.instr(args[0], args[1])
-                return F.when(
-                    (F.length(args[1]) == 0) | (pos == 0), F.lit("")
-                ).otherwise(F.substring(args[0], F.lit(1), pos - 1))
-            if fn == "STRAFTER":
-                # empty separator -> the whole string; absent -> ""
-                pos = F.instr(args[0], args[1])
-                return (
-                    F.when(F.length(args[1]) == 0, args[0])
-                    .when(pos == 0, F.lit(""))
-                    .otherwise(
-                        F.substring(
-                            args[0],
-                            pos + F.length(args[1]),
-                            F.length(args[0]),
-                        )
+                length = f"CAST({args[2]} AS INT)" if len(args) == 3 else f"length({a})"
+                return f"substring({a}, CAST({args[1]} AS INT), {length})"
+            if fn in ("STRBEFORE", "STRAFTER"):
+                sep, pos = args[1], f"instr({a}, {args[1]})"
+                if fn == "STRBEFORE":
+                    # empty/absent separator -> "" per SPARQL 1.1 §17.4.3.10
+                    return (
+                        f"CASE WHEN length({sep}) = 0 OR {pos} = 0 THEN '' "
+                        f"ELSE substring({a}, 1, {pos} - 1) END"
                     )
+                # empty separator -> the whole string; absent -> ""
+                return (
+                    f"CASE WHEN length({sep}) = 0 THEN {a} WHEN {pos} = 0 THEN '' "
+                    f"ELSE substring({a}, {pos} + length({sep}), length({a})) END"
                 )
             # REPLACE is regex-based in SPARQL 1.1 (fn:replace)
-            pat, rep = args[1], args[2]
-            return F.regexp_replace(args[0], pat, rep)
+            return f"regexp_replace({a}, {args[1]}, {args[2]})"
         if _NUMERIC_LIT.match(tok):
             self._last_numeric = True
-            return F.lit(tok)
+            return _q(tok)
         return self._term_col(tok)
 
     def _prim(self):
@@ -490,39 +482,30 @@ class _FilterParser:
             col = self._or()
             self._expect(")")
             return col
-        if tok.upper() == "REGEX":
-            self._expect("(")
-            target = self._value(self._next())
-            self._accept(",")
-            pat_tok = self._next()
-            if not pat_tok.startswith('"'):
-                raise SparqlError("REGEX pattern must be a string literal")
-            pat = _parse_term(pat_tok, self.prefixes).value
-            self._expect(")")
-            return target.rlike(pat)
-        if tok.upper() in ("CONTAINS", "STRSTARTS", "STRENDS"):
-            fn = tok.upper()
+        fn = tok.upper()
+        if fn in ("REGEX", "CONTAINS", "STRSTARTS", "STRENDS"):
             self._expect("(")
             target = self._value(self._next())
             self._accept(",")
             arg_tok = self._next()
             if not arg_tok.startswith('"'):
+                if fn == "REGEX":
+                    raise SparqlError("REGEX pattern must be a string literal")
                 raise SparqlError(f"{fn} needs a string literal second argument")
-            arg = _parse_term(arg_tok, self.prefixes).value
+            arg = _q(_parse_term(arg_tok, self.prefixes).value)
             self._expect(")")
-            if fn == "CONTAINS":
-                return target.contains(arg)
-            if fn == "STRSTARTS":
-                return target.startswith(arg)
-            return target.endswith(arg)
-        if tok.upper() == "BOUND":
+            if fn == "REGEX":
+                return f"({target} RLIKE {arg})"
+            sql_fn = {"CONTAINS": "contains", "STRSTARTS": "startswith"}.get(fn, "endswith")
+            return f"{sql_fn}({target}, {arg})"
+        if fn == "BOUND":
             self._expect("(")
             var = self._next()
             if not var.startswith("?"):
                 raise SparqlError("BOUND takes a variable")
             col = self._term_col(var)
             self._expect(")")
-            return col.isNotNull()
+            return f"({col} IS NOT NULL)"
         left = self._value(tok)
         left_num = self._last_numeric
         nxt = self._peek()
@@ -538,33 +521,27 @@ class _FilterParser:
             while self._accept(","):
                 items.append((self._value(self._next()), self._last_numeric))
             self._expect(")")
-            col = None  # OR-chain (items may be expressions, not literals)
-            for it, it_num in items:
-                if left_num or it_num:  # typed-numeric member: compare as numbers
-                    c = left.cast("double") == it.cast("double")
-                else:
-                    c = left == it
-                col = c if col is None else col | c
-            return ~col if negated else col
+            # an OR-chain (items may be expressions, not literals); a
+            # typed-numeric member compares as numbers
+            col = " OR ".join(
+                _cmp(left, "=", it, left_num or it_num) for it, it_num in items
+            )
+            return f"(NOT ({col}))" if negated else f"({col})"
         op = self._next()
         right = self._value(self._next())
-        right_num = self._last_numeric
-        ops = {
-            "=": lambda a, b: a == b,
-            "!=": lambda a, b: a != b,
-            "<": lambda a, b: a < b,
-            "<=": lambda a, b: a <= b,
-            ">": lambda a, b: a > b,
-            ">=": lambda a, b: a >= b,
-        }
-        if op not in ops:
+        if op not in ("=", "!=", "<", "<=", ">", ">="):
             raise SparqlError(f"unsupported FILTER operator {op!r}")
-        if left_num or right_num:
-            # a bare numeric literal on either side makes this a typed
-            # numeric comparison (rdflib: Literal(5) compares numerically),
-            # exactly as HAVING already casts; quoted strings stay lexical
-            left, right = left.cast("double"), right.cast("double")
-        return ops[op](left, right)
+        # a bare numeric literal on either side makes this a typed numeric
+        # comparison (rdflib: Literal(5) compares numerically), exactly as
+        # HAVING casts; quoted strings stay lexical
+        return _cmp(left, op, right, left_num or self._last_numeric)
+
+
+def _cmp(left: str, op: str, right: str, numeric: bool) -> str:
+    """SQL comparison, both sides cast to double when `numeric`."""
+    if numeric:
+        left, right = f"CAST({left} AS DOUBLE)", f"CAST({right} AS DOUBLE)"
+    return f"({left} {op} {right})"
 
 
 def _parse_patterns(block: str, prefixes: dict[str, str]):
@@ -1074,92 +1051,124 @@ def _path_closure(step: DataFrame, max_iters: int = PATH_MAX_ITERS) -> DataFrame
     return total
 
 
-def _graph_nodes(edges: DataFrame) -> DataFrame:
-    """The zero-length-path identity relation: every node of the graph
-    (term in subject or object position), as (a, b=a) pairs. SPARQL 1.1
-    §9.1 evaluates a zero-length path over the graph's node set; two scans
-    of one table + a partial-aggregated distinct, no payload shuffle.
+def _graph_nodes(ctx: _Ctx) -> str:
+    """The zero-length-path identity relation as SQL: every node of the
+    graph (term in subject or object position), as (a, b=a) pairs. SPARQL
+    1.1 §9.1 evaluates a zero-length path over the graph's node set; two
+    scans of one table + a partial-aggregated distinct, no payload shuffle.
 
     Known deviation (documented, rdflib differs): a CONSTANT subject/object
     that appears nowhere in the graph does not zero-length-match itself
     here — the identity relation is built from the graph, and the
     surrounding join filters constants against it."""
-    nodes = (
-        edges.select(F.col("subj").alias("a"))
-        .unionByName(edges.select(F.col("obj").alias("a")))
-        .distinct()
-    )
-    return nodes.select("a", F.col("a").alias("b"))
+    return f"SELECT a, a AS b FROM (SELECT subj AS a FROM {ctx.e} UNION SELECT obj FROM {ctx.e}) n"
 
 
-def _compile_path(edges: DataFrame, path: _Path) -> DataFrame:
-    """Property-path AST -> (a, b) pair DataFrame.
+# an edge's object term kind as the "true"/"false" string of the term-type
+# companions (a null flag reads as a literal)
+_KIND = "coalesce(CAST(obj_is_literal AS STRING), 'true')"
+
+
+class _Ctx:
+    """One statement's compile state: the edges frame and the temp view
+    the SQL text reads it as (`e`), which optional columns it carries, and
+    every view registered for the statement (the edges, each closure)."""
+
+    def __init__(self, edges: DataFrame):
+        self.edges = edges
+        self.has_lang = "lang" in edges.columns
+        self.has_lit = "obj_is_literal" in edges.columns
+        self.views: list[str] = []
+        self.e = self.view(edges)
+
+    def view(self, df: DataFrame) -> str:
+        """Register `df` as a temp view the statement text names."""
+        name = f"wbkg_{uuid.uuid4().hex}"
+        df.createTempView(name)
+        self.views.append(name)
+        return name
+
+    def sql(self, text: str) -> DataFrame:
+        return self.edges.sparkSession.sql(text)
+
+    def drop(self) -> None:
+        """Drop the views once the statement is analyzed, from the session
+        catalog directly: Catalog.dropTempView (what spark.sql(text,
+        **frames) calls) also uncaches the frame's plan, so a persisted
+        edges frame would lose its cache on the first query."""
+        catalog = self.edges.sparkSession._jsparkSession.sessionState().catalog()
+        for name in self.views:
+            catalog.dropTempView(name)
+
+
+def _edge_scan(ctx: _Ctx, inverse: bool, cond: str) -> str:
+    """One path step: the (a, b[, k]) pairs of the edges whose predicate
+    meets `cond`, read backwards under '^' (b is then a subject: an IRI)."""
+    a, b, k = ("obj", "subj", "'false'") if inverse else ("subj", "obj", _KIND)
+    kind = f", {k} AS k" if ctx.has_lit else ""
+    return f"SELECT {a} AS a, {b} AS b{kind} FROM {ctx.e} WHERE {cond}"
+
+
+def _path_kind(node) -> bool:
+    """Whether _compile_path's relation for `node` carries k, the b end's
+    term kind (over edges with obj_is_literal)."""
+    if isinstance(node, _PathSeq):
+        return _path_kind(node.items[-1])
+    if isinstance(node, _PathAlt):
+        return all(map(_path_kind, node.items))
+    return not isinstance(node, _PathMod)
+
+
+def _compile_path(ctx: _Ctx, node) -> str:
+    """Property-path AST node -> SQL over (a, b[, k]). k is the b end's
+    term kind, like the BGP's term-type companion, when the edges carry
+    obj_is_literal and _path_kind says so.
 
     - step: one filtered scan of the edges table (constant predicate pushed
       down; prunes whole partitions under --partition-edges-by-pred),
-      '^' swaps the columns.
-    - '/': chain by equi-join (Catalyst/AQE picks broadcast-vs-shuffle).
-    - '|': bag unionByName of the branch relations (no implicit distinct —
-      SPARQL alternation has bag semantics).
-    - '+': transitive closure (solution set, _path_closure).
-    - '*': closure UNION the graph-node identity relation, distinct.
-    - '?': step UNION the identity relation, distinct.
+      '^' swaps the columns; k is obj_is_literal, "false" under '^'.
+    - '/': chain by equi-join on the middle node; k is the last unit's.
+    - '|': bag UNION ALL of the branches (no implicit distinct — SPARQL
+      alternation has bag semantics); k is each branch's.
+    - '!': NOT-IN predicate scans per direction; k is each direction's.
+    - '+': transitive closure (solution set, _path_closure), read as a
+      temp view.
+    - '*': closure UNION the graph-node identity relation (distinct).
+    - '?': step UNION the identity relation (distinct).
+    '+', '*' and '?' leave k out, so a variable they bind has no term kind
+    (unknown) and joins on its value alone: a null companion would change
+    their row set.
 
     '+'/'*' run EAGER Spark jobs (the closure loop materializes per
     doubling round) at compile time — see sparql_select's docstring."""
-    return _compile_path_node(edges, path.root)
-
-
-def _compile_path_node(edges: DataFrame, node) -> DataFrame:
     if isinstance(node, _PathStep):
-        return edges.filter(_pred_in([node.iri])).select(
-            F.col("obj" if node.inverse else "subj").alias("a"),
-            F.col("subj" if node.inverse else "obj").alias("b"),
-        )
-    if isinstance(node, _PathSeq):
-        pair = None
-        for child in node.items:
-            unit = _compile_path_node(edges, child)
-            pair = (
-                unit
-                if pair is None
-                else pair.withColumnRenamed("b", "_m")
-                .join(unit.withColumnRenamed("a", "_m"), "_m")
-                .select("a", "b")
-            )
-        return pair
-    if isinstance(node, _PathAlt):
-        out = None
-        for child in node.items:
-            unit = _compile_path_node(edges, child)
-            out = unit if out is None else out.unionByName(unit)
-        return out
-    if isinstance(node, _PathMod):
-        step = _compile_path_node(edges, node.child)
-        if node.mod == "+":
-            return _path_closure(step)
-        ident = _graph_nodes(edges)
-        if node.mod == "*":
-            return _path_closure(step).unionByName(ident).distinct()
-        return step.unionByName(ident).distinct()  # '?': zero-or-one
+        return _edge_scan(ctx, node.inverse, _pred_in([node.iri]))
     if isinstance(node, _PathNeg):
-        parts = []
+        scans = []
         if node.fwd or not node.inv:
-            parts.append(
-                edges.filter(~_pred_in(node.fwd)).select(
-                    F.col("subj").alias("a"), F.col("obj").alias("b")
-                )
-            )
+            scans.append(_edge_scan(ctx, False, f"NOT ({_pred_in(node.fwd)})"))
         if node.inv:
-            parts.append(
-                edges.filter(~_pred_in(node.inv)).select(
-                    F.col("obj").alias("a"), F.col("subj").alias("b")
-                )
+            scans.append(_edge_scan(ctx, True, f"NOT ({_pred_in(node.inv)})"))
+        return " UNION ALL ".join(scans)
+    k = ", k" if ctx.has_lit and _path_kind(node) else ""
+    if isinstance(node, _PathSeq):
+        sql = _compile_path(ctx, node.items[0])
+        for child in node.items[1:]:
+            kk = ", r.k" if k and child is node.items[-1] else ""  # the last unit's kind
+            sql = (
+                f"SELECT l.a, r.b{kk} FROM ({sql}) l "
+                f"JOIN ({_compile_path(ctx, child)}) r ON l.b = r.a"
             )
-        out = parts[0]
-        for nxt in parts[1:]:
-            out = out.unionByName(nxt)
-        return out
+        return sql
+    if isinstance(node, _PathAlt):
+        return " UNION ALL ".join(
+            f"SELECT a, b{k} FROM ({_compile_path(ctx, c)}) u" for c in node.items
+        )
+    if isinstance(node, _PathMod):
+        step = f"SELECT a, b FROM ({_compile_path(ctx, node.child)}) s"
+        if node.mod != "?":
+            step = f"SELECT a, b FROM {ctx.view(_path_closure(ctx.sql(step)))}"
+        return step if node.mod == "+" else f"{step} UNION {_graph_nodes(ctx)}"
     raise SparqlError(f"cannot compile path node {node!r}")
 
 
@@ -1169,6 +1178,9 @@ _REPART_MAX_ROWS = 10_000_000  # big enough to need parallelism, small
 #                                enough that the shuffle is trivially cheap
 _BCAST_FORCE_MAX = 500_000  # don't force-broadcast an accumulated side
 #                             whose estimated join output exceeds this
+_ONE_EXCHANGE_MAX_ROWS = 100_000  # a grouped COUNT(DISTINCT) over at most
+#   this many estimated solutions shuffles once (4 cores, all solutions in
+#   one group: one exchange tied two at 130k solutions, lost 27% at 600k)
 
 
 def _pattern_vars(pat) -> set[str]:
@@ -1237,6 +1249,14 @@ def _key_distinct(pred_stats: _PredStats, pat, rename: dict, keys) -> float:
     return float(best)
 
 
+def _pattern_rows(pred_stats, p) -> float:
+    """A pattern's row count before its constant subject/object: its
+    predicate's stored rows, the table's for a variable or path predicate."""
+    if isinstance(p, _Path) or p.kind != "const":
+        return float(sum(pred_stats.values())) or 1.0
+    return float(sum(pred_stats.get(f, 0.0) for f in _pred_forms(p.value)))
+
+
 def _order_patterns(patterns, pred_stats):
     """Greedy selectivity-based join ordering for one BGP group (the
     classic SPARQL engine optimization — Jena/Sesame do the same with
@@ -1257,23 +1277,17 @@ def _order_patterns(patterns, pred_stats):
     and with pred_stats None the input order is returned unchanged."""
     if pred_stats is None or len(patterns) < 3:
         return [(p, None) for p in patterns]
-    total = float(sum(pred_stats.values())) or 1.0
 
     def est(pat) -> float:
         s, p, o = pat
         if isinstance(p, _Path):
-            return total  # closure size unknown; join it late
-        base = (
-            sum(pred_stats.get(f, 0.0) for f in _pred_forms(p.value))
-            if p.kind == "const"
-            else total
-        )
+            return _pattern_rows(pred_stats, p)  # closure size unknown; join it late
         sel = 1.0
         if s.kind == "const":
             sel *= 1e-4
         if o.kind == "const":
             sel *= 1e-4
-        return float(base) * sel
+        return _pattern_rows(pred_stats, p) * sel
 
     items = [
         {"i": i, "pat": p, "est": est(p), "vars": _pattern_vars(p)}
@@ -1289,8 +1303,30 @@ def _order_patterns(patterns, pred_stats):
     return ordered
 
 
-def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None = None):
-    """Compile one conjunctive pattern group to (plan, bound_vars).
+def _cols(names) -> str:
+    """A SELECT list of variable columns; a placeholder when there are
+    none (a group of constant patterns binds no variable)."""
+    return ", ".join(map(_id, names)) or "1 AS `__wbkg_gate`"
+
+
+def _join(left: str, right: str, keys, how: str = "JOIN") -> str:
+    """SELECT * over `left` joined to `right` on the shared variables `keys`
+    (USING: one output column per key, as DataFrame.join(keys) gives); a
+    cross join when there are none."""
+    on = f"USING ({', '.join(map(_id, keys))})" if keys else ""
+    return f"SELECT * FROM ({left}) l {how if keys else 'CROSS JOIN'} ({right}) r {on}"
+
+
+def _compile_bgp(ctx: _Ctx, patterns, tag: str, pred_stats: dict | None = None):
+    """Compile one conjunctive pattern group to (SQL, bound_vars, rows): one
+    aliased scan per pattern in _order_patterns order, each a subquery that
+    names its variables and holds its constant terms as WHERE conditions,
+    USING-joined on the shared variables. A fully-constant pattern is a
+    LIMIT 1 existence gate, cross-joined. The force-broadcast guard pins
+    the accumulated join as a /*+ BROADCAST */ subquery; a scan in the
+    _REPART_* band gets a /*+ REPARTITION */ hint. rows is the join-output
+    estimate with the constant-term guess left out (None without pred
+    stats): it errs high where the guard's estimate errs low.
 
     When the edges table carries a `lang` column (the schema the Turtle
     ingest and the KG materializer emit — the reference tags its literals
@@ -1299,125 +1335,116 @@ def _compile_bgp(edges: DataFrame, patterns, tag: str, pred_stats: dict | None =
     companion (null lang folded to "" — SPARQL's LANG() value for plain
     literals). The companion participates in joins, so a variable bound at
     object position in two patterns joins RDF-term-exactly ("x"@en does
-    not meet "x"@fr), and LANG(?v) in FILTER/BIND reads it. Plain
-    (subj, pred, obj) tables compile exactly as before — no companions. A
-    lang-tagged constant object `"x"@en` filters on value AND tag; an
-    untagged constant keeps matching on value alone (documented lenient —
-    this engine's edges store one literal per (value, lang))."""
+    not meet "x"@fr), and LANG(?v) in FILTER/BIND reads it. The
+    `__wbkg_lit_<var>` term-type companion works the same way, for plain
+    patterns and for paths that carry the kind (_compile_path). Plain
+    (subj, pred, obj) tables get no companions. A lang-tagged constant
+    object `"x"@en` filters on value AND tag; an untagged constant keeps
+    matching on value alone (documented lenient — this engine's edges
+    store one literal per (value, lang))."""
     ordered = _order_patterns(patterns, pred_stats)
-    has_lang = "lang" in edges.columns
-    has_lit = "obj_is_literal" in edges.columns
     bound: set[str] = set()
-    plan: DataFrame | None = None
+    tree, hints = None, ""
     est_max: float | None = None
     est_acc: float | None = None
-    gate_cols: list[str] = []
+    sols: float | None = None
     for i, ((s, p, o), est_i) in enumerate(ordered):
         if isinstance(p, _Path):
-            scan = _compile_path(edges, p)
-            pos_terms = (("a", s), ("b", o))
-            scan_lang = scan_lit = False
+            src, pos_terms = f"({_compile_path(ctx, p.root)}) q", (("a", s), ("b", o))
+            companions = [(_LIT_PFX, "k")] if ctx.has_lit and _path_kind(p.root) else []
         else:
-            scan = edges
-            pos_terms = (("subj", s), ("pred", p), ("obj", o))
-            scan_lang, scan_lit = has_lang, has_lit
-        # one filter (the conditions ANDed) and one select per scan: each
-        # DataFrame call is a JVM round trip with eager analysis
+            src, pos_terms = ctx.e, (("subj", s), ("pred", p), ("obj", o))
+            # the term kind as a "true"/"false" string so UNION branches
+            # align on the common null-string fill; joins on it are
+            # RDF-term-exact (IRI x never meets literal "x")
+            companions = [(_LANG_PFX, "coalesce(lang, '')")] if ctx.has_lang else []
+            if ctx.has_lit:
+                companions.append((_LIT_PFX, _KIND))
         cols, rename, conds = [], {}, []
         for col, term in pos_terms:
             if term.kind == "const":
                 conds.append(
-                    _pred_in([term.value]) if col == "pred" else F.col(col) == term.value
+                    _pred_in([term.value]) if col == "pred" else f"{col} = {_q(term.value)}"
                 )
-                if col == "obj" and scan_lang and term.lang is not None:
-                    conds.append(F.coalesce(F.col("lang"), F.lit("")) == term.lang)
+                if col == "obj" and ctx.has_lang and term.lang is not None:
+                    conds.append(f"coalesce(lang, '') = {_q(term.lang)}")
+            elif term.value in rename:  # repeated var inside one pattern
+                conds.append(f"{col} = {rename[term.value]}")
             else:
-                if term.value in rename:  # repeated var inside one pattern
-                    conds.append(F.col(col) == F.col(rename[term.value]))
-                else:
-                    rename[term.value] = col
-                    cols.append(F.col(col).alias(term.value))
-                    if col == "obj" and scan_lang:
-                        rename[_LANG_PFX + term.value] = "lang"
-                        cols.append(
-                            F.coalesce(F.col("lang"), F.lit("")).alias(
-                                _LANG_PFX + term.value
-                            )
-                        )
-                    if col == "obj" and scan_lit:
-                        # "true"/"false" string so UNION branches align on
-                        # the common null-string fill; joins on it are
-                        # RDF-term-exact (IRI x never meets literal "x")
-                        rename[_LIT_PFX + term.value] = "obj_is_literal"
-                        cols.append(
-                            F.coalesce(
-                                F.col("obj_is_literal").cast("string"),
-                                F.lit("true"),
-                            ).alias(_LIT_PFX + term.value)
-                        )
-        if conds:
-            scan = scan.filter(reduce(lambda a, b: a & b, conds))
-        # a fully-constant pattern is an existence gate, not a multiplier
+                rename[term.value] = col
+                cols.append(f"{col} AS {_id(term.value)}")
+                for pfx, expr in companions if col in ("obj", "b") else []:
+                    rename[pfx + term.value] = expr
+                    cols.append(f"{expr} AS {_id(pfx + term.value)}")
+        where = f" WHERE {' AND '.join(conds)}" if conds else ""
+        alias = f"{tag}{i}"
         if not cols:
-            gate = f"__wbkg_gate_{tag}{i}"
-            gate_cols.append(gate)
-            scan = scan.select(F.lit(1).alias(gate)).limit(1)
+            scan = f"SELECT 1 AS `__wbkg_gate_{alias}` FROM {src}{where} LIMIT 1"
         else:
-            scan = scan.select(*cols)
-        # mid-size patterns joined late are the expansion's STREAM side;
-        # their scan can be a single small file (one task), which would
-        # serialize a many-to-many join's output. A bounded repartition
-        # guarantees parallelism; past _REPART_MAX_ROWS the scan has
-        # native splits and a blind shuffle would be the scale bug.
+            # mid-size patterns joined late are the expansion's STREAM
+            # side; their scan can be a single small file (one task), which
+            # would serialize a many-to-many join's output. A bounded
+            # repartition guarantees parallelism; past _REPART_MAX_ROWS the
+            # scan has native splits and a blind shuffle would be the scale
+            # bug.
+            hint = ""
+            if est_i is not None and _REPART_MIN_ROWS <= est_i <= _REPART_MAX_ROWS:
+                n = ctx.edges.sparkSession.sparkContext.defaultParallelism
+                hint = f"/*+ REPARTITION({n}) */ "
+            scan = f"SELECT {hint}{', '.join(cols)} FROM {src}{where}"
+        scan = f"({scan}) {alias}"
+        if tree is None:
+            tree, bound = scan, set(rename)
+            est_max = est_acc = est_i
+            sols = None if est_i is None else _pattern_rows(pred_stats, p)
+            continue
+        keys = sorted(bound & set(rename))
         if (
             est_i is not None
-            and _REPART_MIN_ROWS <= est_i <= _REPART_MAX_ROWS
-            and cols
+            and est_max is not None
+            and est_i > est_max
+            and est_acc <= _BCAST_FORCE_MAX
         ):
-            scan = scan.repartition(
-                edges.sparkSession.sparkContext.defaultParallelism
-            )
-        if plan is None:
-            plan, bound = scan, set(rename)
-            est_max = est_acc = est_i
+            # the new pattern is the biggest seen: stream it and PIN the
+            # accumulated side as the broadcast build (Catalyst's size
+            # estimate otherwise broadcasts the big scan and serializes a
+            # many-to-many expansion through the small side's partitions —
+            # measured 12.3s vs 1.5s on the bench star BGP). est_acc bounds
+            # what we force: past _BCAST_FORCE_MAX rows the accumulated
+            # side may not be broadcast-safe and Catalyst keeps the choice.
+            # A hint does not reach into a subquery, so the pending one
+            # moves inside the pinned subquery.
+            left, right = scan, f"(SELECT {hints}* FROM {tree}) pin{alias}"
+            hints = f"/*+ BROADCAST(pin{alias}) */ "
+            est_max = est_i
         else:
-            keys = sorted(bound & set(rename))
-            if (
-                est_i is not None
-                and est_max is not None
-                and est_i > est_max
-                and est_acc <= _BCAST_FORCE_MAX
-            ):
-                # the new pattern is the biggest seen: stream it and PIN
-                # the accumulated side as the broadcast build (Catalyst's
-                # size estimate otherwise broadcasts the big scan and
-                # serializes a many-to-many expansion through the small
-                # side's partitions — measured 12.3s vs 1.5s on the bench
-                # star BGP). est_acc bounds what we force: past
-                # _BCAST_FORCE_MAX rows the accumulated side may not be
-                # broadcast-safe and Catalyst keeps the choice.
-                plan = (
-                    scan.join(F.broadcast(plan), keys)
-                    if keys
-                    else scan.crossJoin(F.broadcast(plan))
-                )
-                est_max = est_i
-            else:
-                plan = plan.join(scan, keys) if keys else plan.crossJoin(scan)
-                if est_i is not None and est_max is not None:
-                    est_max = max(est_max, est_i)
-            if est_acc is not None and est_i is not None:
-                # the accumulated side's join-output estimate: dividing by
-                # the new pattern's key distinct count alone (not the
-                # textbook max of both sides') overestimates, so the guard
-                # errs toward leaving the broadcast choice to AQE; a cross
-                # join multiplies
-                est_acc *= est_i / _key_distinct(pred_stats, (s, p, o), rename, keys)
-            bound |= set(rename)
-    # drop ONLY the gate markers we generated — '?_m0' is a legal SPARQL
-    # variable a prefix-based drop would silently destroy
-    plan = plan.drop(*gate_cols)
-    return plan, bound
+            left, right = tree, scan
+            if est_i is not None and est_max is not None:
+                est_max = max(est_max, est_i)
+        using = f" USING ({', '.join(map(_id, keys))})" if keys else ""
+        tree = f"{left} {'JOIN' if keys else 'CROSS JOIN'} {right}{using}"
+        if est_acc is not None and est_i is not None:
+            # the accumulated side's join-output estimate: dividing by the
+            # new pattern's key distinct count alone (not the textbook max
+            # of both sides') overestimates, so the guard errs toward
+            # leaving the broadcast choice to AQE; a cross join multiplies
+            div = _key_distinct(pred_stats, (s, p, o), rename, keys)
+            est_acc *= est_i / div
+            sols *= _pattern_rows(pred_stats, p) / div
+        bound |= set(rename)
+    return f"SELECT {hints}{_cols(sorted(bound))} FROM {tree}", bound, sols
+
+
+def _any_big_group(body) -> bool:
+    """True when some (recursive) group joins >= 3 triple patterns — the
+    only case where BGP join order can matter."""
+    for g in body:
+        if len(g.patterns) >= 3:
+            return True
+        bodies = list(g.optionals) + list(g.subgroups) + [b for _m, b in g.exists_groups]
+        if any(_any_big_group(b) for b in bodies):
+            return True
+    return False
 
 
 def sparql_select(edges: DataFrame, query: str) -> DataFrame:
@@ -1425,12 +1452,18 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
     string columns. Returns one column per selected variable; variables bound
     only in an unmatched OPTIONAL group come back null, as in SPARQL.
 
+    The query compiles to ONE Spark SQL statement over the edges frame
+    (a temp view), run as one spark.sql call: the plan is built and
+    analyzed once in the JVM instead of one py4j round trip and one
+    re-analysis per DataFrame operator. Constants are inlined (_q).
+
     Evaluation contract: compilation is lazy (a DataFrame plan comes back
     untouched) EXCEPT for (1) `+`/`*` property paths — the transitive
     closure is an inherently iterative fixpoint, so _path_closure runs its
     doubling rounds (a cut and an isEmpty probe per round, bounded by
-    PATH_MAX_ITERS) while this function builds the plan — and (2) the
-    first query on an `edges` DataFrame object where some group joins >= 3
+    PATH_MAX_ITERS) while this function builds the plan; the closure
+    enters the statement as a temp view — and (2) the first
+    query on an `edges` DataFrame object where some group joins >= 3
     triple patterns, which pays ONE partial-aggregated pred-stats job to
     drive selectivity-based join ordering (_order_patterns; identical
     solution multiset, orders of magnitude smaller intermediates on
@@ -1438,6 +1471,18 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
     sub-selects and later queries on it plan lazily; as with Spark's own
     cache, a DataFrame's contents must not change under it. Every other
     construct defers."""
+    ctx = _Ctx(edges)
+    try:
+        text, cols = _select_sql(ctx, query)
+        out = ctx.sql(text)
+    finally:
+        ctx.drop()
+    # a SELECT * over a group that binds no variable: the solutions, no columns
+    return out if cols else out.drop("__wbkg_gate")
+
+
+def _select_sql(ctx: _Ctx, query: str) -> tuple[str, list[str]]:
+    """A SELECT query -> (SQL text, its output columns in order)."""
     (
         select_vars,
         distinct,
@@ -1451,68 +1496,48 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
         having,
     ) = parse_sparql(query)
 
-    def _any_big_group(body) -> bool:
-        """True when some (recursive) group joins >= 3 triple patterns —
-        the only case where BGP join order can matter."""
-        for g in body:
-            if len(g.patterns) >= 3:
-                return True
-            bodies = list(g.optionals) + list(g.subgroups) + [
-                b for _m, b in g.exists_groups
-            ]
-            if any(_any_big_group(b) for b in bodies):
-                return True
-        return False
-
     # one cheap pred-stats job per edges DataFrame buys selectivity-ordered
     # joins (see _order_patterns); skipped entirely for the common
     # <=2-pattern case, so those queries keep the fully-lazy contract
-    pred_stats = _collect_pred_stats(edges) if _any_big_group(groups) else None
+    pred_stats = _collect_pred_stats(ctx.edges) if _any_big_group(groups) else None
 
     def compile_body(body, tag):
-        """UNION-branch list -> (plan, bound, nullable): branches align on
+        """UNION-branch list -> (SQL, bound, nullable): branches align on
         the variable union (unbound -> null string, SPARQL bag-union
         semantics — no implicit DISTINCT); a variable missing from any
         branch is nullable downstream."""
         compiled = [compile_spec(g, f"{tag}b{i}") for i, g in enumerate(body)]
         if len(compiled) == 1:
             return compiled[0]
-        bound = set().union(*(b for _p, b, _n in compiled))
+        bound = set().union(*(b for _p, b, _n, _r in compiled))
         all_vars = sorted(bound)
-        aligned = [
-            p.select(*[F.col(v) if v in b else F.lit(None).cast("string").alias(v)
-                       for v in all_vars])
-            for p, b, _n in compiled
-        ]
-        plan = aligned[0]
-        for nxt in aligned[1:]:
-            plan = plan.unionByName(nxt)
-        common = set.intersection(*(b for _p, b, _n in compiled))
-        nullable = set().union(*(n for _p, _b, n in compiled)) | (bound - common)
-        return plan, bound, nullable
+
+        def aligned(sql, b):
+            cols = [_id(v) if v in b else f"CAST(NULL AS STRING) AS {_id(v)}" for v in all_vars]
+            return f"SELECT {', '.join(cols) or _cols(())} FROM ({sql}) q"
+
+        sql = " UNION ALL ".join(aligned(p, b) for p, b, _n, _r in compiled)
+        common = set.intersection(*(b for _p, b, _n, _r in compiled))
+        nullable = set().union(*(n for _p, _b, n, _r in compiled)) | (bound - common)
+        return sql, bound, nullable, None
 
     def compile_spec(g, tag):
-        """One _Group -> (plan, bound, nullable), recursing into nested
-        bodies. Join order: required patterns, then bare subgroups (equi
+        """One _Group -> (SQL, bound, nullable, rows), recursing into nested
+        bodies; rows is the BGP's solution estimate while no later join can
+        multiply it, else None. Join order: required patterns, then bare subgroups (equi
         join on shared vars — Spark null-unequal key semantics; an
         OPTIONAL-nullable shared var joining a nested subgroup is the one
         SPARQL-compatibility corner this engine keeps, documented), then
         OPTIONAL left joins, negation gates, BINDs, VALUES, FILTERs."""
         if g.patterns:
-            plan, bound = _compile_bgp(edges, g.patterns, f"{tag}r", pred_stats)
+            sql, bound, rows = _compile_bgp(ctx, g.patterns, f"{tag}r", pred_stats)
         else:
-            plan, bound = None, set()
+            sql, bound, rows = None, set(), None
         nullable: set[str] = set()
-        for gi, sub in enumerate(g.subgroups):
-            sp, sb, sn = compile_body(sub, f"{tag}g{gi}")
-            if plan is None:
-                plan, bound, nullable = sp, set(sb), set(sn)
-                continue
-            keys = sorted(bound & sb)
-            plan = plan.join(sp, keys) if keys else plan.crossJoin(sp)
-            nullable |= sn
-            bound |= sb
-        for si, sub_text in enumerate(g.subselects):
+        parts = [compile_body(sub, f"{tag}g{gi}") for gi, sub in enumerate(g.subgroups)]
+        if g.subgroups or g.subselects or g.optionals or g.values_multi:
+            rows = None
+        for sub_text in g.subselects:
             # { SELECT ... } subquery: compile through the full SELECT
             # machinery (aggregates/paths/nesting all work), then join on
             # the projected variables — only the projection is visible
@@ -1521,16 +1546,16 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             # parse). Projected vars are conservatively nullable (the
             # subquery may union/left-join internally).
             decls = " ".join(f"PREFIX {k}: <{v}>" for k, v in prefixes.items())
-            sub_df = sparql_select(edges, f"{decls} {sub_text}")
-            sb = set(sub_df.columns)
-            if plan is None:
-                plan, bound = sub_df, set(sb)
-            else:
-                keys = sorted(bound & sb)
-                plan = plan.join(sub_df, keys) if keys else plan.crossJoin(sub_df)
-                bound |= sb
-            nullable |= sb
-        if plan is None:
+            sub_sql, sub_cols = _select_sql(ctx, f"{decls} {sub_text}")
+            parts.append((sub_sql, set(sub_cols), set(sub_cols), None))
+        for sp, sb, sn, _r in parts:
+            if sql is None:
+                sql, bound, nullable = sp, set(sb), set(sn)
+                continue
+            sql = _join(sql, sp, sorted(bound & sb))
+            nullable |= sn
+            bound |= sb
+        if sql is None:
             raise SparqlError("empty group pattern")
         for gi, opt_body in enumerate(g.optionals):
             # the optional body is a FULL group: its own filters/binds/
@@ -1538,11 +1563,11 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             # (SPARQL 1.1 §8 leftjoin with expression) — a failing inner
             # filter nulls the optional columns instead of dropping the
             # outer row. Only inner-bound variables are visible inside.
-            opt_plan, opt_bound, opt_null = compile_body(opt_body, f"{tag}o{gi}")
+            opt_sql, opt_bound, opt_null, _r = compile_body(opt_body, f"{tag}o{gi}")
             keys = sorted(bound & opt_bound)
             if not keys:
                 raise SparqlError("OPTIONAL group shares no variable with the required patterns")
-            plan = plan.join(opt_plan, keys, "left")
+            sql = _join(sql, opt_sql, keys, "LEFT JOIN")
             nullable |= (opt_bound - bound) | opt_null
             bound |= opt_bound
         for gi, (mode, ex_body) in enumerate(g.exists_groups):
@@ -1555,7 +1580,7 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             # share no variable: MINUS then removes NOTHING (SPARQL 1.1
             # §8.3), while NOT EXISTS without shared variables is rejected
             # loudly.
-            ex_plan, ex_bound, ex_null = compile_body(ex_body, f"{tag}e{gi}")
+            ex_sql, ex_bound, ex_null, _r = compile_body(ex_body, f"{tag}e{gi}")
             keys = sorted(bound & ex_bound)
             if not keys:
                 if mode == "minus":
@@ -1563,17 +1588,13 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
                 raise SparqlError(
                     "FILTER EXISTS group shares no variable with the outer patterns"
                 )
+            how = "LEFT SEMI JOIN" if mode == "exists" else "LEFT ANTI JOIN"
             # a key is null-capable when EITHER side can leave it unbound
             # (outer OPTIONAL, or an OPTIONAL inside the EXISTS/MINUS body)
-            null_keys = [k for k in keys if k in nullable or k in ex_null]
-            if not null_keys:
+            if not any(k in nullable or k in ex_null for k in keys):
                 # no shared key can be null: plain equi semi/anti join —
                 # shuffle- or broadcast-hash, the plan you want at scale
-                plan = plan.join(
-                    ex_plan.select(*keys),
-                    keys,
-                    "left_semi" if mode == "exists" else "left_anti",
-                )
+                sql = _join(sql, f"SELECT {_cols(keys)} FROM ({ex_sql}) q", keys, how)
                 continue
             # An OPTIONAL-bound shared key can be null = unbound (on either
             # side), and SPARQL's per-solution compatibility says unbound
@@ -1587,32 +1608,22 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             # inner key set — bounded by the inner group's distinct key
             # combos, small for selective gates); the fast path above
             # covers every query without OPTIONAL-shared keys.
-            inner = ex_plan.select(
-                *[F.col(k).alias(f"__ex_{k}") for k in keys]
-            ).dropDuplicates()
-            compat = None
-            for k in keys:
-                c = (
-                    F.col(k).isNull()
-                    | F.col(f"__ex_{k}").isNull()
-                    | (F.col(k) == F.col(f"__ex_{k}"))
-                )
-                compat = c if compat is None else compat & c
+            pairs = [(f"l.{_id(k)}", f"r.{_id('__ex_' + k)}") for k in keys]
+            inner = ", ".join(f"{_id(k)} AS {_id('__ex_' + k)}" for k in keys)
+            cond = " AND ".join(f"({a} IS NULL OR {b} IS NULL OR {a} = {b})" for a, b in pairs)
             if mode == "minus":
-                overlap = None
-                for k in keys:
-                    c = F.col(k).isNotNull() & F.col(f"__ex_{k}").isNotNull()
-                    overlap = c if overlap is None else overlap | c
-                compat = compat & overlap
-            plan = plan.join(
-                inner, compat, "left_semi" if mode == "exists" else "left_anti"
+                overlap = " OR ".join(f"({a} IS NOT NULL AND {b} IS NOT NULL)" for a, b in pairs)
+                cond = f"{cond} AND ({overlap})"
+            sql = (
+                f"SELECT * FROM ({sql}) l {how} "
+                f"(SELECT DISTINCT {inner} FROM ({ex_sql}) q) r ON {cond}"
             )
         for expr_text, var in g.binds:
-            # BIND(expr AS ?v) -> withColumn; expr reuses the FILTER
+            # BIND(expr AS ?v) -> a derived column; expr reuses the FILTER
             # expression compiler's value subset (CONCAT/STR/UCASE/LCASE/
             # STRLEN/REPLACE/SUBSTR/STRBEFORE/STRAFTER + terms), stays a
-            # string column, and is
-            # visible to later binds, VALUES and group FILTERs
+            # string, and is visible to later binds, VALUES and group
+            # FILTERs
             if var in bound:
                 raise SparqlError(f"BIND would rebind already-bound variable ?{var}")
             # STRLANG(expr, "tag") constructs a lang-tagged literal: the
@@ -1624,29 +1635,27 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
                 r"(?is)\s*STRLANG\s*\((.*),\s*\"([A-Za-z][A-Za-z0-9-]*)\"\s*\)\s*",
                 expr_text,
             )
-            if m_sl:
-                col = _FilterParser(m_sl.group(1), prefixes, bound).parse_value()
-                plan = plan.withColumn(var, col).withColumn(
-                    _LANG_PFX + var, F.lit(m_sl.group(2))
-                )
-                bound.add(var)
-                bound.add(_LANG_PFX + var)
-                continue
-            if re.search(r"(?i)\bSTRLANG\s*\(", expr_text):
+            if m_sl is None and re.search(r"(?i)\bSTRLANG\s*\(", expr_text):
                 raise SparqlError(
                     "STRLANG is only supported as the top-level BIND expression"
                 )
-            col = _FilterParser(expr_text, prefixes, bound).parse_value()
-            plan = plan.withColumn(var, col)
+            value = _FilterParser(
+                m_sl.group(1) if m_sl else expr_text, prefixes, bound
+            ).parse_value()
+            derived = f"{value} AS {_id(var)}"
             bound.add(var)
+            if m_sl:
+                derived += f", {_q(m_sl.group(2))} AS {_id(_LANG_PFX + var)}"
+                bound.add(_LANG_PFX + var)
+            sql = f"SELECT *, {derived} FROM ({sql}) q"
         for var, consts in g.values:
-            # inline bindings restrict an already-bound variable; isin is an
-            # In predicate Catalyst pushes into the scans
+            # inline bindings restrict an already-bound variable: an In
+            # predicate Catalyst pushes into the scans
             if var not in bound:
                 raise SparqlError(f"VALUES variable ?{var} is not bound by the patterns")
-            plan = plan.filter(F.col(var).isin(consts))
+            sql = f"SELECT * FROM ({sql}) q WHERE {_id(var)} IN ({', '.join(map(_q, consts))})"
         for vars_, rows in g.values_multi:
-            # VALUES (?a ?b) { (..) (..) }: a broadcast literal table joined
+            # VALUES (?a ?b) { (..) (..) }: a broadcast inline table joined
             # on per-variable compatibility (UNDEF cell = matches anything);
             # multiple compatible rows multiply, per SPARQL's multiset join.
             # Like the single-var form, every VALUES variable must already
@@ -1654,23 +1663,25 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
             missing = [v for v in vars_ if v not in bound]
             if missing:
                 raise SparqlError(f"VALUES variable(s) {missing} not bound by the patterns")
-            vdf = local_frame(
-                edges.sparkSession, rows, ", ".join(f"__val_{v} string" for v in vars_)
+            cells = ", ".join(
+                "(" + ", ".join("CAST(NULL AS STRING)" if c is None else _q(c) for c in row) + ")"
+                for row in rows
             )
-            cond = None
-            for v in vars_:
-                c = F.col(f"__val_{v}").isNull() | (F.col(v) == F.col(f"__val_{v}"))
-                cond = c if cond is None else cond & c
-            plan = plan.join(F.broadcast(vdf), cond).drop(
-                *[f"__val_{v}" for v in vars_]
+            names = [(_id(v), f"v.{_id('__val_' + v)}") for v in vars_]
+            cond = " AND ".join(f"({c} IS NULL OR l.{v} = {c})" for v, c in names)
+            sql = (
+                f"SELECT /*+ BROADCAST(v) */ l.* FROM ({sql}) l JOIN (VALUES {cells}) "
+                f"AS v({', '.join(_id('__val_' + v) for v in vars_)}) ON {cond}"
             )
-        for f_text in g.filters:
+        if g.filters:
             # compiled AFTER the joins (group scope); Catalyst pushes
             # sargable predicates back down into the scans on its own
-            plan = plan.filter(_FilterParser(f_text, prefixes, bound).parse())
-        return plan, bound, nullable
+            conds = [_FilterParser(f, prefixes, bound).parse() for f in g.filters]
+            sql = f"SELECT * FROM ({sql}) q WHERE {' AND '.join(conds)}"
+        return sql, bound, nullable, rows
 
-    plan, bound, _nullable = compile_body(groups, "u")
+    sql, bound, _nullable, rows = compile_body(groups, "u")
+    head = "SELECT DISTINCT" if distinct else "SELECT"
 
     if aggregates or group_vars or having:
         # grouped/aggregated query: Spark's partial-aggregation (map-side
@@ -1683,85 +1694,80 @@ def sparql_select(edges: DataFrame, query: str) -> DataFrame:
         missing += [t for _f, _d, t, _a, _s in aggregates if t is not None and t not in bound]
         if missing:
             raise SparqlError(f"unbound variable(s) in GROUP BY/ORDER BY/aggregate: {missing}")
-        agg_cols = []
-        for func, dist, target, alias, sep in aggregates:
-            agg_cols.append(_agg_column(func, dist, target, sep).alias(alias))
-        having_cols, having_preds = [], []
-        for hi, h_text in enumerate(having):
-            agg_expr, pred = _parse_having(h_text, bound, f"__having_{hi}")
-            having_cols.append(agg_expr)
-            having_preds.append(pred)
-        if agg_cols or having_cols:
-            out = plan.groupBy(*group_vars).agg(*agg_cols, *having_cols)
-            # HAVING: filter on the hidden aggregate columns, then project
-            # them away — Spark's partial aggregation runs once for all of
-            # them (one exchange), same plan HAVING compiles to in SQL
-            for pred in having_preds:
-                out = out.filter(pred)
-            out = out.select(*(select_vars + [a[3] for a in aggregates]))
+        cols = select_vars + [a[3] for a in aggregates]
+        aggs = [f"{_agg_sql(f, d, t, sep)} AS {_id(a)}" for f, d, t, a, sep in aggregates]
+        # HAVING filters on its own aggregates: Spark's partial aggregation
+        # runs once for all of them (one exchange)
+        conds = [_having_sql(h_text, bound) for h_text in having]
+        if aggs or conds:
+            if (
+                group_vars
+                and any(f == "COUNT" and d and t for f, d, t, _a, _s in aggregates)
+                and rows is not None
+                and rows <= _ONE_EXCHANGE_MAX_ROWS
+            ):
+                # COUNT(DISTINCT) plans two exchanges, on (group, value)
+                # then on the group, and under AQE each is a Spark job
+                # (~40 ms on a small graph). For few estimated solutions
+                # they are hash-partitioned on the group once and both
+                # phases run in place; more keep the two exchanges, which
+                # combine map-side and spread a hot group across tasks.
+                sql = f"SELECT /*+ REPARTITION({_cols(group_vars)}) */ * FROM ({sql}) q"
+            text = f"{head} {', '.join(list(map(_id, select_vars)) + aggs)} FROM ({sql}) q"
+            if group_vars:
+                text += f" GROUP BY {_cols(group_vars)}"
+            if conds:
+                text += f" HAVING {' AND '.join(conds)}"
         else:
             # GROUP BY with no aggregates = distinct group rows
-            out = plan.select(*group_vars).dropDuplicates(group_vars).select(*select_vars)
-        if distinct:
-            out = out.distinct()
-        if order_vars:
-            out = out.orderBy(*_order_cols(order_vars))
-        if offset is not None:
-            out = out.offset(offset)
-        if limit is not None:
-            out = out.limit(limit)
-        return out
-
-    if select_vars is None:
-        # SELECT *: user-visible variables only — the hidden lang
-        # companions are internal plumbing for LANG()/term-exact joins
-        select_vars = sorted(
-            v
-            for v in bound
-            if not v.startswith(_LANG_PFX) and not v.startswith(_LIT_PFX)
-        )
-    missing = [v for v in select_vars + [ov for ov, _a in order_vars] if v not in bound]
-    if missing:
-        raise SparqlError(f"unbound variable(s) in SELECT/ORDER BY: {missing}")
-    out = plan.select(*select_vars)
-    if distinct:
-        out = out.distinct()
+            text = f"{head} {_cols(select_vars)} FROM (SELECT DISTINCT {_cols(group_vars)} FROM ({sql}) q) q"
+    else:
+        if select_vars is None:
+            # SELECT *: user-visible variables only — the hidden lang
+            # companions are internal plumbing for LANG()/term-exact joins
+            select_vars = sorted(
+                v
+                for v in bound
+                if not v.startswith(_LANG_PFX) and not v.startswith(_LIT_PFX)
+            )
+        missing = [v for v in select_vars + [ov for ov, _a in order_vars] if v not in bound]
+        if missing:
+            raise SparqlError(f"unbound variable(s) in SELECT/ORDER BY: {missing}")
+        cols = select_vars
+        text = f"{head} {_cols(cols)} FROM ({sql}) q"
     if order_vars:
-        out = out.orderBy(*_order_cols(order_vars))
-    if offset is not None:
-        # SPARQL OFFSET: skip k solutions (after ORDER BY, before LIMIT);
-        # Spark's offset+limit collapse into one GlobalLimit at the driver
-        out = out.offset(offset)
+        # unbound sorts lowest either way, like rdflib: nulls first
+        # ascending, last descending
+        text += " ORDER BY " + ", ".join(
+            f"{_id(v)} {'ASC NULLS FIRST' if asc else 'DESC NULLS LAST'}" for v, asc in order_vars
+        )
+    # SPARQL OFFSET skips k solutions after ORDER BY, before LIMIT
     if limit is not None:
-        out = out.limit(limit)
-    return out
+        text += f" LIMIT {limit}"
+    if offset is not None:
+        text += f" OFFSET {offset}"
+    return text, cols
 
 
-def _agg_column(func: str, dist: bool, target, sep: str):
-    """One SPARQL aggregate -> a Spark aggregate Column (unaliased).
+def _agg_sql(func: str, dist: bool, target, sep: str) -> str:
+    """One SPARQL aggregate -> a Spark SQL aggregate expression.
     GROUP_CONCAT sorts its operands so the result is deterministic under
     Spark's nondeterministic row order (SPARQL leaves concat order
     implementation-defined); SAMPLE is pinned to MIN for the same reason."""
     if func == "COUNT" and target is None:
-        return F.count(F.lit(1))
-    col = F.col(target)
+        return "count(1)"
+    col = _id(target)
     if func == "COUNT":
-        return F.count_distinct(col) if dist else F.count(col)
-    if func == "MIN":
-        return F.min(col)
-    if func == "MAX":
-        return F.max(col)
-    if func == "SUM":
+        return f"count(DISTINCT {col})" if dist else f"count({col})"
+    if func in ("MIN", "MAX", "SAMPLE"):
+        return f"{'max' if func == 'MAX' else 'min'}({col})"
+    if func in ("SUM", "AVG"):
         # the graph stores strings; numeric literals aggregate as doubles
         # (rdflib promotes the same way for mixed input)
-        return F.sum(col.cast("double"))
-    if func == "AVG":
-        return F.avg(col.cast("double"))
-    if func == "SAMPLE":
-        return F.min(col)
+        return f"{func.lower()}(CAST({col} AS DOUBLE))"
     if func == "GROUP_CONCAT":
-        collected = F.collect_set(col) if dist else F.collect_list(col)
-        return F.array_join(F.array_sort(collected), sep)
+        collected = f"collect_{'set' if dist else 'list'}({col})"
+        return f"array_join(array_sort({collected}), {_q(sep)})"
     raise SparqlError(f"unsupported aggregate {func}")
 
 
@@ -1771,10 +1777,10 @@ _HAVING = re.compile(
 )
 
 
-def _parse_having(text: str, bound: set, hidden: str):
-    """HAVING(AGG([DISTINCT] ?v|*) cmp literal) -> (hidden agg Column,
-    filter predicate over it). Quoted literals compare lexically; bare
-    numbers numerically (the aggregate is cast to double)."""
+def _having_sql(text: str, bound: set) -> str:
+    """HAVING(AGG([DISTINCT] ?v|*) cmp literal) -> a SQL condition. Quoted
+    literals compare lexically; bare numbers numerically (the aggregate is
+    cast to double)."""
     m = _HAVING.match(text)
     if not m:
         raise SparqlError(
@@ -1789,26 +1795,10 @@ def _parse_having(text: str, bound: set, hidden: str):
     tname = None if target == "*" else target[1:]
     if tname is not None and tname not in bound:
         raise SparqlError(f"unbound variable ?{tname} in HAVING")
-    agg = _agg_column(func, dist, tname, " ").alias(hidden)
+    agg = _agg_sql(func, dist, tname, " ")
     if lit.startswith('"'):
-        left, right = F.col(hidden), F.lit(re.sub(r'\\(["\\])', r"\1", lit[1:-1]))
-    else:
-        left, right = F.col(hidden).cast("double"), F.lit(float(lit))
-    ops = {
-        "=": lambda a, b: a == b, "!=": lambda a, b: a != b,
-        "<": lambda a, b: a < b, "<=": lambda a, b: a <= b,
-        ">": lambda a, b: a > b, ">=": lambda a, b: a >= b,
-    }
-    return agg, ops[op](left, right)
-
-
-def _order_cols(order_vars):
-    """[(var, ascending)] -> orderBy columns (nulls first either way, like
-    rdflib: unbound sorts lowest ascending — Spark's asc() default — and we
-    pin desc() to nulls_last for the mirror image)."""
-    return [
-        F.col(v).asc() if asc else F.col(v).desc_nulls_last() for v, asc in order_vars
-    ]
+        return _cmp(agg, op, _q(re.sub(r'\\(["\\])', r"\1", lit[1:-1])), False)
+    return _cmp(agg, op, _q(repr(float(lit))), True)
 
 
 def sparql_construct(edges: DataFrame, query: str) -> DataFrame:
@@ -2059,9 +2049,10 @@ def _update_bindings(cur: DataFrame, prefix_block: str, template, where_block: s
     variables (SELECT * when the template is ground — one dummy row set).
     Over a snapshot with obj_is_literal, each template object variable also
     brings its term type: the solutions' own term-type companion when a
-    triple pattern binds it at object position, "true" when a BIND does
-    (BIND yields literals); a variable bound only at subject or predicate
-    position, or through a path, gets none: its kind is unknown."""
+    triple pattern (or a path that carries the kind, _path_kind) binds it
+    at object position, "true" when a BIND does (BIND yields literals); a
+    variable bound only at subject or predicate position, or through a
+    `+`/`*`/`?` path, gets none: its kind is unknown."""
     tmpl_vars = sorted({t.value for pat in template for t in pat if t.kind == "var"})
     proj, from_bind = ["?" + v for v in tmpl_vars], []
     if "obj_is_literal" in cur.columns:
@@ -2082,12 +2073,14 @@ def _update_bindings(cur: DataFrame, prefix_block: str, template, where_block: s
 
 def _binding_sources(body, at_obj: set, by_bind: set) -> None:
     """Collect the variables a parsed WHERE body binds in scope at the
-    object position of a plain triple pattern — the ones _compile_bgp gives
-    a term-type companion (a variable repeated within one pattern binds at
-    its first position) — into at_obj, and BIND targets into by_bind."""
+    object position of a triple pattern whose scan carries the term kind —
+    the ones _compile_bgp gives a term-type companion (a variable repeated
+    within one pattern binds at its first position) — into at_obj, and
+    BIND targets into by_bind."""
     for g in body:
         for s, p, o in g.patterns:
-            if o.kind == "var" and not isinstance(p, _Path) and o.value not in {
+            kind = not isinstance(p, _Path) or _path_kind(p.root)
+            if kind and o.kind == "var" and o.value not in {
                 t.value for t in (s, p) if t.kind == "var"
             }:
                 at_obj.add(o.value)
